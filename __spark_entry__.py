@@ -26,6 +26,7 @@ def _configure(spark: SparkSession) -> SparkSession:
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+        ("spark.sql.execution.replaceHashWithSortAgg", "true"),
     ):
         try:
             spark.conf.set(key, val)

@@ -27,19 +27,44 @@ Reproduces the semantics of the reference's reduce phase
 - A3 row re-assembly:      surviving cells comparator-sorted into one array
   (CassSSTableReducer.java:173-192).
 
-Scale design: ONE hash aggregation (single Exchange on partition_key), all
-merge logic in JVM-side higher-order functions (filter/aggregate/transform
-lambdas inside whole-stage codegen) — no Python in the hot path, no second
-shuffle for LWW, no join for range tombstones. Memory per group is bounded
-by the row size exactly as in the reference's reducer (which also holds one
-row's surviving cells); the maxRowSize guard covers pathological wide rows.
-The reference ships every cell through its shuffle identically (identity
-mapper); we match that but get Tungsten spill + AQE skew handling for free.
+Scale design: the reference's reducer shape — one shuffle, one sort, one
+streaming merge. Every raw cell moves through ONE Exchange on the grouping
+keys (the reference's identity mapper does the same), each reduce partition
+sorts once by (key, name sort key, ts), and one SortAggregate folds each
+key's run of cells. The session's ``replaceHashWithSortAgg`` rule
+(session.get_spark) picks the SortAggregate because its input already
+arrives sorted on the grouping keys; its output order then satisfies
+compact_snapshot's in-partition key sort, which Spark drops as redundant.
+All merge logic runs in JVM-side higher-order functions (filter/aggregate/
+transform lambdas) — no Python in the hot path, no second shuffle for LWW,
+no join for range tombstones. ``sort_array`` stays on the collected lists,
+so correctness never depends on collect order; over pre-sorted lists it is
+a linear pass. Memory per group is bounded by the row size exactly as in
+the reference's reducer (which also holds one row's surviving cells); the
+maxRowSize guard covers pathological wide rows, and the sort spills.
+
+The former plan was a hash aggregate: a partial ObjectHashAggregate ran
+inside the decode tasks — ONE task when decode plans one split — where
+~12k keys overran its 128-key sort-based fallback threshold, so it sorted
+row at a time anyway, then shipped partial lists to a final aggregate and
+a separate output sort. Measured with perfbench/run.py on 4 cores, 10
+alternating pairs: merge_json job_s median 3.37 -> 2.51 s (-26%, faster in
+10/10 pairs), cpu_s 7.77 -> 6.54 s, peak RSS 2622 -> 2188 MB; a traced run
+(seed 5) puts the saving in compact: self time 2.38 -> 1.17 s, shuffle
+23.1 -> 21.6 MB. priam_cql_avro (20 pairs): compact self time 1.42 ->
+0.73 s traced, but job_s is unresolved — median 3.48 -> 3.57 s against a
+1.17 s quartile spread — and cpu_s (+6%) and peak RSS (+4%) medians rose.
+
+Rejected (measured, no gain or a cost elsewhere): more decode splits (same
+job time, +1.9 s CPU; an empty Python task costs 0.13-0.5 s), raising the
+fallback threshold, ``repartition`` without the sort, a reduce width equal
+to the core count, and disabling ``useObjectHashAggregateExec`` session-wide
+(same gain, but it re-plans every ``collect_list`` query in the registry).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 LONG_MIN = -(1 << 63)
@@ -350,6 +375,10 @@ def compact(
 
     keys = ["partition_key", "source_path"] if group_by_source else ["partition_key"]
 
+    # shuffle raw cells, sort once: the aggregate below then streams as one
+    # SortAggregate (see the module docstring); sort_array keeps the result
+    # independent of collect order
+    cells = cells.repartition(*keys).sortWithinPartitions(*keys, sort_key, "ts")
     grouped = cells.groupBy(*keys).agg(
         F.max(F.coalesce(F.col("row_deleted_at"), F.lit(LONG_MIN))).alias("deleted_at"),
         F.sort_array(F.collect_list(F.when(is_cell, cell_struct))).alias("cells"),
@@ -533,73 +562,6 @@ def compacted_to_cells(compacted: DataFrame) -> DataFrame:
         F.col("col.value").alias("value"),
         F.col("col.ts").alias("ts"),
         F.col("col.kind").alias("kind"),
-    )
-
-
-def compact_multistep(cells: DataFrame) -> DataFrame:
-    """Alternative shuffle-heavy formulation kept for plan comparison in
-    tests/benchmarks (windowed LWW + join). compact() is the production path.
-    """
-    w = Window.partitionBy("partition_key")
-    deleted = cells.select(
-        "partition_key",
-        F.max(F.coalesce("row_deleted_at", F.lit(LONG_MIN))).over(w).alias("deleted_at"),
-        "kind", "cell_name", "cell_name_max", "value", "ts", "ttl",
-        "local_deletion_time", "ts_of_last_delete",
-    )
-    cols = deleted.filter(F.col("kind").isin("c", "d", "e", "x"))
-    rts = deleted.filter(F.col("kind") == "t").select(
-        F.col("partition_key").alias("rt_key"),
-        F.col("cell_name").alias("rt_min"),
-        F.col("cell_name_max").alias("rt_max"),
-        F.col("ts").alias("rt_ts"),
-    )
-    survivors = cols.join(
-        rts,
-        on=[
-            cols.partition_key == rts.rt_key,
-            cols.cell_name >= rts.rt_min,
-            cols.cell_name <= rts.rt_max,
-            cols.ts <= rts.rt_ts,
-        ],
-        how="left_anti",
-    )
-    lww_w = (
-        Window.partitionBy("partition_key", "cell_name")
-        .orderBy(
-            F.col("ts").desc(),
-            F.when(F.col("kind") == "d", 1).otherwise(0).desc(),
-            F.col("value").desc(),
-        )
-    )
-    winners = (
-        survivors.withColumn("rn", F.row_number().over(lww_w))
-        .filter("rn = 1")
-        .filter(F.col("ts") > F.col("deleted_at"))
-    )
-    all_keys = cells.groupBy("partition_key").agg(
-        F.max(F.coalesce("row_deleted_at", F.lit(LONG_MIN))).alias("deleted_at")
-    )
-    assembled = winners.groupBy("partition_key").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("cell_name").alias("name"),
-                    F.col("value").alias("value"),
-                    F.col("ts").alias("ts"),
-                    F.col("kind").alias("kind"),
-                    F.col("ttl").alias("ttl"),
-                    F.col("local_deletion_time").alias("local_deletion_time"),
-                    F.col("ts_of_last_delete").alias("ts_of_last_delete"),
-                )
-            )
-        ).alias("columns")
-    )
-    return all_keys.join(assembled, "partition_key", "left").select(
-        "partition_key",
-        "deleted_at",
-        F.coalesce("columns", F.array()).alias("columns"),
-        F.lit(False).alias("row_too_big"),
     )
 
 

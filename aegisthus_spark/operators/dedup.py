@@ -200,31 +200,13 @@ def lsh_candidate_pairs(signatures: DataFrame, *, id_col: str = "doc_id") -> Dat
 
 
 def _pair_overlap(
-    shingles: DataFrame, pairs: DataFrame, *, id_col: str = "doc_id",
-    candidate_semi: bool = False,
+    shingles: DataFrame, pairs: DataFrame, *, id_col: str = "doc_id"
 ) -> DataFrame:
     """(a, b, common, na, nb): shared-shingle count and set sizes for the
     given candidate pairs — the one common-shingle join every pair-scoring
-    measure (Jaccard, containment) is derived from.
-
-    ``candidate_semi`` (guide §3.2, the broadcast-semi-join form of the
-    Bloom pre-filter): materialize the candidate pair set once (the SMALL
-    end of the funnel — same order as the CC driver gate's collect), and
-    keep only CANDIDATE documents' shingle rows ahead of the sa/sb joins
-    and the size aggregate. Result-identical by construction: the verify
-    join keys on pair doc ids, so a non-candidate doc's shingles never
-    reach the output, and a candidate doc keeps ALL its shingle rows, so
-    its sizes are unchanged."""
-    if candidate_semi:
-        # one evaluation of the candidate pipeline; cdocs + the verify
-        # join both read the checkpoint blocks
-        pairs = pairs.localCheckpoint()
-        cdocs = (
-            pairs.select(F.col("a").alias(id_col))
-            .union(pairs.select(F.col("b").alias(id_col)))
-            .distinct()
-        )
-        shingles = shingles.join(F.broadcast(cdocs), id_col, "semi")
+    measure (Jaccard, containment) is derived from. (A candidate-document
+    semi-join ahead of these joins measured 1.17-1.50x slower at 32 cores
+    and was removed; OPTIMIZATION_r16.md holds the numbers.)"""
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     sa = shingles.select(F.col(id_col).alias("a"), F.col("shingle").alias("s"))
     sb = shingles.select(F.col(id_col).alias("b"), F.col("shingle").alias("s"))
@@ -811,11 +793,10 @@ def ngram_duplication(
     DISTINCT word n-grams that also occur in at least one other document.
 
     Scale shape: one explode into distinct shingles, one shingle-keyed
-    aggregate for document frequency (map-side combinable), one equi-join
-    back on shingle, one doc-keyed aggregate — never a doc-pair join. The
-    shingle df table is the corpus vocabulary; at 100 TB both shuffles key
-    on high-cardinality values (no skew pile-up; a stop-gram cap can
-    truncate pathological shingles the same way minhash banding does).
+    count window for document frequency (below), one doc-keyed aggregate
+    — never a doc-pair join. At 100 TB both shuffles key on high-
+    cardinality values (no skew pile-up; a stop-gram cap can truncate
+    pathological shingles the same way minhash banding does).
 
     Docs shorter than n tokens emit no shingles and are dropped (both
     engines agree; see word_shingles).
@@ -839,7 +820,7 @@ def ngram_duplication(
     shingle once; shingle partitions are small (docs sharing one n-gram),
     so the unordered count window is a per-bucket aggregate, not a sort
     risk. Measured 2.0x at sf0.01 / same-shape wins at sf0.1 with
-    identical results (tools/exp_vocab_window.py).
+    identical results (OPTIMIZATION_r16.md).
     """
     from pyspark.sql import Window
 
@@ -891,7 +872,12 @@ def dup_spans(
     distinct exchange + aggregate exchange ahead of the join. Shingle
     partitions are small (docs sharing one n-gram), so the unordered
     min/max window is a per-bucket aggregate, not a sort risk. Measured
-    with identical results, tools/exp_vocab_window.py.
+    with identical results, OPTIMIZATION_r16.md.
+
+    Precondition: ``id_col`` is non-NULL. min/max skip NULLs, so a shingle
+    shared only between a NULL-id document and one real document is not
+    marked duplicated, and all NULL-id documents would fall into one
+    gaps-and-islands window.
 
     ``sort=False`` skips the final orderBy for consumers that immediately
     re-aggregate the spans (cut_spans — the r15 LSH sort=False precedent,
@@ -1137,17 +1123,13 @@ def containment_of_pairs(
 
 
 def _containment_scored(
-    sh: DataFrame, cand: DataFrame, *, id_col: str, threshold: float,
-    candidate_semi: bool = False,
+    sh: DataFrame, cand: DataFrame, *, id_col: str, threshold: float
 ) -> DataFrame:
     """The verify stage shared by every containment screen: one
     common-shingle join over the candidate pairs, both directed
     containments + Jaccard, threshold on the rounded-6 values (the
-    cross-engine determinism contract). ``candidate_semi``: see
-    _pair_overlap."""
-    scored = _pair_overlap(
-        sh, cand, id_col=id_col, candidate_semi=candidate_semi
-    ).select(
+    cross-engine determinism contract)."""
+    scored = _pair_overlap(sh, cand, id_col=id_col).select(
         "a",
         "b",
         F.round((F.col("common").cast("double") / F.col("na")), 6).alias(

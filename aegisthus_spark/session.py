@@ -29,6 +29,9 @@ def get_spark(app_name: str = "aegisthus_spark", cpus: int | None = None) -> Spa
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # an aggregate whose input already arrives sorted on its grouping
+        # keys streams as a SortAggregate (compact() relies on this)
+        .config("spark.sql.execution.replaceHashWithSortAgg", "true")
         # the bench events table carries TIMESTAMP(NANOS) parquet columns,
         # which Spark only reads as raw longs (SPARK-40819)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

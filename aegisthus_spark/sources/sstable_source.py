@@ -21,6 +21,7 @@ Scale design (the reference's input pipeline re-thought for Spark):
 
 from __future__ import annotations
 
+import errno
 import os
 import re
 from concurrent.futures import ThreadPoolExecutor
@@ -97,6 +98,10 @@ def discover_data_files(
             if p.endswith("-Data.db"):
                 out.append(p)
             continue
+        if not os.path.isdir(p):
+            # a mistyped root must fail the job, not compact to an empty
+            # snapshot that looks like a successful run
+            raise FileNotFoundError(errno.ENOENT, "SSTable input does not exist", p)
         _walk_dir(p, out, honor_manifest, batched)
     return sorted(out)
 
@@ -121,10 +126,7 @@ def _walk_dir(d: str, out: list[str], honor_manifest: bool, batched: bool) -> No
                     ):
                         out.append(f)
             return
-    try:
-        entries = sorted(os.listdir(d))
-    except OSError:
-        return
+    entries = sorted(os.listdir(d))
     subdirs = [
         e
         for e in entries
@@ -440,118 +442,11 @@ def _scan_compressed_c(task) -> list:
 
 
 def _decode_tasks(batches) -> "Iterator":
-    """mapInArrow worker: decode assigned splits into Arrow RecordBatches.
-
-    Uncompressed splits take the mmap + tuple-yielding tight loop
-    (scan_data_buffer_rows); compressed files stream chunk-at-a-time through
-    the buffered decoder (whole-file splits, like the reference). Cells
-    accumulate straight into per-column lists -> ``pa.array`` (C-level),
-    never touching pandas."""
-    import mmap
-    import os
-
-    import pyarrow as pa
-
-    from ..sstable import cparse
-    from ..sstable.arrow_decode import scan_data_buffer_batches as _py_scan
-    from ..sstable.compression import open_compressed
-    from ..sstable.decoder import ROW_FIELDS, scan_data_file
-
-    # gcc-compiled scanner when the host can build it (~30x the Python
-    # parse; byte-identical, parity-tested); pure-Python otherwise. Both
-    # scanners dispatch on version internally (scan_cells for 2.x,
-    # scan_cells_ma for 3.x; cparse falls back to Python mid-stream for
-    # shapes its C ma path doesn't cover — never a wrong answer).
-    scanner = (
-        cparse.scan_data_buffer_batches if cparse.available() else _py_scan
-    )
-
-    schema = _arrow_cells_schema()
-    assert tuple(f.name for f in schema) == ROW_FIELDS
-    ncols = len(ROW_FIELDS)
-    cols: list[list] = [[] for _ in range(ncols)]
-    BATCH = 16384
-
-    def flush():
-        batch = pa.RecordBatch.from_arrays(
-            [pa.array(cols[i], type=schema.field(i).type) for i in range(ncols)],
-            schema=schema,
-        )
-        for c in cols:
-            c.clear()
-        return batch
-
-    def consume(row_iter):
-        rng = range(ncols)
-        for row in row_iter:
-            for i in rng:
-                cols[i].append(row[i])
-            if len(cols[0]) >= BATCH:
-                yield flush()
-
+    """mapInArrow worker: decode the assigned splits into Arrow
+    RecordBatches, one split at a time through :func:`_task_cell_batches`."""
     for arrow_batch in batches:
         for task in arrow_batch.to_pylist():
-            try:
-                if task["compression_path"]:
-                    if cparse.available():
-                        # decompress the split's chunk range to one buffer
-                        # and C-scan it (batches buffered per split so a
-                        # fallback can't double-emit)
-                        if cols[0]:
-                            yield flush()
-                        yield from _scan_compressed_c(task)
-                        continue
-                    f = open_compressed(task["path"], task["compression_path"])
-                    try:
-                        gen = scan_data_file(
-                            f,
-                            version=task["version"],
-                            start=int(task["start"]),
-                            end=int(task["end"]),
-                            source_path=task["path"],
-                            generation=int(task["generation"]),
-                        )
-                        yield from consume(
-                            tuple(c[k] for k in ROW_FIELDS) for c in gen
-                        )
-                    finally:
-                        f.close()
-                elif os.path.getsize(task["path"]) > 0:
-                    # columnar fast path: parse straight into Arrow buffers
-                    # (arrow_decode.py) — no tuples, no object lists. The
-                    # generator itself honors skip_corrupt (sentinel row).
-                    if cols[0]:
-                        yield flush()
-                    with open(task["path"], "rb") as fh, mmap.mmap(
-                        fh.fileno(), 0, access=mmap.ACCESS_READ
-                    ) as mm:
-                        yield from scanner(
-                            mm,
-                            version=task["version"],
-                            start=int(task["start"]),
-                            end=int(task["end"]),
-                            source_path=task["path"],
-                            generation=int(task["generation"]),
-                            skip_corrupt=bool(task["skip_corrupt"]),
-                        )
-                    continue
-            except UnsupportedVersionError:
-                # capability gap, not corrupt data: never swallowed into
-                # a sentinel, even under skip_corrupt
-                raise
-            except Exception:
-                if not task["skip_corrupt"]:
-                    raise
-                # corrupt containment: keep cells decoded so far, drop the
-                # rest, and emit one sentinel row (kind '!') so the driver
-                # can count corrupt inputs exactly and enforce the
-                # max_corrupt_files_to_skip threshold (Aegisthus.java:246-257)
-                sentinel = (task["path"], int(task["generation"]), None, None,
-                            "!", None, None, None, None, None, None, None)
-                for i in range(ncols):
-                    cols[i].append(sentinel[i])
-    if cols[0]:
-        yield flush()
+            yield from _task_cell_batches(task)
 
 
 def read_sstable_cells(
@@ -662,8 +557,21 @@ def _stage_tasks_factory(stage_dir: str):
 
 
 def _task_cell_batches(task) -> "Iterator":
-    """One planned split -> its decoded Arrow RecordBatches (shared by the
-    direct mapInArrow path and the parquet-staging path)."""
+    """One planned split -> its decoded Arrow RecordBatches: the one decode
+    loop behind both the direct mapInArrow path and the parquet-staging
+    path.
+
+    Uncompressed splits are mmapped and parsed straight into Arrow buffers
+    (the gcc-built scanner when the host can build it, ~30x the Python
+    parse and parity-tested; the pure-Python twin otherwise — both
+    dispatch 2.x/3.x on version internally). Compressed splits take the
+    C decompress-and-scan path, or without a compiler stream through the
+    buffered Python decoder. Cells never touch pandas.
+
+    Corrupt split under ``skip_corrupt``: every cell decoded before the
+    failure is kept, then ONE sentinel row (kind '!', null key) follows, so
+    the driver can count corrupt inputs exactly and enforce
+    max_corrupt_files_to_skip (Aegisthus.java:246-257)."""
     import mmap
 
     import pyarrow as pa
@@ -674,6 +582,19 @@ def _task_cell_batches(task) -> "Iterator":
     from ..sstable.decoder import ROW_FIELDS, scan_data_file
 
     schema = _arrow_cells_schema()
+    assert tuple(f.name for f in schema) == ROW_FIELDS
+    BATCH = 16384
+    rows: list = []
+
+    def flush():
+        cols = list(zip(*rows))
+        rows.clear()
+        return pa.RecordBatch.from_arrays(
+            [pa.array(list(cols[i]), type=schema.field(i).type)
+             for i in range(len(ROW_FIELDS))],
+            schema=schema,
+        )
+
     try:
         if task["compression_path"]:
             if cparse.available():
@@ -681,32 +602,17 @@ def _task_cell_batches(task) -> "Iterator":
                 return
             f = open_compressed(task["path"], task["compression_path"])
             try:
-                gen = scan_data_file(
+                for c in scan_data_file(
                     f,
                     version=task["version"],
                     start=int(task["start"]),
                     end=int(task["end"]),
                     source_path=task["path"],
                     generation=int(task["generation"]),
-                )
-                rows: list = []
-                for c in gen:
+                ):
                     rows.append(tuple(c[k] for k in ROW_FIELDS))
-                    if len(rows) >= 65536:
-                        cols = list(zip(*rows))
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array(list(cols[i]), type=schema.field(i).type)
-                             for i in range(len(ROW_FIELDS))],
-                            schema=schema,
-                        )
-                        rows = []
-                if rows:
-                    cols = list(zip(*rows))
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(list(cols[i]), type=schema.field(i).type)
-                         for i in range(len(ROW_FIELDS))],
-                        schema=schema,
-                    )
+                    if len(rows) >= BATCH:
+                        yield flush()
             finally:
                 f.close()
         elif os.path.getsize(task["path"]) > 0:
@@ -715,6 +621,7 @@ def _task_cell_batches(task) -> "Iterator":
                 if cparse.available()
                 else scan_data_buffer_batches
             )
+            # the scanners honor skip_corrupt themselves (sentinel row)
             with open(task["path"], "rb") as fh, mmap.mmap(
                 fh.fileno(), 0, access=mmap.ACCESS_READ
             ) as mm:
@@ -728,14 +635,14 @@ def _task_cell_batches(task) -> "Iterator":
                     skip_corrupt=bool(task["skip_corrupt"]),
                 )
     except UnsupportedVersionError:
+        # capability gap, not corrupt data: never swallowed into a
+        # sentinel, even under skip_corrupt
         raise
     except Exception:
         if not task["skip_corrupt"]:
             raise
-        sentinel = (task["path"], int(task["generation"]), None, None,
-                    "!", None, None, None, None, None, None, None)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([sentinel[i]], type=schema.field(i).type)
-             for i in range(len(ROW_FIELDS))],
-            schema=schema,
-        )
+        # the scanners' own sentinel shape: ts/row_deleted_at 0, no data
+        rows.append((task["path"], int(task["generation"]), None, 0,
+                     "!", None, None, None, 0, None, None, None))
+    if rows:
+        yield flush()

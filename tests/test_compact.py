@@ -1,7 +1,10 @@
 """compact() semantics vs the reference reducer
 (CassSSTableReducer.java — see docstrings in aegisthus_spark/compact.py)."""
 
-from aegisthus_spark.compact import LONG_MIN, cleanse, compact, compact_multistep
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from aegisthus_spark.compact import LONG_MIN, cleanse, compact
 
 MIN = LONG_MIN
 
@@ -14,6 +17,73 @@ def rows_of(df):
             [(bytes(c.name), None if c.value is None else bytes(c.value), c.ts, c.kind) for c in r.columns],
         )
     return out
+
+
+def compact_multistep(cells):
+    """Independent oracle for compact(): the same merge rules as windows
+    and joins (row-deletion window, range tombstones as an anti-join,
+    windowed LWW), sharing no code with the production path."""
+    w = Window.partitionBy("partition_key")
+    deleted = cells.select(
+        "partition_key",
+        F.max(F.coalesce("row_deleted_at", F.lit(LONG_MIN))).over(w).alias("deleted_at"),
+        "kind", "cell_name", "cell_name_max", "value", "ts", "ttl",
+        "local_deletion_time", "ts_of_last_delete",
+    )
+    cols = deleted.filter(F.col("kind").isin("c", "d", "e", "x"))
+    rts = deleted.filter(F.col("kind") == "t").select(
+        F.col("partition_key").alias("rt_key"),
+        F.col("cell_name").alias("rt_min"),
+        F.col("cell_name_max").alias("rt_max"),
+        F.col("ts").alias("rt_ts"),
+    )
+    survivors = cols.join(
+        rts,
+        on=[
+            cols.partition_key == rts.rt_key,
+            cols.cell_name >= rts.rt_min,
+            cols.cell_name <= rts.rt_max,
+            cols.ts <= rts.rt_ts,
+        ],
+        how="left_anti",
+    )
+    lww_w = (
+        Window.partitionBy("partition_key", "cell_name")
+        .orderBy(
+            F.col("ts").desc(),
+            F.when(F.col("kind") == "d", 1).otherwise(0).desc(),
+            F.col("value").desc(),
+        )
+    )
+    winners = (
+        survivors.withColumn("rn", F.row_number().over(lww_w))
+        .filter("rn = 1")
+        .filter(F.col("ts") > F.col("deleted_at"))
+    )
+    all_keys = cells.groupBy("partition_key").agg(
+        F.max(F.coalesce("row_deleted_at", F.lit(LONG_MIN))).alias("deleted_at")
+    )
+    assembled = winners.groupBy("partition_key").agg(
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col("cell_name").alias("name"),
+                    F.col("value").alias("value"),
+                    F.col("ts").alias("ts"),
+                    F.col("kind").alias("kind"),
+                    F.col("ttl").alias("ttl"),
+                    F.col("local_deletion_time").alias("local_deletion_time"),
+                    F.col("ts_of_last_delete").alias("ts_of_last_delete"),
+                )
+            )
+        ).alias("columns")
+    )
+    return all_keys.join(assembled, "partition_key", "left").select(
+        "partition_key",
+        "deleted_at",
+        F.coalesce("columns", F.array()).alias("columns"),
+        F.lit(False).alias("row_too_big"),
+    )
 
 
 def make(spark, cells_schema, rows):

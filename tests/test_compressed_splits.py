@@ -16,8 +16,11 @@ CHUNK = 4096
 N_ROWS = 2000
 
 
-def _make_compressed_sstable(d):
-    """Write ks-t-jb-1-Data.db (deflate chunks) + -Index.db + sidecar."""
+def _make_compressed_sstable(d, cut: int = 0):
+    """Write ks-t-jb-1-Data.db (deflate chunks) + -Index.db + sidecar.
+    ``cut`` > 0 drops that many bytes off the end of the uncompressed
+    stream before compressing it: a file truncated mid-row whose chunks
+    and chunk map are still intact."""
     raw = bytearray()
     index = bytearray()
     for i in range(N_ROWS):
@@ -31,6 +34,8 @@ def _make_compressed_sstable(d):
             for j in range(3)
         ]
         raw += serialize_row(key, -(1 << 63), cols, version="jb")
+    if cut:
+        del raw[-cut:]
 
     data_path = os.path.join(d, "ks-t-jb-1-Data.db")
     info_path = os.path.join(d, "ks-t-jb-1-CompressionInfo.db")
@@ -225,3 +230,40 @@ def test_c_snappy_matches_python_and_reference_sample():
     assert cparse.snappy_decompress(src, 80) == want
     with _pytest.raises(ValueError):
         cparse.snappy_decompress(varint(5) + bytes([(4 << 2) | 1, 9]), 5)
+
+
+def test_truncated_compressed_split_keeps_decoded_cells(tmp_path, monkeypatch):
+    """Corrupt-split rule, one decode loop: under skip_corrupt the cells
+    decoded before a mid-row truncation are kept and ONE '!' sentinel
+    follows — on the no-compiler Python path exactly as on the C path (the
+    Python path used to drop up to a batch of buffered cells)."""
+    import pyarrow as pa
+
+    from aegisthus_spark.sources import sstable_source as src
+    from aegisthus_spark.sstable import cparse
+
+    data_path, raw_len = _make_compressed_sstable(str(tmp_path), cut=25)
+    task = {
+        "path": data_path, "start": 0, "end": raw_len, "version": "jb",
+        "generation": 1, "skip_corrupt": True,
+        "compression_path": data_path.replace("-Data.db", "-CompressionInfo.db"),
+    }
+
+    def decode():
+        return pa.Table.from_batches(
+            list(src._task_cell_batches(task)), schema=src._arrow_cells_schema()
+        )
+
+    c_tab = decode() if cparse.available() else None
+    monkeypatch.setattr(cparse, "available", lambda: False)
+    py_tab = decode()
+
+    kinds = py_tab.column("kind").to_pylist()
+    assert kinds.count("!") == 1 and kinds[-1] == "!"
+    keys = {k for k in py_tab.column("partition_key").to_pylist() if k is not None}
+    # every row before the truncated last one survives whole
+    assert len(keys) == N_ROWS and py_tab.num_rows - 1 >= (N_ROWS - 1) * 3
+    if c_tab is not None:
+        assert py_tab.equals(c_tab)
+    with pytest.raises(Exception):
+        list(src._task_cell_batches({**task, "skip_corrupt": False}))

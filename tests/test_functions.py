@@ -128,17 +128,17 @@ def test_read_aeg_json_loader_shape(spark):
     assert [c.name for c in crows["6b31"].bag_columns] == ["6e31", "6e33", "6e34"]
 
 
-def test_read_aeg_json_roundtrip_with_writer(spark, tmp_path):
+def test_read_aeg_json_roundtrip_with_writer(spark, tmp_path, jb_input_dir):
     """Full surface loop: fixtures -> compact -> aeg-JSON write -> read back."""
     from aegisthus_spark.job import compact_snapshot, write_snapshot_json
     from aegisthus_spark.sources.aeg_json import read_aeg_json
-    from tests.test_golden import TESTDATA, golden_lines
+    from tests.conftest import JB_KEYS
 
     out = str(tmp_path / "snap")
-    rows = compact_snapshot(spark, [f"{TESTDATA}/2.0.10/randomtable/input"])
+    rows = compact_snapshot(spark, [jb_input_dir])
     n = write_snapshot_json(rows, out)
     df = read_aeg_json(spark, out)
-    assert df.count() == n == len(golden_lines("2.0.10/randomtable"))
+    assert df.count() == n == JB_KEYS
     schema = dict((f.name, f.dataType.simpleString()) for f in df.schema.fields)
     assert schema["deletedat"] == "bigint"
     assert schema["bag_columns"].startswith("array<struct<name:string")

@@ -137,15 +137,15 @@ def test_cli_produce_sstable(spark, tmp_path, monkeypatch):
     assert len(keys) == len(golden_lines("2.0.10/randomtable"))
 
 
-def test_cli_json_with_sort_flag(spark, tmp_path, monkeypatch):
+def test_cli_json_with_sort_flag(spark, tmp_path, monkeypatch, jb_input_dir):
     import aegisthus_spark.session as sess
     from aegisthus_spark import job as jobmod
-    from tests.test_golden import golden_lines
+    from tests.conftest import JB_KEYS
 
     monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
     out = str(tmp_path / "snap")
     jobmod.main([
-        "--input-dir", f"{TESTDATA}/2.0.10/randomtable/input",
+        "--input-dir", jb_input_dir,
         "--output", out,
         "--sort-columns-by-name",
     ])
@@ -154,7 +154,7 @@ def test_cli_json_with_sort_flag(spark, tmp_path, monkeypatch):
         for p in glob.glob(f"{out}/part-*")
         for ln in open(p).read().splitlines()
     )
-    want = sorted(l.split("\t")[0] for l in golden_lines("2.0.10/randomtable"))
+    want = sorted(struct.pack(">q", i).hex() for i in range(JB_KEYS))
     assert got == want
 
 
@@ -324,3 +324,33 @@ def test_python_render_fallback_custom_comparator(spark):
         ]
     finally:
         del aegtypes._SIMPLE["DemoRevType"]
+
+
+def test_cli_missing_input_dir_fails_loudly(spark, tmp_path, monkeypatch):
+    """A mistyped --input-dir must fail the job; before, the walk swallowed
+    the error and the job wrote an empty snapshot with rows_written=0."""
+    import pytest
+
+    import aegisthus_spark.session as sess
+    from aegisthus_spark import job as jobmod
+
+    monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
+    out = tmp_path / "snap"
+    with pytest.raises(FileNotFoundError, match="nonexistent"):
+        jobmod.main(["--input-dir", str(tmp_path / "nonexistent"), "--output", str(out)])
+    assert not out.exists()
+
+
+def test_discover_rejects_missing_root_among_good_ones(tmp_path):
+    """One missing root among existing ones still fails: a partial input
+    set must not compact silently."""
+    import pytest
+
+    from aegisthus_spark.sources.sstable_source import discover_data_files
+
+    good = tmp_path / "good"
+    good.mkdir()
+    (good / "ks-t-jb-1-Data.db").write_bytes(b"\x00")
+    assert discover_data_files([str(good)]) == [str(good / "ks-t-jb-1-Data.db")]
+    with pytest.raises(FileNotFoundError):
+        discover_data_files([str(good), str(tmp_path / "typo")])

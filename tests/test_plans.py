@@ -69,6 +69,42 @@ def test_compact_is_single_shuffle(spark):
     assert count_exchanges(compact(cells)) == 1
 
 
+def test_compact_snapshot_streams_one_sort_aggregate(spark, tmp_path):
+    """The reference's reducer shape: decoded cells shuffle once, sort once
+    by (key, name, ts), and merge in one streaming SortAggregate. No
+    map-side ObjectHashAggregate (it ran inside the single decode task and
+    fell back to a row-at-a-time sort past 128 keys), and no second Sort:
+    the aggregate's output order satisfies compact_snapshot's in-partition
+    key sort, so Spark drops that one as redundant."""
+    import re
+    import struct
+
+    from aegisthus_spark.job import compact_snapshot
+    from aegisthus_spark.output import to_aeg_json
+    from aegisthus_spark.plans import physical_plan
+    from aegisthus_spark.sstable.writer import serialize_row
+
+    for gen in (1, 2):
+        raw = bytearray()
+        for i in range(40):
+            cols = [
+                {"name": f"c{j}".encode(), "value": b"v%d" % gen, "ts": 100 * gen + j,
+                 "kind": "c", "ttl": None, "local_deletion_time": None,
+                 "ts_of_last_delete": None}
+                for j in range(3)
+            ]
+            raw += serialize_row(struct.pack(">q", i), -(1 << 63), cols, version="jb")
+        (tmp_path / f"ks-t-jb-{gen}-Data.db").write_bytes(bytes(raw))
+    df = to_aeg_json(compact_snapshot(spark, [str(tmp_path)]))
+    assert len(df.collect()) == 40
+    plan = physical_plan(df, "simple")
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", final)) == 1, final
+    assert len(re.findall(r"\bSort \[", final)) == 1, final
+    assert "SortAggregate" in final and "ObjectHashAggregate" not in final, final
+
+
 def test_rt_storm_stays_single_compact_shuffle(spark, queries):
     """The round-9 two-tier RT dispatch adds columns inside the
     aggregated row (skyline + survivor arrays) but must NOT add an

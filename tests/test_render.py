@@ -305,18 +305,17 @@ def test_typed_aeg_json_max_col_size_marker(spark):
     assert '["error","row too large:' in line
 
 
-def test_typed_snapshot_plan_has_no_python_udf(spark):
+def test_typed_snapshot_plan_has_no_python_udf(spark, jb_input_dir):
     """VERDICT r7 item 2 'done' criterion: DecimalType column_type with
     sort_columns_by_name stays JVM-only end-to-end (compact sort key +
     display re-sort + aeg-JSON render)."""
     from aegisthus_spark.job import compact_snapshot
     from aegisthus_spark.output import to_aeg_json
     from aegisthus_spark.plans import physical_plan
-    from tests.test_golden import TESTDATA
 
     rows = compact_snapshot(
         spark,
-        [f"{TESTDATA}/2.0.10/randomtable/input"],
+        [jb_input_dir],
         column_type="DecimalType",
         sort_columns_by_name=True,
     )
