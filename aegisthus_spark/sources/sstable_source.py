@@ -13,10 +13,12 @@ Scale design (the reference's input pipeline re-thought for Spark):
   AegisthusCombinedInputFormat:56-102). Planning is threaded, mirroring the
   reference's 20-thread split pool (:206).
 - **Decode** in executors: each planned partition is a row of a small
-  "tasks" DataFrame; ``mapInArrow`` streams Arrow batches out of the pure-
-  Python decoder — no row-at-a-time pickling, pipelined with downstream JVM
-  operators. At 100 TB this is embarrassingly parallel: ~1 partition per
-  split, no shuffle until compact()'s single Exchange.
+  "tasks" DataFrame; ``mapInArrow`` streams the Arrow batches of
+  ``sstable.decoder.scan_split`` (the C scanner, or its pure-Python twin on
+  hosts without a compiler), one split at a time — no row-at-a-time
+  pickling, pipelined with downstream JVM operators. At 100 TB this is
+  embarrassingly parallel: ~1 partition per split, no shuffle until
+  compact()'s single Exchange.
 """
 
 from __future__ import annotations
@@ -28,23 +30,15 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-CELLS_SCHEMA = T.StructType([
-    T.StructField("source_path", T.StringType()),
-    T.StructField("generation", T.IntegerType()),
-    T.StructField("partition_key", T.BinaryType()),
-    T.StructField("row_deleted_at", T.LongType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("cell_name", T.BinaryType()),
-    T.StructField("cell_name_max", T.BinaryType()),
-    T.StructField("value", T.BinaryType()),
-    T.StructField("ts", T.LongType()),
-    T.StructField("ttl", T.IntegerType()),
-    T.StructField("local_deletion_time", T.IntegerType()),
-    T.StructField("ts_of_last_delete", T.LongType()),
-])
+from ..sstable.arrow_decode import CELLS
+from ..sstable.decoder import scan_split
 
+#: the canonical cells schema, as Spark sees the decoders' Arrow batches
+CELLS_SCHEMA = from_arrow_schema(CELLS)
+
+#: one row per planned split; the columns are scan_split's arguments
 _TASKS_SCHEMA = (
     "path string, start long, end long, version string, generation int, "
     "compression_path string, skip_corrupt boolean"
@@ -57,9 +51,6 @@ MAX_COMBINED_FILES = 200  # reference aegisthus.max_combined_splits
 
 #: Priam batch directory marker (DirectoryWalker.java:156)
 _BATCH_RE = re.compile(r"batch_?id=[0-9]+/?$")
-
-
-from ..sstable.descriptor import UnsupportedVersionError  # noqa: E402
 
 
 def _accept_data_file(fn: str) -> bool:
@@ -119,11 +110,15 @@ def _walk_dir(d: str, out: list[str], honor_manifest: bool, batched: bool) -> No
                     # directory that owns the manifest
                     if not os.path.isabs(f):
                         f = os.path.join(d, f)
-                    if (
-                        _accept_data_file(os.path.basename(f))
-                        and os.path.isfile(f)
-                        and os.path.getsize(f) > 0
-                    ):
+                    if not _accept_data_file(os.path.basename(f)):
+                        continue
+                    if not os.path.isfile(f):
+                        # the manifest is the backup's file list: a listed
+                        # file that is gone must not compact silently
+                        raise FileNotFoundError(
+                            errno.ENOENT, f"listed in {manifest} but missing", f
+                        )
+                    if os.path.getsize(f) > 0:
                         out.append(f)
             return
     entries = sorted(os.listdir(d))
@@ -168,11 +163,12 @@ def _plan_one(path: str, target_bytes: int) -> list[tuple]:
     comp = find_compression_sidecar(path)
     if comp is not None:
         # compressed: split on UNCOMPRESSED offsets — the chunk map gives
-        # random access at chunk granularity (seek_uncompressed), and the
-        # Index.db offsets are already uncompressed positions, so splits cut
-        # at row boundaries exactly like plain files. The reference cannot
-        # do this (whole-file scheduling, AegisthusInputFormat.java:131-135,
-        # limitation noted in its README.md:40-41).
+        # random access at chunk granularity (CompressionInfo.decompress),
+        # and the Index.db offsets are already uncompressed positions, so
+        # splits cut at row boundaries exactly like plain files. The
+        # reference cannot do this (whole-file scheduling,
+        # AegisthusInputFormat.java:131-135, limitation noted in its
+        # README.md:40-41).
         from ..sstable.compression import CompressionInfo
 
         info = CompressionInfo.read_path(comp)
@@ -353,100 +349,13 @@ def plan_partitions(
     return partitions
 
 
-#: Arrow schema matching CELLS_SCHEMA — the decode workers emit
-#: RecordBatches directly (mapInArrow), skipping the pandas layer whose
-#: object-dtype -> Arrow conversion dominates per-batch cost
-def _arrow_cells_schema():
-    import pyarrow as pa
-
-    return pa.schema([
-        ("source_path", pa.string()), ("generation", pa.int32()),
-        ("partition_key", pa.binary()), ("row_deleted_at", pa.int64()),
-        ("kind", pa.string()), ("cell_name", pa.binary()),
-        ("cell_name_max", pa.binary()), ("value", pa.binary()),
-        ("ts", pa.int64()), ("ttl", pa.int32()),
-        ("local_deletion_time", pa.int32()), ("ts_of_last_delete", pa.int64()),
-    ])
-
-
-def _scan_compressed_c(task) -> list:
-    """Compressed split -> Arrow batches via the C scanner.
-
-    Splits carry UNCOMPRESSED offsets (the chunk map gives random access at
-    chunk granularity). Decompress the covering chunk range — plus slack,
-    since the last row of a split may spill past ``end`` — into one buffer
-    and run the C scan over it. A row spilling past the materialized tail
-    looks like a bounds violation, so on error we extend the buffer with
-    more chunks and retry; only at end-of-file is it treated as corrupt.
-    Batches are collected per split before emitting so a retry never
-    double-yields.
-    """
-    import os
-
-    from ..sstable import cparse
-    from ..sstable.compression import CompressionInfo, decompress_chunk
-
-    info = CompressionInfo.read_path(task["compression_path"])
-    fsize = os.path.getsize(task["path"])
-    ranges = info.chunk_ranges(fsize)
-    cl = info.chunk_length
-    start = int(task["start"])
-    end = min(int(task["end"]), info.data_length)
-    first = start // cl
-    SLACK = 16
-    last = min(len(ranges), (end + cl - 1) // cl + SLACK)
-
-    with open(task["path"], "rb") as f:
-
-        def chunks(lo: int, hi: int) -> bytes:
-            out = []
-            for i in range(lo, hi):
-                off, clen = ranges[i]
-                f.seek(off)
-                raw = f.read(clen)
-                remaining = info.data_length - i * cl
-                out.append(decompress_chunk(info.compressor, raw, min(cl, remaining)))
-            return b"".join(out)
-
-        buf = chunks(first, last)
-        base = first * cl
-        while True:
-            try:
-                return list(cparse.scan_data_buffer_batches(
-                    buf,
-                    version=task["version"],
-                    start=start - base,
-                    end=end - base,
-                    source_path=task["path"],
-                    generation=int(task["generation"]),
-                    skip_corrupt=False,
-                ))
-            except ValueError:
-                if last < len(ranges):
-                    # likely a row spilling past the tail: double the slack
-                    grow = min(len(ranges), last + max(SLACK, last - first))
-                    buf = buf + chunks(last, grow)
-                    last = grow
-                    continue
-                if task["skip_corrupt"]:
-                    return list(cparse.scan_data_buffer_batches(
-                        buf,
-                        version=task["version"],
-                        start=start - base,
-                        end=end - base,
-                        source_path=task["path"],
-                        generation=int(task["generation"]),
-                        skip_corrupt=True,
-                    ))
-                raise
-
-
 def _decode_tasks(batches) -> "Iterator":
     """mapInArrow worker: decode the assigned splits into Arrow
-    RecordBatches, one split at a time through :func:`_task_cell_batches`."""
+    RecordBatches, one split at a time (a task row holds scan_split's
+    arguments)."""
     for arrow_batch in batches:
         for task in arrow_batch.to_pylist():
-            yield from _task_cell_batches(task)
+            yield from scan_split(**task)
 
 
 def read_sstable_cells(
@@ -472,7 +381,12 @@ def read_sstable_cells(
     """
     files = discover_data_files(paths)
     if not files:
-        return spark.createDataFrame([], CELLS_SCHEMA)
+        # an input holding no data files must fail the job, not compact
+        # to an empty snapshot that looks like a successful run
+        raise FileNotFoundError(
+            errno.ENOENT, "no SSTable Data.db file under the input",
+            ", ".join([paths] if isinstance(paths, str) else paths),
+        )
     bti = [f for f in files if "-bti-" in os.path.basename(f)]
     if bti:
         # first touch of a big BTI file pays an O(rows) boundary walk;
@@ -519,16 +433,13 @@ def _stage_tasks_factory(stage_dir: str):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from ..sstable.decoder import ROW_FIELDS
-
-        schema = _arrow_cells_schema()
         out_path = None
         writer = None
         n = 0
         try:
             for arrow_batch in batches:
                 for task in arrow_batch.to_pylist():
-                    for cell_batch in _task_cell_batches(task):
+                    for cell_batch in scan_split(**task):
                         if writer is None:
                             import uuid
 
@@ -540,7 +451,7 @@ def _stage_tasks_factory(stage_dir: str):
                                 f"stage-{os.getpid()}-{uuid.uuid4().hex[:12]}.parquet",
                             )
                             writer = pq.ParquetWriter(
-                                out_path, schema, compression="snappy"
+                                out_path, CELLS, compression="snappy"
                             )
                         writer.write_batch(cell_batch)
                         n += cell_batch.num_rows
@@ -554,95 +465,3 @@ def _stage_tasks_factory(stage_dir: str):
             )
 
     return stage
-
-
-def _task_cell_batches(task) -> "Iterator":
-    """One planned split -> its decoded Arrow RecordBatches: the one decode
-    loop behind both the direct mapInArrow path and the parquet-staging
-    path.
-
-    Uncompressed splits are mmapped and parsed straight into Arrow buffers
-    (the gcc-built scanner when the host can build it, ~30x the Python
-    parse and parity-tested; the pure-Python twin otherwise — both
-    dispatch 2.x/3.x on version internally). Compressed splits take the
-    C decompress-and-scan path, or without a compiler stream through the
-    buffered Python decoder. Cells never touch pandas.
-
-    Corrupt split under ``skip_corrupt``: every cell decoded before the
-    failure is kept, then ONE sentinel row (kind '!', null key) follows, so
-    the driver can count corrupt inputs exactly and enforce
-    max_corrupt_files_to_skip (Aegisthus.java:246-257)."""
-    import mmap
-
-    import pyarrow as pa
-
-    from ..sstable import cparse
-    from ..sstable.arrow_decode import scan_data_buffer_batches
-    from ..sstable.compression import open_compressed
-    from ..sstable.decoder import ROW_FIELDS, scan_data_file
-
-    schema = _arrow_cells_schema()
-    assert tuple(f.name for f in schema) == ROW_FIELDS
-    BATCH = 16384
-    rows: list = []
-
-    def flush():
-        cols = list(zip(*rows))
-        rows.clear()
-        return pa.RecordBatch.from_arrays(
-            [pa.array(list(cols[i]), type=schema.field(i).type)
-             for i in range(len(ROW_FIELDS))],
-            schema=schema,
-        )
-
-    try:
-        if task["compression_path"]:
-            if cparse.available():
-                yield from _scan_compressed_c(task)
-                return
-            f = open_compressed(task["path"], task["compression_path"])
-            try:
-                for c in scan_data_file(
-                    f,
-                    version=task["version"],
-                    start=int(task["start"]),
-                    end=int(task["end"]),
-                    source_path=task["path"],
-                    generation=int(task["generation"]),
-                ):
-                    rows.append(tuple(c[k] for k in ROW_FIELDS))
-                    if len(rows) >= BATCH:
-                        yield flush()
-            finally:
-                f.close()
-        elif os.path.getsize(task["path"]) > 0:
-            scanner = (
-                cparse.scan_data_buffer_batches
-                if cparse.available()
-                else scan_data_buffer_batches
-            )
-            # the scanners honor skip_corrupt themselves (sentinel row)
-            with open(task["path"], "rb") as fh, mmap.mmap(
-                fh.fileno(), 0, access=mmap.ACCESS_READ
-            ) as mm:
-                yield from scanner(
-                    mm,
-                    version=task["version"],
-                    start=int(task["start"]),
-                    end=int(task["end"]),
-                    source_path=task["path"],
-                    generation=int(task["generation"]),
-                    skip_corrupt=bool(task["skip_corrupt"]),
-                )
-    except UnsupportedVersionError:
-        # capability gap, not corrupt data: never swallowed into a
-        # sentinel, even under skip_corrupt
-        raise
-    except Exception:
-        if not task["skip_corrupt"]:
-            raise
-        # the scanners' own sentinel shape: ts/row_deleted_at 0, no data
-        rows.append((task["path"], int(task["generation"]), None, 0,
-                     "!", None, None, None, 0, None, None, None))
-    if rows:
-        yield flush()

@@ -1,14 +1,12 @@
-"""Pure-Python Cassandra SSTable readers (Data.db / Index.db /
-CompressionInfo.db), format versions ic (1.2.x), jb (2.0.x), la (2.2.x).
+"""Cassandra SSTable readers and writers: Data.db / Index.db /
+CompressionInfo.db, format versions ic (1.2.x), jb (2.0.x), la (2.2.x) and
+the 3.x+ big/BTI formats (ma .. oa).
 
-Reference behavior studied at
-/root/reference/aegisthus-hadoop/src/main/java/com/netflix/aegisthus/io/sstable/
-(decode is delegated there to Cassandra 2.0.10's OnDiskAtom serializer; here
-it is re-implemented from the public on-disk format).
+Reading follows the reference (aegisthus-hadoop's io/sstable package,
+which delegates decode to Cassandra 2.0.10's OnDiskAtom serializer); here
+the public on-disk format is re-implemented: ``decoder.scan_split`` runs
+the C scanner (``_scan.c``) or its pure-Python twin (``arrow_decode``).
 """
 
-from .descriptor import Descriptor, parse_filename  # noqa: F401
-from .decoder import scan_data_file, scan_file  # noqa: F401
-from .index import scan_index_offsets  # noqa: F401
-from .compression import CompressionInfo, open_compressed  # noqa: F401
-from .writer import serialize_row, sstable_filename, write_sstable  # noqa: F401
+from .decoder import scan_file, scan_split  # noqa: F401
+from .writer import write_sstable  # noqa: F401

@@ -1,11 +1,37 @@
-"""Columnar SSTable decode: parse straight into Arrow buffers.
+"""Data.db decoder, 2.x formats (ic / jb / la): bytes -> Arrow batches.
 
-The row-tuple path (``scan_data_buffer_rows`` -> per-column lists ->
-``pa.array``) spends as much time building Python objects (a 12-tuple plus
-two ``bytes`` per cell, then 12 list appends, then 12 object-list -> Arrow
-conversions) as it does parsing. This module keeps the same byte-level
-parser (reference format: SSTableColumnScanner.java:141-167) but appends
-each field directly into the buffers Arrow wants:
+The pure-Python twin of the C scanner (``_scan.c`` via :mod:`.cparse`):
+the fallback on hosts without a compiler and the fuzz oracle
+(``tests/test_cparse_fuzz.py``). The per-split routine
+(``decoder.scan_split``) picks between the two.
+
+Row layout (public Cassandra 1.2/2.x on-disk format; scan behavior mirrors
+SSTableColumnScanner.java:71-167):
+
+    u16  key length, key bytes
+    [ic] i64 row size                      (versions with rowSize+columnCount)
+    i32  local deletion time, i64 marked-for-delete-at   (row DeletionTime)
+    [ic] i32 column count
+    atoms...        (jb/la: until a 0-length name marks end of row;
+                     ic: exactly column-count atoms)
+
+Atom layout (Cassandra 2.0 OnDiskAtom serializer / ColumnSerializer):
+
+    u16 name length (0 => end of row), name bytes
+    u8  flags: 0x01 deleted | 0x02 expiring | 0x04 counter |
+               0x08 counter-update | 0x10 range tombstone
+    range tombstone: u16 max-name length+bytes, i32 ldt, i64 mfda
+    counter:         i64 timestampOfLastDelete, i64 ts, i32 len, value
+    expiring:        i32 ttl, i32 ldt, i64 ts, i32 len, value
+    other:           i64 ts, i32 len, value   ('deleted' value = i32 ldt)
+
+Cells come out in the canonical schema (:data:`CELLS`): kind 'c' column,
+'d' deleted, 'e' expiring, 'x' counter, 't' range tombstone, 'r' row-only
+(empty row; preserved because deletes are data —
+SSTableColumnScanner.java:161-164).
+
+Each field is appended straight into the buffers Arrow wants, with no
+per-cell tuple or dict:
 
 - binary/string columns: one ``bytearray`` data buffer + an ``array('i')``
   offset vector -> ``pa.Array.from_buffers`` (zero conversion at flush);
@@ -14,9 +40,6 @@ each field directly into the buffers Arrow wants:
   cell_name_max): only the rare non-null entries are recorded as
   (index, value) and materialized at flush — a 'c' cell touches none of
   them.
-
-Per 'c' cell the Python-level work is ~7 buffer appends and 2 unpacks; no
-tuples, no bytes objects, no transpose loop.
 """
 
 from __future__ import annotations
@@ -28,33 +51,88 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
-from .decoder import (
-    COUNTER_MASK,
-    DELETION_MASK,
-    EXPIRATION_MASK,
-    LONG_MIN,
-    RANGE_TOMBSTONE_MASK,
-    ROW_FIELDS,
-    _I32,
-    _I64,
-    _U16,
-)
+from .descriptor import UnsupportedVersionError
+
+LONG_MIN = -(1 << 63)
+
+EXPIRATION_MASK = 0x02
+COUNTER_MASK = 0x04
+RANGE_TOMBSTONE_MASK = 0x10
+
+_U16 = _struct.Struct(">H")
+_I32 = _struct.Struct(">i")
+_I64 = _struct.Struct(">q")
+
+#: the canonical cell schema (FIXTURES.md §1 / compact.py). Every decoder
+#: emits it; the Spark source's CELLS_SCHEMA and the field order of the
+#: 3.x decoder's tuples (ROW_FIELDS) derive from it.
+CELLS = pa.schema([
+    ("source_path", pa.string()), ("generation", pa.int32()),
+    ("partition_key", pa.binary()), ("row_deleted_at", pa.int64()),
+    ("kind", pa.string()), ("cell_name", pa.binary()),
+    ("cell_name_max", pa.binary()), ("value", pa.binary()),
+    ("ts", pa.int64()), ("ttl", pa.int32()),
+    ("local_deletion_time", pa.int32()), ("ts_of_last_delete", pa.int64()),
+])
+ROW_FIELDS = tuple(CELLS.names)
 
 BATCH_ROWS = 16384
 
 
-def _schema() -> pa.Schema:
-    return pa.schema([
-        ("source_path", pa.string()), ("generation", pa.int32()),
-        ("partition_key", pa.binary()), ("row_deleted_at", pa.int64()),
-        ("kind", pa.string()), ("cell_name", pa.binary()),
-        ("cell_name_max", pa.binary()), ("value", pa.binary()),
-        ("ts", pa.int64()), ("ttl", pa.int32()),
-        ("local_deletion_time", pa.int32()), ("ts_of_last_delete", pa.int64()),
-    ])
+def tuples_batch(rows: list) -> pa.RecordBatch:
+    """ROW_FIELDS-ordered tuples -> one canonical batch."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(col), type=f.type) for col, f in zip(zip(*rows), CELLS)],
+        schema=CELLS,
+    )
 
 
-assert tuple(f.name for f in _schema()) == ROW_FIELDS
+def contain(batches, *, skip_corrupt: bool, source_path: str, generation: int):
+    """The corrupt-input rule of every decode path (P6): pass ``batches``
+    through; on a decode error under ``skip_corrupt``, keep every cell
+    decoded so far and end the stream with ONE sentinel row (kind '!',
+    null key, ts and row_deleted_at 0), so the driver can count corrupt
+    inputs and enforce max_corrupt_files_to_skip (Aegisthus.java:246-257).
+    An unsupported format version is a capability gap, not corrupt data:
+    it always raises."""
+    try:
+        yield from batches
+    except UnsupportedVersionError:
+        raise
+    except Exception:
+        if not skip_corrupt:
+            raise
+        yield tuples_batch([(source_path, generation, None, 0, "!", None, None,
+                             None, 0, None, None, None)])
+
+
+def cells_batch(n: int, source_path: str, generation: int, row_deleted,
+                row_cells, kind, cols) -> pa.RecordBatch:
+    """Assemble ``n`` canonical cells from columnar parts — shared by this
+    parser and the C scanner: the split's constant path and generation,
+    each row's deletion time repeated over its ``row_cells`` cells, one
+    ``kind`` byte per cell, and ``cols``, the remaining eight arrays in
+    schema order (partition_key, cell_name, cell_name_max, value, ts, ttl,
+    local_deletion_time, ts_of_last_delete)."""
+    path_b = source_path.encode()
+    src = pa.Array.from_buffers(
+        pa.string(), n,
+        [None,
+         pa.py_buffer((np.arange(n + 1, dtype=np.int32) * len(path_b)).tobytes()),
+         pa.py_buffer(path_b * n)],
+    )
+    kinds = pa.Array.from_buffers(
+        pa.string(), n,
+        [None, pa.py_buffer(np.arange(n + 1, dtype=np.int32).tobytes()),
+         pa.py_buffer(kind)],
+    )
+    key, name, name_max, value, ts, ttl, ldt, tsd = cols
+    return pa.RecordBatch.from_arrays(
+        [src, pa.array(np.full(n, generation, np.int32)), key,
+         pa.array(np.repeat(row_deleted, row_cells)), kinds,
+         name, name_max, value, ts, ttl, ldt, tsd],
+        schema=CELLS,
+    )
 
 
 def _validity(n: int, null_idx: list) -> pa.Buffer | None:
@@ -119,28 +197,13 @@ class _Acc:
 
     def flush(self) -> pa.RecordBatch:
         n = self.n
-        path_b = self.source_path.encode()
-        src = pa.Array.from_buffers(
-            pa.string(), n,
-            [None,
-             pa.py_buffer((np.arange(n + 1, dtype=np.int32) * len(path_b)).tobytes()),
-             pa.py_buffer(path_b * n)],
-        )
-        gen = pa.array(np.full(n, self.generation, np.int32))
-        cells_per_row = np.frombuffer(self.row_cells, np.int32)
-        deleted = pa.array(
-            np.repeat(np.frombuffer(self.row_deleted, np.int64), cells_per_row)
-        )
-        kind = pa.Array.from_buffers(
-            pa.string(), n,
-            [None, pa.py_buffer(np.arange(n + 1, dtype=np.int32).tobytes()),
-             pa.py_buffer(self.kind)],
-        )
-        batch = pa.RecordBatch.from_arrays(
+        batch = cells_batch(
+            n, self.source_path, self.generation,
+            np.frombuffer(self.row_deleted, np.int64),
+            np.frombuffer(self.row_cells, np.int32),
+            self.kind,
             [
-                src, gen,
                 _binary_array(n, self.key_data, self.key_off, self.key_null),
-                deleted, kind,
                 _binary_array(n, self.name_data, self.name_off, self.name_null),
                 _sparse_array(n, self.rt_max, pa.binary()),
                 _binary_array(n, self.val_data, self.val_off, self.val_null),
@@ -149,7 +212,6 @@ class _Acc:
                 _sparse_array(n, self.ldt, pa.int32()),
                 _sparse_array(n, self.tsd, pa.int64()),
             ],
-            schema=_schema(),
         )
         self.reset()
         return batch
@@ -166,12 +228,12 @@ def scan_data_buffer_batches(
     batch_rows: int = BATCH_ROWS,
     skip_corrupt: bool = False,
 ) -> Iterator[pa.RecordBatch]:
-    """Arrow RecordBatches straight from an SSTable Data buffer.
-
-    Byte-for-byte the same parse as ``scan_data_buffer_rows`` (the golden-
-    tested tuple path); only the materialization differs. ``skip_corrupt``:
-    on a parse error, keep the cells decoded so far, append the corrupt-file
-    sentinel row (kind '!', null key — P6), and end the stream.
+    """Arrow RecordBatches straight from an SSTable Data buffer — the
+    Python twin of ``cparse.scan_data_buffer_batches`` (same interface,
+    same batches) and its fuzz oracle. ``start`` sits on a row boundary;
+    rows that START before ``end`` are decoded whole (the reference's
+    split contract, SSTableColumnScanner.java:48-58,187-189).
+    ``skip_corrupt``: see :func:`contain`.
 
     3.x+ ("ma"...) inputs route to the modern row-format decoder and
     come back as the same canonical batches (tuple materialization — the
@@ -181,58 +243,41 @@ def scan_data_buffer_batches(
         from .descriptor import check_modern_version
 
         check_modern_version(version)
-        yield from _modern_batches(
+        batches = modern_batches(
             data, start=start, end=end, source_path=source_path,
-            generation=generation, batch_rows=batch_rows,
-            skip_corrupt=skip_corrupt, version=version,
+            generation=generation, batch_rows=batch_rows, version=version,
         )
-        return
+    else:
+        batches = _scan_2x(data, version, start, end, source_path, generation,
+                           batch_rows)
+    yield from contain(batches, skip_corrupt=skip_corrupt,
+                       source_path=source_path, generation=generation)
+
+
+def _scan_2x(data, version, start, end, source_path, generation, batch_rows):
     acc = _Acc(source_path, generation)
     try:
         yield from _scan_into(acc, data, version, start, end, batch_rows)
     except Exception:
-        if not skip_corrupt:
-            raise
         # the parse may have died mid-row: cells decoded so far are kept
         # (reference behavior). acc.n is only synced at row boundaries, so
-        # recover the true count from ts (one append per cell), then close
-        # the partial row's bookkeeping before appending the sentinel row.
+        # recover the true count from ts (one append per cell) and close
+        # the partial row's bookkeeping before the error propagates.
         acc.n = len(acc.ts)
         if len(acc.row_deleted) > len(acc.row_cells):
             acc.row_cells.append(acc.n - sum(acc.row_cells))
-        i = acc.n
-        acc.n += 1
-        acc.key_off.append(len(acc.key_data))
-        acc.key_null.append(i)
-        acc.kind.append(0x21)  # '!'
-        acc.name_off.append(len(acc.name_data))
-        acc.name_null.append(i)
-        acc.val_off.append(len(acc.val_data))
-        acc.val_null.append(i)
-        acc.ts.append(0)
-        acc.row_deleted.append(0)
-        acc.row_cells.append(1)
-        # note: ts/row_deleted 0 (sentinel carries no data; only kind counts)
+        if acc.n:
+            yield acc.flush()
+        raise
     if acc.n:
         yield acc.flush()
 
 
-def _modern_batches(
-    data, *, start, end, source_path, generation, batch_rows, skip_corrupt,
-    version="ma",
-):
-    """RecordBatches from the 3.x decoder's ROW_FIELDS tuples."""
+def modern_batches(data, *, start, end, source_path, generation, batch_rows,
+                   version="ma"):
+    """RecordBatches from the 3.x decoder's ROW_FIELDS tuples; on an error
+    the tuples decoded so far are emitted before it propagates."""
     from .modern import scan_data_buffer_rows_modern
-
-    schema = _schema()
-
-    def flush(rows):
-        cols = list(zip(*rows))
-        return pa.RecordBatch.from_arrays(
-            [pa.array(list(cols[i]), type=schema.field(i).type)
-             for i in range(len(ROW_FIELDS))],
-            schema=schema,
-        )
 
     rows: list = []
     try:
@@ -242,15 +287,14 @@ def _modern_batches(
         ):
             rows.append(row)
             if len(rows) >= batch_rows:
-                yield flush(rows)
+                yield tuples_batch(rows)
                 rows = []
     except Exception:
-        if not skip_corrupt:
-            raise
-        rows.append((source_path, generation, None, 0, "!", None, None,
-                     None, 0, None, None, None))
+        if rows:
+            yield tuples_batch(rows)
+        raise
     if rows:
-        yield flush(rows)
+        yield tuples_batch(rows)
 
 
 #: fused per-kind field structs — one unpack_from (and one tuple) per cell
@@ -371,7 +415,7 @@ def _scan_into(acc: _Acc, data, version, start, end, batch_rows):
                 acc.ttl.append((idx, ttl))
                 acc.ldt.append((idx, ldt))
                 ts_append(ts)
-            else:  # DELETION_MASK
+            else:  # deleted (0x01)
                 ts, vlen = qi(buf, o)
                 o += 12
                 if vlen < 0 or o + vlen > total:

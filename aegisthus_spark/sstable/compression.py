@@ -1,4 +1,4 @@
-"""CompressionInfo.db sidecar + chunked decompressing stream.
+"""CompressionInfo.db sidecar + chunk decompression.
 
 Sidecar layout (public Cassandra format; reference behavior:
 io/sstable/compression/CompressionMetadata.java:37-107):
@@ -23,7 +23,6 @@ available.
 
 from __future__ import annotations
 
-import io
 import struct
 import zlib
 from dataclasses import dataclass
@@ -68,6 +67,22 @@ class CompressionInfo:
             nxt = self.chunk_offsets[i + 1] if i + 1 < len(self.chunk_offsets) else file_size
             out.append((off, nxt - off - 4))
         return out
+
+    def decompress(self, f: BinaryIO, file_size: int, lo: int, hi: int) -> bytes:
+        """Chunks [lo, hi) of the open Data.db ``f`` decompressed into one
+        buffer, which starts at uncompressed offset ``lo * chunk_length``.
+        The chunk map makes this random access: a split decompresses only
+        its own chunks (the reference schedules compressed files whole,
+        AegisthusInputFormat.java:131-135)."""
+        offsets = self.chunk_offsets
+        out = []
+        for i in range(lo, hi):
+            nxt = offsets[i + 1] if i + 1 < len(offsets) else file_size
+            f.seek(offsets[i])
+            raw = f.read(nxt - offsets[i] - 4)
+            ulen = min(self.chunk_length, self.data_length - i * self.chunk_length)
+            out.append(decompress_chunk(self.compressor, raw, ulen))
+        return b"".join(out)
 
 
 def lz4_block_decompress(src: bytes, uncompressed_len: int) -> bytes:
@@ -277,79 +292,6 @@ def snappy_decompress(src: bytes) -> bytes:
     if di != ulen:
         raise ValueError(f"malformed Snappy block: wrote {di} of {ulen} bytes")
     return bytes(dst)
-
-
-class ChunkedDecompressingStream(io.RawIOBase):
-    """Sequential read stream over a chunk-compressed Data.db."""
-
-    def __init__(self, f: BinaryIO, info: CompressionInfo, file_size: int):
-        self.f = f
-        self.info = info
-        self.ranges = info.chunk_ranges(file_size)
-        self.chunk_idx = 0
-        self.buf = b""
-        self.buf_pos = 0
-
-    def _fill(self) -> bool:
-        if self.chunk_idx >= len(self.ranges):
-            return False
-        off, clen = self.ranges[self.chunk_idx]
-        self.f.seek(off)
-        raw = self.f.read(clen)
-        # last chunk may be shorter than chunk_length
-        remaining = self.info.data_length - self.chunk_idx * self.info.chunk_length
-        ulen = min(self.info.chunk_length, remaining)
-        self.buf = decompress_chunk(self.info.compressor, raw, ulen)
-        self.buf_pos = 0
-        self.chunk_idx += 1
-        return True
-
-    def seek_uncompressed(self, offset: int) -> None:
-        """Position the stream at an uncompressed offset in O(1) chunks.
-
-        This is what makes compressed SSTables *splittable* — the chunk map
-        gives random access at chunk granularity, so a split starting at an
-        index-derived row boundary decompresses only from its own chunk
-        (the reference schedules compressed files whole,
-        AegisthusInputFormat.java:131-135 / README.md:40-41).
-        """
-        idx = offset // self.info.chunk_length
-        self.chunk_idx = idx
-        if not self._fill():
-            self.buf = b""
-            self.buf_pos = 0
-            return
-        self.buf_pos = offset % self.info.chunk_length
-
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0:
-            chunks = [self.buf[self.buf_pos:]]
-            while self._fill():
-                chunks.append(self.buf)
-            self.buf = b""
-            self.buf_pos = 0
-            return b"".join(chunks)
-        out = bytearray()
-        while len(out) < n:
-            if self.buf_pos >= len(self.buf):
-                if not self._fill():
-                    break
-            take = min(n - len(out), len(self.buf) - self.buf_pos)
-            out += self.buf[self.buf_pos:self.buf_pos + take]
-            self.buf_pos += take
-        return bytes(out)
-
-    def close(self):
-        self.f.close()
-        super().close()
-
-
-def open_compressed(data_path: str, info_path: str) -> ChunkedDecompressingStream:
-    import os
-
-    info = CompressionInfo.read_path(info_path)
-    f = open(data_path, "rb")
-    return ChunkedDecompressingStream(f, info, os.path.getsize(data_path))
 
 
 def find_compression_sidecar(data_path: str) -> str | None:

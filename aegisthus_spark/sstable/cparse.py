@@ -6,13 +6,15 @@ this module builds it once per host (cached .so keyed by source hash,
 atomic rename, safe under concurrent Spark workers) and exposes
 ``scan_data_buffer_batches`` with the exact interface and output schema of
 :mod:`.arrow_decode`. Anything missing (no compiler, build failure) makes
-``available()`` False and callers fall back to the Python path.
+``available()`` False, and ``decoder.scan_split`` falls back to that
+pure-Python twin.
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -21,12 +23,13 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
-from .arrow_decode import _schema
-from .decoder import LONG_MIN
+from .arrow_decode import cells_batch, contain, modern_batches
+
+log = logging.getLogger(__name__)
 
 _SRC = os.path.join(os.path.dirname(__file__), "_scan.c")
 
-DONE, MORE, ROW_TOO_BIG, CORRUPT = 0, 1, 2, 3
+DONE, MORE, ROW_TOO_BIG, CORRUPT, MA_UNSUPPORTED = 0, 1, 2, 3, 4
 
 BATCH_CELLS = 1 << 16
 BATCH_BYTES = 8 << 20
@@ -210,6 +213,108 @@ def _int_arr(n, values, valid, pa_type) -> pa.Array:
     )
 
 
+class _Out:
+    """The numpy buffers one scan_cells / scan_cells_ma call fills."""
+
+    def __init__(self, cap_cells: int, cap_bytes: int):
+        def data():
+            return np.empty(cap_bytes, np.uint8)
+
+        def offsets():
+            return np.empty(cap_cells + 1, np.int32)
+
+        def per_cell(dtype):
+            return np.empty(cap_cells, dtype)
+
+        self.caps = (ctypes.c_int64(cap_cells), ctypes.c_int64(cap_bytes))
+        self.key_data, self.key_off = data(), offsets()
+        self.name_data, self.name_off, self.name_valid = data(), offsets(), per_cell(np.uint8)
+        self.max_data, self.max_off, self.max_valid = data(), offsets(), per_cell(np.uint8)
+        self.val_data, self.val_off, self.val_valid = data(), offsets(), per_cell(np.uint8)
+        self.ts, self.kind = per_cell(np.int64), per_cell(np.uint8)
+        self.ttl, self.ttl_valid = per_cell(np.int32), per_cell(np.uint8)
+        self.ldt, self.ldt_valid = per_cell(np.int32), per_cell(np.uint8)
+        self.tsd, self.tsd_valid = per_cell(np.int64), per_cell(np.uint8)
+        self.row_deleted, self.row_cells = per_cell(np.int64), per_cell(np.int32)
+        self.out = _ScanOut()
+
+    def args(self) -> tuple:
+        """Both kernels' trailing arguments: capacities, output buffers
+        and the result struct."""
+        return (
+            *self.caps,
+            _u8(self.key_data), _i32p(self.key_off),
+            _u8(self.name_data), _i32p(self.name_off), _u8(self.name_valid),
+            _u8(self.max_data), _i32p(self.max_off), _u8(self.max_valid),
+            _u8(self.val_data), _i32p(self.val_off), _u8(self.val_valid),
+            _i64p(self.ts), _u8(self.kind),
+            _i32p(self.ttl), _u8(self.ttl_valid),
+            _i32p(self.ldt), _u8(self.ldt_valid),
+            _i64p(self.tsd), _u8(self.tsd_valid),
+            _i64p(self.row_deleted), _i32p(self.row_cells),
+            ctypes.byref(self.out),
+        )
+
+    def batch(self, source_path: str, generation: int) -> pa.RecordBatch:
+        n, out = int(self.out.n), self.out
+        return cells_batch(
+            n, source_path, generation,
+            self.row_deleted[: out.rows], self.row_cells[: out.rows], self.kind[:n],
+            [
+                _binary(n, self.key_data[: out.key_bytes], self.key_off[: n + 1],
+                        np.ones(n, np.uint8)),
+                _binary(n, self.name_data[: out.name_bytes], self.name_off[: n + 1],
+                        self.name_valid[:n]),
+                _binary(n, self.max_data[: out.max_bytes_used], self.max_off[: n + 1],
+                        self.max_valid[:n]),
+                _binary(n, self.val_data[: out.val_bytes], self.val_off[: n + 1],
+                        self.val_valid[:n]),
+                pa.Array.from_buffers(pa.int64(), n, [None, pa.py_buffer(self.ts[:n])]),
+                _int_arr(n, self.ttl[:n], self.ttl_valid[:n], pa.int32()),
+                _int_arr(n, self.ldt[:n], self.ldt_valid[:n], pa.int32()),
+                _int_arr(n, self.tsd[:n], self.tsd_valid[:n], pa.int64()),
+            ],
+        )
+
+
+def _scan_loop(kernel, fmt_args: tuple, data, start, end, source_path,
+               generation, batch_rows, fallback=None) -> Iterator[pa.RecordBatch]:
+    """Drive one C kernel over ``data[start:end]`` batch by batch. A row
+    larger than the batch caps doubles them and retries; corruption raises
+    ValueError after the cells the kernel completed were yielded; a 3.x
+    shape the kernel does not cover (MA_UNSUPPORTED) hands the rest of the
+    split to ``fallback(offset)``."""
+    mv = memoryview(data)
+    total = len(mv)
+    stop = total if end is None else end
+    # zero-copy pointer into the source buffer (mmap and bytes both export
+    # the buffer protocol; keep `obj` alive for the duration of the scan)
+    obj = np.frombuffer(mv, dtype=np.uint8)
+    c_buf = _u8(obj)
+    cap_cells = max(1024, int(batch_rows))
+    cap_bytes = BATCH_BYTES
+    o = start
+    while o < stop:
+        out = _Out(cap_cells, cap_bytes)
+        rc = kernel(c_buf, ctypes.c_int64(total), ctypes.c_int64(o),
+                    ctypes.c_int64(stop), *fmt_args, *out.args())
+        if rc == ROW_TOO_BIG:
+            cap_cells *= 2
+            cap_bytes *= 2
+            continue
+        if out.out.n:
+            yield out.batch(source_path, generation)
+        if rc == DONE:
+            return
+        o = int(out.out.consumed)
+        if rc == MORE:
+            continue
+        if rc == MA_UNSUPPORTED and fallback is not None:
+            yield from fallback(o)
+            return
+        raise ValueError(f"corrupt sstable data at offset {o} in {source_path!r}")
+
+
 def scan_data_buffer_batches(
     data,
     *,
@@ -234,136 +339,17 @@ def scan_data_buffer_batches(
         # unsigned encoding is moot) and every in-row ldt saturates at
         # Integer.MAX_VALUE via ma_sat_ldt — byte-for-byte the Python
         # twin's _sat_ldt behavior.
-        yield from _scan_ma_batches(
-            data, start=start, end=end, source_path=source_path,
-            generation=generation, batch_rows=batch_rows,
-            skip_corrupt=skip_corrupt,
+        batches = _scan_ma_batches(
+            lib, data, start, end, source_path, generation, batch_rows, version
         )
-        return
-    buf = data if isinstance(data, (bytes, bytearray, memoryview)) else memoryview(data)
-    mv = memoryview(buf)
-    total = len(mv)
-    stop = total if end is None else end
-    has_rs_cc = 1 if version < "ja" else 0
-    # zero-copy pointer into the source buffer (mmap and bytes both export
-    # the buffer protocol; keep `obj` alive for the duration of the scan)
-    obj = np.frombuffer(mv, dtype=np.uint8)
-    c_buf = obj.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8))
-
-    cap_cells = max(1024, int(batch_rows))
-    cap_bytes = BATCH_BYTES
-    o = start
-    schema = _schema()
-    path_b = source_path.encode()
-
-    while o < stop:
-        key_data = np.empty(cap_bytes, np.uint8)
-        name_data = np.empty(cap_bytes, np.uint8)
-        max_data = np.empty(cap_bytes, np.uint8)
-        val_data = np.empty(cap_bytes, np.uint8)
-        key_off = np.empty(cap_cells + 1, np.int32)
-        name_off = np.empty(cap_cells + 1, np.int32)
-        max_off = np.empty(cap_cells + 1, np.int32)
-        val_off = np.empty(cap_cells + 1, np.int32)
-        name_valid = np.empty(cap_cells, np.uint8)
-        max_valid = np.empty(cap_cells, np.uint8)
-        val_valid = np.empty(cap_cells, np.uint8)
-        ts = np.empty(cap_cells, np.int64)
-        kind = np.empty(cap_cells, np.uint8)
-        ttl = np.empty(cap_cells, np.int32)
-        ttl_valid = np.empty(cap_cells, np.uint8)
-        ldt = np.empty(cap_cells, np.int32)
-        ldt_valid = np.empty(cap_cells, np.uint8)
-        tsd = np.empty(cap_cells, np.int64)
-        tsd_valid = np.empty(cap_cells, np.uint8)
-        row_deleted = np.empty(cap_cells, np.int64)
-        row_cells = np.empty(cap_cells, np.int32)
-        out = _ScanOut()
-
-        rc = lib.scan_cells(
-            c_buf, ctypes.c_int64(total), ctypes.c_int64(o), ctypes.c_int64(stop),
-            ctypes.c_int(has_rs_cc),
-            ctypes.c_int64(cap_cells), ctypes.c_int64(cap_bytes),
-            _u8(key_data), _i32p(key_off),
-            _u8(name_data), _i32p(name_off), _u8(name_valid),
-            _u8(max_data), _i32p(max_off), _u8(max_valid),
-            _u8(val_data), _i32p(val_off), _u8(val_valid),
-            _i64p(ts), _u8(kind),
-            _i32p(ttl), _u8(ttl_valid),
-            _i32p(ldt), _u8(ldt_valid),
-            _i64p(tsd), _u8(tsd_valid),
-            _i64p(row_deleted), _i32p(row_cells),
-            ctypes.byref(out),
+    else:
+        has_rs_cc = ctypes.c_int(1 if version < "ja" else 0)
+        batches = _scan_loop(
+            lib.scan_cells, (has_rs_cc,), data, start, end, source_path,
+            generation, batch_rows,
         )
-
-        if rc == ROW_TOO_BIG:
-            cap_cells *= 2
-            cap_bytes *= 2
-            continue
-
-        n = int(out.n)
-        if n:
-            src = pa.Array.from_buffers(
-                pa.string(), n,
-                [None,
-                 pa.py_buffer((np.arange(n + 1, dtype=np.int32) * len(path_b)).tobytes()),
-                 pa.py_buffer(path_b * n)],
-            )
-            gen_arr = pa.array(np.full(n, generation, np.int32))
-            deleted = pa.array(
-                np.repeat(row_deleted[: out.rows], row_cells[: out.rows])
-            )
-            kind_arr = pa.Array.from_buffers(
-                pa.string(), n,
-                [None, pa.py_buffer(np.arange(n + 1, dtype=np.int32).tobytes()),
-                 pa.py_buffer(kind[:n])],
-            )
-            batch = pa.RecordBatch.from_arrays(
-                [
-                    src, gen_arr,
-                    _binary(n, key_data[: out.key_bytes], key_off[: n + 1], np.ones(n, np.uint8)),
-                    deleted, kind_arr,
-                    _binary(n, name_data[: out.name_bytes], name_off[: n + 1], name_valid[:n]),
-                    _binary(n, max_data[: out.max_bytes_used], max_off[: n + 1], max_valid[:n]),
-                    _binary(n, val_data[: out.val_bytes], val_off[: n + 1], val_valid[:n]),
-                    pa.Array.from_buffers(pa.int64(), n, [None, pa.py_buffer(ts[:n])]),
-                    _int_arr(n, ttl[:n], ttl_valid[:n], pa.int32()),
-                    _int_arr(n, ldt[:n], ldt_valid[:n], pa.int32()),
-                    _int_arr(n, tsd[:n], tsd_valid[:n], pa.int64()),
-                ],
-                schema=schema,
-            )
-            yield batch
-
-        if rc == DONE:
-            return
-        if rc == MORE:
-            o = int(out.consumed)
-            continue
-        # CORRUPT
-        if not skip_corrupt:
-            raise ValueError(
-                f"corrupt sstable data at offset {int(out.consumed)} in {source_path!r}"
-            )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([source_path]), pa.array([generation], pa.int32()),
-                pa.array([None], pa.binary()), pa.array([0], pa.int64()),
-                pa.array(["!"]), pa.array([None], pa.binary()),
-                pa.array([None], pa.binary()), pa.array([None], pa.binary()),
-                pa.array([0], pa.int64()), pa.array([None], pa.int32()),
-                pa.array([None], pa.int32()), pa.array([None], pa.int64()),
-            ],
-            schema=schema,
-        )
-        return
-
-
-# keep LONG_MIN import used (row-only sentinel is produced in C)
-_ = LONG_MIN
-
-
-MA_UNSUPPORTED = 4
+    yield from contain(batches, skip_corrupt=skip_corrupt,
+                       source_path=source_path, generation=generation)
 
 
 def _ma_meta(header):
@@ -394,157 +380,41 @@ def _ma_meta(header):
     return cl, cols(header.regular_columns), cols(header.static_columns)
 
 
-def _scan_ma_batches(
-    data,
-    *,
-    start: int = 0,
-    end: int | None = None,
-    source_path: str = "",
-    generation: int = 0,
-    batch_rows: int = BATCH_CELLS,
-    skip_corrupt: bool = False,
-) -> Iterator[pa.RecordBatch]:
-    """C-accelerated 3.x scan — twin of modern.scan_data_buffer_rows_modern
-    with arrow_decode's batch shape. rc=4 (a shape the C path doesn't do:
-    >=64-column subsets, deep RT nesting, oversized components) falls back
-    to the pure-Python decoder FROM THE SAME PARTITION — never a wrong
-    answer, only a slower path."""
-    from .arrow_decode import _modern_batches
+def _scan_ma_batches(lib, data, start, end, source_path, generation,
+                     batch_rows, version) -> Iterator[pa.RecordBatch]:
+    """C-accelerated 3.x scan — twin of modern.scan_data_buffer_rows_modern.
+    A shape the C path doesn't do (>=64-column subsets, deep RT nesting,
+    oversized components) falls back to the pure-Python decoder FROM THE
+    SAME PARTITION — never a wrong answer, only a slower path, and
+    logged. Corruption drops the broken partition whole; the complete
+    partitions before it were already emitted."""
     from .modern import header_for_data_file
 
-    lib = _lib()
     header = header_for_data_file(source_path)
-    n_cl = len(header.clustering_types)
     cl, (rn, ro, rf, rc_), (sn, so, sf, sc_) = _ma_meta(header)
-
-    buf = data if isinstance(data, (bytes, bytearray, memoryview)) else memoryview(data)
-    mv = memoryview(buf)
-    total = len(mv)
-    stop = total if end is None else end
-    obj = np.frombuffer(mv, dtype=np.uint8)
-    c_buf = obj.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8))
-
-    cap_cells = max(1024, int(batch_rows))
-    cap_bytes = BATCH_BYTES
     scratch = np.empty(1 << 20, np.uint8)
-    o = start
-    schema = _schema()
-    path_b = source_path.encode()
+    fmt_args = (
+        ctypes.c_int64(header.min_timestamp),
+        ctypes.c_int64(header.min_local_deletion_time),
+        ctypes.c_int64(header.min_ttl),
+        ctypes.c_int32(len(header.clustering_types)), _i32p(cl),
+        ctypes.c_int32(len(header.regular_columns)),
+        _u8(rn), _i32p(ro), _i32p(rf), _u8(rc_),
+        ctypes.c_int32(len(header.static_columns)),
+        _u8(sn), _i32p(so), _i32p(sf), _u8(sc_),
+        _u8(scratch), ctypes.c_int64(len(scratch)),
+    )
 
-    while o < stop:
-        key_data = np.empty(cap_bytes, np.uint8)
-        name_data = np.empty(cap_bytes, np.uint8)
-        max_data = np.empty(cap_bytes, np.uint8)
-        val_data = np.empty(cap_bytes, np.uint8)
-        key_off = np.empty(cap_cells + 1, np.int32)
-        name_off = np.empty(cap_cells + 1, np.int32)
-        max_off = np.empty(cap_cells + 1, np.int32)
-        val_off = np.empty(cap_cells + 1, np.int32)
-        name_valid = np.empty(cap_cells, np.uint8)
-        max_valid = np.empty(cap_cells, np.uint8)
-        val_valid = np.empty(cap_cells, np.uint8)
-        ts = np.empty(cap_cells, np.int64)
-        kind = np.empty(cap_cells, np.uint8)
-        ttl = np.empty(cap_cells, np.int32)
-        ttl_valid = np.empty(cap_cells, np.uint8)
-        ldt = np.empty(cap_cells, np.int32)
-        ldt_valid = np.empty(cap_cells, np.uint8)
-        tsd = np.empty(cap_cells, np.int64)
-        tsd_valid = np.empty(cap_cells, np.uint8)
-        row_deleted = np.empty(cap_cells, np.int64)
-        row_cells = np.empty(cap_cells, np.int32)
-        out = _ScanOut()
-
-        rc = lib.scan_cells_ma(
-            c_buf, ctypes.c_int64(total), ctypes.c_int64(o), ctypes.c_int64(stop),
-            ctypes.c_int64(header.min_timestamp),
-            ctypes.c_int64(header.min_local_deletion_time),
-            ctypes.c_int64(header.min_ttl),
-            ctypes.c_int32(n_cl), _i32p(cl),
-            ctypes.c_int32(len(header.regular_columns)),
-            _u8(rn), _i32p(ro), _i32p(rf), _u8(rc_),
-            ctypes.c_int32(len(header.static_columns)),
-            _u8(sn), _i32p(so), _i32p(sf), _u8(sc_),
-            _u8(scratch), ctypes.c_int64(len(scratch)),
-            ctypes.c_int64(cap_cells), ctypes.c_int64(cap_bytes),
-            _u8(key_data), _i32p(key_off),
-            _u8(name_data), _i32p(name_off), _u8(name_valid),
-            _u8(max_data), _i32p(max_off), _u8(max_valid),
-            _u8(val_data), _i32p(val_off), _u8(val_valid),
-            _i64p(ts), _u8(kind),
-            _i32p(ttl), _u8(ttl_valid),
-            _i32p(ldt), _u8(ldt_valid),
-            _i64p(tsd), _u8(tsd_valid),
-            _i64p(row_deleted), _i32p(row_cells),
-            ctypes.byref(out),
+    def fallback(offset: int):
+        log.warning(
+            "C scanner does not cover the partition at offset %d of %s; "
+            "the pure-Python decoder decodes the rest of the split",
+            offset, source_path,
+        )
+        return modern_batches(
+            data, start=offset, end=end, source_path=source_path,
+            generation=generation, batch_rows=batch_rows, version=version,
         )
 
-        if rc == ROW_TOO_BIG:
-            cap_cells *= 2
-            cap_bytes *= 2
-            continue
-
-        n = int(out.n)
-        if n:
-            src = pa.Array.from_buffers(
-                pa.string(), n,
-                [None,
-                 pa.py_buffer((np.arange(n + 1, dtype=np.int32) * len(path_b)).tobytes()),
-                 pa.py_buffer(path_b * n)],
-            )
-            gen_arr = pa.array(np.full(n, generation, np.int32))
-            deleted = pa.array(
-                np.repeat(row_deleted[: out.rows], row_cells[: out.rows])
-            )
-            kind_arr = pa.Array.from_buffers(
-                pa.string(), n,
-                [None, pa.py_buffer(np.arange(n + 1, dtype=np.int32).tobytes()),
-                 pa.py_buffer(kind[:n])],
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    src, gen_arr,
-                    _binary(n, key_data[: out.key_bytes], key_off[: n + 1], np.ones(n, np.uint8)),
-                    deleted, kind_arr,
-                    _binary(n, name_data[: out.name_bytes], name_off[: n + 1], name_valid[:n]),
-                    _binary(n, max_data[: out.max_bytes_used], max_off[: n + 1], max_valid[:n]),
-                    _binary(n, val_data[: out.val_bytes], val_off[: n + 1], val_valid[:n]),
-                    pa.Array.from_buffers(pa.int64(), n, [None, pa.py_buffer(ts[:n])]),
-                    _int_arr(n, ttl[:n], ttl_valid[:n], pa.int32()),
-                    _int_arr(n, ldt[:n], ldt_valid[:n], pa.int32()),
-                    _int_arr(n, tsd[:n], tsd_valid[:n], pa.int64()),
-                ],
-                schema=schema,
-            )
-
-        if rc == DONE:
-            return
-        if rc == MORE:
-            o = int(out.consumed)
-            continue
-        if rc == MA_UNSUPPORTED:
-            # resume in Python from the unsupported partition's start
-            yield from _modern_batches(
-                data, start=int(out.consumed), end=stop,
-                source_path=source_path, generation=generation,
-                batch_rows=batch_rows, skip_corrupt=skip_corrupt,
-            )
-            return
-        # CORRUPT (the broken partition is dropped whole; complete
-        # partitions before it were already emitted)
-        if not skip_corrupt:
-            raise ValueError(
-                f"corrupt ma sstable at offset {int(out.consumed)} in {source_path!r}"
-            )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([source_path]), pa.array([generation], pa.int32()),
-                pa.array([None], pa.binary()), pa.array([0], pa.int64()),
-                pa.array(["!"]), pa.array([None], pa.binary()),
-                pa.array([None], pa.binary()), pa.array([None], pa.binary()),
-                pa.array([0], pa.int64()), pa.array([None], pa.int32()),
-                pa.array([None], pa.int32()), pa.array([None], pa.int64()),
-            ],
-            schema=schema,
-        )
-        return
+    return _scan_loop(lib.scan_cells_ma, fmt_args, data, start, end,
+                      source_path, generation, batch_rows, fallback)

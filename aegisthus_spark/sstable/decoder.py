@@ -1,567 +1,164 @@
-"""Data.db decoder: byte stream -> cell dicts.
+"""Data.db decode, one split at a time.
 
-Row layout (public Cassandra 1.2/2.x on-disk format; scan behavior mirrors
-SSTableColumnScanner.java:71-167):
-
-    u16  key length, key bytes
-    [ic] i64 row size                      (versions with rowSize+columnCount)
-    i32  local deletion time, i64 marked-for-delete-at   (row DeletionTime)
-    [ic] i32 column count
-    atoms...        (jb/la: until a 0-length name marks end of row;
-                     ic: exactly column-count atoms)
-
-Atom layout (Cassandra 2.0 OnDiskAtom serializer / ColumnSerializer):
-
-    u16 name length (0 => end of row), name bytes
-    u8  flags: 0x01 deleted | 0x02 expiring | 0x04 counter |
-               0x08 counter-update | 0x10 range tombstone
-    range tombstone: u16 max-name length+bytes, i32 ldt, i64 mfda
-    counter:         i64 timestampOfLastDelete, i64 ts, i32 len, value
-    expiring:        i32 ttl, i32 ldt, i64 ts, i32 len, value
-    other:           i64 ts, i32 len, value   ('deleted' value = i32 ldt)
-
-Emitted dicts use the canonical cell schema (FIXTURES.md §1 / compact.py):
-kind 'c' column, 'd' deleted, 'e' expiring, 'x' counter, 't' range
-tombstone, 'r' row-only (empty row; preserved because deletes are data —
-SSTableColumnScanner.java:161-164).
+:func:`scan_split` is the one entry every reader of Data.db goes through —
+the Spark source's decode tasks (one call per planned split) and
+:func:`scan_file` (whole files on the driver: ``sstable2json`` and the
+tests) — the role SSTableColumnScanner plays in the reference (PAPER.md
+§1.1). It is also the only place that picks the C scanner (``_scan.c``
+via :mod:`.cparse`) or its pure-Python twin (:mod:`.arrow_decode`, which
+documents the 2.x byte layout; :mod:`.modern` documents 3.x).
 """
 
 from __future__ import annotations
 
+import logging
+import mmap
+import os
 import struct
-from typing import BinaryIO, Iterator
+from typing import Iterator
 
-LONG_MIN = -(1 << 63)
+import pyarrow as pa
 
-DELETION_MASK = 0x01
-EXPIRATION_MASK = 0x02
-COUNTER_MASK = 0x04
-COUNTER_UPDATE_MASK = 0x08
-RANGE_TOMBSTONE_MASK = 0x10
+from . import cparse
+from .arrow_decode import contain, scan_data_buffer_batches
+from .compression import CompressionInfo
 
-_U16 = struct.Struct(">H")
-_I32 = struct.Struct(">i")
-_I64 = struct.Struct(">q")
+log = logging.getLogger(__name__)
 
+#: chunks decompressed past a compressed split's end: the row that starts
+#: before ``end`` may spill past it (reference split semantics)
+_SLACK_CHUNKS = 16
 
-class _Reader:
-    """Buffered big-endian reader over a file object."""
+#: what a scanner raises on a row that runs past the end of its buffer:
+#: ValueError from the C scanner and the twins' bound checks, struct.error
+#: from the 2.x twin's fixed-width reads, IndexError from the 3.x twin's
+#: flag reads
+_PAST_TAIL = (ValueError, struct.error, IndexError)
 
-    __slots__ = ("f", "pos")
-
-    def __init__(self, f: BinaryIO, pos: int = 0):
-        self.f = f
-        self.pos = pos
-
-    def read(self, n: int) -> bytes:
-        b = self.f.read(n)
-        if len(b) != n:
-            raise EOFError(f"wanted {n} bytes, got {len(b)} at pos {self.pos}")
-        self.pos += n
-        return b
-
-    def u16(self) -> int:
-        return _U16.unpack(self.read(2))[0]
-
-    def i32(self) -> int:
-        return _I32.unpack(self.read(4))[0]
-
-    def i64(self) -> int:
-        return _I64.unpack(self.read(8))[0]
-
-    def skip(self, n: int) -> None:
-        # file objects from compression streams may lack seek; read in chunks
-        while n > 0:
-            step = min(n, 1 << 20)
-            got = self.f.read(step)
-            if not got:
-                raise EOFError("EOF during skip")
-            self.pos += len(got)
-            n -= len(got)
+_warned_fallback = False
 
 
-def _base_cell(source_path: str, generation: int, key: bytes, deleted_at: int) -> dict:
-    return {
-        "source_path": source_path,
-        "generation": generation,
-        "partition_key": key,
-        "row_deleted_at": deleted_at,
-        "kind": None,
-        "cell_name": None,
-        "cell_name_max": None,
-        "value": None,
-        "ts": None,
-        "ttl": None,
-        "local_deletion_time": None,
-        "ts_of_last_delete": None,
-    }
-
-
-def scan_data_file(
-    f: BinaryIO,
-    *,
-    version: str = "jb",
-    start: int = 0,
-    end: int | None = None,
-    source_path: str = "",
-    generation: int = 0,
-) -> Iterator[dict]:
-    """Decode a (possibly range-restricted) Data.db stream into cell dicts.
-
-    ``start``/``end`` follow the reference's split semantics
-    (SSTableColumnScanner.java:48-58,187-189): the stream is assumed
-    positioned at offset 0; we skip to ``start`` (a row boundary from the
-    index) and stop starting new rows once pos >= end.
-    """
-    if version >= "ma":
-        from .descriptor import check_modern_version
-
-        check_modern_version(version)
-        # the 3.x decoder is buffer-based (vint parsing wants random
-        # access); compressed 3.x streams are drained to memory first by
-        # the caller or routed here as chunk-mapped buffers
-        from .modern import scan_data_buffer_rows_modern
-
-        data = f.read()
-        for row in scan_data_buffer_rows_modern(
-            data, start=start, end=end, source_path=source_path,
-            generation=generation, version=version,
-        ):
-            yield dict(zip(ROW_FIELDS, row))
-        return
-    has_rs_cc = version < "ja"
-    r = _Reader(f)
-    if start > 0:
-        if hasattr(f, "seek_uncompressed"):
-            # chunk-mapped compressed stream: O(1) random access to the
-            # split's first chunk instead of decompressing everything before
-            f.seek_uncompressed(start)
-        else:
-            r.skip(start)
-        r.pos = start
-    stop = end if end is not None else float("inf")
-
-    while r.pos < stop:
-        try:
-            keysize = r.u16()
-        except EOFError:
-            return
-        key = r.read(keysize)
-
-        if has_rs_cc:
-            row_size = r.i64()
-            row_end = r.pos + row_size
-        r.i32()  # row-level localDeletionTime: only the long matters
-        marked_for_delete_at = r.i64()
-        column_count = r.i32() if has_rs_cc else None
-
-        emitted = 0
-        n = column_count if column_count is not None else (1 << 62)
-        for _ in range(n):
-            name_len = r.u16()
-            if name_len == 0:  # end-of-row marker (jb/la)
-                break
-            name = r.read(name_len)
-            flags = r.read(1)[0]
-            cell = _base_cell(source_path, generation, key, marked_for_delete_at)
-            if flags & RANGE_TOMBSTONE_MASK:
-                max_len = r.u16()
-                cell["cell_name_max"] = r.read(max_len)
-                cell["local_deletion_time"] = r.i32()
-                cell["ts"] = r.i64()  # markedForDeleteAt doubles as the RT ts
-                cell["kind"] = "t"
-                cell["cell_name"] = name
-            elif flags & COUNTER_MASK:
-                cell["ts_of_last_delete"] = r.i64()
-                cell["ts"] = r.i64()
-                cell["value"] = r.read(r.i32())
-                cell["kind"] = "x"
-                cell["cell_name"] = name
-            elif flags & EXPIRATION_MASK:
-                cell["ttl"] = r.i32()
-                cell["local_deletion_time"] = r.i32()
-                cell["ts"] = r.i64()
-                cell["value"] = r.read(r.i32())
-                cell["kind"] = "e"
-                cell["cell_name"] = name
-            else:
-                cell["ts"] = r.i64()
-                value = r.read(r.i32())
-                cell["value"] = value
-                cell["cell_name"] = name
-                if flags & DELETION_MASK:
-                    cell["kind"] = "d"
-                    # DeletedColumn's value payload is its i32 localDeletionTime
-                    if len(value) == 4:
-                        cell["local_deletion_time"] = _I32.unpack(value)[0]
-                else:
-                    # counter-update appears only in memtables/commitlogs, not
-                    # sstables; treat as a live column like Cassandra does
-                    cell["kind"] = "c"
-            emitted += 1
-            yield cell
-
-        if emitted == 0:
-            # empty row: preserve the key + deletion info
-            cell = _base_cell(source_path, generation, key, marked_for_delete_at)
-            cell["kind"] = "r"
-            cell["ts"] = LONG_MIN
-            yield cell
-
-        if has_rs_cc:
-            # defensive: trust the declared row size over our parse position
-            if r.pos < row_end:
-                r.skip(row_end - r.pos)
-
-
-def scan_data_buffer(
-    data,
-    *,
-    version: str = "jb",
-    start: int = 0,
-    end: int | None = None,
-    source_path: str = "",
-    generation: int = 0,
-) -> Iterator[dict]:
-    """Tight-loop decode of an in-memory Data.db byte range (same contract
-    as :func:`scan_data_file`).
-
-    This is the executor hot path for uncompressed inputs: the split's bytes
-    (bounded by the partition planner's target size) are read at once and
-    parsed with ``unpack_from`` on a memoryview — no per-field stream reads,
-    ~3x the streaming decoder's throughput. Compressed inputs use the
-    streaming path. 3.x+ ("ma"...) inputs route to the modern row-format
-    decoder (modern.py) and come back in the same canonical cell shape.
-    """
-    if version >= "ma":
-        from .descriptor import check_modern_version
-        from .modern import scan_data_buffer_rows_modern
-
-        check_modern_version(version)
-        for row in scan_data_buffer_rows_modern(
-            data, start=start, end=end, source_path=source_path,
-            generation=generation, version=version,
-        ):
-            yield dict(zip(ROW_FIELDS, row))
-        return
-    has_rs_cc = version < "ja"
-    buf = memoryview(data) if not isinstance(data, memoryview) else data
-    u16 = _U16.unpack_from
-    i32 = _I32.unpack_from
-    i64 = _I64.unpack_from
-    o = start
-    stop = end if end is not None else len(buf)
-    total = len(buf)
-
-    while o < stop:
-        if o + 2 > total:
-            return
-        (keysize,) = u16(buf, o)
-        o += 2
-        if o + keysize > total:
-            raise ValueError("corrupt SSTable: key extends past buffer")
-        key = bytes(buf[o : o + keysize])
-        o += keysize
-
-        if has_rs_cc:
-            (row_size,) = i64(buf, o)
-            o += 8
-            row_end = o + row_size
-            if row_size < 0 or row_end > total:
-                raise ValueError("corrupt SSTable: bad row size")
-        (marked_for_delete_at,) = i64(buf, o + 4)  # skip i32 localDeletionTime
-        o += 12
-        if has_rs_cc:
-            (column_count,) = i32(buf, o)
-            o += 4
-            if column_count < 0:
-                raise ValueError("corrupt SSTable: negative column count")
-            n = column_count
-        else:
-            n = 1 << 62
-
-        emitted = 0
-        for _ in range(n):
-            (name_len,) = u16(buf, o)
-            o += 2
-            if name_len == 0:
-                break
-            if o + name_len + 1 > total:
-                raise ValueError("corrupt SSTable: cell name extends past buffer")
-            name = bytes(buf[o : o + name_len])
-            o += name_len
-            flags = buf[o]
-            o += 1
-            cell = {
-                "source_path": source_path,
-                "generation": generation,
-                "partition_key": key,
-                "row_deleted_at": marked_for_delete_at,
-                "kind": "c",
-                "cell_name": name,
-                "cell_name_max": None,
-                "value": None,
-                "ts": None,
-                "ttl": None,
-                "local_deletion_time": None,
-                "ts_of_last_delete": None,
-            }
-            if flags & RANGE_TOMBSTONE_MASK:
-                (max_len,) = u16(buf, o)
-                o += 2
-                if o + max_len > total:
-                    raise ValueError("corrupt SSTable: RT bound extends past buffer")
-                cell["cell_name_max"] = bytes(buf[o : o + max_len])
-                o += max_len
-                cell["local_deletion_time"] = i32(buf, o)[0]
-                cell["ts"] = i64(buf, o + 4)[0]
-                o += 12
-                cell["kind"] = "t"
-            elif flags & COUNTER_MASK:
-                cell["ts_of_last_delete"] = i64(buf, o)[0]
-                cell["ts"] = i64(buf, o + 8)[0]
-                (vlen,) = i32(buf, o + 16)
-                o += 20
-                if vlen < 0 or o + vlen > total:
-                    raise ValueError("corrupt SSTable: bad value length")
-                cell["value"] = bytes(buf[o : o + vlen])
-                o += vlen
-                cell["kind"] = "x"
-            elif flags & EXPIRATION_MASK:
-                cell["ttl"] = i32(buf, o)[0]
-                cell["local_deletion_time"] = i32(buf, o + 4)[0]
-                cell["ts"] = i64(buf, o + 8)[0]
-                (vlen,) = i32(buf, o + 16)
-                o += 20
-                if vlen < 0 or o + vlen > total:
-                    raise ValueError("corrupt SSTable: bad value length")
-                cell["value"] = bytes(buf[o : o + vlen])
-                o += vlen
-                cell["kind"] = "e"
-            else:
-                cell["ts"] = i64(buf, o)[0]
-                (vlen,) = i32(buf, o + 8)
-                o += 12
-                if vlen < 0 or o + vlen > total:
-                    raise ValueError("corrupt SSTable: bad value length")
-                value = bytes(buf[o : o + vlen])
-                o += vlen
-                cell["value"] = value
-                if flags & DELETION_MASK:
-                    cell["kind"] = "d"
-                    if vlen == 4:
-                        cell["local_deletion_time"] = _I32.unpack(value)[0]
-            emitted += 1
-            yield cell
-
-        if emitted == 0:
-            cell = _base_cell(source_path, generation, key, marked_for_delete_at)
-            cell["kind"] = "r"
-            cell["ts"] = LONG_MIN
-            yield cell
-
-        if has_rs_cc and o < row_end:
-            o = row_end
-
-
-#: field order of the tuples yielded by scan_data_buffer_rows — must match
-#: the canonical cells schema (compact.CELLS_COLUMNS / sources CELLS_SCHEMA)
-ROW_FIELDS = (
-    "source_path", "generation", "partition_key", "row_deleted_at", "kind",
-    "cell_name", "cell_name_max", "value", "ts", "ttl",
-    "local_deletion_time", "ts_of_last_delete",
-)
-
-
-def scan_data_buffer_rows(
-    data,
-    *,
-    version: str = "jb",
-    start: int = 0,
-    end: int | None = None,
-    source_path: str = "",
-    generation: int = 0,
-) -> Iterator[tuple]:
-    """Like :func:`scan_data_buffer` but yields ROW_FIELDS-ordered tuples —
-    the Spark source's hot path (skips per-cell dict construction, which is
-    ~40% of decode time; the source feeds tuples straight into Arrow
-    batches)."""
-    if version >= "ma":
-        from .descriptor import check_modern_version
-        from .modern import scan_data_buffer_rows_modern
-
-        check_modern_version(version)
-        yield from scan_data_buffer_rows_modern(
-            data, start=start, end=end, source_path=source_path,
-            generation=generation, version=version,
+def _scanner():
+    """The C scanner when this host can build it, else the pure-Python
+    twin — 30-72x slower, so the fallback is logged once per process."""
+    global _warned_fallback
+    if cparse.available():
+        return cparse.scan_data_buffer_batches
+    if not _warned_fallback:
+        _warned_fallback = True
+        log.warning(
+            "C scanner unavailable on this host (no gcc build); decoding "
+            "SSTables with the pure-Python scanner, 30-72x slower"
         )
+    return scan_data_buffer_batches
+
+
+def scan_split(
+    path: str,
+    start: int = 0,
+    end: int | None = None,
+    *,
+    version: str,
+    generation: int = 0,
+    compression_path: str | None = None,
+    skip_corrupt: bool = False,
+) -> Iterator[pa.RecordBatch]:
+    """One split of a Data.db -> canonical Arrow batches.
+
+    ``start`` is a row boundary (0 or an Index.db offset); every row that
+    STARTS before ``end`` (default: the end of the data) is decoded whole.
+    Offsets are uncompressed positions, for compressed files too. Plain
+    files are mmapped; zero-length files yield nothing (P5).
+    ``skip_corrupt``: keep the cells decoded before an error, then one
+    sentinel row (``arrow_decode.contain``)."""
+    scan = _scanner()
+    kw = dict(version=version, source_path=path, generation=generation)
+    if compression_path:
+        batches = _scan_compressed(scan, path, compression_path, start, end, kw)
+    else:
+        batches = _scan_mapped(scan, path, start, end, kw)
+    yield from contain(batches, skip_corrupt=skip_corrupt, source_path=path,
+                       generation=generation)
+
+
+def _scan_mapped(scan, path, start, end, kw):
+    if os.path.getsize(path) == 0:
         return
-    has_rs_cc = version < "ja"
-    buf = memoryview(data) if not isinstance(data, memoryview) else data
-    u16 = _U16.unpack_from
-    i32 = _I32.unpack_from
-    i64 = _I64.unpack_from
-    o = start
-    stop = end if end is not None else len(buf)
-    total = len(buf)
+    with open(path, "rb") as fh:
+        # unmapped once the last view into it is gone: an explicit close
+        # fails while a scanner error's traceback still holds views
+        mm = mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ)
+    yield from scan(mm, start=start, end=end, **kw)
 
-    while o < stop:
-        if o + 2 > total:
-            return
-        (keysize,) = u16(buf, o)
-        o += 2
-        if o + keysize > total:
-            raise ValueError("corrupt SSTable: key extends past buffer")
-        key = bytes(buf[o : o + keysize])
-        o += keysize
-        if has_rs_cc:
-            (row_size,) = i64(buf, o)
-            o += 8
-            row_end = o + row_size
-            if row_size < 0 or row_end > total:
-                raise ValueError("corrupt SSTable: bad row size")
-        (deleted_at,) = i64(buf, o + 4)
-        o += 12
-        if has_rs_cc:
-            (n,) = i32(buf, o)
-            o += 4
-            if n < 0:
-                raise ValueError("corrupt SSTable: negative column count")
-        else:
-            n = 1 << 62
 
-        emitted = 0
-        for _ in range(n):
-            (name_len,) = u16(buf, o)
-            o += 2
-            if name_len == 0:
+def _scan_compressed(scan, path, compression_path, start, end, kw):
+    """Decompress the chunks covering [start, end) plus slack into one
+    buffer and scan it. A row spilling past the buffer's tail looks like
+    corruption, so on an error the buffer grows (at least doubling its
+    chunk count) and the scan restarts; only once the file's last chunk is
+    in the buffer is the error real. Batches are collected per split, so a
+    restart never yields a cell twice."""
+    info = CompressionInfo.read_path(compression_path)
+    size = os.path.getsize(path)
+    n_chunks = len(info.chunk_offsets)
+    cl = info.chunk_length
+    end = info.data_length if end is None else min(end, info.data_length)
+    first = start // cl
+    last = min(n_chunks, -(-end // cl) + _SLACK_CHUNKS)
+    base = first * cl
+    with open(path, "rb") as f:
+        buf = info.decompress(f, size, first, last)
+        while True:
+            batches = []
+            try:
+                for batch in scan(buf, start=start - base, end=end - base, **kw):
+                    batches.append(batch)
                 break
-            if o + name_len + 1 > total:
-                raise ValueError("corrupt SSTable: cell name extends past buffer")
-            name = bytes(buf[o : o + name_len])
-            o += name_len
-            flags = buf[o]
-            o += 1
-            if flags & RANGE_TOMBSTONE_MASK:
-                (max_len,) = u16(buf, o)
-                o += 2
-                if o + max_len > total:
-                    raise ValueError("corrupt SSTable: RT bound extends past buffer")
-                name_max = bytes(buf[o : o + max_len])
-                o += max_len
-                (ldt,) = i32(buf, o)
-                (ts,) = i64(buf, o + 4)
-                o += 12
-                row = (source_path, generation, key, deleted_at, "t",
-                       name, name_max, None, ts, None, ldt, None)
-            elif flags & COUNTER_MASK:
-                (tsd,) = i64(buf, o)
-                (ts,) = i64(buf, o + 8)
-                (vlen,) = i32(buf, o + 16)
-                o += 20
-                if vlen < 0 or o + vlen > total:
-                    raise ValueError("corrupt SSTable: bad value length")
-                value = bytes(buf[o : o + vlen])
-                o += vlen
-                row = (source_path, generation, key, deleted_at, "x",
-                       name, None, value, ts, None, None, tsd)
-            elif flags & EXPIRATION_MASK:
-                (ttl,) = i32(buf, o)
-                (ldt,) = i32(buf, o + 4)
-                (ts,) = i64(buf, o + 8)
-                (vlen,) = i32(buf, o + 16)
-                o += 20
-                if vlen < 0 or o + vlen > total:
-                    raise ValueError("corrupt SSTable: bad value length")
-                value = bytes(buf[o : o + vlen])
-                o += vlen
-                row = (source_path, generation, key, deleted_at, "e",
-                       name, None, value, ts, ttl, ldt, None)
-            else:
-                (ts,) = i64(buf, o)
-                (vlen,) = i32(buf, o + 8)
-                o += 12
-                if vlen < 0 or o + vlen > total:
-                    raise ValueError("corrupt SSTable: bad value length")
-                value = bytes(buf[o : o + vlen])
-                o += vlen
-                if flags & DELETION_MASK:
-                    ldt = _I32.unpack(value)[0] if vlen == 4 else None
-                    row = (source_path, generation, key, deleted_at, "d",
-                           name, None, value, ts, None, ldt, None)
-                else:
-                    row = (source_path, generation, key, deleted_at, "c",
-                           name, None, value, ts, None, None, None)
-            emitted += 1
-            yield row
-
-        if emitted == 0:
-            yield (source_path, generation, key, deleted_at, "r",
-                   None, None, None, LONG_MIN, None, None, None)
-
-        if has_rs_cc and o < row_end:
-            o = row_end
+            except _PAST_TAIL:
+                if last == n_chunks:
+                    yield from batches
+                    raise
+                grow = min(n_chunks, last + max(_SLACK_CHUNKS, last - first))
+                buf += info.decompress(f, size, last, grow)
+                last = grow
+    yield from batches
 
 
 def scan_file(
-    path: str, errors: str = "raise", on_corrupt=None, compression_path=None, **kw
+    path: str,
+    errors: str = "raise",
+    on_corrupt=None,
+    compression_path: str | None = None,
+    version: str | None = None,
 ) -> Iterator[dict]:
-    """Decode a Data.db file on local disk (auto version + compression).
+    """Decode a whole Data.db on local disk into cell dicts (version from
+    the filename, compression from the sidecar) through :func:`scan_split`.
 
     Compression sidecar discovery mirrors AegisthusInputFormat.getCompressionPath
     (exact sibling, else ±1-minute datetime directory); ``compression_path``
     overrides it (the reference tool's ``-comp`` flag).
 
-    ``errors='skip'``: a decode error ends this file's stream (cells decoded
+    ``errors='skip'``: a decode error ends this file's cells (cells decoded
     before the error are kept) and calls ``on_corrupt(path, exc)`` — the
     reference's corrupt-input containment (SSTableRecordReader.java:108-116
     routes decode errors to an empty stream + counter; P6).
     """
-    from .compression import find_compression_sidecar, open_compressed
+    from .compression import find_compression_sidecar
     from .descriptor import parse_filename, version_of
 
-    version = kw.pop("version", None) or version_of(path)
     try:
         generation = parse_filename(path).generation
     except ValueError:
         generation = 0
-    comp_path = compression_path or find_compression_sidecar(path)
-    if comp_path is not None:
-        # compressed: stream chunk-at-a-time (whole-file split, like the
-        # reference — AegisthusInputFormat.java:131-135)
-        f = open_compressed(path, comp_path)
-
-        def gen():
-            try:
-                yield from scan_data_file(
-                    f, version=version, source_path=path, generation=generation, **kw
-                )
-            finally:
-                f.close()
-
-    else:
-        # uncompressed: mmap + tight-loop buffer parser. The map is zero-copy
-        # and page-cached; a row that starts before the split's `end` may
-        # extend past it (reference split semantics) and is read naturally.
-        import mmap
-        import os as _os
-
-        if _os.path.getsize(path) == 0:
-            return  # zero-length files are skipped (P5)
-
-        def gen():
-            with open(path, "rb") as fh:
-                with mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-                    yield from scan_data_buffer(
-                        mm, version=version, source_path=path,
-                        generation=generation, **kw
-                    )
-
-    if errors == "skip":
-        try:
-            yield from gen()
-        except Exception as exc:  # corrupt input: contain, count, continue
-            if on_corrupt is not None:
-                on_corrupt(path, exc)
-    else:
-        yield from gen()
+    for batch in scan_split(
+        path,
+        version=version or version_of(path),
+        generation=generation,
+        compression_path=compression_path or find_compression_sidecar(path),
+        skip_corrupt=errors == "skip",
+    ):
+        for cell in batch.to_pylist():
+            if cell["kind"] != "!":
+                yield cell
+            elif on_corrupt is not None:
+                on_corrupt(path, ValueError(f"corrupt SSTable data in {path}"))

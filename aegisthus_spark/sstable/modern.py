@@ -36,7 +36,7 @@ sstable's EncodingStats minima, which live in the SerializationHeader
 component of Statistics.db.
 
 **Output mapping — the design decision.** Decoded 3.x atoms are emitted
-as the repo's canonical 2.x-shaped cells (`decoder.ROW_FIELDS`) with
+as the repo's canonical 2.x-shaped cells (`arrow_decode.ROW_FIELDS`) with
 2.x CompositeType cell names (u16 len + bytes + end-of-component byte
 per component; 0xFFFF prefix for statics):
 
@@ -1006,21 +1006,21 @@ def name_sort_key_for_header(header: SerializationHeader):
 # ---------------------------------------------------------------------------
 
 class _SeqWindow:
-    """Bounded sliding window over a sequential (possibly chunk-compressed)
-    byte stream, exposing absolute offsets — lets the boundary walk below
-    run over a 100 GB Data.db with a few MB of driver memory instead of
-    reading the file whole. ``skip`` past the window drops it and seeks the
-    underlying stream (plain-file seek, or the compression chunk map's
-    O(1) ``seek_uncompressed``)."""
+    """Bounded sliding window over a (possibly chunk-compressed) byte
+    stream, exposing absolute offsets — lets the boundary walk below run
+    over a 100 GB Data.db with a few MB of driver memory instead of
+    reading the file whole. ``read_at(offset, n)`` returns the bytes from
+    an absolute (uncompressed) offset on, at least ``n`` of them unless the
+    stream ends first: a plain-file read, or the chunk map's random-access
+    decompression."""
 
     CHUNK = 4 << 20
 
-    def __init__(self, read_fn, seek_fn, total: int):
-        self._read, self._seek, self.total = read_fn, seek_fn, total
+    def __init__(self, read_at, total: int):
+        self._read_at, self.total = read_at, total
         self.base = 0  # absolute offset of win[0]
         self.win = b""
         self.pos = 0  # absolute cursor
-        self._stream_at = 0  # absolute offset the underlying stream sits at
 
     def view(self, n: int):
         """(buf, rel) with at least n bytes available at the cursor."""
@@ -1028,12 +1028,7 @@ class _SeqWindow:
         if end > self.base + len(self.win):
             keep = self.win[self.pos - self.base:] if self.pos < self.base + len(self.win) else b""
             self.base = self.pos
-            src = self.base + len(keep)
-            if src != self._stream_at:
-                self._seek(src)
-            want = max(n, self.CHUNK)
-            more = self._read(want - len(keep))
-            self._stream_at = src + len(more)
+            more = self._read_at(self.base + len(keep), max(n, self.CHUNK) - len(keep))
             self.win = keep + more
             if len(self.win) < n:
                 raise ValueError("corrupt SSTable: truncated mid-partition")
@@ -1109,20 +1104,27 @@ def partition_offsets_from_data(
     # are skipped wholesale via their size vints.
     del version
     sizes = tuple(fixed_size_of(t) for t in header.clustering_types)
-    if compression_sidecar is not None:
-        from .compression import CompressionInfo, open_compressed
-
-        info = CompressionInfo.read_path(compression_sidecar)
-        stream = open_compressed(path, compression_sidecar)
-        try:
-            w = _SeqWindow(stream.read, stream.seek_uncompressed, info.data_length)
-            return _walk_partitions(w, sizes, min_gap)
-        finally:
-            stream.close()
     total = os.path.getsize(path)
     with open(path, "rb") as f:
-        w = _SeqWindow(f.read, f.seek, total)
-        return _walk_partitions(w, sizes, min_gap)
+        if compression_sidecar is None:
+            def read_at(offset: int, n: int) -> bytes:
+                f.seek(offset)
+                return f.read(n)
+        else:
+            from .compression import CompressionInfo
+
+            info = CompressionInfo.read_path(compression_sidecar)
+            cl, n_chunks, size = info.chunk_length, len(info.chunk_offsets), total
+            total = info.data_length
+
+            def read_at(offset: int, n: int) -> bytes:
+                # whole chunks: the next sequential read starts on a chunk
+                # boundary instead of decompressing this read's last again
+                lo = offset // cl
+                hi = min(n_chunks, -(-(offset + n) // cl))
+                return info.decompress(f, size, lo, hi)[offset - lo * cl :]
+
+        return _walk_partitions(_SeqWindow(read_at, total), sizes, min_gap)
 
 
 def _walk_partitions(w: _SeqWindow, sizes, min_gap: int = 0) -> list[int]:

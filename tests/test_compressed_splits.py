@@ -6,11 +6,12 @@ decode, and distributed reads must match the uncompressed golden path."""
 
 import os
 import struct
-import zlib
 
 import pytest
 
-from aegisthus_spark.sstable.writer import serialize_row
+from aegisthus_spark.sstable import cparse
+from aegisthus_spark.sstable.decoder import scan_split
+from tools.make_legacy_fixture import write_table
 
 CHUNK = 4096
 N_ROWS = 2000
@@ -21,63 +22,16 @@ def _make_compressed_sstable(d, cut: int = 0):
     ``cut`` > 0 drops that many bytes off the end of the uncompressed
     stream before compressing it: a file truncated mid-row whose chunks
     and chunk map are still intact."""
-    raw = bytearray()
-    index = bytearray()
-    for i in range(N_ROWS):
-        key = struct.pack(">q", i)
-        index += struct.pack(">H", len(key)) + key + struct.pack(">q", len(raw))
-        index += struct.pack(">i", 0)  # empty promoted index
-        cols = [
+    rows = [
+        (struct.pack(">q", i), -(1 << 63), [
             {"name": f"c{j}".encode(), "value": os.urandom(40).hex().encode(),
              "ts": 100 + j, "kind": "c", "ttl": None,
              "local_deletion_time": None, "ts_of_last_delete": None}
             for j in range(3)
-        ]
-        raw += serialize_row(key, -(1 << 63), cols, version="jb")
-    if cut:
-        del raw[-cut:]
-
-    data_path = os.path.join(d, "ks-t-jb-1-Data.db")
-    info_path = os.path.join(d, "ks-t-jb-1-CompressionInfo.db")
-    idx_path = os.path.join(d, "ks-t-jb-1-Index.db")
-
-    offsets = []
-    with open(data_path, "wb") as f:
-        for pos in range(0, len(raw), CHUNK):
-            offsets.append(f.tell())
-            f.write(zlib.compress(bytes(raw[pos : pos + CHUNK])))
-            f.write(b"\x00\x00\x00\x00")  # checksum (skipped by readers)
-
-    with open(info_path, "wb") as f:
-        name = b"DeflateCompressor"
-        f.write(struct.pack(">H", len(name)) + name)
-        f.write(struct.pack(">i", 0))  # no options
-        f.write(struct.pack(">i", CHUNK))
-        f.write(struct.pack(">q", len(raw)))
-        f.write(struct.pack(">i", len(offsets)))
-        for off in offsets:
-            f.write(struct.pack(">q", off))
-
-    with open(idx_path, "wb") as f:
-        f.write(bytes(index))
-    return data_path, len(raw)
-
-
-def test_seek_uncompressed(tmp_path):
-    from aegisthus_spark.sstable.compression import find_compression_sidecar, open_compressed
-
-    data_path, raw_len = _make_compressed_sstable(str(tmp_path))
-    comp = find_compression_sidecar(data_path)
-    # full read == seek(0) read; mid-stream seek lands at the right bytes
-    s1 = open_compressed(data_path, comp)
-    full = s1.read(-1)
-    s1.close()
-    assert len(full) == raw_len
-    s2 = open_compressed(data_path, comp)
-    s2.seek_uncompressed(10_000)
-    tail = s2.read(-1)
-    s2.close()
-    assert tail == full[10_000:]
+        ])
+        for i in range(N_ROWS)
+    ]
+    return write_table(d, "ks-t-jb-1", "jb", rows, chunk=CHUNK, cut=cut)
 
 
 def test_compressed_file_is_split(tmp_path):
@@ -92,30 +46,62 @@ def test_compressed_file_is_split(tmp_path):
         assert a[2] == b[1]
 
 
-def test_split_decode_equals_whole(tmp_path):
+def _each_scanner(monkeypatch):
+    """Loop once through the C scanner (when this host builds it), then
+    once through its Python twin."""
+    if cparse.available():
+        yield "c"
+    monkeypatch.setattr(cparse, "available", lambda: False)
+    yield "python"
+
+
+def _decode(data_path, start=0, end=None):
+    comp = data_path.replace("-Data.db", "-CompressionInfo.db")
+    return [
+        (bytes(c["partition_key"]), bytes(c["cell_name"]), bytes(c["value"]))
+        for b in scan_split(data_path, start, end, version="jb", compression_path=comp)
+        for c in b.to_pylist()
+    ]
+
+
+def test_split_decode_equals_whole(tmp_path, monkeypatch):
     from aegisthus_spark.sources.sstable_source import _plan_one
-    from aegisthus_spark.sstable.compression import find_compression_sidecar, open_compressed
-    from aegisthus_spark.sstable.decoder import scan_data_file
 
     data_path, raw_len = _make_compressed_sstable(str(tmp_path))
-    comp = find_compression_sidecar(data_path)
+    splits = _plan_one(data_path, target_bytes=50_000)
+    for _ in _each_scanner(monkeypatch):
+        whole = _decode(data_path)
+        assert len(whole) == N_ROWS * 3
+        split_cells = []
+        for (_, s, e, *_rest) in splits:
+            split_cells.extend(_decode(data_path, s, e))
+        assert split_cells == whole
 
-    def decode(start, end):
-        f = open_compressed(data_path, comp)
-        try:
-            return [
-                (bytes(c["partition_key"]), bytes(c["cell_name"]), bytes(c["value"]))
-                for c in scan_data_file(f, version="jb", start=start, end=end)
-            ]
-        finally:
-            f.close()
 
-    whole = decode(0, None)
-    assert len(whole) == N_ROWS * 3
-    split_cells = []
-    for (_, s, e, *_rest) in _plan_one(data_path, target_bytes=50_000):
-        split_cells.extend(decode(s, e))
-    assert split_cells == whole
+def test_rows_spilling_past_the_slack_are_read_whole(tmp_path, monkeypatch):
+    """A split decodes every row that STARTS before its end, however far
+    past the end and the decompressed slack the row runs: the scan grows
+    its buffer until the row is complete, whichever error the scanner
+    raises at the buffer's tail (the Python twin's fixed-width reads raise
+    struct.error, not ValueError). Index-planned splits end on row
+    boundaries, so only ends inside a row take this path."""
+    from aegisthus_spark.sstable.index import row_offsets
+
+    def cell(j):
+        return {"name": b"c%04d" % j, "value": b"v%d" % j, "ts": j, "kind": "c",
+                "ttl": None, "local_deletion_time": None, "ts_of_last_delete": None}
+
+    # rows of ~9.5 KB, 19 chunks of 512 bytes: past the 16-chunk slack, and
+    # mostly fixed-width fields, so the buffer's tail lands inside them
+    rows = [(b"k%03d" % i, -(1 << 63), [cell(j) for j in range(400)]) for i in range(12)]
+    data_path, raw_len = write_table(str(tmp_path), "ks-t-jb-1", "jb", rows, chunk=512)
+    starts = row_offsets(data_path.replace("-Data.db", "-Index.db"))
+    for scanner in _each_scanner(monkeypatch):
+        whole = _decode(data_path)
+        assert len(whole) == 12 * 400
+        for end in range(1, raw_len, 1999):
+            n_rows = sum(1 for s in starts if s < end)
+            assert _decode(data_path, 0, end) == whole[: n_rows * 400], (scanner, end)
 
 
 def test_split_fragments_keep_their_own_partitions(spark, tmp_path):
@@ -239,8 +225,7 @@ def test_truncated_compressed_split_keeps_decoded_cells(tmp_path, monkeypatch):
     Python path used to drop up to a batch of buffered cells)."""
     import pyarrow as pa
 
-    from aegisthus_spark.sources import sstable_source as src
-    from aegisthus_spark.sstable import cparse
+    from aegisthus_spark.sstable.arrow_decode import CELLS
 
     data_path, raw_len = _make_compressed_sstable(str(tmp_path), cut=25)
     task = {
@@ -250,9 +235,7 @@ def test_truncated_compressed_split_keeps_decoded_cells(tmp_path, monkeypatch):
     }
 
     def decode():
-        return pa.Table.from_batches(
-            list(src._task_cell_batches(task)), schema=src._arrow_cells_schema()
-        )
+        return pa.Table.from_batches(list(scan_split(**task)), schema=CELLS)
 
     c_tab = decode() if cparse.available() else None
     monkeypatch.setattr(cparse, "available", lambda: False)
@@ -266,4 +249,4 @@ def test_truncated_compressed_split_keeps_decoded_cells(tmp_path, monkeypatch):
     if c_tab is not None:
         assert py_tab.equals(c_tab)
     with pytest.raises(Exception):
-        list(src._task_cell_batches({**task, "skip_corrupt": False}))
+        list(scan_split(**{**task, "skip_corrupt": False}))

@@ -1,11 +1,12 @@
-"""Property/fuzz parity between the C scanner and the Python decoders.
+"""Property/fuzz parity between the C scanner and its Python twin.
 
 The C scanner (`sstable/_scan.c`) decodes every byte of every table at
 scale; a bounds slip there is silent corruption. The golden tests pin
 valid files — these tests pin the ADVERSARIAL space: random truncations,
-bit flips, and spliced length fields over the same buffer must make the C
-path (cparse), the Python columnar path (arrow_decode), and the Python
-tuple path (decoder) agree: identical cells, or corrupt in both.
+bit flips, and spliced length fields over the same buffer must make the
+two decode paths, C (cparse) and Python (arrow_decode), agree: identical
+cells, or corrupt in both. On valid buffers both must return exactly the
+cells the strategy serialized.
 
 Corrupt-agreement contract: with skip_corrupt=False both raise; with
 skip_corrupt=True both yield the cells decoded before the error plus one
@@ -22,7 +23,6 @@ from hypothesis import strategies as st
 
 from aegisthus_spark.sstable import cparse
 from aegisthus_spark.sstable.arrow_decode import scan_data_buffer_batches as py_scan
-from aegisthus_spark.sstable.decoder import scan_data_buffer_rows
 from aegisthus_spark.sstable.writer import serialize_row
 
 pytestmark = pytest.mark.skipif(
@@ -30,6 +30,7 @@ pytestmark = pytest.mark.skipif(
 )
 
 _KINDS = ["c", "d", "e", "x", "t"]
+LONG_MIN = -(1 << 63)
 
 
 @st.composite
@@ -63,19 +64,39 @@ def cells_strategy(draw):
     return cell
 
 
+def _serialized(key, deleted_at, cells):
+    """The logical cells (see _rows) that one serialized row decodes to."""
+    if not cells:  # an empty row survives as a row-only cell
+        return [("r", key, deleted_at, None, None, None, LONG_MIN, None, None, None)]
+    out = []
+    for c in cells:
+        kind, value, ldt = c["kind"], c["value"], c["local_deletion_time"]
+        if kind == "t":
+            value = None
+        elif kind == "d":
+            # a deleted cell's 4-byte value is its localDeletionTime
+            ldt = int.from_bytes(value, "big", signed=True) if len(value) == 4 else None
+        out.append((kind, key, deleted_at, c["name"], c.get("cell_name_max"), value,
+                    c["ts"], c["ttl"], ldt, c["ts_of_last_delete"]))
+    return out
+
+
 @st.composite
 def buffer_strategy(draw):
+    """(buffer, version, the cells serialized into it)."""
     version = draw(st.sampled_from(["ic", "jb"]))
     n_rows = draw(st.integers(min_value=1, max_value=6))
     rows = []
+    expected = []
     for i in range(n_rows):
         key = draw(st.binary(min_size=1, max_size=10))
         deleted_at = draw(
-            st.sampled_from([-(1 << 63), 0, draw(st.integers(-(1 << 62), 1 << 62))])
+            st.sampled_from([LONG_MIN, 0, draw(st.integers(-(1 << 62), 1 << 62))])
         )
         cells = draw(st.lists(cells_strategy(), min_size=0, max_size=5))
         rows.append(serialize_row(key, deleted_at, cells, version=version))
-    return b"".join(rows), version
+        expected += _serialized(key, deleted_at, cells)
+    return b"".join(rows), version, expected
 
 
 def _rows(batches):
@@ -134,22 +155,17 @@ _SETTINGS = settings(
 @given(buffer_strategy())
 @_SETTINGS
 def test_valid_buffers_parity(bufv):
-    buf, version = bufv
+    buf, version, expected = bufv
     res = _scan_all(buf, version, skip_corrupt=False)
     assert res["c"][0] and res["py"][0], "valid buffer must decode in both paths"
     assert res["c"][1] == res["py"][1]
-    # tuple path agrees as well (kind at index 4, full ROW_FIELDS order)
-    tuples = [
-        (r[4], r[2], r[3], r[5], r[6], r[7], r[8], r[9], r[10], r[11])
-        for r in scan_data_buffer_rows(buf, version=version, source_path="f")
-    ]
-    assert tuples == res["c"][1]
+    assert res["c"][1] == expected
 
 
 @given(bufv=buffer_strategy(), cut=st.integers(min_value=0, max_value=200))
 @_SETTINGS
 def test_truncation_parity(bufv, cut):
-    buf, version = bufv
+    buf, version, _ = bufv
     if not buf:
         return
     trunc = buf[: max(0, len(buf) - 1 - (cut % len(buf)))]
@@ -169,7 +185,7 @@ def test_truncation_parity(bufv, cut):
 )
 @_SETTINGS
 def test_bitflip_parity_skip_corrupt(bufv, pos, bit):
-    buf, version = bufv
+    buf, version, _ = bufv
     if not buf:
         return
     b = bytearray(buf)
@@ -204,7 +220,7 @@ def test_spliced_i32_parity(bufv, pos, val):
     """Overwrite 4 bytes anywhere with an adversarial i32 (big negative /
     huge lengths) — the classic way to force backwards cursors or giant
     slices."""
-    buf, version = bufv
+    buf, version, _ = bufv
     if len(buf) < 4:
         return
     b = bytearray(buf)
@@ -236,5 +252,3 @@ def test_negative_value_length_is_corrupt():
         list(py_scan(buf, version="jb", source_path="f"))
     with pytest.raises(Exception):
         list(cparse.scan_data_buffer_batches(buf, version="jb", source_path="f"))
-    with pytest.raises(Exception):
-        list(scan_data_buffer_rows(buf, version="jb", source_path="f"))

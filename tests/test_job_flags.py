@@ -354,3 +354,48 @@ def test_discover_rejects_missing_root_among_good_ones(tmp_path):
     assert discover_data_files([str(good)]) == [str(good / "ks-t-jb-1-Data.db")]
     with pytest.raises(FileNotFoundError):
         discover_data_files([str(good), str(tmp_path / "typo")])
+
+
+def test_manifest_listing_a_missing_file_fails_loudly(tmp_path):
+    """A _manifest line naming a Data.db that is not on disk fails
+    discovery, naming the manifest and the missing file; it used to be
+    dropped, so the backup compacted without that file. Listed zero-length
+    files stay skipped (P5)."""
+    import pytest
+
+    from aegisthus_spark.sources.sstable_source import discover_data_files
+
+    d = tmp_path / "cf"
+    (d / "_manifest").mkdir(parents=True)
+    (d / "ks-t-jb-1-Data.db").write_bytes(b"\x00")
+    (d / "ks-t-jb-2-Data.db").write_bytes(b"")
+    manifest = d / "_manifest" / "_manifest"
+    manifest.write_text("ks-t-jb-1-Data.db\nks-t-jb-2-Data.db\n")
+    assert discover_data_files([str(d)]) == [str(d / "ks-t-jb-1-Data.db")]
+    manifest.write_text("ks-t-jb-1-Data.db\nks-t-jb-3-Data.db\n")
+    with pytest.raises(FileNotFoundError) as err:
+        discover_data_files([str(d)])
+    assert str(manifest) in str(err.value)
+    assert str(d / "ks-t-jb-3-Data.db") in str(err.value)
+
+
+def test_input_without_data_files_fails_loudly(spark, tmp_path, monkeypatch):
+    """An input root that exists but holds no Data.db fails the read and
+    the job; the job used to write an empty snapshot that looked like a
+    successful run."""
+    import pytest
+
+    import aegisthus_spark.session as sess
+    from aegisthus_spark import job as jobmod
+    from aegisthus_spark.sources import read_sstable_cells
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "ks-t-jb-1-Index.db").write_bytes(b"\x00")
+    with pytest.raises(FileNotFoundError, match="no SSTable Data.db"):
+        read_sstable_cells(spark, [str(empty)])
+    monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
+    out = tmp_path / "snap"
+    with pytest.raises(FileNotFoundError, match="no SSTable Data.db"):
+        jobmod.main(["--input-dir", str(empty), "--output", str(out)])
+    assert not out.exists()

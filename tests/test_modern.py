@@ -349,10 +349,10 @@ def test_ma_split_planning_covers_all_rows(tmp_path):
     """Index.db (vint entries) drives split planning; the union of split
     decodes equals the whole-file decode."""
     from aegisthus_spark.sources.sstable_source import _plan_one
-    from aegisthus_spark.sstable.decoder import scan_data_buffer_rows
+    from aegisthus_spark.sstable.modern import scan_data_buffer_rows_modern
 
     path = _fixture_dir(tmp_path, n_keys=60)
-    whole = list(scan_data_buffer_rows(
+    whole = list(scan_data_buffer_rows_modern(
         open(path, "rb").read(), version="ma", source_path=path))
     size = os.path.getsize(path)
     splits = _plan_one(path, target_bytes=max(128, size // 5))
@@ -361,7 +361,7 @@ def test_ma_split_planning_covers_all_rows(tmp_path):
     pieces = []
     for (_p, s, e, version, _g, _c) in splits:
         assert version == "ma"
-        pieces += list(scan_data_buffer_rows(
+        pieces += list(scan_data_buffer_rows_modern(
             data, version="ma", start=s, end=e, source_path=path))
     assert pieces == whole
 
@@ -1353,7 +1353,7 @@ def test_bti_format_decodes_via_oa_row_path(spark, tmp_path):
 
 
 @pytest.mark.parametrize("compress", [False, True])
-def test_bti_multi_split_boundary_scan(spark, tmp_path, compress):
+def test_bti_multi_split_boundary_scan(spark, tmp_path, monkeypatch, compress):
     """A BIG `da-*-bti` table must split into >1 task WITHOUT parsing the
     trie sidecars: partition boundaries come from a skip-walk of Data.db
     itself (modern.partition_offsets_from_data), offsets in UNCOMPRESSED
@@ -1361,6 +1361,7 @@ def test_bti_multi_split_boundary_scan(spark, tmp_path, compress):
     byte-identical to the whole-file decode."""
     from aegisthus_spark.sources import read_sstable_cells
     from aegisthus_spark.sources.sstable_source import _plan_one
+    from aegisthus_spark.sstable import modern
     from aegisthus_spark.sstable.modern import partition_offsets_from_data
 
     d = tmp_path / "bti_big"
@@ -1395,6 +1396,10 @@ def test_bti_multi_split_boundary_scan(spark, tmp_path, compress):
     offsets = partition_offsets_from_data(path, version="oa", compression_sidecar=comp)
     assert len(offsets) == 120 and offsets[0] == 0
     assert offsets == sorted(offsets)
+    # a window far smaller than a partition refills and skips mid-chunk
+    monkeypatch.setattr(modern._SeqWindow, "CHUNK", 100)
+    assert partition_offsets_from_data(
+        path, version="oa", compression_sidecar=comp) == offsets
 
     splits = _plan_one(path, target_bytes=2048)
     assert len(splits) > 1, splits
@@ -1522,6 +1527,41 @@ def _decode_both(path):
         c_tab = pa.Table.from_batches(list(cparse.scan_data_buffer_batches(
             data, version="ma", source_path=path)))
     return p_tab, c_tab
+
+
+def test_c_scanner_fallback_is_logged(tmp_path, caplog):
+    """A 3.x shape the C scanner does not cover (here range tombstones
+    nested deeper than its 16-entry stack) hands the rest of the split to
+    the Python decoder: the cells are unchanged and a warning names the
+    file and the partition's offset."""
+    import logging
+
+    from aegisthus_spark.sstable import cparse
+
+    if not cparse.available():
+        pytest.skip("no C compiler on host")
+    depth = 17
+    nested = [
+        {"marker": KIND_INCL_START_BOUND, "clustering": [b"a%02d" % i],
+         "deletion": (10 + i, 1442880001)}
+        for i in range(depth)
+    ] + [
+        {"marker": KIND_INCL_END_BOUND, "clustering": [b"z%02d" % (depth - i)],
+         "deletion": (9 + depth - i, 1442880001)}
+        for i in range(depth)
+    ]
+    live = [{"clustering": [b"c"], "liveness": (1000,),
+             "cells": [{"column": b"val", "value": b"v"}]}]
+    path = write_sstable_ma(
+        str(tmp_path), [{"key": b"k0", "rows": live}, {"key": b"k1", "rows": nested}],
+        clustering_types=[UTF8], regular_columns=[(b"val", UTF8)], generation=1,
+    )
+    with caplog.at_level(logging.WARNING, logger=cparse.__name__):
+        p_tab, c_tab = _decode_both(path)
+    assert c_tab.equals(p_tab) and c_tab.num_rows == 2 + depth
+    warned = [r.getMessage() for r in caplog.records if r.name == cparse.__name__]
+    assert len(warned) == 1
+    assert path in warned[0] and "offset 0 " not in warned[0], warned
 
 
 @pytest.mark.parametrize("n_present", [5, 60])

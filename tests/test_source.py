@@ -79,44 +79,6 @@ def test_job_end_to_end(spark, tmp_path):
     assert n == len(want)
 
 
-def test_columnar_decode_matches_tuple_path():
-    """arrow_decode.scan_data_buffer_batches must be byte-identical to the
-    golden-tested tuple parser on every reference fixture (all versions,
-    all cell kinds), including mid-row batch boundaries (batch_rows=97)."""
-    import glob
-    import mmap
-    import os
-
-    from aegisthus_spark.sstable.arrow_decode import scan_data_buffer_batches
-    from aegisthus_spark.sstable.decoder import scan_data_buffer_rows
-    from aegisthus_spark.sstable.descriptor import version_of
-
-    from tests.test_golden import TESTDATA
-
-    checked = 0
-    for path in sorted(glob.glob(f"{TESTDATA}/*/*/input/**/*-Data.db", recursive=True)):
-        try:
-            v = version_of(path)
-        except ValueError:
-            continue
-        if os.path.getsize(path) == 0:
-            continue
-        with open(path, "rb") as fh, mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-            try:
-                tuples = list(scan_data_buffer_rows(mm, version=v, source_path=path, generation=7))
-            except Exception:
-                continue  # the combined fixture ships one corrupt file
-            rows = [
-                tuple(d.values())
-                for b in scan_data_buffer_batches(
-                    mm, version=v, source_path=path, generation=7, batch_rows=97)
-                for d in b.to_pylist()
-            ]
-        assert rows == tuples, path
-        checked += 1
-    assert checked >= 30  # every decodable fixture file was compared
-
-
 def test_columnar_decode_mid_row_corruption_keeps_prefix():
     """A file truncated MID-ROW with skip_corrupt must keep the cells decoded
     so far and emit exactly one '!' sentinel — the accumulator's per-row

@@ -6,7 +6,8 @@ import struct
 
 import pytest
 
-from aegisthus_spark.sstable.decoder import scan_data_file
+from aegisthus_spark.sstable import cparse
+from aegisthus_spark.sstable.arrow_decode import scan_data_buffer_batches
 from aegisthus_spark.sstable.writer import serialize_row
 
 LONG_MIN = -(1 << 63)
@@ -26,13 +27,18 @@ def _cols():
 
 
 @pytest.mark.parametrize("version", ["ic", "jb"])
-def test_all_kinds_roundtrip(tmp_path, version):
-    import io
-
+def test_all_kinds_roundtrip(version):
     data = serialize_row(b"key1", 1_000_000, _cols(), version=version)
     data += serialize_row(b"key2", LONG_MIN, [], version=version)  # empty row
 
-    cells = list(scan_data_file(io.BytesIO(data), version=version))
+    scanners = [scan_data_buffer_batches]
+    if cparse.available():
+        scanners.append(cparse.scan_data_buffer_batches)
+    for scan in scanners:
+        _check_all_kinds([c for b in scan(data, version=version) for c in b.to_pylist()])
+
+
+def _check_all_kinds(cells):
     by_name = {bytes(c["cell_name"]): c for c in cells if c["cell_name"]}
 
     assert bytes(by_name[b"live"]["value"]) == b"v1"

@@ -1365,7 +1365,6 @@ def main() -> None:
         return
 
     from aegisthus_spark.session import get_spark
-    from aegisthus_spark.sstable.decoder import scan_data_buffer_rows
 
     d = tempfile.mkdtemp()
     path = make_sstable(d, args.rows)
@@ -1377,10 +1376,6 @@ def main() -> None:
           f"({total_sz / 1e9:.2f} GB total), {args.rows} rows x 5 cells each")
 
     with open(path, "rb") as fh, mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-        t = time.time()
-        n = sum(1 for _ in scan_data_buffer_rows(mm, version="jb"))
-        dt = time.time() - t
-        print(f"decode single-core (tuples, no output): {n / dt / 1e6:.2f}M cells/s, {sz / dt / 1e6:.0f} MB/s")
         from aegisthus_spark.sstable.arrow_decode import scan_data_buffer_batches
 
         t = time.time()
