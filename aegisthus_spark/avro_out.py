@@ -2,19 +2,18 @@
 
 The reference's CQL export emits Avro (aegisthus-hadoop
 src/main/java/org/coursera/SSTableExport.java:176-177 writes through
-AvroKeyOutputFormat). Spark's ``.format("avro")`` needs the external
-spark-avro DataSource, which is not always deployed; this module writes
-the same container format directly from the public Avro 1.x specification
+AvroKeyOutputFormat). This module writes the same container format
+directly from the public Avro 1.x specification
 (https://avro.apache.org/docs/1.12.0/specification/ — file header magic
 ``Obj\\x01``, metadata map with ``avro.schema``/``avro.codec``, 16-byte
 sync marker, then blocks of ``count, byte-size, records, sync``), so the
-Avro sink works with zero extra dependencies.
+Avro sink needs no DataSource on the classpath.
 
-Scale shape: one OCF file per Spark partition via
-``mapPartitionsWithIndex`` (the same pattern as the SSTable sink) — the
-driver collects only file paths. Encoding is row-at-a-time Python, which
-is fine for an export sink (the bytes hit disk once); the hot analytics
-paths never route through here.
+Scale shape: one OCF file per non-empty Spark partition, encoded in the
+executors and committed atomically by :mod:`.sink` — the driver collects
+only file names and row counts. Encoding is
+row-at-a-time Python, which is fine for an export sink (the bytes hit disk
+once); the hot analytics paths never route through here.
 
 Output files are readable by any Avro implementation; tests verify with
 the official Avro *Java* library that ships on Spark's own classpath
@@ -23,10 +22,13 @@ the official Avro *Java* library that ships on Spark's own classpath
 
 from __future__ import annotations
 
+import calendar
+import functools
 import hashlib
 import json
 import os
 import struct
+import time
 from decimal import Context, Decimal, localcontext
 
 #: exact context for decimal(38,*) unscaled extraction
@@ -34,6 +36,8 @@ _EXACT_CTX = Context(prec=60)
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .sink import write_partitions
 
 # ---------------------------------------------------------------------------
 # schema mapping: Spark -> Avro (nullable fields become ["null", T] unions)
@@ -151,25 +155,20 @@ def _encode_base(value, dt: T.DataType, out: bytearray) -> None:
         # (datetime.fromtimestamp) in the executor; the exact inverse is
         # mktime, not timegm — timegm would shift by the host's UTC offset
         # on any non-UTC machine. tz-aware values invert via .timestamp().
-        import calendar as _cal
-        import time as _time
-
         if value.tzinfo is not None:
             # exact integer inverse (utctimetuple + microsecond); a float
             # .timestamp() would truncate pre-epoch values toward zero,
             # shifting e.g. 1969-12-31T23:59:59.5Z by a full second
-            micros = _cal.timegm(value.utctimetuple()) * 1_000_000 + value.microsecond
+            micros = calendar.timegm(value.utctimetuple()) * 1_000_000 + value.microsecond
         else:
             # naive local wall clock: mktime inverts fromInternal. The one
             # irrecoverable case is the DST fall-back hour on DST-observing
             # hosts (fromInternal drops the fold bit); run executors in UTC
             # — as this engine's session factory does — to avoid it.
-            micros = int(_time.mktime(value.timetuple())) * 1_000_000 + value.microsecond
+            micros = int(time.mktime(value.timetuple())) * 1_000_000 + value.microsecond
         out += _zigzag(micros)
     elif isinstance(dt, T.TimestampNTZType):
         # TimestampNTZType.fromInternal yields UTC wall-clock; timegm inverts
-        import calendar
-
         micros = calendar.timegm(value.timetuple()) * 1_000_000 + value.microsecond
         out += _zigzag(micros)
     elif isinstance(dt, T.DateType):
@@ -216,8 +215,10 @@ _BLOCK_RECORDS = 4096
 def write_ocf_file(path: str, rows, schema: T.StructType) -> int:
     """Write rows (dict-like / pyspark Rows) to one OCF file; returns count."""
     schema_json = json.dumps(avro_schema(schema)).encode("utf-8")
-    # deterministic sync marker (any 16 bytes are valid per spec)
-    sync = hashlib.md5(schema_json + path.encode()).digest()
+    # deterministic sync marker (any 16 bytes are valid per spec), from the
+    # file name only: an attempt writing under _temporary/ produces the
+    # bytes of the committed file
+    sync = hashlib.md5(schema_json + os.path.basename(path).encode()).digest()
     n_total = 0
     with open(path, "wb") as f:
         f.write(_MAGIC)
@@ -243,30 +244,19 @@ def write_ocf_file(path: str, rows, schema: T.StructType) -> int:
     return n_total
 
 
-def write_avro(df: DataFrame, output_dir: str, *, prefix: str = "part") -> list[str]:
-    """Distributed OCF write: one file per non-empty partition; returns the
-    written paths (driver collects paths only, never data)."""
-    os.makedirs(output_dir, exist_ok=True)
-    schema = df.schema
+def _write_partition(partition: int, rows, directory: str, *,
+                     schema: T.StructType) -> list[tuple[str, int]]:
+    name = f"part-{partition:05d}.avro"
+    return [(name, write_ocf_file(os.path.join(directory, name), rows, schema))]
 
-    def write_partition(idx: int, it):
-        path = os.path.join(output_dir, f"{prefix}-{idx:05d}.avro")
-        it = iter(it)
-        try:
-            first = next(it)
-        except StopIteration:
-            return
-        import itertools
 
-        write_ocf_file(path, itertools.chain([first], it), schema)
-        yield path
+def write_avro(df: DataFrame, output_dir: str) -> list[str]:
+    """Distributed OCF write: one file per non-empty partition, committed
+    atomically into ``output_dir`` (replacing the files it held). Returns the
+    written paths as a :class:`.sink.Written` (``.rows`` records in total).
 
-    written = sorted(df.rdd.mapPartitionsWithIndex(write_partition).collect())
-    if not written:
-        # all partitions empty: still represent the export durably — a
-        # header-only OCF records the schema and an empty record set, so
-        # consumers of the directory see the export rather than nothing
-        path = os.path.join(output_dir, f"{prefix}-00000.avro")
-        write_ocf_file(path, iter(()), schema)
-        written = [path]
-    return written
+    An export without rows is still written as one header-only OCF, which
+    records the schema and the empty record set, so consumers of the
+    directory see the export rather than nothing."""
+    encode = functools.partial(_write_partition, schema=df.schema)
+    return write_partitions(df, output_dir, encode, keep_empty=True)

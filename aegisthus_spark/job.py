@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Observation
 
-from .compact import compact
+from .avro_out import avro_schema, write_avro
+from .compact import cleanse, compact
+from .cql import CqlSchema, cql_rows
 from .output import to_aeg_json
 from .sources import read_sstable_cells
 
@@ -26,9 +28,7 @@ def compact_snapshot(
     *,
     max_row_size: int | None = None,
     skip_corrupt: bool = False,
-    key_type: str = "BytesType",
     column_type: str = "BytesType",
-    column_value_type: str = "BytesType",
     sort_columns_by_name: bool = False,
     legacy_column_name_formatting: bool = False,
     trace_source: bool = False,
@@ -200,65 +200,30 @@ def write_snapshot_json(
 def export_cql(
     spark: SparkSession,
     inputs: list[str],
-    ddl: str,
+    ddl: str | CqlSchema,
     output: str,
     *,
-    fmt: str = "auto",
     skip_corrupt: bool = False,
-) -> str:
+) -> tuple[str, int]:
     """SSTableExport analog (org/coursera/SSTableExport.java:142-190): CQL
     rows from SSTables to Avro — run on *merged* cells, so multi-generation
     inputs are fine (the reference's map-only job requires one compacted
     generation).
 
-    Avro resolution order: the spark-avro DataSource when it is on the
-    classpath, else the built-in pure-Python OCF sink (:mod:`.avro_out` —
-    real Avro, readable by any implementation); parquet only as the last
-    resort for schemas Avro can't express (fmt='parquet' forces it).
-    Returns the format used: 'avro' | 'avro-ocf' | 'parquet'."""
-    from .compact import cleanse
-    from .cql import cql_rows
-
-    rows = cleanse(compact_snapshot(spark, inputs, skip_corrupt=skip_corrupt))
-    wide = cql_rows(rows, ddl)
-    if fmt in ("auto", "avro"):
-        try:
-            wide.write.mode("overwrite").format("avro").save(output)
-            return "avro"
-        except Exception as e:
-            # fall through ONLY when the avro DataSource is absent; a
-            # mid-write failure of a present spark-avro must surface, not
-            # be papered over with a second sink's partial output
-            if not _is_missing_datasource(e):
-                raise
-        try:
-            from .avro_out import write_avro
-
-            _clear_dir(output)  # no stale DataSource droppings next to OCF
-            write_avro(wide, output)
-            return "avro-ocf"
-        except Exception:
-            if fmt == "avro":
-                raise
-    wide.write.mode("overwrite").parquet(output)
-    return "parquet"
-
-
-def _is_missing_datasource(e: Exception) -> bool:
-    """True iff the failure means 'no avro DataSource on the classpath'."""
-    msg = str(e)
-    return (
-        "FAILED_FIND_DATA_SOURCE" in msg
-        or "Failed to find data source" in msg
-        or "ClassNotFoundException" in msg
-        or "DATA_SOURCE_NOT_FOUND" in msg
-    )
-
-
-def _clear_dir(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
+    The rows go to Avro object container files through the pure-Python OCF
+    sink (:mod:`.avro_out` — real Avro, readable by any implementation),
+    committed atomically. A schema Avro cannot express (such as a map
+    whose keys are not strings) is written as parquet instead. A failure
+    while writing raises and leaves no file of this write behind. Returns
+    the format used, 'avro-ocf' or 'parquet', and the rows written."""
+    wide = cql_rows(cleanse(compact_snapshot(spark, inputs, skip_corrupt=skip_corrupt)), ddl)
+    try:
+        avro_schema(wide.schema)
+    except ValueError:
+        obs = Observation("cql_rows_written")
+        wide.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(output)
+        return "parquet", int(obs.get["n"])
+    return "avro-ocf", write_avro(wide, output).rows
 
 
 def main(argv: list[str] | None = None):
@@ -312,23 +277,21 @@ def main(argv: list[str] | None = None):
                 print(f"corrupt_files_skipped={n}")
 
     if args.cql_schema:
-        fmt = export_cql(
+        fmt, n = export_cql(
             spark,
             args.input + args.input_dir,
             args.cql_schema,
             args.output,
             skip_corrupt=args.max_corrupt_files_to_skip > 0,
         )
-        print(f"cql_rows_written format={fmt}")
+        print(f"cql_rows_written={n} format={fmt}")
         return
     rows = compact_snapshot(
         spark,
         args.input + args.input_dir,
         max_row_size=args.maxcolsize,
         skip_corrupt=args.max_corrupt_files_to_skip > 0,
-        key_type=args.key_type,
         column_type=args.column_type,
-        column_value_type=args.column_value_type,
         sort_columns_by_name=args.sort_columns_by_name,
         legacy_column_name_formatting=args.legacy_column_name_formatting,
         trace_source=args.trace_source,
@@ -343,7 +306,7 @@ def main(argv: list[str] | None = None):
             rows, args.output, version=args.sstable_output_version, dataset=args.dataset
         )
         check_corrupt_threshold()
-        print(f"sstables_written={len(written)}")
+        print(f"sstables_written={len(written)} rows_written={written.rows}")
         return
     n = write_snapshot_json(
         rows,

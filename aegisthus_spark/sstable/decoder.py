@@ -25,10 +25,6 @@ from .compression import CompressionInfo
 
 log = logging.getLogger(__name__)
 
-#: chunks decompressed past a compressed split's end: the row that starts
-#: before ``end`` may spill past it (reference split semantics)
-_SLACK_CHUNKS = 16
-
 #: what a scanner raises on a row that runs past the end of its buffer:
 #: ValueError from the C scanner and the twins' bound checks, struct.error
 #: from the 2.x twin's fixed-width reads, IndexError from the 3.x twin's
@@ -92,19 +88,19 @@ def _scan_mapped(scan, path, start, end, kw):
 
 
 def _scan_compressed(scan, path, compression_path, start, end, kw):
-    """Decompress the chunks covering [start, end) plus slack into one
-    buffer and scan it. A row spilling past the buffer's tail looks like
-    corruption, so on an error the buffer grows (at least doubling its
-    chunk count) and the scan restarts; only once the file's last chunk is
-    in the buffer is the error real. Batches are collected per split, so a
-    restart never yields a cell twice."""
+    """Decompress the chunks covering [start, end) into one buffer and scan
+    it. A row spilling past the buffer's tail (Index.db splits end on a row
+    start, so only other ends spill) looks like corruption: on an error the
+    buffer grows (doubling its chunk count) and the scan restarts; only once
+    the file's last chunk is in the buffer is the error real. Batches are
+    collected per split, so a restart never yields a cell twice."""
     info = CompressionInfo.read_path(compression_path)
     size = os.path.getsize(path)
     n_chunks = len(info.chunk_offsets)
     cl = info.chunk_length
     end = info.data_length if end is None else min(end, info.data_length)
     first = start // cl
-    last = min(n_chunks, -(-end // cl) + _SLACK_CHUNKS)
+    last = min(n_chunks, -(-end // cl))
     base = first * cl
     with open(path, "rb") as f:
         buf = info.decompress(f, size, first, last)
@@ -118,7 +114,7 @@ def _scan_compressed(scan, path, compression_path, start, end, kw):
                 if last == n_chunks:
                     yield from batches
                     raise
-                grow = min(n_chunks, last + max(_SLACK_CHUNKS, last - first))
+                grow = min(n_chunks, last + max(1, last - first))
                 buf += info.decompress(f, size, last, grow)
                 last = grow
     yield from batches

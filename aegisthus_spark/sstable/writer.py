@@ -15,19 +15,21 @@ Atom bytes follow Cassandra's ``OnDiskAtom.Serializer.serializeForSSTable``
 (the exact inverse of decoder.py's atom parse). Output filenames reproduce
 ``<dataset>-<version>-%010d-Data.db`` (SSTableOutputFormat.java:50-58).
 
-The distributed write runs executor-side (one file per non-empty partition,
-partition index as the file number) — the Spark analog of one file per
-reduce task. Files are written to a shared filesystem path; on a cluster
-that is the mounted DFS/object-store path, locally a plain directory.
+The distributed write runs executor-side through :mod:`..sink` (one file
+per non-empty partition, partition index as the file number) — the Spark
+analog of one file per reduce task, committed atomically with ``_SUCCESS``.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import struct
 from typing import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
+
+from ..sink import write_partitions
 
 _U16 = struct.Struct(">H")
 _I32 = struct.Struct(">i")
@@ -98,8 +100,15 @@ def serialize_row(key: bytes, deleted_at: int, columns: Iterable[dict], *, versi
     return b"".join(out)
 
 
-def sstable_filename(partition: int, *, version: str = "jb", dataset: str = "keyspace-dataset") -> str:
-    return f"{dataset}-{version}-{partition:010d}-Data.db"
+def _write_partition(partition: int, rows: Iterable[Row], directory: str, *,
+                     version: str, dataset: str) -> list[tuple[str, int]]:
+    name = f"{dataset}-{version}-{partition:010d}-Data.db"
+    n = 0
+    with open(os.path.join(directory, name), "wb") as f:
+        for n, row in enumerate(rows, 1):
+            cols = [c.asDict() for c in row.columns]
+            f.write(serialize_row(row.partition_key, row.deleted_at, cols, version=version))
+    return [(name, n)]
 
 
 def write_sstable(
@@ -109,46 +118,15 @@ def write_sstable(
     version: str = "jb",
     dataset: str = "keyspace-dataset",
 ) -> list[str]:
-    """Write compacted rows as SSTable Data.db files, one per partition.
+    """Write compacted rows as SSTable Data.db files, one per non-empty
+    partition, committed atomically into ``output_dir`` (replacing the files
+    it held).
 
     ``rows`` is the output of :func:`aegisthus_spark.compact.compact`
     (``partition_key``, ``deleted_at``, ``columns``). Rows keep their
     partition-internal order (sort with ``sortWithinPartitions`` upstream
-    for reference output-order parity). Returns the written file paths.
+    for reference output-order parity). Returns the written file paths,
+    in name order, as a :class:`..sink.Written` (``.rows`` rows in total).
     """
-    os.makedirs(output_dir, exist_ok=True)
-
-    def write_partition(idx: int, it):
-        path = os.path.join(output_dir, sstable_filename(idx, version=version, dataset=dataset))
-        wrote = False
-        f = None
-        try:
-            for row in it:
-                if f is None:
-                    f = open(path, "wb")
-                    wrote = True
-                cols = [
-                    {
-                        "name": bytes(c["name"]) if c["name"] is not None else b"",
-                        "value": bytes(c["value"]) if c["value"] is not None else None,
-                        "ts": c["ts"],
-                        "kind": c["kind"],
-                        "ttl": c["ttl"],
-                        "local_deletion_time": c["local_deletion_time"],
-                        "ts_of_last_delete": c["ts_of_last_delete"],
-                    }
-                    for c in row["columns"]
-                ]
-                f.write(
-                    serialize_row(
-                        bytes(row["partition_key"]), row["deleted_at"], cols, version=version
-                    )
-                )
-        finally:
-            if f is not None:
-                f.close()
-        if wrote:
-            yield path
-
-    sel = rows.select("partition_key", "deleted_at", "columns")
-    return sorted(sel.rdd.mapPartitionsWithIndex(write_partition).collect())
+    encode = functools.partial(_write_partition, version=version, dataset=dataset)
+    return write_partitions(rows.select("partition_key", "deleted_at", "columns"), output_dir, encode)

@@ -7,9 +7,14 @@ py4j) — an independent decoder, so a spec violation can't self-validate.
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
+
+MA = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures", "ma"
+)
 
 
 def _read_with_java(spark, path):
@@ -91,33 +96,26 @@ def test_write_avro_many_rows_blocks(spark, tmp_path):
 
 
 def test_export_cql_emits_real_avro(spark, tmp_path):
-    """export_cql(auto) must produce real Avro here: spark-avro is absent
-    from this distribution, so the OCF sink takes over ('avro-ocf')."""
-    from aegisthus_spark.job import export_cql
-    from tests.test_golden import TESTDATA
+    """export_cql writes real Avro through the OCF sink; read back with
+    Avro-Java, its records are the CQL rows of the same input."""
+    from aegisthus_spark.compact import cleanse
+    from aegisthus_spark.cql import cql_rows
+    from aegisthus_spark.job import compact_snapshot, export_cql
+    from aegisthus_spark.sstable.modern import header_for_data_file, infer_cql_schema
 
-    ddl = """
-    CREATE TABLE randomtable (
-        key blob PRIMARY KEY,
-        guid uuid,
-        name text,
-        email text,
-        words text,
-        smallnumber int,
-        rfc2822formatteddate timestamp,
-        latlong list<blob>
-    )
-    """
-    inputs = [f"{TESTDATA}/2.0.10/randomtable/input"]
+    inputs = [f"{MA}/gen1", f"{MA}/gen2"]
+    schema = infer_cql_schema(header_for_data_file(f"{MA}/gen1/ma-1-big-Data.db"))
     out = tmp_path / "export"
-    fmt = export_cql(spark, inputs, ddl, str(out))
-    assert fmt in ("avro", "avro-ocf")
-    files = sorted(out.glob("*.avro"))
-    if fmt == "avro-ocf":
-        assert files
-        recs = [r for p in files for r in _read_with_java(spark, str(p))]
-        assert len(recs) > 0
-        assert all("name" in r for r in recs)
+    fmt, n = export_cql(spark, inputs, schema, str(out))
+    assert fmt == "avro-ocf"
+    recs = [r for p in sorted(out.glob("*.avro")) for r in _read_with_java(spark, str(p))]
+    want = [r.asDict() for r in cql_rows(cleanse(compact_snapshot(spark, inputs)), schema).collect()]
+    assert len(want) > 20 and n == len(want)
+
+    def order(r):
+        return (r["key"], r["ck0"])
+
+    assert sorted(recs, key=order) == sorted(want, key=order)
 
 
 def test_write_avro_empty_dataframe_header_only(spark, tmp_path):
@@ -157,3 +155,27 @@ def test_write_avro_wide_decimal_exact(spark, tmp_path):
     dfr.close()
     assert unscaled == int(wide.scaleb(4, context=__import__("decimal").Context(prec=60)))
     assert unscaled == 12345678901234567890123456789012345678
+
+
+def test_export_cql_encode_failure_raises_and_leaves_no_file(spark, tmp_path, monkeypatch):
+    """A failure inside the OCF encoder fails the export; it used to fall
+    back to a parquet snapshot that reported success."""
+    from aegisthus_spark import avro_out
+    from aegisthus_spark.job import export_cql
+    from aegisthus_spark.sstable.modern import header_for_data_file, infer_cql_schema
+
+    real = avro_out._write_partition
+
+    def failing(partition, rows, directory, **kw):
+        def torn():
+            yield from rows
+            raise RuntimeError("injected OCF encode failure")
+
+        return real(partition, torn(), directory, **kw)
+
+    monkeypatch.setattr(avro_out, "_write_partition", failing)
+    schema = infer_cql_schema(header_for_data_file(f"{MA}/gen1/ma-1-big-Data.db"))
+    out = tmp_path / "export"
+    with pytest.raises(Exception, match="injected OCF encode failure"):
+        export_cql(spark, [f"{MA}/gen1", f"{MA}/gen2"], schema, str(out))
+    assert not out.exists()

@@ -80,7 +80,7 @@ def test_split_decode_equals_whole(tmp_path, monkeypatch):
 
 def test_rows_spilling_past_the_slack_are_read_whole(tmp_path, monkeypatch):
     """A split decodes every row that STARTS before its end, however far
-    past the end and the decompressed slack the row runs: the scan grows
+    past the end the row runs: the scan grows
     its buffer until the row is complete, whichever error the scanner
     raises at the buffer's tail (the Python twin's fixed-width reads raise
     struct.error, not ValueError). Index-planned splits end on row
@@ -91,8 +91,8 @@ def test_rows_spilling_past_the_slack_are_read_whole(tmp_path, monkeypatch):
         return {"name": b"c%04d" % j, "value": b"v%d" % j, "ts": j, "kind": "c",
                 "ttl": None, "local_deletion_time": None, "ts_of_last_delete": None}
 
-    # rows of ~9.5 KB, 19 chunks of 512 bytes: past the 16-chunk slack, and
-    # mostly fixed-width fields, so the buffer's tail lands inside them
+    # rows of ~9.5 KB, 19 chunks of 512 bytes: the buffer grows several
+    # times, and mostly fixed-width fields, so its tail lands inside them
     rows = [(b"k%03d" % i, -(1 << 63), [cell(j) for j in range(400)]) for i in range(12)]
     data_path, raw_len = write_table(str(tmp_path), "ks-t-jb-1", "jb", rows, chunk=512)
     starts = row_offsets(data_path.replace("-Data.db", "-Index.db"))

@@ -1,4 +1,5 @@
-"""Every ``from aegisthus_spark... import name`` in the repository resolves.
+"""Every ``from aegisthus_spark... import name`` in the repository resolves,
+and the package writes no files through a per-partition RDD loop.
 
 Deleting or renaming a function leaves dangling imports behind in tools,
 benchmarks and function-local imports that no test happens to execute;
@@ -59,3 +60,21 @@ def test_package_imports_resolve():
                                    f"{module}.{alias.name}")
     assert checked > 500
     assert not missing, missing
+
+
+def test_package_writes_files_only_through_the_sink():
+    """File sinks run on ``aegisthus_spark.sink`` (attempt directories,
+    atomic commit), not on their own ``rdd.mapPartitionsWithIndex`` loops
+    writing final file names."""
+    calls = []
+    for path in _sources():
+        if not os.path.relpath(path, ROOT).startswith(PACKAGE + os.sep):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        calls += [
+            f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr == "mapPartitionsWithIndex"
+        ]
+    assert not calls, calls

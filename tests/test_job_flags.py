@@ -2,11 +2,21 @@
 trace_source, produce-sstable CLI, and the blocksize option."""
 
 import glob
+import os
 import struct
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.test_golden import TESTDATA
+LEGACY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures", "legacy"
+)
+MA = os.path.join(os.path.dirname(LEGACY), "ma")
+#: the CQL table of tests/fixtures/ma
+MA_DDL = (
+    "CREATE TABLE t (key text, ck0 text, owner text static, name text, score bigint, "
+    "tags list<text>{extra}, PRIMARY KEY (key, ck0))"
+)
 
 
 def _typed_cells(spark):
@@ -110,31 +120,71 @@ def test_output_side_max_col_size_marker(spark):
     assert line == py  # JVM fast path == Python twin, byte-for-byte
 
 
-def test_cli_produce_sstable(spark, tmp_path, monkeypatch):
+def _run_job(spark, monkeypatch, capsys, argv) -> str:
+    import aegisthus_spark.session as sess
     from aegisthus_spark import job as jobmod
 
-    monkeypatch.setattr(jobmod, "get_spark", lambda *a, **k: spark, raising=False)
-    import aegisthus_spark.session as sess
-
     monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
+    capsys.readouterr()
+    jobmod.main(argv)
+    return capsys.readouterr().out.strip()
+
+
+def test_cli_produce_sstable(spark, tmp_path, monkeypatch, capsys):
+    """--produce-sstable over the two overlapping jb generations writes
+    every compacted key once and reports files and rows written."""
+    from aegisthus_spark.sstable import scan_file
+
     out = str(tmp_path / "sst")
-    jobmod.main([
-        "--input-dir", f"{TESTDATA}/2.0.10/randomtable/input",
+    report = _run_job(spark, monkeypatch, capsys, [
+        "--input-dir", f"{LEGACY}/jb",
         "--output", out,
         "--produce-sstable",
         "--sstable-output-version", "jb",
         "--dataset", "testks-testcf",
         "--blocksize", "1024",
     ])
-    written = glob.glob(f"{out}/testks-testcf-jb-*-Data.db")
+    written = sorted(glob.glob(f"{out}/testks-testcf-jb-*-Data.db"))
     assert written, "CLI did not write sstable output"
+    assert report == f"sstables_written={len(written)} rows_written=60"
+    keys = [bytes(c["partition_key"]) for f in written for c in scan_file(f)]
+    assert len(set(keys)) == 60  # jb-2 holds keys 0-39, jb-3 keys 20-59
 
-    # decodes back to the same row count as the golden
-    from aegisthus_spark.sstable import scan_file
-    from tests.test_golden import golden_lines
 
-    keys = {bytes(c["partition_key"]) for f in written for c in scan_file(f)}
-    assert len(keys) == len(golden_lines("2.0.10/randomtable"))
+def test_cli_produce_sstable_again_replaces_the_output(spark, tmp_path, monkeypatch, capsys):
+    """A second run into the same output, with fewer non-empty partitions,
+    leaves no file of the first run behind."""
+    out = tmp_path / "sst"
+    argv = ["--input-dir", f"{LEGACY}/jb", "--output", str(out), "--produce-sstable"]
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        first = _run_job(spark, monkeypatch, capsys, argv)
+    finally:
+        spark.conf.set(key, "true")
+    n_first = len(list(out.glob("*-Data.db")))
+    assert n_first > 1 and first == f"sstables_written={n_first} rows_written=60"
+    second = _run_job(spark, monkeypatch, capsys, argv)
+    assert second == "sstables_written=1 rows_written=60"
+    assert sorted(p.name for p in out.iterdir()) == [
+        "_SUCCESS", "keyspace-dataset-jb-0000000000-Data.db"]
+
+
+@pytest.mark.parametrize("extra,fmt", [("", "avro-ocf"), (", m map<int, text>", "parquet")],
+                         ids=["avro", "int_map_keys"])
+def test_cli_cql_export_reports_rows_and_format(spark, tmp_path, monkeypatch, capsys, extra, fmt):
+    """The sink follows the schema: Avro unless a map has non-string keys,
+    which Avro cannot express; the job reports the rows and the format."""
+    out = tmp_path / "export"
+    report = _run_job(spark, monkeypatch, capsys, [
+        "--input-dir", f"{MA}/gen1", "--input-dir", f"{MA}/gen2",
+        "--output", str(out), "--cql-schema", MA_DDL.format(extra=extra),
+    ])
+    assert report == f"cql_rows_written=36 format={fmt}"
+    suffix = ".avro" if fmt == "avro-ocf" else ".parquet"
+    assert list(out.glob(f"*{suffix}")) and (out / "_SUCCESS").exists()
+    if fmt == "parquet":
+        assert spark.read.parquet(str(out)).count() == 36
 
 
 def test_cli_json_with_sort_flag(spark, tmp_path, monkeypatch, jb_input_dir):

@@ -121,3 +121,33 @@ def test_python_fallback_is_logged_once(monkeypatch, caplog):
         _split_cells(path)
     warned = [r for r in caplog.records if "C scanner unavailable" in r.getMessage()]
     assert len(warned) == 1
+
+
+def test_compressed_split_decompresses_only_its_chunks(monkeypatch):
+    """Index-planned splits end on a row start, so a compressed split
+    decompresses exactly the chunks covering [start, end) and no slack
+    past them, and still decodes the golden cells."""
+    from aegisthus_spark.sources.sstable_source import _plan_one
+    from aegisthus_spark.sstable.compression import CompressionInfo
+
+    path = os.path.join(FIXTURE, "compressed", "ks-t-jb-5-Data.db")
+    info = CompressionInfo.read_path(find_compression_sidecar(path))
+    cl = info.chunk_length
+    assert cl == 512
+    asked = []
+    decompress = CompressionInfo.decompress
+
+    def spy(self, f, file_size, lo, hi):
+        asked.append((lo, hi))
+        return decompress(self, f, file_size, lo, hi)
+
+    monkeypatch.setattr(CompressionInfo, "decompress", spy)
+    splits = _plan_one(path, target_bytes=1024)
+    assert len(splits) > 2
+    got = []
+    for _, start, end, *_ in splits:
+        asked.clear()
+        got += _split_cells(path, start=start, end=end, skip_corrupt=True)
+        end = info.data_length if end is None else end
+        assert asked == [(start // cl, -(-end // cl))], (start, end)
+    assert got == [r for r in _golden() if r[0] == os.path.relpath(path, FIXTURE)]

@@ -1,52 +1,54 @@
 """SSTable writer round-trip: compact fixtures -> write Data.db -> re-decode
--> same golden aeg-JSON (mirrors AegisthusIntegrationTest.groovy:198-227,
-which verifies the write path through the read path for versions ic/jb)."""
+-> the same aeg-JSON (mirrors AegisthusIntegrationTest.groovy:198-227,
+which verifies the write path through the read path for versions ic/jb).
+Inputs are the in-repository 2.x fixtures (tests/fixtures/legacy)."""
 
 import glob
+import os
 
 import pytest
 
-from tests.test_golden import TESTDATA, compact_to_lines, data_files, golden_lines
+from tests.test_golden import compact_to_lines
 
-CASES = [
-    ("2.0.10/randomtable", "jb"),
-    ("2.0.10/rangetombstone", "jb"),
-    ("1.2.18/randomtable", "ic"),
-    ("2.2.4/randomtable", "jb"),
-]
+FIXTURE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures", "legacy"
+)
 
 
-@pytest.mark.parametrize("case,out_version", CASES, ids=[c for c, _ in CASES])
-def test_roundtrip(spark, tmp_path, case, out_version):
+def _compacted(spark, files):
     from aegisthus_spark.compact import compact
-    from aegisthus_spark.sstable import scan_file, write_sstable
+    from aegisthus_spark.sstable import scan_file
     from tests.conftest import CELLS_SCHEMA
-
-    files = data_files(case)
-    assert files, f"no fixture data files for {case}"
 
     fields = ("source_path", "generation", "partition_key", "row_deleted_at",
               "kind", "cell_name", "cell_name_max", "value", "ts", "ttl",
               "local_deletion_time", "ts_of_last_delete")
-    rows = []
-    for f in files:
-        for c in scan_file(f):
-            rows.append(tuple(c[k] for k in fields))
-    cells = spark.createDataFrame(rows, CELLS_SCHEMA)
-    compacted = compact(cells).sortWithinPartitions("partition_key")
+    rows = [tuple(c[k] for k in fields) for f in files for c in scan_file(f)]
+    return compact(spark.createDataFrame(rows, CELLS_SCHEMA)).sortWithinPartitions("partition_key")
+
+
+@pytest.mark.parametrize("out_version", ["ic", "jb"])
+@pytest.mark.parametrize("layout", ["ic", "jb"])
+def test_roundtrip(spark, tmp_path, layout, out_version):
+    """The ic generation and the two overlapping jb generations, each
+    written as ic and as jb: re-decoding the written files compacts to the
+    same aeg-JSON as the fixture cells."""
+    from aegisthus_spark.sstable import write_sstable
+
+    files = sorted(glob.glob(f"{FIXTURE}/{layout}/*-Data.db"))
+    assert files, f"no fixture data files for {layout}"
 
     out_dir = str(tmp_path / "sstable_out")
-    written = write_sstable(compacted, out_dir, version=out_version, dataset="ks-table")
+    written = write_sstable(
+        _compacted(spark, files), out_dir, version=out_version, dataset="ks-table"
+    )
     assert written, "no sstable files written"
     assert all(f"-{out_version}-" in p and p.endswith("-Data.db") for p in written)
+    assert sorted(written) == sorted(glob.glob(f"{out_dir}/*-Data.db"))
 
-    # read path verifies write path: re-compact the written sstables and
-    # compare to the original golden JSON
-    expected = sorted(
-        golden_lines(case), key=lambda ln: bytes.fromhex(ln.split("\t", 1)[0])
-    )
-    actual = compact_to_lines(spark, sorted(glob.glob(f"{out_dir}/*-Data.db")))
-    assert actual == expected
+    expected = compact_to_lines(spark, files)
+    assert len(expected) > 20
+    assert compact_to_lines(spark, sorted(written)) == expected
 
 
 def test_serialize_row_layouts():
