@@ -1,4 +1,34 @@
+import os
+
 import pytest
+
+#: the reference Aegisthus checkout: its fixture SSTables, the goldens it
+#: produced from them, and its sample tables (``scripts/data``)
+REFERENCE = "/root/reference"
+TESTDATA = f"{REFERENCE}/aegisthus-hadoop/src/test/resources/testdata"
+#: the in-repo 2.x fixture (tools/make_legacy_fixture.py, FIXTURES.md §13)
+LEGACY = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "legacy")
+
+HAS_REFERENCE = os.path.isdir(REFERENCE)
+
+#: for checks against output that only the reference's inputs reproduce
+needs_reference = pytest.mark.skipif(
+    not HAS_REFERENCE, reason="needs the reference repository's fixtures"
+)
+
+
+def with_reference(legacy_case, reference_case):
+    """The in-repo case, followed by the reference's where its checkout
+    exists: a test checks its assertions on both."""
+    return [legacy_case] + ([reference_case] if HAS_REFERENCE else [])
+
+
+#: registry queries that decode the reference's fixtures
+#: (``queries._SST_TESTDATA``); their oracle is the reference's golden
+REFERENCE_QUERIES = frozenset({
+    "sst_decode_randomtable", "sst_decode_rangetombstone", "sst_decode_compressed",
+    "sst_decode_combined", "sst_decode_staged", "aeg_incremental_snapshot",
+})
 
 
 @pytest.fixture(scope="session")

@@ -9,11 +9,14 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-TESTDATA = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
+from tests.conftest import LEGACY, TESTDATA, with_reference
+
 BUCKETS = 8
+#: two overlapping generations; split by source_path, one per batch
+INPUTS = with_reference(f"{LEGACY}/jb", f"{TESTDATA}/2.0.10/randomtable/input")
 
 
-def _cells(spark, case):
+def _cells(spark, input_dir):
     from aegisthus_spark.sstable import scan_file
     from tests.conftest import CELLS_SCHEMA
 
@@ -21,7 +24,7 @@ def _cells(spark, case):
               "kind", "cell_name", "cell_name_max", "value", "ts", "ttl",
               "local_deletion_time", "ts_of_last_delete")
     files = sorted(
-        f for f in glob.glob(f"{TESTDATA}/{case}/input/**/*-Data.db", recursive=True)
+        f for f in glob.glob(f"{input_dir}/**/*-Data.db", recursive=True)
         if ".idx" not in os.path.basename(f)
     )
     rows = [tuple(c[k] for k in fields) for f in files for c in scan_file(f)]
@@ -32,15 +35,16 @@ def test_merge_compacted_equals_one_shot(spark):
     from aegisthus_spark.compact import compact, merge_compacted
     from aegisthus_spark.output import to_aeg_json
 
-    cells, files = _cells(spark, "2.0.10/randomtable")
-    cells = cells.cache()
-    half = files[len(files) // 2]
-    a = compact(cells.filter(F.col("source_path") < half))
-    b = compact(cells.filter(F.col("source_path") >= half))
-    merged = merge_compacted(a, b)
-    got = sorted(r.value for r in to_aeg_json(merged).collect())
-    want = sorted(r.value for r in to_aeg_json(compact(cells)).collect())
-    assert got == want
+    for input_dir in INPUTS:
+        cells, files = _cells(spark, input_dir)
+        cells = cells.cache()
+        half = files[len(files) // 2]
+        a = compact(cells.filter(F.col("source_path") < half))
+        b = compact(cells.filter(F.col("source_path") >= half))
+        merged = merge_compacted(a, b)
+        got = sorted(r.value for r in to_aeg_json(merged).collect())
+        want = sorted(r.value for r in to_aeg_json(compact(cells)).collect())
+        assert got == want
 
 
 @pytest.mark.parametrize("buckets", [BUCKETS, 32])
@@ -58,48 +62,49 @@ def test_bucketed_merge_snapshot_side_does_not_shuffle(spark, tmp_path, buckets)
         write_snapshot_bucketed,
     )
 
-    cells, files = _cells(spark, "2.0.10/randomtable")
-    cells = cells.cache()
-    half = files[len(files) // 2]
-    t0, t1 = f"snap_b{buckets}_v0", f"snap_b{buckets}_v1"
+    for n, input_dir in enumerate(INPUTS):
+        cells, files = _cells(spark, input_dir)
+        cells = cells.cache()
+        half = files[len(files) // 2]
+        t0, t1 = f"snap_b{buckets}_{n}_v0", f"snap_b{buckets}_{n}_v1"
 
-    try:
-        write_snapshot_bucketed(
-            compact(cells.filter(F.col("source_path") < half)), t0, buckets=buckets
-        )
-        merge_bucketed(
-            spark, cells.filter(F.col("source_path") >= half), t0, t1,
-            buckets=buckets,
-        )
+        try:
+            write_snapshot_bucketed(
+                compact(cells.filter(F.col("source_path") < half)), t0, buckets=buckets
+            )
+            merge_bucketed(
+                spark, cells.filter(F.col("source_path") >= half), t0, t1,
+                buckets=buckets,
+            )
 
-        # correctness: the merged table (minus retained RT metadata) equals
-        # one-shot compaction
-        from aegisthus_spark.output import to_aeg_json
-        from aegisthus_spark.streaming.incremental import strip_range_tombstones
+            # correctness: the merged table (minus retained RT metadata) equals
+            # one-shot compaction
+            from aegisthus_spark.output import to_aeg_json
+            from aegisthus_spark.streaming.incremental import strip_range_tombstones
 
-        got = sorted(
-            r.value
-            for r in to_aeg_json(strip_range_tombstones(spark.table(t1))).collect()
-        )
-        want = sorted(r.value for r in to_aeg_json(compact(cells)).collect())
-        assert got == want
+            got = sorted(
+                r.value
+                for r in to_aeg_json(strip_range_tombstones(spark.table(t1))).collect()
+            )
+            want = sorted(r.value for r in to_aeg_json(compact(cells)).collect())
+            assert got == want
 
-        # scale property: in the merge plan, the bucketed scan side has no
-        # Exchange between the table scan and the join
-        snap = spark.table(t0)
-        batch_rows = compact(
-            cells.filter(F.col("source_path") >= half)
-        ).repartition(buckets, "partition_key")
-        plan = physical_plan(merge_compacted(snap, batch_rows), "formatted")
-        # bucketed read markers: the scan reports selected bucket count
-        assert re.search(r"Bucketed: true", plan), plan[:2000]
-        exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
-        assert exchanges <= 1, f"expected only the batch-side exchange:\n{plan[:3000]}"
-    finally:
-        # DROP in finally: a leaked managed-table dir fails every later run
-        # with LOCATION_ALREADY_EXISTS, masking the original failure
-        for t in (t0, t1):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            # scale property: in the merge plan, the bucketed scan side has no
+            # Exchange between the table scan and the join
+            snap = spark.table(t0)
+            batch_rows = compact(
+                cells.filter(F.col("source_path") >= half)
+            ).repartition(buckets, "partition_key")
+            plan = physical_plan(merge_compacted(snap, batch_rows), "formatted")
+            # bucketed read markers: the scan reports selected bucket count
+            assert re.search(r"Bucketed: true", plan), plan[:2000]
+            exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
+            assert exchanges <= 1, f"expected only the batch-side exchange:\n{plan[:3000]}"
+        finally:
+            # DROP in finally: a leaked managed-table dir fails every later run
+            # with LOCATION_ALREADY_EXISTS, masking the original failure
+            for t in (t0, t1):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_merge_retains_range_tombstones_for_late_cells(spark):

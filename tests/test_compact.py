@@ -281,17 +281,30 @@ def test_range_tombstone_typed_explicit_max_key(spark, cells_schema):
 
 def test_compact_salted_equals_compact_on_fixtures(spark, cells_schema):
     """The skew-safe two-stage compact must produce IDENTICAL rows to the
-    single-Exchange compact() on every golden fixture's cell stream (all
-    versions, range tombstones, deletions, multi-generation merges)."""
+    single-Exchange compact() on every fixture's cell stream (all
+    versions, range tombstones, deletions, multi-generation merges): the
+    legacy jb, la, ic and compressed tables, and the reference's golden
+    fixtures where they exist."""
+    import glob
+
     from aegisthus_spark.compact import compact_salted
     from aegisthus_spark.sstable import scan_file
-    from tests.test_golden import TESTDATA, data_files
+    from tests.conftest import HAS_REFERENCE, LEGACY
+    from tests.test_golden import data_files
 
     fields = ("source_path", "generation", "partition_key", "row_deleted_at",
               "kind", "cell_name", "cell_name_max", "value", "ts", "ttl",
               "local_deletion_time", "ts_of_last_delete")
-    for case in ("2.0.10/randomtable", "2.2.4/rangetombstone", "1.2.18/randomtable"):
-        rows = [tuple(c[k] for k in fields) for f in data_files(case) for c in scan_file(f)]
+    cases = {
+        name: sorted(glob.glob(f"{LEGACY}/{name}/**/*-Data.db", recursive=True))
+        for name in ("jb", "la", "ic", "compressed")
+    }
+    if HAS_REFERENCE:
+        for case in ("2.0.10/randomtable", "2.2.4/rangetombstone", "1.2.18/randomtable"):
+            cases[case] = data_files(case)
+    for case, files in cases.items():
+        rows = [tuple(c[k] for k in fields) for f in files for c in scan_file(f)]
+        assert rows, f"{case} decoded no cells"
         cells = spark.createDataFrame(rows, cells_schema)
         want = rows_of(compact(cells))
         for buckets in (1, 4):

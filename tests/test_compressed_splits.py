@@ -172,8 +172,8 @@ def test_c_lz4_matches_python_on_crafted_blocks():
 
 
 def test_c_snappy_matches_python_and_reference_sample():
-    """C Snappy decode == pure-Python on the reference's real Snappy ib
-    sample chunks, plus crafted copy-overlap blocks."""
+    """C Snappy decode == pure-Python on crafted copy-overlap blocks, and
+    on the reference's real Snappy ib sample chunks where they exist."""
     import glob
     import os
     import struct as st
@@ -186,15 +186,19 @@ def test_c_snappy_matches_python_and_reference_sample():
     if not cparse.available():
         _pytest.skip("no C compiler on this host")
 
-    data = "/root/reference/scripts/data/test-compressed-ib-1-Data.db"
-    info = CompressionInfo.read_path(data.replace("-Data.db", "-CompressionInfo.db"))
-    assert info.compressor == "SnappyCompressor"
-    with open(data, "rb") as f:
-        for i, (off, clen) in enumerate(info.chunk_ranges(os.path.getsize(data))):
-            f.seek(off)
-            raw = f.read(clen)
-            ulen = min(info.chunk_length, info.data_length - i * info.chunk_length)
-            assert cparse.snappy_decompress(raw, ulen) == snappy_decompress(raw)
+    from tests.conftest import REFERENCE
+
+    # the real-sample half runs wherever the reference's sample exists
+    data = f"{REFERENCE}/scripts/data/test-compressed-ib-1-Data.db"
+    if os.path.exists(data):
+        info = CompressionInfo.read_path(data.replace("-Data.db", "-CompressionInfo.db"))
+        assert info.compressor == "SnappyCompressor"
+        with open(data, "rb") as f:
+            for i, (off, clen) in enumerate(info.chunk_ranges(os.path.getsize(data))):
+                f.seek(off)
+                raw = f.read(clen)
+                ulen = min(info.chunk_length, info.data_length - i * info.chunk_length)
+                assert cparse.snappy_decompress(raw, ulen) == snappy_decompress(raw)
 
     def varint(n: int) -> bytes:
         out = b""

@@ -8,6 +8,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import needs_reference
 from tests.test_golden import data_files
 
 RANDOMTABLE_DDL = """
@@ -119,6 +120,7 @@ def test_compose_decimal_degenerate_payloads_are_null(spark):
     assert row.ok == Decimal("1.0")
 
 
+@needs_reference
 def test_cql_rows_randomtable(spark):
     from aegisthus_spark.cql import cql_rows
 
@@ -141,6 +143,7 @@ def test_cql_rows_randomtable(spark):
     assert sum(1 for r in got if r.name) > 0
 
 
+@needs_reference
 def test_cql_rows_rangetombstone(spark):
     from aegisthus_spark.cql import cql_rows
 

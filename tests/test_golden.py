@@ -9,7 +9,9 @@ import os
 
 import pytest
 
-TESTDATA = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
+from tests.conftest import TESTDATA, needs_reference
+
+pytestmark = needs_reference
 
 CASES = [
     ("2.0.10/randomtable", None),

@@ -8,9 +8,8 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-LEGACY = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures", "legacy"
-)
+from tests.conftest import LEGACY, REFERENCE, needs_reference
+
 MA = os.path.join(os.path.dirname(LEGACY), "ma")
 #: the CQL table of tests/fixtures/ma
 MA_DDL = (
@@ -277,6 +276,7 @@ def test_parse_aeg_json_line_tabbed_key_roundtrip():
     assert parsed2["key"] == "tab\there"
 
 
+@needs_reference
 def test_sstable2json_cli(capsys):
     """sstable2json parity (scripts/README.md:1-17): dump the reference's own
     sample tables — the compressed one is a Snappy ib table, so this also
@@ -285,12 +285,12 @@ def test_sstable2json_cli(capsys):
 
     from aegisthus_spark.sstable2json import main
 
-    main(["/root/reference/scripts/data/test-uncompressed-ib-1-Data.db",
+    main([f"{REFERENCE}/scripts/data/test-uncompressed-ib-1-Data.db",
           "--key-type", "UTF8Type", "--column-type", "UTF8Type",
           "--column-value-type", "UTF8Type"])
     plain = capsys.readouterr().out.rstrip("\n").split("\n")
-    main(["/root/reference/scripts/data/test-compressed-ib-1-Data.db",
-          "-comp", "/root/reference/scripts/data/test-compressed-ib-1-CompressionInfo.db",
+    main([f"{REFERENCE}/scripts/data/test-compressed-ib-1-Data.db",
+          "-comp", f"{REFERENCE}/scripts/data/test-compressed-ib-1-CompressionInfo.db",
           "--key-type", "UTF8Type", "--column-type", "UTF8Type",
           "--column-value-type", "UTF8Type"])
     comp = capsys.readouterr().out.rstrip("\n").split("\n")

@@ -161,7 +161,9 @@ GLOBAL_WINDOW_ALLOWLIST = {
 
 
 def test_queries_stay_jvm_side(spark, queries):
-    """Two invariants over EVERY registered query plan:
+    """Two invariants over EVERY registered query plan (the queries that
+    decode the reference's fixtures are planned where it exists; elsewhere
+    the test checks the rest and then reports itself skipped):
 
     - no Python UDF evaluation (multimodal stubs excepted by design —
       they are Pandas-UDF plumbing);
@@ -170,8 +172,13 @@ def test_queries_stay_jvm_side(spark, queries):
       round-10 verdict asked for this lint so a future fact-scale
       Window.orderBy can't slip in silently)."""
     from aegisthus_spark.plans import physical_plan, unpartitioned_windows
+    from tests.conftest import HAS_REFERENCE, REFERENCE_QUERIES
 
+    unbuilt = []
     for name, fn in queries.items():
+        if name in REFERENCE_QUERIES and not HAS_REFERENCE:
+            unbuilt.append(name)  # its input is the reference's fixtures
+            continue
         df = fn(spark, SF_DIR)
         plan = physical_plan(df, "simple")
         assert "BatchEvalPython" not in plan, f"{name} fell off the JVM path"
@@ -184,6 +191,8 @@ def test_queries_stay_jvm_side(spark, queries):
                 "two-stage rank (operators/ranking.py), or justify + "
                 "allowlist it"
             )
+    if unbuilt:
+        pytest.skip(f"needs the reference repository's fixtures: {', '.join(unbuilt)}")
 
 
 def test_global_window_sweep_catches_fact_scale_rank(spark):

@@ -4,53 +4,70 @@ import glob
 
 from aegisthus_spark.sources import discover_data_files, plan_partitions, read_sstable_cells
 from aegisthus_spark.sources.sstable_source import _plan_one
+from tests.conftest import HAS_REFERENCE, LEGACY, TESTDATA, needs_reference, with_reference
 
-TESTDATA = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
+# the legacy tree holds six Data.db files, one per write_table call of
+# tools/make_legacy_fixture.py:write_fixture; the reference's randomtable
+# input holds 3 replicas x (live gen 5 + snapshot gen 1)
+SIX_FILE_INPUTS = with_reference(LEGACY, f"{TESTDATA}/2.0.10/randomtable/input")
 
 
 def test_discovery_filters():
-    files = discover_data_files(f"{TESTDATA}/2.0.10/randomtable/input")
-    assert len(files) == 6  # 3 replicas x (live gen 5 + snapshot gen 1)
-    assert all(f.endswith("-Data.db") for f in files)
+    for inputs in SIX_FILE_INPUTS:
+        files = discover_data_files(inputs)
+        assert len(files) == 6
+        assert all(f.endswith("-Data.db") for f in files)
 
 
 def test_plan_small_files_binpack():
-    files = discover_data_files(f"{TESTDATA}/2.0.10/randomtable/input")
-    parts = plan_partitions(files, target_bytes=1 << 20, combine_target=1 << 20)
-    # all fixture files are tiny -> should bin-pack into one partition
-    assert len(parts) == 1
-    assert len(parts[0]) == 6
+    for inputs in SIX_FILE_INPUTS:
+        files = discover_data_files(inputs)
+        parts = plan_partitions(files, target_bytes=1 << 20, combine_target=1 << 20)
+        # all fixture files are tiny -> should bin-pack into one partition
+        assert len(parts) == 1
+        assert len(parts[0]) == 6
 
 
 def test_plan_forced_split():
     # forcing a 1 KB target must produce multiple index-aligned splits,
-    # mirroring the reference's blocksize=1024 test (:133-135)
-    f = sorted(glob.glob(f"{TESTDATA}/2.0.10/randomtable/input/**/*-jb-5-Data.db", recursive=True))[0]
-    splits = _plan_one(f, target_bytes=1024)
-    assert len(splits) > 1
-    # contiguous, full coverage
-    assert splits[0][1] == 0
-    for (_, s1, e1, *_), (_, s2, e2, *_) in zip(splits, splits[1:]):
-        assert e1 == s2
+    # mirroring the reference's blocksize=1024 test (:133-135); the legacy
+    # jb-3 file is 2,526 bytes with an Index.db: 2 splits
     import os
 
-    assert splits[-1][2] == os.path.getsize(f)
+    files = [f"{LEGACY}/jb/ks-t-jb-3-Data.db"]
+    if HAS_REFERENCE:
+        files += sorted(glob.glob(f"{TESTDATA}/2.0.10/randomtable/input/**/*-jb-5-Data.db",
+                                  recursive=True))[:1]
+    for f in files:
+        splits = _plan_one(f, target_bytes=1024)
+        assert len(splits) > 1
+        # contiguous, full coverage
+        assert splits[0][1] == 0
+        for (_, s1, e1, *_), (_, s2, e2, *_) in zip(splits, splits[1:]):
+            assert e1 == s2
+        assert splits[-1][2] == os.path.getsize(f)
 
 
 import pytest
 
+#: each reference case's in-repo stand-in of the same on-disk format: jb
+#: (whose rows carry range-tombstone cells), Deflate-chunked jb, and ic
+LEGACY_CASE = {
+    "2.0.10/rangetombstone": "jb",
+    "2.0.10_compressed/randomtable": "compressed",
+    "1.2.18/randomtable": "ic",
+}
 
-@pytest.mark.parametrize(
-    "case", ["2.0.10/rangetombstone", "2.0.10_compressed/randomtable", "1.2.18/randomtable"]
-)
+
+@pytest.mark.parametrize("case", list(LEGACY_CASE))
 def test_distributed_equals_driver_decode(spark, case):
     from aegisthus_spark.sstable import scan_file
 
-    inputs = f"{TESTDATA}/{case}/input"
-    df = read_sstable_cells(spark, inputs)
-    got = df.count()
-    want = sum(len(list(scan_file(f))) for f in discover_data_files(inputs))
-    assert got == want > 0
+    for inputs in with_reference(f"{LEGACY}/{LEGACY_CASE[case]}", f"{TESTDATA}/{case}/input"):
+        df = read_sstable_cells(spark, inputs)
+        got = df.count()
+        want = sum(len(list(scan_file(f))) for f in discover_data_files(inputs))
+        assert got == want > 0
 
 
 def test_distributed_split_decode_equals_whole(spark, jb_input_dir):
@@ -62,6 +79,7 @@ def test_distributed_split_decode_equals_whole(spark, jb_input_dir):
     assert whole == split > 0
 
 
+@needs_reference
 def test_job_end_to_end(spark, tmp_path):
     from aegisthus_spark.job import compact_snapshot, write_snapshot_json
 
@@ -134,26 +152,33 @@ def test_c_scanner_parity_and_corruption():
     import glob
 
     from aegisthus_spark.sstable.descriptor import version_of
-    from tests.test_golden import TESTDATA
 
-    checked = 0
-    for path in sorted(glob.glob(f"{TESTDATA}/*/*/input/**/*-Data.db", recursive=True)):
-        try:
-            v = version_of(path)
-        except ValueError:
-            continue
-        if os.path.getsize(path) == 0:
-            continue
-        with open(path, "rb") as fh, mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+    def checked_files(pattern):
+        checked = 0
+        for path in sorted(glob.glob(pattern, recursive=True)):
             try:
-                want = [tuple(d.values()) for b in py_scan(mm, version=v, source_path=path, generation=7) for d in b.to_pylist()]
-            except Exception:
+                v = version_of(path)
+            except ValueError:
                 continue
-            got = [tuple(d.values()) for b in cparse.scan_data_buffer_batches(
-                mm, version=v, source_path=path, generation=7, batch_rows=1031) for d in b.to_pylist()]
-        assert got == want, path
-        checked += 1
-    assert checked >= 30
+            if os.path.getsize(path) == 0:
+                continue
+            with open(path, "rb") as fh, mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+                try:
+                    want = [tuple(d.values()) for b in py_scan(mm, version=v, source_path=path, generation=7) for d in b.to_pylist()]
+                except Exception:
+                    continue
+                got = [tuple(d.values()) for b in cparse.scan_data_buffer_batches(
+                    mm, version=v, source_path=path, generation=7, batch_rows=1031) for d in b.to_pylist()]
+            assert got == want, path
+            checked += 1
+        return checked
+
+    # the four intact uncompressed legacy tables (ic-1, jb-2, jb-3, la-4):
+    # the Python parser raises on the compressed file's raw bytes and on
+    # the truncated file
+    assert checked_files(f"{LEGACY}/**/*-Data.db") == 4
+    if HAS_REFERENCE:
+        assert checked_files(f"{TESTDATA}/*/*/input/**/*-Data.db") >= 30
 
     # buffer growth: a row with more cells than the starting cap
     import struct as st
@@ -227,15 +252,6 @@ def test_stage_to_parquet_matches_direct_read(spark, tmp_path):
     """stage_dir decode-to-parquet path returns exactly the same cells as
     the direct mapInArrow path, across versions and compression."""
     from aegisthus_spark.sources import read_sstable_cells
-    from tests.test_golden import TESTDATA
-
-    inputs = [
-        f"{TESTDATA}/2.0.10/randomtable/input",
-        f"{TESTDATA}/2.0.10/compressedrandomtable/input",
-        f"{TESTDATA}/1.2.18/randomtable/input",
-    ]
-    direct = read_sstable_cells(spark, inputs)
-    staged = read_sstable_cells(spark, inputs, stage_dir=str(tmp_path / "stage"))
 
     def norm(df):
         return sorted(
@@ -247,10 +263,22 @@ def test_stage_to_parquet_matches_direct_read(spark, tmp_path):
             for r in df.collect()
         )
 
-    a, b = norm(direct), norm(staged)
-    assert len(a) > 0 and a == b
-    # schema identical to the canonical cells schema
-    assert staged.schema == direct.schema
+    cases = with_reference(
+        [f"{LEGACY}/jb", f"{LEGACY}/compressed", f"{LEGACY}/ic"],
+        [
+            f"{TESTDATA}/2.0.10/randomtable/input",
+            f"{TESTDATA}/2.0.10/compressedrandomtable/input",
+            f"{TESTDATA}/1.2.18/randomtable/input",
+        ],
+    )
+    for i, inputs in enumerate(cases):
+        direct = read_sstable_cells(spark, inputs)
+        staged = read_sstable_cells(spark, inputs, stage_dir=str(tmp_path / f"stage{i}"))
+
+        a, b = norm(direct), norm(staged)
+        assert len(a) > 0 and a == b
+        # schema identical to the canonical cells schema
+        assert staged.schema == direct.schema
 
 
 def test_stage_to_parquet_corrupt_sentinel(spark, tmp_path):
@@ -274,43 +302,44 @@ def test_discovery_priam_manifest_and_batches(tmp_path):
     import os
     import shutil
 
-    src = sorted(
-        glob.glob(f"{TESTDATA}/2.0.10/randomtable/input/**/*-Data.db", recursive=True)
-    )
-    assert len(src) >= 3
+    sources = with_reference(f"{LEGACY}/**/*-Data.db",
+                             f"{TESTDATA}/2.0.10/randomtable/input/**/*-Data.db")
+    for i, pattern in enumerate(sources):
+        src = sorted(glob.glob(pattern, recursive=True))
+        assert len(src) >= 3
 
-    root = tmp_path / "backup"
-    # plain keyspace dir with two generations
-    plain = root / "ks" / "cf"
-    plain.mkdir(parents=True)
-    shutil.copy(src[0], plain / os.path.basename(src[0]))
-    # batch retries: batch_id=1 (stale) and batch_id=2 (current)
-    for b, f in (("batch_id=1", src[1]), ("batch_id=2", src[2])):
-        d = root / "ks" / "cf2" / b
-        d.mkdir(parents=True)
-        shutil.copy(f, d / os.path.basename(f))
+        root = tmp_path / f"backup{i}"
+        # plain keyspace dir with two generations
+        plain = root / "ks" / "cf"
+        plain.mkdir(parents=True)
+        shutil.copy(src[0], plain / os.path.basename(src[0]))
+        # batch retries: batch_id=1 (stale) and batch_id=2 (current)
+        for b, f in (("batch_id=1", src[1]), ("batch_id=2", src[2])):
+            d = root / "ks" / "cf2" / b
+            d.mkdir(parents=True)
+            shutil.copy(f, d / os.path.basename(f))
 
-    found = discover_data_files(str(root))
-    names = [os.path.basename(f) for f in found]
-    assert os.path.basename(src[0]) in names
-    assert os.path.basename(src[2]) in names  # greatest batch kept
-    assert all("batch_id=1" not in f for f in found)  # stale batch skipped
-    assert len(found) == 2
+        found = discover_data_files(str(root))
+        names = [os.path.basename(f) for f in found]
+        assert os.path.basename(src[0]) in names
+        assert os.path.basename(src[2]) in names  # greatest batch kept
+        assert all("batch_id=1" not in f for f in found)  # stale batch skipped
+        assert len(found) == 2
 
-    # batched=False keeps every batch dir (reference default behavior)
-    assert len(discover_data_files(str(root), batched=False)) == 3
+        # batched=False keeps every batch dir (reference default behavior)
+        assert len(discover_data_files(str(root), batched=False)) == 3
 
-    # now drop a manifest into cf2 naming ONLY the stale batch's file: the
-    # manifest overrides the walk entirely
-    man = root / "ks" / "cf2" / "_manifest"
-    man.mkdir()
-    (man / "_manifest").write_text(str(root / "ks" / "cf2" / "batch_id=1" / os.path.basename(src[1])) + "\n")
-    found = discover_data_files(str(root))
-    assert os.path.basename(src[1]) in [os.path.basename(f) for f in found]
-    assert all("batch_id=2" not in f for f in found)
-    # manifest off -> back to batch dedup
-    found = discover_data_files(str(root), honor_manifest=False)
-    assert all("batch_id=1" not in f for f in found)
+        # now drop a manifest into cf2 naming ONLY the stale batch's file: the
+        # manifest overrides the walk entirely
+        man = root / "ks" / "cf2" / "_manifest"
+        man.mkdir()
+        (man / "_manifest").write_text(str(root / "ks" / "cf2" / "batch_id=1" / os.path.basename(src[1])) + "\n")
+        found = discover_data_files(str(root))
+        assert os.path.basename(src[1]) in [os.path.basename(f) for f in found]
+        assert all("batch_id=2" not in f for f in found)
+        # manifest off -> back to batch dedup
+        found = discover_data_files(str(root), honor_manifest=False)
+        assert all("batch_id=1" not in f for f in found)
 
 
 def test_discovery_numeric_batch_order_and_relative_manifest(tmp_path):
@@ -320,22 +349,23 @@ def test_discovery_numeric_batch_order_and_relative_manifest(tmp_path):
     import os
     import shutil
 
-    src = sorted(
-        glob.glob(f"{TESTDATA}/2.0.10/randomtable/input/**/*-Data.db", recursive=True)
-    )
-    root = tmp_path / "backup"
-    for b, f in (("batch_id=9", src[0]), ("batch_id=10", src[1])):
-        d = root / "ks" / "cf" / b
-        d.mkdir(parents=True)
-        shutil.copy(f, d / os.path.basename(f))
-    found = discover_data_files(str(root))
-    assert len(found) == 1
-    assert "batch_id=10" in found[0], found  # numeric, not lexicographic
+    sources = with_reference(f"{LEGACY}/**/*-Data.db",
+                             f"{TESTDATA}/2.0.10/randomtable/input/**/*-Data.db")
+    for i, pattern in enumerate(sources):
+        src = sorted(glob.glob(pattern, recursive=True))
+        root = tmp_path / f"backup{i}"
+        for b, f in (("batch_id=9", src[0]), ("batch_id=10", src[1])):
+            d = root / "ks" / "cf" / b
+            d.mkdir(parents=True)
+            shutil.copy(f, d / os.path.basename(f))
+        found = discover_data_files(str(root))
+        assert len(found) == 1
+        assert "batch_id=10" in found[0], found  # numeric, not lexicographic
 
-    # relative manifest lines resolve against the manifest's directory
-    man = root / "ks" / "cf" / "_manifest"
-    man.mkdir()
-    rel = os.path.join("batch_id=9", os.path.basename(src[0]))
-    (man / "_manifest").write_text(rel + "\n")
-    found = discover_data_files(str(root))
-    assert len(found) == 1 and "batch_id=9" in found[0], found
+        # relative manifest lines resolve against the manifest's directory
+        man = root / "ks" / "cf" / "_manifest"
+        man.mkdir()
+        rel = os.path.join("batch_id=9", os.path.basename(src[0]))
+        (man / "_manifest").write_text(rel + "\n")
+        found = discover_data_files(str(root))
+        assert len(found) == 1 and "batch_id=9" in found[0], found

@@ -8,11 +8,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import LEGACY, TESTDATA, with_reference
+
 SF_DIR = "/root/testdata/sf0.001"
-TESTDATA = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
 
-def _cells_df(spark, case):
+def _cells_df(spark, input_dir):
     from aegisthus_spark.sstable import scan_file
     from tests.conftest import CELLS_SCHEMA
 
@@ -21,7 +22,7 @@ def _cells_df(spark, case):
               "local_deletion_time", "ts_of_last_delete")
     files = sorted(
         f
-        for f in glob.glob(f"{TESTDATA}/{case}/input/**/*-Data.db", recursive=True)
+        for f in glob.glob(f"{input_dir}/**/*-Data.db", recursive=True)
         if ".idx" not in os.path.basename(f)
     )
     rows = [tuple(c[k] for k in fields) for f in files for c in scan_file(f)]
@@ -38,38 +39,42 @@ def test_incremental_snapshot_converges(spark, tmp_path):
         read_snapshot,
     )
 
-    cells, files = _cells_df(spark, "2.0.10/randomtable")
-    cells = cells.cache()
-    half = files[len(files) // 2]
+    # legacy jb: two overlapping generations, one per arrival batch
+    inputs = with_reference(f"{LEGACY}/jb", f"{TESTDATA}/2.0.10/randomtable/input")
+    for n, input_dir in enumerate(inputs):
+        tmp = tmp_path / f"pass{n}"
+        cells, files = _cells_df(spark, input_dir)
+        cells = cells.cache()
+        half = files[len(files) // 2]
 
-    cells_dir = str(tmp_path / "cells")
-    os.makedirs(cells_dir)
-    # two arrival batches: first half of the generations, then the rest
-    cells.filter(F.col("source_path") < half).coalesce(1).write.parquet(
-        f"{cells_dir}/batch0.parquet"
-    )
-    cells.filter(F.col("source_path") >= half).coalesce(1).write.parquet(
-        f"{cells_dir}/batch1.parquet"
-    )
+        cells_dir = str(tmp / "cells")
+        os.makedirs(cells_dir)
+        # two arrival batches: first half of the generations, then the rest
+        cells.filter(F.col("source_path") < half).coalesce(1).write.parquet(
+            f"{cells_dir}/batch0.parquet"
+        )
+        cells.filter(F.col("source_path") >= half).coalesce(1).write.parquet(
+            f"{cells_dir}/batch1.parquet"
+        )
 
-    snap_root = str(tmp_path / "snapshot")
-    q = start_incremental_snapshot(
-        spark,
-        cells_dir,
-        snap_root,
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    assert latest_snapshot_version(snap_root) >= 1  # merged in >= 2 batches
+        snap_root = str(tmp / "snapshot")
+        q = start_incremental_snapshot(
+            spark,
+            cells_dir,
+            snap_root,
+            str(tmp / "ckpt"),
+            max_files_per_trigger=1,
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        assert latest_snapshot_version(snap_root) >= 1  # merged in >= 2 batches
 
-    from aegisthus_spark.streaming.incremental import strip_range_tombstones
+        from aegisthus_spark.streaming.incremental import strip_range_tombstones
 
-    final = read_snapshot(spark, snap_root)
-    got = sorted(r.value for r in to_aeg_json(strip_range_tombstones(final)).collect())
-    want = sorted(r.value for r in to_aeg_json(compact(cells)).collect())
-    assert got == want
+        final = read_snapshot(spark, snap_root)
+        got = sorted(r.value for r in to_aeg_json(strip_range_tombstones(final)).collect())
+        want = sorted(r.value for r in to_aeg_json(compact(cells)).collect())
+        assert got == want
 
 
 def test_stream_daily_rollup_matches_batch(spark, tmp_path):
