@@ -2,8 +2,8 @@
 
 Reproduces the reference's CQL-row export (org/coursera/mapreducer/
 CQLMapper.java + com/netflix/aegisthus/util/CFMetadataUtility.java): a
-``CREATE TABLE`` statement supplies the schema; each partition's cells are
-regrouped by clustering prefix into one row per (partition key, clustering
+``CREATE TABLE`` statement supplies the schema; each compacted row's cells
+are cut by clustering prefix into one row per (partition key, clustering
 values), with typed value composition (CQLMapper.java:159-189: uuid ->
 string, timestamp -> epoch, blob -> bytes).
 
@@ -14,11 +14,11 @@ Differences from the reference (all improvements):
 - list collections are supported (cells named ``(col, timeuuid)`` are
   gathered time-ordered into an array) — the reference throws
   (CQLMapper.java:149-153);
-- the composite-name split and all common type compositions are JVM-side
-  Spark expressions; only exotic types fall back to the Python registry.
+- the composite-name split and every type composition are JVM-side Spark
+  expressions; a type outside ``CQL_TYPES`` raises.
 
-Static columns (the 0xFFFF static prefix) are recognized and broadcast to
-every row of the partition via a window, mirroring CQLMapper.java:102-111.
+Static columns (the 0xFFFF static prefix) are read once per compacted row
+and set on each of its CQL rows, mirroring CQLMapper.java:102-111.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -386,40 +386,97 @@ def _timeuuid_sort_key(h: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
-    """Compacted rows -> wide typed CQL rows (one per clustering group).
+def _raw(cells: Column, col: CqlColumn) -> Column:
+    """``col``'s stored value in one CQL row's ``cells``: the newest cell of
+    a scalar or frozen column (frozen collections and tuples live in ONE
+    cell blob); a list's values ordered by their timeuuid's time; a set's
+    elements (held in the collection key); a map's sorted (k, v) entries."""
+    mine = F.filter(cells, lambda x: x.colname == col.name)
+    if col.frozen or col.collection is None:
+        newest = F.array_max(F.transform(mine, lambda x: F.struct(
+            x.ts.alias("ts"), x.value.alias("value")
+        )))
+        return newest.getField("value")
+    mine = F.filter(mine, lambda x: x.collkey.isNotNull())
+    if col.collection == "set":
+        return F.array_sort(F.transform(mine, lambda x: x.collkey))
+    if col.collection == "map":
+        return F.array_sort(F.transform(mine, lambda x: F.struct(
+            x.collkey.alias("k"), x.value.alias("v")
+        )))
+    by_time = F.array_sort(F.transform(mine, lambda x: F.struct(
+        _timeuuid_sort_key(F.hex(x.collkey)).alias("k"), x.value.alias("v")
+    )))
+    return F.transform(by_time, lambda e: e.getField("v"))
 
-    Expects ``compact()`` output (ideally after ``cleanse()``); composite
-    cell names are split JVM-side, values composed per the schema, list
-    collections gathered time-ordered, statics broadcast over the partition.
+
+def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
+    """Compacted rows -> wide typed CQL rows (one per clustering prefix).
+
+    Expects ``compact()`` output (ideally after ``cleanse()``) with each
+    row's ``columns`` in comparator order, as compact leaves them: the cells
+    of one CQL row share a clustering prefix, so they sit next to each
+    other. Each compacted row is cut where that prefix changes, the way the
+    reference's CQLMapper builds rows while it streams one row's cells, with
+    no second grouping. The partition's statics are read once and set on
+    each of its rows; a partition holding only statics gives one row with
+    null clustering columns.
     """
     schema = parse_create_table(ddl) if isinstance(ddl, str) else ddl
     n_ck = len(schema.clustering)
-    # components: clustering... , column name, optional collection key
-    max_comps = n_ck + 2
 
-    cells = compacted.select(
+    # live cells only (post-cleanse): columns, expiring columns, and
+    # counters — dropping 'x' would silently NULL every counter column.
+    # Each name is split once into comps: clustering..., column name,
+    # optional collection key
+    split = (
+        "transform(filter(columns, x -> x.kind IN ('c', 'e', 'x')), "
+        f"x -> struct({_split_expr('x.name', n_ck + 2)} AS comps, "
+        f"{_static_cond('x.name')} AS st, x.value AS value, x.ts AS ts))"
+    )
+    cells = F.transform(F.expr(split), lambda x: F.struct(
+        x.comps.alias("comps"),
+        x.st.alias("st"),
+        F.try_element_at(x.comps, F.lit(n_ck + 1)).cast("string").alias("colname"),
+        F.try_element_at(x.comps, F.lit(n_ck + 2)).alias("collkey"),
+        x.value.alias("value"),
+        x.ts.alias("ts"),
+    ))
+    rows = compacted.select("partition_key", cells.alias("cells")).select(
         "partition_key",
-        "deleted_at",
-        F.explode("columns").alias("c"),
-    ).filter(
-        # live cells only (post-cleanse): columns, expiring columns, and
-        # counters — dropping 'x' would silently NULL every counter column
-        # while CQL_TYPES advertises counter support
-        F.col("c.kind").isin("c", "e", "x")
+        F.filter("cells", lambda x: ~x.st).alias("ns"),
+        F.filter("cells", lambda x: x.st).alias("statics"),
     )
 
-    comps = F.expr(_split_expr("c.name", max_comps))
-    cells = cells.select(
+    # 1-based starts of the non-static cells' clustering-prefix runs; a
+    # partition with statics only gets one empty run. Each step binds its
+    # arrays as columns: inlined into the slicing lambda below, they would
+    # be recomputed once per run
+    def prefix(i):  # 0-based; null past either end
+        return F.slice(F.get("ns", i).getField("comps"), 1, n_ck)
+
+    n = F.size("ns")
+    rows = rows.select(
         "partition_key",
-        comps.alias("comps"),
-        F.expr(_static_cond("c.name")).alias("is_static"),
-        F.col("c.value").alias("value"),
-        F.col("c.ts").alias("ts"),
-    ).withColumn(
-        "colname", F.try_element_at("comps", F.lit(n_ck + 1)).cast("string")
-    ).withColumn(
-        "collkey", F.try_element_at("comps", F.lit(n_ck + 2))
+        "ns",
+        F.when(n > 0, F.filter(
+            F.sequence(F.lit(1), n), lambda i: (i == 1) | (prefix(i - 1) != prefix(i - 2))
+        )).when(F.size("statics") > 0, F.array(F.lit(1)))
+        .otherwise(F.array().cast("array<int>")).alias("starts"),
+        *[_raw(F.col("statics"), c).alias(f"__raw_{c.name}") for c in schema.statics],
+    )
+    runs = F.transform("starts", lambda s, j: F.slice(
+        "ns", s, F.coalesce(F.try_element_at("starts", j + 2), n + 1) - s
+    ))
+    rows = rows.select(
+        "partition_key",
+        *[f"__raw_{c.name}" for c in schema.statics],
+        F.explode(runs).alias("cells"),
+    ).select(
+        "partition_key",
+        F.try_element_at("cells", F.lit(1)).getField("comps").alias("comps"),
+        *[f"__raw_{c.name}" for c in schema.statics],
+        *[_raw(F.col("cells"), c).alias(f"__raw_{c.name}") for c in schema.regulars],
     )
 
     # partition key components
@@ -433,150 +490,35 @@ def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
             for i, c in enumerate(pks)
         ]
 
-    ck_cols = [
-        F.when(~F.col("is_static"), F.try_element_at("comps", F.lit(i + 1))).alias(f"__ck{i}")
-        for i in range(n_ck)
-    ]
-
-    grouped = (
-        cells.select("partition_key", "is_static", "colname", "collkey", "value", "ts", "comps")
-        .withColumns({f"__ck{i}": c for i, c in enumerate(ck_cols)})
-        .groupBy("partition_key", "is_static", *[f"__ck{i}" for i in range(n_ck)])
-    )
-
-    aggs = []
-    for col in schema.regulars + schema.statics:
-        cond = F.col("colname") == col.name
-        if col.frozen:
-            # frozen collections/tuples live in ONE cell blob -> scalar LWW
-            aggs.append(
-                F.max_by(F.when(cond, F.col("value")), F.when(cond, F.col("ts"))).alias(
-                    f"__raw_{col.name}"
-                )
-            )
-        elif col.collection == "list":
-            aggs.append(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                cond & F.col("collkey").isNotNull(),
-                                F.struct(
-                                    _timeuuid_sort_key(F.hex(F.col("collkey"))).alias("k"),
-                                    F.col("value").alias("v"),
-                                ),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("v"),
-                ).alias(f"__raw_{col.name}")
-            )
-        elif col.collection in ("set", "map"):
-            # set: element bytes live in the collection key; map: key+value
-            aggs.append(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            cond & F.col("collkey").isNotNull(),
-                            F.struct(F.col("collkey").alias("k"), F.col("value").alias("v")),
-                        )
-                    )
-                ).alias(f"__raw_{col.name}")
-            )
-        else:
-            aggs.append(
-                F.max_by(F.when(cond, F.col("value")), F.when(cond, F.col("ts"))).alias(
-                    f"__raw_{col.name}"
-                )
-            )
-    rows = grouped.agg(*aggs)
-
-    # statics: broadcast each partition's static row onto its regular rows
-    if schema.statics:
-        w = Window.partitionBy("partition_key")
-        for col in schema.statics:
-            rows = rows.withColumn(
-                f"__raw_{col.name}",
-                F.first(
-                    F.when(F.col("is_static"), F.col(f"__raw_{col.name}")), ignorenulls=True
-                ).over(w),
-            )
-        rows = rows.withColumn(
-            "__n_regular", F.count(F.when(~F.col("is_static"), F.lit(1))).over(w)
-        ).filter(~F.col("is_static") | (F.col("__n_regular") == 0))
-
     out_cols = list(pk_cols)
     for i, c in enumerate(schema.clustering):
-        out_cols.append(compose_value(F.col(f"__ck{i}"), c.cql_type).alias(c.name))
+        out_cols.append(
+            compose_value(F.try_element_at("comps", F.lit(i + 1)), c.cql_type).alias(c.name)
+        )
     for col in schema.regulars + schema.statics:
         raw = F.col(f"__raw_{col.name}")
-        if col.frozen:
-            raw_sql = f"`__raw_{col.name}`"
-            if col.collection == "tuple":
-                comps = F.expr(_tuple_comps_expr(raw_sql, len(col.tuple_types)))
-                out_cols.append(
-                    F.when(
-                        raw.isNotNull(),
-                        F.struct(*[
-                            compose_value(
-                                F.try_element_at(comps, F.lit(i + 1)), t
-                            ).alias(f"f{i}")
-                            for i, t in enumerate(col.tuple_types)
-                        ]),
-                    ).alias(col.name)
-                )
-            elif col.collection in ("list", "set"):
-                elem = col.element_type or "blob"
-                elems = F.expr(_frozen_elems_expr(raw_sql))
-                out_cols.append(
-                    F.transform(elems, lambda v: compose_value(v, elem)).alias(col.name)
-                )
-            elif col.collection == "map":
-                kt = col.element_type or "blob"
-                vt = col.value_type or "blob"
-                entries = F.expr(_frozen_entries_expr(raw_sql))
-                out_cols.append(
-                    F.map_from_entries(
-                        F.transform(
-                            entries,
-                            lambda s: F.struct(
-                                compose_value(s.getField("k"), kt).alias("k"),
-                                compose_value(s.getField("v"), vt).alias("v"),
-                            ),
-                        )
-                    ).alias(col.name)
-                )
-            else:
-                # frozen<scalar>: identical wire format to the scalar
-                out_cols.append(compose_value(raw, col.cql_type).alias(col.name))
-            continue
+        raw_sql = f"`__raw_{col.name}`"
         nonempty = F.when(F.size(raw) > 0, raw)  # absent collection -> NULL
-        if col.collection == "list":
-            elem = col.element_type or "blob"
-            out_cols.append(
-                F.transform(nonempty, lambda v: compose_value(v, elem)).alias(col.name)
-            )
-        elif col.collection == "set":
-            elem = col.element_type or "blob"
-            out_cols.append(
-                F.transform(nonempty, lambda s: compose_value(s.getField("k"), elem)).alias(col.name)
-            )
+        if col.collection == "tuple":
+            comps = F.expr(_tuple_comps_expr(raw_sql, len(col.tuple_types)))
+            value = F.when(raw.isNotNull(), F.struct(*[
+                compose_value(F.try_element_at(comps, F.lit(i + 1)), t).alias(f"f{i}")
+                for i, t in enumerate(col.tuple_types)
+            ]))
+        elif col.collection in ("list", "set"):
+            elems = F.expr(_frozen_elems_expr(raw_sql)) if col.frozen else nonempty
+            value = F.transform(elems, lambda v: compose_value(v, col.element_type or "blob"))
         elif col.collection == "map":
-            kt = col.element_type or "blob"
-            vt = col.value_type or "blob"
-            out_cols.append(
-                F.map_from_entries(
-                    F.transform(
-                        nonempty,
-                        lambda s: F.struct(
-                            compose_value(s.getField("k"), kt).alias("k"),
-                            compose_value(s.getField("v"), vt).alias("v"),
-                        ),
-                    )
-                ).alias(col.name)
-            )
+            kt, vt = col.element_type or "blob", col.value_type or "blob"
+            entries = F.expr(_frozen_entries_expr(raw_sql)) if col.frozen else nonempty
+            value = F.map_from_entries(F.transform(entries, lambda s: F.struct(
+                compose_value(s.getField("k"), kt).alias("k"),
+                compose_value(s.getField("v"), vt).alias("v"),
+            )))
         else:
-            out_cols.append(compose_value(raw, col.cql_type).alias(col.name))
+            # scalars, and frozen<scalar>: identical wire format to the scalar
+            value = compose_value(raw, col.cql_type)
+        out_cols.append(value.alias(col.name))
 
     # in-partition order only: a global orderBy would add a range Exchange
     # + full sort of the entire export for cosmetic total order the sinks

@@ -204,6 +204,7 @@ def export_cql(
     output: str,
     *,
     skip_corrupt: bool = False,
+    corrupt_check: list | None = None,
 ) -> tuple[str, int]:
     """SSTableExport analog (org/coursera/SSTableExport.java:142-190): CQL
     rows from SSTables to Avro — run on *merged* cells, so multi-generation
@@ -215,8 +216,13 @@ def export_cql(
     committed atomically. A schema Avro cannot express (such as a map
     whose keys are not strings) is written as parquet instead. A failure
     while writing raises and leaves no file of this write behind. Returns
-    the format used, 'avro-ocf' or 'parquet', and the rows written."""
-    wide = cql_rows(cleanse(compact_snapshot(spark, inputs, skip_corrupt=skip_corrupt)), ddl)
+    the format used, 'avro-ocf' or 'parquet', and the rows written.
+    ``corrupt_check`` collects the corrupt-input count as in
+    :func:`compact_snapshot`; it is read after the write."""
+    rows = compact_snapshot(
+        spark, inputs, skip_corrupt=skip_corrupt, corrupt_check=corrupt_check
+    )
+    wide = cql_rows(cleanse(rows), ddl)
     try:
         avro_schema(wide.schema)
     except ValueError:
@@ -283,7 +289,9 @@ def main(argv: list[str] | None = None):
             args.cql_schema,
             args.output,
             skip_corrupt=args.max_corrupt_files_to_skip > 0,
+            corrupt_check=corrupt_check,
         )
+        check_corrupt_threshold()
         print(f"cql_rows_written={n} format={fmt}")
         return
     rows = compact_snapshot(

@@ -17,6 +17,7 @@ doubles identically in both engines.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Callable
 
@@ -24,6 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .compact import LONG_MIN, cleanse, compact, compacted_to_cells
+
+#: the repository's tests/ directory, home of the in-repo SSTable fixtures
+#: and goldens that the decode queries read
+_TESTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
 
 
 @dataclass(frozen=True)
@@ -180,7 +185,6 @@ def _scratch_dir(name: str) -> str:
     happen on return.
     """
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -239,8 +243,6 @@ def _stream_parts(
     be stat'd locally (e.g. object storage) falls back to the session
     default — at that scale the cluster-sized count is the right one.
     """
-    import os
-
     try:
         if os.path.isdir(input_path):
             size = sum(
@@ -2665,8 +2667,8 @@ def mm_frame_plan(spark, sf_dir):
     return _mm.frame_sample_plan(media, every_ms=1000).orderBy("media_id", "frame_ts_ms")
 
 
-_PNG_FIXTURE = "/root/repo/tests/fixtures/png/media.parquet"
-_PNG_GOLDEN = "/root/repo/tests/golden/png_features.parquet"
+_PNG_FIXTURE = f"{_TESTS}/fixtures/png/media.parquet"
+_PNG_GOLDEN = f"{_TESTS}/golden/png_features.parquet"
 
 
 @register(
@@ -3068,7 +3070,7 @@ def q_cube_orders(spark, sf_dir):
 # (AegisthusIntegrationTest.groovy:181-195 is the reference's own bar).
 
 _SST_TESTDATA = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
-_DECODE_GOLDEN = "/root/repo/tests/golden/decode_golden.parquet"
+_DECODE_GOLDEN = f"{_TESTS}/golden/decode_golden.parquet"
 
 
 def _sst_decode_lines(
@@ -3134,8 +3136,8 @@ def sst_decode_combined(spark, sf_dir):
     return _sst_decode_lines(spark, "2.0.10_1.2.18_combined/randomtable", skip_corrupt=True)
 
 
-_BTI_FIXTURE = "/root/repo/tests/fixtures/bti/table"
-_BTI_GOLDEN = "/root/repo/tests/golden/bti_split.parquet"
+_BTI_FIXTURE = f"{_TESTS}/fixtures/bti/table"
+_BTI_GOLDEN = f"{_TESTS}/golden/bti_split.parquet"
 
 
 @register(
@@ -3174,8 +3176,8 @@ def sst_decode_staged(spark, sf_dir):
     return _sst_decode_lines(spark, "2.0.10/randomtable", stage=True)
 
 
-_MA_FIXTURES = "/root/repo/tests/fixtures/ma"
-_MA_GOLDEN = "/root/repo/tests/golden/decode_golden_ma.parquet"
+_MA_FIXTURES = f"{_TESTS}/fixtures/ma"
+_MA_GOLDEN = f"{_TESTS}/golden/decode_golden_ma.parquet"
 
 
 @register(
@@ -3208,8 +3210,8 @@ def sst_decode_ma(spark, sf_dir):
     )
 
 
-_MA_EXT_FIXTURES = "/root/repo/tests/fixtures/ma_external"
-_MA_EXT_GOLDEN = "/root/repo/tests/golden/decode_golden_ma_external.parquet"
+_MA_EXT_FIXTURES = f"{_TESTS}/fixtures/ma_external"
+_MA_EXT_GOLDEN = f"{_TESTS}/golden/decode_golden_ma_external.parquet"
 
 
 @register(
@@ -3244,8 +3246,8 @@ def sst_decode_ma_external(spark, sf_dir):
     )
 
 
-_OA_EXT_FIXTURES = "/root/repo/tests/fixtures/oa_external"
-_OA_EXT_GOLDEN = "/root/repo/tests/golden/decode_golden_oa_external.parquet"
+_OA_EXT_FIXTURES = f"{_TESTS}/fixtures/oa_external"
+_OA_EXT_GOLDEN = f"{_TESTS}/golden/decode_golden_oa_external.parquet"
 
 
 @register(
@@ -3281,8 +3283,8 @@ def sst_decode_oa_external(spark, sf_dir):
     )
 
 
-_VARINT_FIXTURES = "/root/repo/tests/fixtures/ma_varint"
-_VARINT_GOLDEN = "/root/repo/tests/golden/decode_golden_varint.parquet"
+_VARINT_FIXTURES = f"{_TESTS}/fixtures/ma_varint"
+_VARINT_GOLDEN = f"{_TESTS}/golden/decode_golden_varint.parquet"
 
 
 @register(
@@ -3318,8 +3320,8 @@ def sst_decode_varint(spark, sf_dir):
     )
 
 
-_RTSTORM_FIXTURES = "/root/repo/tests/fixtures/ma_rtstorm"
-_RTSTORM_GOLDEN = "/root/repo/tests/golden/decode_golden_rtstorm.parquet"
+_RTSTORM_FIXTURES = f"{_TESTS}/fixtures/ma_rtstorm"
+_RTSTORM_GOLDEN = f"{_TESTS}/golden/decode_golden_rtstorm.parquet"
 
 
 @register(
@@ -3355,7 +3357,7 @@ def sst_decode_rt_storm(spark, sf_dir):
     )
 
 
-_MA_CQL_GOLDEN = "/root/repo/tests/golden/cql_golden_ma.parquet"
+_MA_CQL_GOLDEN = f"{_TESTS}/golden/cql_golden_ma.parquet"
 
 
 @register(

@@ -58,6 +58,7 @@ def write_partitions(df: DataFrame, output_dir: str, encode, *, keep_empty: bool
         shutil.rmtree(temporary, ignore_errors=True)
         os.makedirs(temporary)
         files = df.rdd.mapPartitions(task).collect()
+        _complete_observations(df)
         if not files and keep_empty:
             files = [(temporary, n, r) for n, r in encode(0, iter(()), temporary)]
         for name in os.listdir(output_dir):
@@ -76,3 +77,15 @@ def write_partitions(df: DataFrame, output_dir: str, encode, *, keep_empty: bool
                 os.remove(path)
         raise
     return written
+
+
+def _complete_observations(df: DataFrame) -> None:
+    """Hand the ``DataFrame.observe`` metrics of the plan that just ran to
+    their observations. A job run through ``rdd`` posts no SQL execution
+    end, which is what completes them otherwise: ``Observation.get`` on a
+    sink's input (the corrupt-input count) would wait forever. The call is
+    the one Spark's own listener makes (private in Scala, hence the
+    mangled name)."""
+    manager = df.sparkSession._jsparkSession.observationManager()
+    complete = getattr(manager, "org$apache$spark$sql$classic$ObservationManager$$tryComplete")
+    complete(df._jdf.queryExecution())

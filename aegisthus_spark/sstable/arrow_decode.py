@@ -126,10 +126,14 @@ def cells_batch(n: int, source_path: str, generation: int, row_deleted,
         [None, pa.py_buffer(np.arange(n + 1, dtype=np.int32).tobytes()),
          pa.py_buffer(kind)],
     )
+    # from_buffers, not pa.array: pa.array imports pandas (~75 MB of RSS
+    # in every decode worker)
+    gen = np.full(n, generation, np.int32)
+    deleted = np.repeat(np.asarray(row_deleted, np.int64), row_cells)
     key, name, name_max, value, ts, ttl, ldt, tsd = cols
     return pa.RecordBatch.from_arrays(
-        [src, pa.array(np.full(n, generation, np.int32)), key,
-         pa.array(np.repeat(row_deleted, row_cells)), kinds,
+        [src, pa.Array.from_buffers(pa.int32(), n, [None, pa.py_buffer(gen)]), key,
+         pa.Array.from_buffers(pa.int64(), n, [None, pa.py_buffer(deleted)]), kinds,
          name, name_max, value, ts, ttl, ldt, tsd],
         schema=CELLS,
     )

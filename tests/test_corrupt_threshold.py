@@ -76,3 +76,38 @@ def test_compact_ignores_sentinels(spark, corrupt_dirs):
         cells = read_sstable_cells(spark, [corrupt_dir], skip_corrupt=True)
         rows = compact(cells)
         assert rows.filter(F.col("partition_key").isNull()).count() == 0
+
+
+
+@pytest.mark.parametrize("sink", [
+    ["--cql-schema", "CREATE TABLE t (key blob PRIMARY KEY, v blob)"],
+    ["--produce-sstable"],
+], ids=["cql", "sstable"])
+def test_file_sinks_enforce_threshold(spark, tmp_path, monkeypatch, capsys, sink):
+    """The CQL and SSTable exports count corrupt inputs against
+    ``--max-corrupt-files-to-skip`` like the aeg-JSON path. Both write
+    through the file sink, whose job runs outside a SQL execution: the
+    count must still arrive instead of leaving the job waiting for it."""
+    import aegisthus_spark.session as sess
+    from aegisthus_spark import job as jobmod
+
+    monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
+    src = str(tmp_path / "input")
+    shutil.copytree(f"{LEGACY}/jb", src)
+    for fn in os.listdir(src):
+        if fn.endswith("-Data.db"):
+            path = os.path.join(src, fn)
+            with open(path, "rb") as f:
+                head = f.read(os.path.getsize(path) // 2)  # mid-row in both
+            with open(path, "wb") as f:
+                f.write(head)
+    args = ["--input-dir", src, *sink]
+    with pytest.raises(RuntimeError, match="2 corrupt input files exceed"):
+        jobmod.main(args + ["--output", str(tmp_path / "one"),
+                            "--max-corrupt-files-to-skip", "1"])
+    capsys.readouterr()
+    jobmod.main(args + ["--output", str(tmp_path / "two"),
+                        "--max-corrupt-files-to-skip", "2"])
+    out = capsys.readouterr().out.splitlines()
+    assert "corrupt_files_skipped=2" in out, out
+    assert any("rows_written=" in line for line in out), out

@@ -78,3 +78,27 @@ def test_package_writes_files_only_through_the_sink():
             if isinstance(node, ast.Attribute) and node.attr == "mapPartitionsWithIndex"
         ]
     assert not calls, calls
+
+
+def test_package_names_no_checkout_path():
+    """The package finds its fixtures relative to itself: a string literal
+    naming an absolute path into a checkout (this one's, or any path that
+    runs into one of the repository's source trees) breaks every copy of
+    the repository at another path."""
+    import re
+
+    into_tree = re.compile(r"^/(?:[^/\s]+/)*(?:%s)(?:/|$)" % "|".join(TREES))
+    hits = []
+    for path in _sources():
+        if not os.path.relpath(path, ROOT).startswith(PACKAGE + os.sep):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        hits += [
+            f"{os.path.relpath(path, ROOT)}:{node.lineno} {node.value!r}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and (node.value == ROOT or node.value.startswith(ROOT + os.sep)
+                 or into_tree.match(node.value))
+        ]
+    assert not hits, hits

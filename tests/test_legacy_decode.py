@@ -151,3 +151,27 @@ def test_compressed_split_decompresses_only_its_chunks(monkeypatch):
         end = info.data_length if end is None else end
         assert asked == [(start // cl, -(-end // cl))], (start, end)
     assert got == [r for r in _golden() if r[0] == os.path.relpath(path, FIXTURE)]
+
+
+def test_c_scan_split_leaves_pandas_unimported():
+    """Decode workers build their batches without pandas: ``pa.array``
+    imports it (~75 MB of RSS per worker), ``pa.Array.from_buffers`` does
+    not. Run in a fresh interpreter, since this one has pandas loaded."""
+    import subprocess
+    import sys
+
+    if not cparse.available():
+        pytest.skip("no C compiler on this host")
+    code = (
+        "import sys\n"
+        "from aegisthus_spark.sstable import cparse, decoder\n"
+        "assert cparse.available()\n"
+        f"paths = {sorted(glob.glob(f'{FIXTURE}/jb/*-Data.db'))!r}\n"
+        "assert len(paths) == 2, paths\n"
+        "n = sum(b.num_rows for p in paths for b in decoder.scan_split(p, version='jb'))\n"
+        "assert n > 0\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], cwd=ROOT, capture_output=True,
+                         text=True, check=True)
+    assert out.stdout.strip() == "False", out

@@ -327,6 +327,7 @@ def test_png_stdlib_decode():
     """Round-11 PNG path: hand-checkable values through every filter type,
     and the non-stdlib shapes reject cleanly (falling to the library
     probe) instead of mis-decoding."""
+    import os
     import struct as s
     import sys
     import zlib
@@ -334,7 +335,7 @@ def test_png_stdlib_decode():
     import numpy as np
     import pytest as _pt
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from aegisthus_spark.operators.multimodal import _decode_png_gray_grid
     from tools.make_png_fixture import encode_png, expected_features
 

@@ -563,3 +563,40 @@ def test_triangles_equi_joins_only(spark, queries):
     assert strategies, "expected joins"
     assert "BroadcastNestedLoopJoin" not in strategies
     assert "CartesianProduct" not in strategies
+
+
+@pytest.mark.parametrize("ddl", [
+    # statics plus a list collection
+    "CREATE TABLE t (key text, ck0 text, owner text static, name text, "
+    "score bigint, tags list<text>, PRIMARY KEY (key, ck0))",
+    # scalar columns only
+    "CREATE TABLE t (key text, ck0 text, name text, score bigint, "
+    "PRIMARY KEY (key, ck0))",
+], ids=["statics_list", "scalars"])
+def test_cql_export_builds_rows_inside_compacted_rows(spark, monkeypatch, ddl):
+    """CQL rows come out of each compacted row, the way the reference's
+    CQLMapper builds them while streaming one row's cells: compact's one
+    Exchange, Sort and SortAggregate, then no second aggregate, no Window
+    for the statics, and only the typed-order Sort after them."""
+    import os
+    import re
+
+    from aegisthus_spark import job
+    from aegisthus_spark.plans import physical_plan
+
+    frames = []
+
+    def capture(wide, output):
+        frames.append(wide)
+        raise RuntimeError("captured")
+
+    monkeypatch.setattr(job, "write_avro", capture)
+    ma = os.path.join(os.path.dirname(__file__), "fixtures", "ma")
+    with pytest.raises(RuntimeError, match="captured"):
+        job.export_cql(spark, [ma], ddl, "unused")
+    plan = physical_plan(frames[0], "simple")
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 1, plan
+    aggregates = re.findall(r"\b(\w*Aggregate)\(", plan)
+    assert aggregates == ["SortAggregate"], plan
+    assert "Window" not in plan, plan
+    assert len(re.findall(r"\bSort \[", plan)) <= 2, plan
