@@ -37,7 +37,10 @@ arrives sorted on the grouping keys; its output order then satisfies
 compact_snapshot's in-partition key sort, which Spark drops as redundant.
 All merge logic runs in JVM-side higher-order functions (filter/aggregate/
 transform lambdas) — no Python in the hot path, no second shuffle for LWW,
-no join for range tombstones. ``sort_array`` stays on the collected lists,
+no join for range tombstones. The aggregate and the two projections after
+it (RT-filtered cells with the wide-row guard, then LWW/shadow/strip) are
+SQL text, so the plan builds in a few py4j calls rather than one per Column
+operation. ``sort_array`` stays on the collected lists,
 so correctness never depends on collect order; over pre-sorted lists it is
 a linear pass. Memory per group is bounded by the row size exactly as in
 the reference's reducer (which also holds one row's surviving cells); the
@@ -90,94 +93,95 @@ CELLS_COLUMNS = [
 def _resolve_sort_keys(cells: DataFrame, name_sort_key, name_max_sort_key):
     """Shared comparator plumbing for compact()/compact_salted().
 
-    Returns (cells, sort_key, max_sort_key, raw_names). Corrupt-file
-    sentinels ('!', null key) are filtered — they must never form a merge
-    group. Custom sort keys may be Python UDFs, which cannot be evaluated
-    inside aggregate expressions, so they materialize as projections first.
+    Returns (cells, sort_key, max_sort_key, raw_names), the keys as column
+    names. Corrupt-file sentinels ('!', null key) are filtered — they must
+    never form a merge group. Custom sort keys may be Python UDFs, which
+    cannot be evaluated inside aggregate expressions, so they materialize
+    as projections first; a caller's Column enters the plan only there.
     """
-    cells = cells.filter(F.col("partition_key").isNotNull())
+    cells = cells.filter("partition_key IS NOT NULL")
     if name_sort_key is not None and not isinstance(name_sort_key, Column):
         # callable form: derive both bound encodings from one definition
         name_max_sort_key = name_sort_key(F.col("cell_name_max"))
         name_sort_key = name_sort_key(F.col("cell_name"))
-    if name_sort_key is not None:
-        sort_key = F.col("_name_sk")
-        if name_max_sort_key is not None:
-            # ONE withColumns call: each withColumn is a full JVM plan
-            # rebuild, and these sort-key trees are huge (r15 profile:
-            # two sequential rebuilds cost ~0.8 s of driver latency)
-            cells = cells.withColumns(
-                {"_name_sk": name_sort_key, "_name_max_sk": name_max_sort_key}
-            )
-            max_sort_key = F.col("_name_max_sk")
-        else:
-            cells = cells.withColumn("_name_sk", name_sort_key)
-            # raw max bytes don't compare against an encoded min/cell key;
-            # only safe when the input carries no range tombstones
-            max_sort_key = F.col("cell_name_max")
-    else:
-        sort_key = F.col("cell_name")
-        max_sort_key = F.col("cell_name_max")
-    return cells, sort_key, max_sort_key, name_sort_key is None
+    if name_sort_key is None:
+        return cells, "cell_name", "cell_name_max", True
+    if name_max_sort_key is None:
+        # raw max bytes don't compare against an encoded min/cell key;
+        # only safe when the input carries no range tombstones
+        return cells.withColumn("_name_sk", name_sort_key), "_name_sk", "cell_name_max", False
+    # ONE withColumns call: each withColumn is a full JVM plan rebuild, and
+    # these sort-key trees are huge (r15 profile: two sequential rebuilds
+    # cost ~0.8 s of driver latency)
+    cells = cells.withColumns({"_name_sk": name_sort_key, "_name_max_sk": name_max_sort_key})
+    return cells, "_name_sk", "_name_max_sk", False
 
 
-def _cell_struct(sort_key, raw_names: bool):
-    """The per-cell merge struct: leading fields define the merge sort
-    order — (name sort key, ts, tombstone-rank, value) ascending, so the
-    last struct per name group is the LWW winner under Cassandra's tie
+def _cell_struct(sort_key: str, raw_names: bool) -> str:
+    """SQL text: the per-cell merge struct. Leading fields define the merge
+    sort order — (name sort key, ts, tombstone-rank, value) ascending, so
+    the last struct per name group is the LWW winner under Cassandra's tie
     rule. For byte-ordered comparators the sort key IS the raw name;
     carrying both would double the name bytes held in the aggregation
     buffer, so raw mode stores only ``sk``."""
-    name_fields = [] if raw_names else [F.col("cell_name").alias("name")]
-    return F.struct(
-        sort_key.alias("sk"),
-        F.col("ts").alias("ts"),
-        F.when(F.col("kind") == "d", F.lit(1)).otherwise(F.lit(0)).alias("rank"),
-        F.col("value").alias("value"),
-        *name_fields,
-        F.col("kind").alias("kind"),
-        F.col("ttl").cast("int").alias("ttl"),
-        F.col("local_deletion_time").cast("int").alias("local_deletion_time"),
-        F.col("ts_of_last_delete").cast("long").alias("ts_of_last_delete"),
+    name_field = "" if raw_names else "cell_name AS name, "
+    return (
+        f"struct({sort_key} AS sk, ts AS ts, CASE WHEN kind = 'd' THEN 1 ELSE 0 END AS rank, "
+        f"value AS value, {name_field}kind AS kind, cast(ttl as int) AS ttl, "
+        "cast(local_deletion_time as int) AS local_deletion_time, "
+        "cast(ts_of_last_delete as bigint) AS ts_of_last_delete)"
     )
 
 
-def _truncate_by_size(df: DataFrame, name_of: str, max_row_size: int | None) -> DataFrame:
-    """P3 wide-row guard over the ``cells`` array column: keep the longest
-    prefix whose accumulated serialized size fits, and flag the row
-    (reference: CassSSTableReducer.java:89-96). Size model per cell:
-    len(name) + len(value) + 15 bytes framing, +8 for expiring/counter
-    atoms (close to OnDiskAtom.serializedSizeForSSTable). The fold carries
-    only (size, count, stopped) scalars and the kept prefix comes from one
-    slice() — an array_append fold would copy the growing array per cell,
-    O(n^2) on pathological wide rows."""
-    if max_row_size is None:
-        return df.withColumn("row_too_big", F.lit(False))
+#: SQL text: kind tests of the raw cell stream
+_IS_CELL = "kind IN ('c', 'd', 'e', 'x')"
+_IS_RT = "kind = 't'"
+
+#: SQL text: A2 row-deletion fold
+_DELETED_AT = f"max(coalesce(row_deleted_at, cast({LONG_MIN} as bigint)))"
+
+
+def _kept_count(cells_arr: str, name_of: str, max_row_size: int) -> str:
+    """SQL text: P3 wide-row guard over ``cells_arr`` — the length of the
+    longest prefix whose accumulated serialized size fits; the row is
+    flagged when it is shorter than the array (reference:
+    CassSSTableReducer.java:89-96). Size model per cell: len(name) +
+    len(value) + 15 bytes framing, +8 for expiring/counter atoms (close to
+    OnDiskAtom.serializedSizeForSSTable). The fold carries only (size,
+    count, stopped) scalars and the kept prefix comes from one slice() —
+    an array_append fold would copy the growing array per cell, O(n^2) on
+    pathological wide rows."""
     csize = (
         f"(length(coalesce({name_of}, x'')) + length(coalesce(x.value, x'')) + 15"
         " + if(x.kind in ('e', 'x'), 8, 0))"
     )
     return (
-        df.withColumn(
-            "trunc",
-            F.expr(
-                "aggregate(cells, "
-                "  struct(cast(0 as long) as sz, cast(0 as int) as k, false as stop), "
-                f" (acc, x) -> if(acc.stop OR acc.sz + {csize} > {int(max_row_size)}, "
-                "    struct(acc.sz as sz, acc.k as k, true as stop), "
-                f"   struct(acc.sz + {csize} as sz, acc.k + 1 as k, false as stop)))"
-            ),
-        )
-        .withColumn("row_too_big", F.col("trunc.stop"))
-        .withColumn("cells", F.expr("slice(cells, 1, trunc.k)"))
-        .drop("trunc")
+        f"aggregate({cells_arr}, "
+        "struct(cast(0 as long) as sz, cast(0 as int) as k, false as stop), "
+        f"(acc, x) -> if(acc.stop OR acc.sz + {csize} > {int(max_row_size)}, "
+        "struct(acc.sz as sz, acc.k as k, true as stop), "
+        f"struct(acc.sz + {csize} as sz, acc.k + 1 as k, false as stop)), "
+        "acc -> acc.k)"
     )
 
 
-#: A1 LWW: cells sorted asc by (sk, ts, rank, value); keep the LAST of each
-#: sk-group (strictly-newer ts wins; ties -> tombstone, then greater value —
-#: a deterministic superset of the reference's rule)
-_LWW_EXPR = "filter(c1, (x, i) -> i = size(c1) - 1 OR x.sk != c1[i + 1].sk)"
+def _guarded(cells_arr: str, name_of: str, max_row_size: int | None, body) -> str:
+    """SQL text: ``body(kept, too_big)`` over the P3-truncated ``cells_arr``
+    — the raw stream itself and ``false`` when ``max_row_size`` is None.
+    The kept count binds once as a lambda variable (SQL has no let)."""
+    if max_row_size is None:
+        return body(cells_arr, "false")
+    return (
+        f"element_at(transform(array({_kept_count(cells_arr, name_of, max_row_size)}), "
+        f"__k -> {body(f'slice({cells_arr}, 1, __k)', f'__k < size({cells_arr})')}), 1)"
+    )
+
+
+def _lww(cells_arr: str) -> str:
+    """SQL text, A1 LWW: cells sorted asc by (sk, ts, rank, value); keep the
+    LAST of each sk-group (strictly-newer ts wins; ties -> tombstone, then
+    greater value — a deterministic superset of the reference's rule)."""
+    return f"filter({cells_arr}, (x, i) -> i = size({cells_arr}) - 1 OR x.sk != {cells_arr}[i + 1].sk)"
 
 
 #: RT-count threshold for the per-cell exists() probe. Below it the
@@ -281,18 +285,11 @@ def _rt_binsearch_filter(cells_arr: str, segs_col: str) -> str:
     return f"filter({cells_arr}, x -> NOT {covered})"
 
 
-def _apply_rts(
-    df: DataFrame,
-    cells_arr: str,
-    rts_arr: str,
-    rt_min: str,
-    rt_max: str,
-    out_col: str,
-    *,
-    probe_max: int | None = None,
-) -> DataFrame:
-    """J2: drop cells covered by a range tombstone with rt.ts >= cell.ts,
-    dispatching PER ROW: the O(C x R) probe for the common few-RT
+def _rt_filter(
+    cells_arr: str, rts_arr: str, rt_min: str, rt_max: str, *, probe_max: int | None = None
+) -> str:
+    """SQL text, J2: drop cells covered by a range tombstone with rt.ts >=
+    cell.ts, dispatching PER ROW: the O(C x R) probe for the common few-RT
     partition, the skyline + per-cell binary search — O(R log R + C log R)
     — when a partition carries more than ``probe_max`` RTs (the
     pre-round-9 probe was quadratic for a pathological 10^4-RT
@@ -309,12 +306,22 @@ def _apply_rts(
         f"element_at(transform(array({_rt_skyline(rts_arr, rt_min, rt_max)}), "
         f"__segs -> {_rt_binsearch_filter(cells_arr, '__segs')}), 1)"
     )
+    return f"if({use_sky}, {sky}, {_rt_probe(cells_arr, rts_arr, rt_min, rt_max)})"
+
+
+def _apply_rts(
+    df: DataFrame,
+    cells_arr: str,
+    rts_arr: str,
+    rt_min: str,
+    rt_max: str,
+    out_col: str,
+    *,
+    probe_max: int | None = None,
+) -> DataFrame:
+    """``df`` with :func:`_rt_filter`'s result as ``out_col``."""
     return df.withColumn(
-        out_col,
-        F.expr(
-            f"if({use_sky}, {sky}, "
-            f"{_rt_probe(cells_arr, rts_arr, rt_min, rt_max)})"
-        ),
+        out_col, F.expr(_rt_filter(cells_arr, rts_arr, rt_min, rt_max, probe_max=probe_max))
     )
 
 
@@ -353,21 +360,11 @@ def compact(
     cells, sort_key, max_sort_key, raw_names = _resolve_sort_keys(
         cells, name_sort_key, name_max_sort_key
     )
-
-    is_cell = F.col("kind").isin("c", "d", "e", "x")
-    is_rt = F.col("kind") == "t"
-
-    cell_struct = _cell_struct(sort_key, raw_names)
-    rt_raw_fields = [] if raw_names else [
-        F.col("cell_name").alias("name"),
-        F.col("cell_name_max").alias("max_raw"),
-    ]
-    rt_struct = F.struct(
-        sort_key.alias("min_sk"),
-        max_sort_key.alias("max_sk"),
-        F.col("ts").alias("ts"),
+    rt_raw_fields = "" if raw_names else ", cell_name AS name, cell_name_max AS max_raw"
+    rt_struct = (
+        f"struct({sort_key} AS min_sk, {max_sort_key} AS max_sk, ts AS ts"
         # raw bounds, only needed to re-emit surviving RTs
-        *rt_raw_fields,
+        f"{rt_raw_fields})"
     )
     name_of = "x.sk" if raw_names else "x.name"
     rt_min_of = "r.min_sk" if raw_names else "r.name"
@@ -377,57 +374,40 @@ def compact(
 
     # shuffle raw cells, sort once: the aggregate below then streams as one
     # SortAggregate (see the module docstring); sort_array keeps the result
-    # independent of collect order
+    # independent of collect order. collect_list skips the NULLs the CASE
+    # leaves for the other kind, so both lists come out null-free
     cells = cells.repartition(*keys).sortWithinPartitions(*keys, sort_key, "ts")
     grouped = cells.groupBy(*keys).agg(
-        F.max(F.coalesce(F.col("row_deleted_at"), F.lit(LONG_MIN))).alias("deleted_at"),
-        F.sort_array(F.collect_list(F.when(is_cell, cell_struct))).alias("cells"),
-        F.collect_list(F.when(is_rt, rt_struct)).alias("rts"),
+        F.expr(f"{_DELETED_AT} AS deleted_at"),
+        F.expr(
+            f"sort_array(collect_list(CASE WHEN {_IS_CELL} "
+            f"THEN {_cell_struct(sort_key, raw_names)} END)) AS cells"
+        ),
+        F.expr(f"collect_list(CASE WHEN {_IS_RT} THEN {rt_struct} END) AS rts"),
     )
 
-    # J2: drop cells covered by a range tombstone with rt.ts >= cell.ts.
-    # Both bounds and the cell key are in the SAME encoding: raw bytes for
-    # byte-ordered comparators, else the caller's sort key applied to
-    # cell_name AND cell_name_max above. Applied via _apply_rts (probe /
-    # skyline per-row dispatch) below.
-    lww = _LWW_EXPR
-    # P2'/A3 templates take their input via a collision-proof placeholder
-    # token (r16, VERDICT #4: the former bare-name `.replace("c2", ...)`
-    # would silently corrupt the expression if a future edit introduced
-    # any token CONTAINING "c2" — e.g. the `ac2` lambda already used by
-    # _rt_skyline). The placeholder cannot appear in any generated SQL.
-    _IN = "__AEG_STAGE_IN__"
-    # P2': drop cells shadowed by the row tombstone (ts <= deleted_at)
-    shadow = f"filter({_IN}, x -> x.ts > deleted_at)"
-    # A3: strip merge bookkeeping fields
-    strip = (
-        f"transform({_IN}, x -> struct({name_of} as name, x.value as value, x.ts as ts, "
+    # P3 truncates the RAW merge-order stream (duplicates and RT-covered
+    # cells consume budget before dedup), exactly like the reference
+    # reducer; J2 then drops cells covered by a range tombstone with rt.ts
+    # >= cell.ts. Both bounds and the cell key are in the SAME encoding:
+    # raw bytes for byte-ordered comparators, else the caller's sort key
+    # applied to cell_name AND cell_name_max above
+    def first(kept: str, too_big: str) -> str:
+        c1 = _rt_filter(kept, "rts", "min_sk", "max_sk")
+        return f"struct({c1} AS c1, {too_big} AS row_too_big)"
+
+    out = grouped.selectExpr(
+        *keys, "deleted_at", "rts", f"{_guarded('cells', name_of, max_row_size, first)} AS m"
+    )
+    # A1 LWW, then P2' drops cells shadowed by the row tombstone
+    # (ts <= deleted_at), then A3 strips the merge bookkeeping fields.
+    # Each stage reads its input once, so they nest in one expression
+    survivors = f"filter({_lww('m.c1')}, x -> x.ts > deleted_at)"
+    columns = (
+        f"transform({survivors}, x -> struct({name_of} as name, x.value as value, x.ts as ts, "
         "x.kind as kind, x.ttl as ttl, x.local_deletion_time as local_deletion_time, "
         "x.ts_of_last_delete as ts_of_last_delete))"
     )
-
-    out = (
-        grouped.withColumns(
-            {
-                "cells": F.expr("filter(cells, x -> x is not null)"),
-                "rts": F.expr("filter(rts, x -> x is not null)"),
-            }
-        )
-    )
-
-    # P3: truncate the RAW merge-order stream (duplicates and RT-covered
-    # cells consume budget before dedup), exactly like the reference reducer
-    out = _truncate_by_size(out, name_of, max_row_size)
-
-    out = _apply_rts(out, "cells", "rts", "min_sk", "max_sk", "c1")
-    # lww/shadow/strip compose linearly (each stage references its input
-    # exactly once, except lww's leaf references of the c1 COLUMN), so
-    # they inline into ONE withColumn — one JVM plan rebuild instead of
-    # three over a plan already carrying the giant sort-key trees (r15)
-    assert shadow.count(_IN) == 1 and strip.count(_IN) == 1
-    shadow_inl = shadow.replace(_IN, f"({lww})")
-    strip_inl = strip.replace(_IN, f"({shadow_inl})")
-    out = out.withColumn("columns", F.expr(strip_inl))
     if keep_range_tombstones:
         # surviving RTs (not shadowed by the row tombstone), deduplicated,
         # appended after the cells as kind='t' entries (min in name, max in
@@ -438,10 +418,8 @@ def compact(
             "cast(null as int) as ttl, cast(null as int) as local_deletion_time, "
             "cast(null as long) as ts_of_last_delete))"
         )
-        out = out.withColumn("columns", F.expr(f"concat(columns, {rt_cols})"))
-    out = out.drop("cells", "rts", "c1", "c2", "c3")
-    cols = keys + ["deleted_at", "columns", "row_too_big"]
-    return out.select(*cols)
+        columns = f"concat({columns}, {rt_cols})"
+    return out.selectExpr(*keys, "deleted_at", f"{columns} AS columns", "m.row_too_big AS row_too_big")
 
 
 def merge_compacted(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -502,7 +480,6 @@ def merge_compacted(a: DataFrame, b: DataFrame) -> DataFrame:
         "x.name as sk, x.ts as ts, if(x.kind = 'd', 1, 0) as rank, "
         "x.value as value, x as c)))"
     )
-    lww = "filter(d1, (x, i) -> i = size(d1) - 1 OR x.sk != d1[i + 1].sk)"
     shadow = "filter(d2, x -> x.ts > deleted_at)"
     kept_rts = "array_sort(array_distinct(filter(rts, r -> r.ts > deleted_at)))"
     return (
@@ -510,7 +487,7 @@ def merge_compacted(a: DataFrame, b: DataFrame) -> DataFrame:
             j.withColumn("rts", F.expr(rts)).withColumn("d0", F.expr(decorated)),
             "d0", "rts", "name", "value", "d1",
         )
-        .withColumn("d2", F.expr(lww))
+        .withColumn("d2", F.expr(_lww("d1")))
         .withColumn("d3", F.expr(shadow))
         .withColumn("columns", F.expr(f"concat(transform(d3, x -> x.c), {kept_rts})"))
         .select("partition_key", "deleted_at", "columns", "row_too_big")
@@ -614,14 +591,12 @@ def compact_salted(
     cells, sort_key, max_sort_key, raw_names = _resolve_sort_keys(
         cells, name_sort_key, name_max_sort_key
     )
-
-    is_cell = F.col("kind").isin("c", "d", "e", "x")
-    is_rt = F.col("kind") == "t"
+    is_cell = F.expr(_IS_CELL)
+    is_rt = F.expr(_IS_RT)
 
     # hash what dedup compares: the sort key under a typed comparator
-    bucket_on = F.col("cell_name") if raw_names else sort_key
     bucket = F.when(
-        is_cell, F.pmod(F.xxhash64(bucket_on), F.lit(buckets)).cast("int")
+        is_cell, F.pmod(F.xxhash64(F.col(sort_key)), F.lit(buckets)).cast("int")
     ).otherwise(F.lit(0))
     salted = cells.withColumn("_b", bucket)
     # RTs must see every name: replicate them into all buckets of their key
@@ -634,29 +609,18 @@ def compact_salted(
     )
     salted = salted.filter(~is_rt).unionByName(rts_everywhere)
 
-    cell_struct = _cell_struct(sort_key, raw_names)
-    rt_struct = F.struct(
-        sort_key.alias("min_sk"),
-        max_sort_key.alias("max_sk"),
-        F.col("ts").alias("ts"),
-    )
-
+    rt_struct = f"struct({sort_key} AS min_sk, {max_sort_key} AS max_sk, ts AS ts)"
+    # collect_list skips the NULLs the CASE leaves for the other kind
     stage1 = salted.groupBy("partition_key", "_b").agg(
-        F.max(F.coalesce(F.col("row_deleted_at"), F.lit(LONG_MIN))).alias("da_b"),
-        F.sort_array(F.collect_list(F.when(is_cell, cell_struct))).alias("cells"),
-        F.collect_list(F.when(is_rt, rt_struct)).alias("rts"),
-    )
-    stage1 = (
-        # _apply_rts needs null-free inputs (collect_list(when(...)) leaves
-        # nulls for the other kind); filtering preserves the sorted order
-        stage1.withColumn("cells", F.expr("filter(cells, x -> x is not null)"))
-        .withColumn("rts", F.expr("filter(rts, r -> r is not null)"))
-    )
-    stage1 = (
-        _apply_rts(stage1, "cells", "rts", "min_sk", "max_sk", "c1")
-        .withColumn("bucket_cols", F.expr(_LWW_EXPR))
-        .select("partition_key", "da_b", "bucket_cols")
-    )
+        F.expr(f"{_DELETED_AT} AS da_b"),
+        F.expr(
+            f"sort_array(collect_list(CASE WHEN {_IS_CELL} "
+            f"THEN {_cell_struct(sort_key, raw_names)} END)) AS cells"
+        ),
+        F.expr(f"collect_list(CASE WHEN {_IS_RT} THEN {rt_struct} END) AS rts"),
+    ).selectExpr(
+        "partition_key", "da_b", f"{_rt_filter('cells', 'rts', 'min_sk', 'max_sk')} AS c1"
+    ).selectExpr("partition_key", "da_b", f"{_lww('c1')} AS bucket_cols")
 
     # stage 2: merge the B pre-deduplicated arrays; names are disjoint
     # across buckets, so concatenation + one sort restores comparator order
@@ -669,14 +633,14 @@ def compact_salted(
 
     # survivor-stream truncation — see the docstring caveat; same size
     # model and fold as compact()'s raw-stream guard
-    merged = _truncate_by_size(merged, name_of, max_row_size)
+    def strip(kept: str, too_big: str) -> str:
+        return (
+            f"struct(transform(filter({kept}, x -> x.ts > deleted_at), "
+            f"x -> struct({name_of} as name, x.value as value, x.ts as ts, "
+            "x.kind as kind, x.ttl as ttl, x.local_deletion_time as local_deletion_time, "
+            f"x.ts_of_last_delete as ts_of_last_delete)) AS columns, {too_big} AS row_too_big)"
+        )
 
-    strip = (
-        "transform(filter(cells, x -> x.ts > deleted_at), "
-        f"x -> struct({name_of} as name, x.value as value, x.ts as ts, "
-        "x.kind as kind, x.ttl as ttl, x.local_deletion_time as local_deletion_time, "
-        "x.ts_of_last_delete as ts_of_last_delete))"
-    )
-    return merged.withColumn("columns", F.expr(strip)).select(
-        "partition_key", "deleted_at", "columns", "row_too_big"
-    )
+    return merged.selectExpr(
+        "partition_key", "deleted_at", f"{_guarded('cells', name_of, max_row_size, strip)} AS m"
+    ).selectExpr("partition_key", "deleted_at", "m.columns AS columns", "m.row_too_big AS row_too_big")

@@ -17,6 +17,12 @@ Differences from the reference (all improvements):
 - the composite-name split and every type composition are JVM-side Spark
   expressions; a type outside ``CQL_TYPES`` raises.
 
+Every projection is SQL text, one ``selectExpr`` string per column, so the
+plan builds in a few py4j calls per stage instead of one per Column
+operation; names enter it quoted (``functions.sqltext``). Decimal is the
+one Column-built compose: its digitization is shared with render.py and
+the sort keys.
+
 Static columns (the 0xFFFF static prefix) are read once per compacted row
 and set on each of its CQL rows, mirroring CQLMapper.java:102-111.
 """
@@ -28,6 +34,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .functions.casts import _hex_to_double_sql, _hex_to_float_sql, _width_decode
+from .functions.sqltext import apply_sql, quote_ident, string_lit
 
 # ---------------------------------------------------------------------------
 # DDL parsing (CFMetadataUtility analog — a CREATE TABLE subset, no Cassandra)
@@ -217,7 +226,7 @@ def _split_pk(spec: str) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# composite-name split + typed compose (JVM expressions)
+# composite-name split + typed compose (SQL text)
 # ---------------------------------------------------------------------------
 
 _COMPS_DDL = "array<binary>"
@@ -242,64 +251,61 @@ def _split_expr(name_sql: str, max_components: int) -> str:
 
 
 def compose_value(b: Column, cql_type: str) -> Column:
-    """binary -> typed Spark value per CQLMapper.addCqlValueToRecord.
-    NULL in -> NULL out (absent cells stay null, CQLMapper.java:161-164)."""
-    return F.when(b.isNotNull(), _compose_nonnull(b, cql_type))
+    """binary Column -> typed Spark value per CQLMapper.addCqlValueToRecord
+    (the Column form of :func:`_compose`)."""
+    if cql_type == "decimal":
+        return _compose_decimal(b)
+    return apply_sql(b, lambda v: _compose(v, cql_type))
 
 
-def _compose_nonnull(b: Column, cql_type: str) -> Column:
-    h = F.hex(b)
+def _compose(b: str, cql_type: str) -> str:
+    """SQL text: binary ``b`` -> typed value per
+    CQLMapper.addCqlValueToRecord. NULL in -> NULL out (absent cells stay
+    null, CQLMapper.java:161-164). A decimal stays binary here: its decode
+    is a Column (see :func:`_compose_decimal`)."""
+    if cql_type == "decimal":
+        return b
+    return f"CASE WHEN {b} IS NOT NULL THEN {_compose_nonnull(b, cql_type)} END"
+
+
+def _compose_nonnull(b: str, cql_type: str) -> str:
+    h = f"lower(hex({b}))"
     if cql_type in ("text", "varchar", "ascii"):
-        return b.cast("string")
+        return f"cast({b} as string)"
     if cql_type in ("int", "bigint", "counter"):
-        from .functions.casts import _width_decode
-
-        v = _width_decode(F.lower(h))
-        return v.cast("int") if cql_type == "int" else v
+        v = _width_decode(h)
+        return f"cast({v} as int)" if cql_type == "int" else v
     if cql_type in ("uuid", "timeuuid"):
-        lh = F.lower(h)
-        return F.concat_ws(
-            "-",
-            F.substring(lh, 1, 8),
-            F.substring(lh, 9, 4),
-            F.substring(lh, 13, 4),
-            F.substring(lh, 17, 4),
-            F.substring(lh, 21, 12),
-        )
+        parts = ((1, 8), (9, 4), (13, 4), (17, 4), (21, 12))
+        return "concat_ws('-', " + ", ".join(f"substring({h}, {p}, {n})" for p, n in parts) + ")"
     if cql_type == "timestamp":
-        from .functions.casts import _width_decode
-
-        return F.timestamp_millis(_width_decode(F.lower(h)))
+        return f"timestamp_millis({_width_decode(h)})"
     if cql_type == "double":
-        from .functions.casts import hex_to_double
-
-        return hex_to_double(F.lower(h))
+        return _hex_to_double_sql(h)
     if cql_type == "float":
-        from .functions.casts import hex_to_float
-
-        return hex_to_float(F.lower(h))
+        return _hex_to_float_sql(h)
     if cql_type == "boolean":
-        return F.conv(h, 16, 10).cast("long") != 0
+        return f"cast(conv(hex({b}), 16, 10) as bigint) != 0"
     if cql_type == "blob":
         return b
-    if cql_type == "decimal":
-        # i32 scale + any-width varint unscaled -> '<digits>E<-scale>'
-        # built JVM-side (functions/bignum digitization, exact at any
-        # width) and cast like the reference's BigDecimal; numerically
-        # equal strings cast to equal decimal(38,18) values, so this
-        # matches the former Python str(Decimal)-through-cast fallback.
-        # Degenerate payloads (<= the 4-byte scale prefix) are NULL: empty
-        # matches Cassandra's DecimalSerializer null-for-empty; 1-3-byte
-        # blobs AND the exactly-4-byte shape (scale + EMPTY magnitude,
-        # which BigInteger(byte[0]) throws on) map to NULL like the other
-        # composes' malformed-width behavior (the old Python fallback
-        # returned 0 for all of these; pinned by test_cql)
-        from .functions.bignum import split_decimal
-
-        scale, sign, digits = split_decimal(b)
-        s = F.concat(sign, digits, F.lit("E"), (-scale).cast("string"))
-        return F.when(F.length(b) >= 5, s.cast("decimal(38,18)"))
     raise ValueError(f"unsupported CQL type: {cql_type}")
+
+
+def _compose_decimal(b: Column) -> Column:
+    """i32 scale + any-width varint unscaled -> '<digits>E<-scale>', built
+    JVM-side (functions/bignum digitization, exact at any width, a Column
+    shared with render.py and the sort keys) and cast like the reference's
+    BigDecimal; numerically equal strings cast to equal decimal(38,18)
+    values. Degenerate payloads (<= the 4-byte scale prefix) are NULL:
+    empty matches Cassandra's DecimalSerializer null-for-empty; 1-3-byte
+    blobs AND the exactly-4-byte shape (scale + EMPTY magnitude, which
+    BigInteger(byte[0]) throws on) map to NULL like the other composes'
+    malformed-width behavior (pinned by test_cql)."""
+    from .functions.bignum import split_decimal
+
+    scale, sign, digits = split_decimal(b)
+    s = F.concat(sign, digits, F.lit("E"), (-scale).cast("string"))
+    return F.when(F.length(b) >= 5, s.cast("decimal(38,18)"))
 
 
 # ---------------------------------------------------------------------------
@@ -375,39 +381,80 @@ def _tuple_comps_expr(b_sql: str, n_comps: int) -> str:
     )
 
 
-def _timeuuid_sort_key(h: Column) -> Column:
+def _timeuuid_sort_key(h: str) -> str:
     """hex(timeuuid) -> string ordered by embedded time (version nibble is
     constant for v1 uuids): time_hi, time_mid, time_low."""
-    return F.concat(F.substring(h, 13, 4), F.substring(h, 9, 4), F.substring(h, 1, 8))
+    return f"concat(substring({h}, 13, 4), substring({h}, 9, 4), substring({h}, 1, 8))"
 
 
 # ---------------------------------------------------------------------------
-# the transform
+# the transform: each projection is one SQL text per output column
 # ---------------------------------------------------------------------------
 
 
-def _raw(cells: Column, col: CqlColumn) -> Column:
+def _raw(cells: str, col: CqlColumn) -> str:
     """``col``'s stored value in one CQL row's ``cells``: the newest cell of
     a scalar or frozen column (frozen collections and tuples live in ONE
     cell blob); a list's values ordered by their timeuuid's time; a set's
     elements (held in the collection key); a map's sorted (k, v) entries."""
-    mine = F.filter(cells, lambda x: x.colname == col.name)
+    mine = f"x.colname = {string_lit(col.name)}"
     if col.frozen or col.collection is None:
-        newest = F.array_max(F.transform(mine, lambda x: F.struct(
-            x.ts.alias("ts"), x.value.alias("value")
-        )))
-        return newest.getField("value")
-    mine = F.filter(mine, lambda x: x.collkey.isNotNull())
+        newest = f"transform(filter({cells}, x -> {mine}), x -> struct(x.ts AS ts, x.value AS value))"
+        return f"array_max({newest}).value"
+    mine = f"filter({cells}, x -> {mine} AND x.collkey IS NOT NULL)"
     if col.collection == "set":
-        return F.array_sort(F.transform(mine, lambda x: x.collkey))
+        return f"array_sort(transform({mine}, x -> x.collkey))"
     if col.collection == "map":
-        return F.array_sort(F.transform(mine, lambda x: F.struct(
-            x.collkey.alias("k"), x.value.alias("v")
-        )))
-    by_time = F.array_sort(F.transform(mine, lambda x: F.struct(
-        _timeuuid_sort_key(F.hex(x.collkey)).alias("k"), x.value.alias("v")
-    )))
-    return F.transform(by_time, lambda e: e.getField("v"))
+        return f"array_sort(transform({mine}, x -> struct(x.collkey AS k, x.value AS v)))"
+    key = _timeuuid_sort_key("hex(x.collkey)")
+    by_time = f"array_sort(transform({mine}, x -> struct({key} AS k, x.value AS v)))"
+    return f"transform({by_time}, e -> e.v)"
+
+
+def _value(raw: str, col: CqlColumn) -> str:
+    """SQL text: a regular or static column's typed value from its
+    ``_raw`` (decimals stay binary; see :func:`_decimals`)."""
+    nonempty = f"CASE WHEN size({raw}) > 0 THEN {raw} END"  # absent collection -> NULL
+    if col.collection == "tuple":
+        comps = _tuple_comps_expr(raw, len(col.tuple_types))
+        fields = ", ".join(
+            f"{_compose(f'try_element_at({comps}, {i + 1})', t)} AS f{i}"
+            for i, t in enumerate(col.tuple_types)
+        )
+        return f"CASE WHEN {raw} IS NOT NULL THEN struct({fields}) END"
+    if col.collection in ("list", "set"):
+        elems = _frozen_elems_expr(raw) if col.frozen else nonempty
+        return f"transform({elems}, v -> {_compose('v', col.element_type or 'blob')})"
+    if col.collection == "map":
+        kt, vt = col.element_type or "blob", col.value_type or "blob"
+        entries = _frozen_entries_expr(raw) if col.frozen else nonempty
+        kv = f"struct({_compose('s.k', kt)} AS k, {_compose('s.v', vt)} AS v)"
+        return f"map_from_entries(transform({entries}, s -> {kv}))"
+    # scalars, and frozen<scalar>: identical wire format to the scalar
+    return _compose(raw, col.cql_type)
+
+
+def _has_decimal(col: CqlColumn) -> bool:
+    return "decimal" in (col.cql_type, col.element_type, col.value_type, *(col.tuple_types or ()))
+
+
+def _decimals(c: Column, col: CqlColumn) -> Column:
+    """``c``, a column :func:`_value` or :func:`_compose` built, with its
+    decimal parts composed."""
+    if col.collection == "tuple":
+        for i, t in enumerate(col.tuple_types):
+            if t == "decimal":
+                c = c.withField(f"f{i}", _compose_decimal(c.getField(f"f{i}")))
+        return c
+    if col.collection in ("list", "set"):
+        return F.transform(c, _compose_decimal)
+    if col.collection == "map":
+        if col.element_type == "decimal":
+            c = F.transform_keys(c, lambda k, v: _compose_decimal(k))
+        if col.value_type == "decimal":
+            c = F.transform_values(c, lambda k, v: _compose_decimal(v))
+        return c
+    return _compose_decimal(c)
 
 
 def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
@@ -424,6 +471,9 @@ def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
     """
     schema = parse_create_table(ddl) if isinstance(ddl, str) else ddl
     n_ck = len(schema.clustering)
+    # positional names: CQL names may differ only in case, which Spark's
+    # column resolution ignores
+    raw = {c.name: f"__raw{j}" for j, c in enumerate(schema.columns)}
 
     # live cells only (post-cleanse): columns, expiring columns, and
     # counters — dropping 'x' would silently NULL every counter column.
@@ -434,95 +484,73 @@ def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
         f"x -> struct({_split_expr('x.name', n_ck + 2)} AS comps, "
         f"{_static_cond('x.name')} AS st, x.value AS value, x.ts AS ts))"
     )
-    cells = F.transform(F.expr(split), lambda x: F.struct(
-        x.comps.alias("comps"),
-        x.st.alias("st"),
-        F.try_element_at(x.comps, F.lit(n_ck + 1)).cast("string").alias("colname"),
-        F.try_element_at(x.comps, F.lit(n_ck + 2)).alias("collkey"),
-        x.value.alias("value"),
-        x.ts.alias("ts"),
-    ))
-    rows = compacted.select("partition_key", cells.alias("cells")).select(
+    cells = (
+        f"transform({split}, x -> struct(x.comps AS comps, x.st AS st, "
+        f"cast(try_element_at(x.comps, {n_ck + 1}) as string) AS colname, "
+        f"try_element_at(x.comps, {n_ck + 2}) AS collkey, x.value AS value, x.ts AS ts))"
+    )
+    rows = compacted.selectExpr("partition_key", f"{cells} AS cells").selectExpr(
         "partition_key",
-        F.filter("cells", lambda x: ~x.st).alias("ns"),
-        F.filter("cells", lambda x: x.st).alias("statics"),
+        "filter(cells, x -> NOT x.st) AS ns",
+        "filter(cells, x -> x.st) AS statics",
     )
 
     # 1-based starts of the non-static cells' clustering-prefix runs; a
     # partition with statics only gets one empty run. Each step binds its
     # arrays as columns: inlined into the slicing lambda below, they would
     # be recomputed once per run
-    def prefix(i):  # 0-based; null past either end
-        return F.slice(F.get("ns", i).getField("comps"), 1, n_ck)
+    def prefix(i: str) -> str:  # 0-based; null past either end
+        return f"slice(get(ns, {i}).comps, 1, {n_ck})"
 
-    n = F.size("ns")
-    rows = rows.select(
+    starts = (
+        "CASE WHEN size(ns) > 0 THEN filter(sequence(1, size(ns)), "
+        f"i -> i = 1 OR {prefix('i - 1')} != {prefix('i - 2')}) "
+        "WHEN size(statics) > 0 THEN array(1) ELSE cast(array() as array<int>) END"
+    )
+    statics = [raw[c.name] for c in schema.statics]
+    rows = rows.selectExpr(
         "partition_key",
         "ns",
-        F.when(n > 0, F.filter(
-            F.sequence(F.lit(1), n), lambda i: (i == 1) | (prefix(i - 1) != prefix(i - 2))
-        )).when(F.size("statics") > 0, F.array(F.lit(1)))
-        .otherwise(F.array().cast("array<int>")).alias("starts"),
-        *[_raw(F.col("statics"), c).alias(f"__raw_{c.name}") for c in schema.statics],
+        f"{starts} AS starts",
+        *[f"{_raw('statics', c)} AS {raw[c.name]}" for c in schema.statics],
     )
-    runs = F.transform("starts", lambda s, j: F.slice(
-        "ns", s, F.coalesce(F.try_element_at("starts", j + 2), n + 1) - s
-    ))
-    rows = rows.select(
+    runs = (
+        "transform(starts, (s, j) -> slice(ns, s, "
+        "coalesce(try_element_at(starts, j + 2), size(ns) + 1) - s))"
+    )
+    rows = rows.selectExpr("partition_key", *statics, f"explode({runs}) AS cells").selectExpr(
         "partition_key",
-        *[f"__raw_{c.name}" for c in schema.statics],
-        F.explode(runs).alias("cells"),
-    ).select(
-        "partition_key",
-        F.try_element_at("cells", F.lit(1)).getField("comps").alias("comps"),
-        *[f"__raw_{c.name}" for c in schema.statics],
-        *[_raw(F.col("cells"), c).alias(f"__raw_{c.name}") for c in schema.regulars],
+        "try_element_at(cells, 1).comps AS comps",
+        *statics,
+        *[f"{_raw('cells', c)} AS {raw[c.name]}" for c in schema.regulars],
     )
 
     # partition key components
     pks = schema.partition_keys
     if len(pks) == 1:
-        pk_cols = [compose_value(F.col("partition_key"), pks[0].cql_type).alias(pks[0].name)]
+        pk_parts = ["partition_key"]
     else:
-        pk_split = F.expr(_split_expr("partition_key", len(pks)))
-        pk_cols = [
-            compose_value(F.try_element_at(pk_split, F.lit(i + 1)), c.cql_type).alias(c.name)
-            for i, c in enumerate(pks)
-        ]
-
-    out_cols = list(pk_cols)
-    for i, c in enumerate(schema.clustering):
-        out_cols.append(
-            compose_value(F.try_element_at("comps", F.lit(i + 1)), c.cql_type).alias(c.name)
-        )
-    for col in schema.regulars + schema.statics:
-        raw = F.col(f"__raw_{col.name}")
-        raw_sql = f"`__raw_{col.name}`"
-        nonempty = F.when(F.size(raw) > 0, raw)  # absent collection -> NULL
-        if col.collection == "tuple":
-            comps = F.expr(_tuple_comps_expr(raw_sql, len(col.tuple_types)))
-            value = F.when(raw.isNotNull(), F.struct(*[
-                compose_value(F.try_element_at(comps, F.lit(i + 1)), t).alias(f"f{i}")
-                for i, t in enumerate(col.tuple_types)
-            ]))
-        elif col.collection in ("list", "set"):
-            elems = F.expr(_frozen_elems_expr(raw_sql)) if col.frozen else nonempty
-            value = F.transform(elems, lambda v: compose_value(v, col.element_type or "blob"))
-        elif col.collection == "map":
-            kt, vt = col.element_type or "blob", col.value_type or "blob"
-            entries = F.expr(_frozen_entries_expr(raw_sql)) if col.frozen else nonempty
-            value = F.map_from_entries(F.transform(entries, lambda s: F.struct(
-                compose_value(s.getField("k"), kt).alias("k"),
-                compose_value(s.getField("v"), vt).alias("v"),
-            )))
-        else:
-            # scalars, and frozen<scalar>: identical wire format to the scalar
-            value = compose_value(raw, col.cql_type)
-        out_cols.append(value.alias(col.name))
+        pk_split = _split_expr("partition_key", len(pks))
+        pk_parts = [f"try_element_at({pk_split}, {i + 1})" for i in range(len(pks))]
+    out = [f"{_compose(b, c.cql_type)} AS {quote_ident(c.name)}" for b, c in zip(pk_parts, pks)]
+    out += [
+        f"{_compose(f'try_element_at(comps, {i + 1})', c.cql_type)} AS {quote_ident(c.name)}"
+        for i, c in enumerate(schema.clustering)
+    ]
+    out += [
+        f"{_value(raw[c.name], c)} AS {quote_ident(c.name)}"
+        for c in schema.regulars + schema.statics
+    ]
+    rows = rows.selectExpr(*out)
+    decimals = {
+        c.name: _decimals(F.col(quote_ident(c.name)), c)
+        for c in schema.columns if _has_decimal(c)
+    }
+    if decimals:
+        rows = rows.withColumns(decimals)
 
     # in-partition order only: a global orderBy would add a range Exchange
     # + full sort of the entire export for cosmetic total order the sinks
     # don't need (the reference mapper emits unordered); callers that want
     # total order sort the (much smaller) result themselves
-    order = [c.name for c in pks] + [c.name for c in schema.clustering]
-    return rows.select(*out_cols).sortWithinPartitions(*order)
+    return rows.sortWithinPartitions(*[quote_ident(c.name) for c in pks + schema.clustering])

@@ -10,13 +10,17 @@ semantics (aegisthus-pig/.../AegisthusLoadCaster.java:42-138):
 
 All decodes are pure Spark SQL expressions — the IEEE reinterpretation is
 done with exact sign/exponent/mantissa arithmetic (every step representable,
-so results are bit-identical to a native reinterpret).
+so results are bit-identical to a native reinterpret). The numeric decodes
+are SQL text templates (``_*_sql``, ``_width_decode``), shared with the CQL
+compose; the Column functions apply them through ``sqltext.apply_sql``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .sqltext import apply_sql
 
 
 def _c(col: str | Column) -> Column:
@@ -37,36 +41,44 @@ def hex_to_chararray(col: str | Column) -> Column:
     )
 
 
-def _sext(u: Column, bits: int) -> Column:
-    return F.when(u >= (1 << (bits - 1)), u - F.lit(1 << bits).cast("long")).otherwise(u)
-
-
-def _width_decode(h: Column) -> Column:
-    n = F.length(h)
-    u_small = F.conv(h, 16, 10).cast("long")
+def _width_decode(h: str) -> str:
+    """SQL text: width-based big-endian signed decode of 1/2/4/8 bytes
+    (2/4/8/16 hex chars) to a bigint; other widths -> NULL."""
+    n = f"length({h})"
+    u = f"cast(conv({h}, 16, 10) as bigint)"
     # 8-byte values can exceed bigint as unsigned; go through decimal(20,0)
-    u_big = F.conv(h, 16, 10).cast("decimal(20,0)")
-    big = F.when(
-        u_big >= F.lit(str(1 << 63)).cast("decimal(20,0)"),
-        (u_big - F.lit(str(1 << 64)).cast("decimal(21,0)")).cast("long"),
-    ).otherwise(u_big.cast("long"))
+    u_big = f"cast(conv({h}, 16, 10) as decimal(20,0))"
+    big = (
+        f"CASE WHEN {u_big} >= cast('{1 << 63}' as decimal(20,0)) "
+        f"THEN cast({u_big} - cast('{1 << 64}' as decimal(21,0)) as bigint) "
+        f"ELSE cast({u_big} as bigint) END"
+    )
+
+    def sext(bits: int) -> str:
+        return (
+            f"CASE WHEN {u} >= {1 << (bits - 1)} "
+            f"THEN {u} - cast({1 << bits} as bigint) ELSE {u} END"
+        )
+
     return (
-        F.when(n == 2, _sext(u_small, 8))
-        .when(n == 4, _sext(u_small, 16))
-        .when(n == 8, _sext(u_small, 32))
-        .when(n == 16, big)
-        .otherwise(F.lit(None).cast("long"))
+        f"CASE WHEN {n} = 2 THEN {sext(8)} WHEN {n} = 4 THEN {sext(16)} "
+        f"WHEN {n} = 8 THEN {sext(32)} WHEN {n} = 16 THEN {big} "
+        "ELSE cast(NULL as bigint) END"
+    )
+
+
+def _hex_to_long_sql(h: str) -> str:
+    s = f"cast(unhex({h}) as string)"
+    as_text = f"CASE WHEN {s} RLIKE '^-?[0-9]+$' THEN try_cast({s} as bigint) END"
+    return (
+        f"CASE WHEN {h} IS NULL OR length({h}) = 0 THEN cast(NULL as bigint) "
+        f"ELSE coalesce({as_text}, {_width_decode(h)}) END"
     )
 
 
 def hex_to_long(col: str | Column) -> Column:
     """Pig ``bytesToLong``: decimal-string parse first, then width decode."""
-    h = _c(col)
-    s = _decoded_str(h)
-    as_text = F.when(s.rlike("^-?[0-9]+$"), s.try_cast("long"))
-    return F.when((h.isNull()) | (F.length(h) == 0), F.lit(None).cast("long")).otherwise(
-        F.coalesce(as_text, _width_decode(h))
-    )
+    return apply_sql(col, _hex_to_long_sql)
 
 
 def hex_to_int(col: str | Column) -> Column:
@@ -78,49 +90,50 @@ def hex_to_int(col: str | Column) -> Column:
     return wrapped.cast("int")
 
 
+#: IEEE-754 special values as SQL double literals
+_INF = "cast('Infinity' as double)"
+_NAN = "cast('NaN' as double)"
+
+
+def _hex_to_float_sql(h: str) -> str:
+    """SQL text: IEEE-754 binary32 reinterpretation of 4 bytes (8 hex
+    chars) to a double; other widths -> NULL."""
+    bits = f"cast(conv({h}, 16, 10) as bigint)"
+    sign = f"CASE WHEN (shiftright({bits}, 31) & 1) = 1 THEN -1.0D ELSE 1.0D END"
+    e = f"(shiftright({bits}, 23) & 255)"
+    m = f"({bits} & {0x7FFFFF})"
+    val = (
+        f"CASE WHEN {e} = 255 THEN CASE WHEN {m} = 0 THEN {sign} * {_INF} ELSE {_NAN} END "
+        f"WHEN {e} = 0 THEN {sign} * cast({m} as double) * pow(2.0D, -149) "
+        f"ELSE {sign} * cast({m} + {1 << 23} as double) * pow(2.0D, cast({e} as double) - 150) END"
+    )
+    return f"CASE WHEN {h} IS NULL OR length({h}) != 8 THEN cast(NULL as double) ELSE {val} END"
+
+
 def hex_to_float(col: str | Column) -> Column:
     """IEEE-754 binary32 reinterpretation of 4 bytes (8 hex chars)."""
-    h = _c(col)
-    bits = F.conv(h, 16, 10).cast("long")
-    sign = F.when(F.shiftright(bits, 31).bitwiseAND(F.lit(1)) == 1, F.lit(-1.0)).otherwise(
-        F.lit(1.0)
-    )
-    e = F.shiftright(bits, 23).bitwiseAND(F.lit(0xFF))
-    m = bits.bitwiseAND(F.lit(0x7FFFFF))
-    val = (
-        F.when(
-            e == 0xFF,
-            F.when(m == 0, sign * F.lit(float("inf"))).otherwise(F.lit(float("nan"))),
-        )
-        .when(e == 0, sign * m.cast("double") * F.pow(F.lit(2.0), F.lit(-149)))
-        .otherwise(
-            sign * (m + F.lit(1 << 23)).cast("double") * F.pow(F.lit(2.0), e.cast("double") - 150)
-        )
-    )
-    return F.when((h.isNull()) | (F.length(h) != 8), F.lit(None).cast("double")).otherwise(val)
+    return apply_sql(col, _hex_to_float_sql)
 
 
-def hex_to_double(col: str | Column) -> Column:
-    """IEEE-754 binary64 reinterpretation of 8 bytes (16 hex chars).
+def _hex_to_double_sql(h: str) -> str:
+    """SQL text: IEEE-754 binary64 reinterpretation of 8 bytes (16 hex
+    chars); other widths -> NULL.
 
     The top 12 bits (sign+exponent) come from the first 3 hex chars, the
     52-bit mantissa from the remaining 13 — both fit a bigint exactly.
     """
-    h = _c(col)
-    top12 = F.conv(F.substring(h, 1, 3), 16, 10).cast("long")
-    sign = F.when(F.shiftright(top12, 11).bitwiseAND(F.lit(1)) == 1, F.lit(-1.0)).otherwise(
-        F.lit(1.0)
-    )
-    e = top12.bitwiseAND(F.lit(0x7FF))
-    m = F.conv(F.substring(h, 4, 13), 16, 10).cast("long")
+    top12 = f"cast(conv(substring({h}, 1, 3), 16, 10) as bigint)"
+    sign = f"CASE WHEN (shiftright({top12}, 11) & 1) = 1 THEN -1.0D ELSE 1.0D END"
+    e = f"({top12} & {0x7FF})"
+    m = f"cast(conv(substring({h}, 4, 13), 16, 10) as bigint)"
     val = (
-        F.when(
-            e == 0x7FF,
-            F.when(m == 0, sign * F.lit(float("inf"))).otherwise(F.lit(float("nan"))),
-        )
-        .when(e == 0, sign * m.cast("double") * F.pow(F.lit(2.0), F.lit(-1074)))
-        .otherwise(
-            sign * (m + F.lit(1 << 52)).cast("double") * F.pow(F.lit(2.0), e.cast("double") - 1075)
-        )
+        f"CASE WHEN {e} = {0x7FF} THEN CASE WHEN {m} = 0 THEN {sign} * {_INF} ELSE {_NAN} END "
+        f"WHEN {e} = 0 THEN {sign} * cast({m} as double) * pow(2.0D, -1074) "
+        f"ELSE {sign} * cast({m} + {1 << 52} as double) * pow(2.0D, cast({e} as double) - 1075) END"
     )
-    return F.when((h.isNull()) | (F.length(h) != 16), F.lit(None).cast("double")).otherwise(val)
+    return f"CASE WHEN {h} IS NULL OR length({h}) != 16 THEN cast(NULL as double) ELSE {val} END"
+
+
+def hex_to_double(col: str | Column) -> Column:
+    """IEEE-754 binary64 reinterpretation of 8 bytes (16 hex chars)."""
+    return apply_sql(col, _hex_to_double_sql)

@@ -123,7 +123,7 @@ def _u16_at(name: Column, pos: Column) -> Column:
 def _malformed_guard(comp: Column, width: int, out: Column) -> Column:
     """Fixed-width transforms are only injective at their expected width;
     a wrong-length value must never COLLIDE with a well-formed key (LWW
-    dedups on the SORT KEY, compact.py _LWW_EXPR, so a collision would
+    dedups on the SORT KEY, compact._lww, so a collision would
     silently merge distinct cell names). Malformed lengths get a '.'
     prefix (0x2E, below every hex digit) + raw hex: deterministic,
     injective, sorts before well-formed values of the same position."""

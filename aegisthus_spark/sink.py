@@ -16,6 +16,7 @@ live (~400 MB on the Priam CQL export, +40% peak RSS).
 
 from __future__ import annotations
 
+import errno
 import itertools
 import os
 import shutil
@@ -71,12 +72,27 @@ def write_partitions(df: DataFrame, output_dir: str, encode, *, keep_empty: bool
         shutil.rmtree(temporary)
         open(os.path.join(output_dir, "_SUCCESS"), "wb").close()
     except BaseException:
-        shutil.rmtree(output_dir if created else temporary, ignore_errors=True)
+        _remove(output_dir if created else temporary)
         for path in written:
             if os.path.exists(path):
                 os.remove(path)
         raise
     return written
+
+
+def _remove(path: str) -> None:
+    """Remove ``path`` while tasks of the failed job may still add files
+    under it: a directory that gains an entry after rmtree listed it fails
+    its rmdir, so rmtree runs again until the path is gone. Nothing can
+    recreate the tree, since attempt directories are made with mkdir under
+    ``_temporary``. Any other error ends the removal, so the job's own
+    failure is what propagates."""
+    while os.path.lexists(path):
+        try:
+            shutil.rmtree(path)
+        except OSError as e:
+            if e.errno not in (errno.ENOTEMPTY, errno.ENOENT):
+                return
 
 
 def _complete_observations(df: DataFrame) -> None:

@@ -600,3 +600,73 @@ def test_cql_export_builds_rows_inside_compacted_rows(spark, monkeypatch, ddl):
     assert aggregates == ["SortAggregate"], plan
     assert "Window" not in plan, plan
     assert len(re.findall(r"\bSort \[", plan)) <= 2, plan
+
+
+#: py4j commands building export_cql's frame on tests/fixtures/ma: about
+#: 490 with the plan built from SQL text (about 4,100 when every Column
+#: operation, Python lambda and call site was its own round trip)
+EXPORT_CQL_PY4J_BOUND = 750
+
+_MA_DDL = ("CREATE TABLE t (key text, ck0 text, owner text static, name text, "
+           "score bigint, tags list<text>, PRIMARY KEY (key, ck0))")
+
+
+def test_cql_export_plan_builds_in_few_py4j_calls(spark, monkeypatch):
+    """Building the CQL export's plan is driver time before any task runs:
+    each py4j command is a socket round trip, so the count is pinned."""
+    import gc
+    import os
+
+    from aegisthus_spark import job
+
+    class Captured(Exception):
+        pass
+
+    def capture(wide, output):
+        raise Captured
+
+    monkeypatch.setattr(job, "write_avro", capture)
+    ma = os.path.join(os.path.dirname(__file__), "fixtures", "ma")
+    client = spark.sparkContext._gateway._gateway_client
+    counts = []
+    for _ in range(2):  # the first build also loads classes on both sides
+        sent = [0]
+        send = client.send_command
+
+        def counting(*args, **kwargs):
+            sent[0] += 1
+            return send(*args, **kwargs)
+
+        gc.collect()
+        gc.disable()
+        monkeypatch.setattr(client, "send_command", counting)
+        try:
+            with pytest.raises(Captured):
+                job.export_cql(spark, [ma], _MA_DDL, "unused")
+        finally:
+            monkeypatch.setattr(client, "send_command", send)
+            gc.enable()
+        counts.append(sent[0])
+    assert counts[-1] <= EXPORT_CQL_PY4J_BOUND, counts
+
+
+@pytest.mark.parametrize("cql", [False, True], ids=["aeg_json", "cql_avro"])
+def test_job_main_runs_two_spark_jobs(spark, tmp_path, cql):
+    """The snapshot job is one pass over the inputs plus its write: two
+    Spark jobs for the aeg-JSON export and for the CQL->Avro export."""
+    import os
+
+    from aegisthus_spark import job
+
+    ma = os.path.join(os.path.dirname(__file__), "fixtures", "ma")
+    argv = ["--input-dir", ma, "--output", str(tmp_path / "out")]
+    if cql:
+        argv += ["--cql-schema", _MA_DDL]
+    sc = spark.sparkContext
+    group = f"test_job_main_runs_two_spark_jobs-{cql}"
+    sc.setJobGroup(group, group)
+    try:
+        job.main(argv)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2

@@ -147,3 +147,38 @@ def test_failed_write_leaves_nothing(spark, tmp_path):
     with pytest.raises(Exception, match="injected encode failure"):
         write_partitions(df, str(kept), _failing_encoder(True))
     assert {p.name: p.read_bytes() for p in kept.iterdir()} == before
+
+
+def test_abort_removes_files_added_during_the_abort(spark, tmp_path, monkeypatch):
+    """Tasks of a failed job may still write while the driver removes the
+    output: a file a straggler adds after the removal listed its directory
+    must not leave the directory behind. The straggler runs in a thread
+    started at the removal's first rmdir, before that rmdir, so the race
+    is the same on every run."""
+    import threading
+
+    from aegisthus_spark.sink import write_partitions
+
+    out = tmp_path / "out"
+    temporary = out / "_temporary"
+    added = []
+    real_rmdir = os.rmdir
+
+    def straggle():
+        for attempt in temporary.iterdir():
+            late = attempt / "late"
+            late.write_bytes(b"late")
+            added.append(late)
+
+    def rmdir(path, *args, **kwargs):
+        if not added and temporary.is_dir() and any(temporary.iterdir()):
+            thread = threading.Thread(target=straggle)
+            thread.start()
+            thread.join()
+        return real_rmdir(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rmdir", rmdir)
+    with pytest.raises(Exception, match="injected encode failure"):
+        write_partitions(spark.range(0, 40, 1, 4), str(out), _failing_encoder(True))
+    assert added
+    assert not out.exists()

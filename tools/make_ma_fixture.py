@@ -131,9 +131,11 @@ def main() -> None:
     _sk = name_sort_key_for_header(
         _hdr(os.path.join(FIXTURE_DIR, "gen1", "ma-1-big-Data.db"))
     )
-    lines = [
+    # sorted: collect() returns the lines in no fixed order, and the golden
+    # must come out byte for byte the same on every run
+    lines = sorted(
         r.value for r in to_aeg_json(compact(cells, name_sort_key=_sk)).collect()
-    ]
+    )
 
     import pandas as pd
     import pyarrow as pa
