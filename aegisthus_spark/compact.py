@@ -67,7 +67,7 @@ to the core count, and disabling ``useObjectHashAggregateExec`` session-wide
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 LONG_MIN = -(1 << 63)
@@ -90,30 +90,24 @@ CELLS_COLUMNS = [
 ]
 
 
-def _resolve_sort_keys(cells: DataFrame, name_sort_key, name_max_sort_key):
+def _resolve_sort_keys(cells: DataFrame, name_sort_key):
     """Shared comparator plumbing for compact()/compact_salted().
 
     Returns (cells, sort_key, max_sort_key, raw_names), the keys as column
     names. Corrupt-file sentinels ('!', null key) are filtered — they must
-    never form a merge group. Custom sort keys may be Python UDFs, which
-    cannot be evaluated inside aggregate expressions, so they materialize
-    as projections first; a caller's Column enters the plan only there.
+    never form a merge group. ``name_sort_key`` is a template from a
+    column's SQL text to its key's SQL text; it is applied to both bounds
+    in one projection, so range-tombstone bounds compare in the same
+    encoding as the cell keys, and a SQL function it calls (a registered
+    Python UDF included) runs there rather than inside the aggregate.
     """
     cells = cells.filter("partition_key IS NOT NULL")
-    if name_sort_key is not None and not isinstance(name_sort_key, Column):
-        # callable form: derive both bound encodings from one definition
-        name_max_sort_key = name_sort_key(F.col("cell_name_max"))
-        name_sort_key = name_sort_key(F.col("cell_name"))
     if name_sort_key is None:
         return cells, "cell_name", "cell_name_max", True
-    if name_max_sort_key is None:
-        # raw max bytes don't compare against an encoded min/cell key;
-        # only safe when the input carries no range tombstones
-        return cells.withColumn("_name_sk", name_sort_key), "_name_sk", "cell_name_max", False
-    # ONE withColumns call: each withColumn is a full JVM plan rebuild, and
-    # these sort-key trees are huge (r15 profile: two sequential rebuilds
-    # cost ~0.8 s of driver latency)
-    cells = cells.withColumns({"_name_sk": name_sort_key, "_name_max_sk": name_max_sort_key})
+    cells = cells.withColumns({
+        "_name_sk": F.expr(name_sort_key("cell_name")),
+        "_name_max_sk": F.expr(name_sort_key("cell_name_max")),
+    })
     return cells, "_name_sk", "_name_max_sk", False
 
 
@@ -329,7 +323,6 @@ def compact(
     cells: DataFrame,
     *,
     name_sort_key=None,
-    name_max_sort_key=None,
     max_row_size: int | None = None,
     group_by_source: bool = False,
     keep_range_tombstones: bool = False,
@@ -338,12 +331,13 @@ def compact(
 
     ``name_sort_key``: optional encoding of the configured comparator order
     (types.Comparator.sort_key); defaults to raw ``cell_name`` bytes, which
-    is correct for BytesType / UTF8Type / AsciiType comparators. Accepts
-    either a callable ``Column -> Column`` — applied to BOTH ``cell_name``
-    and ``cell_name_max`` so range-tombstone bounds compare in the same
-    encoding — or a pre-built Column over ``cell_name``, in which case
-    ``name_max_sort_key`` (the same encoding of ``cell_name_max``) is
-    required whenever range tombstones may be present.
+    is correct for BytesType / UTF8Type / AsciiType comparators. A SQL
+    text template ``str -> str`` (``functions.sortkeys.comparator_sort_key``,
+    ``modern.name_sort_key_for_header``), applied to BOTH ``cell_name`` and
+    ``cell_name_max`` so range-tombstone bounds compare in the same
+    encoding. A custom comparator registers its SQL function
+    (``spark.udf.register("my_sk", ...)``) and passes
+    ``lambda c: f"my_sk({c})"``.
 
     ``group_by_source``: trace mode — group by (key, source_path) instead of
     key alone, mirroring the reference's grouping comparator when source
@@ -357,9 +351,7 @@ def compact(
     older than an already-applied RT. Streaming snapshots set this flag and
     ``rows_to_cells`` turns the entries back into RT records.
     """
-    cells, sort_key, max_sort_key, raw_names = _resolve_sort_keys(
-        cells, name_sort_key, name_max_sort_key
-    )
+    cells, sort_key, max_sort_key, raw_names = _resolve_sort_keys(cells, name_sort_key)
     rt_raw_fields = "" if raw_names else ", cell_name AS name, cell_name_max AS max_raw"
     rt_struct = (
         f"struct({sort_key} AS min_sk, {max_sort_key} AS max_sk, ts AS ts"
@@ -547,7 +539,6 @@ def compact_salted(
     *,
     buckets: int = 16,
     name_sort_key=None,
-    name_max_sort_key=None,
     max_row_size: int | None = None,
 ) -> DataFrame:
     """Skew-safe two-stage compact for pathological (giant) partitions.
@@ -564,11 +555,10 @@ def compact_salted(
     move to the second stage, which only merges the B pre-deduplicated
     survivor arrays per key.
 
-    ``name_sort_key`` / ``name_max_sort_key``: typed-comparator encodings,
-    the same contract as :func:`compact` — callable applied to both bounds,
-    or a pre-built Column over ``cell_name`` plus ``name_max_sort_key`` for
-    the RT max bound. With a typed comparator, bucketing hashes the
-    COMPUTED sort key (not the raw bytes): LWW dedup compares sort keys, so
+    ``name_sort_key``: the typed-comparator template, the same contract as
+    :func:`compact` (applied to both bounds). With a typed comparator,
+    bucketing hashes the COMPUTED sort key (not the raw bytes): LWW dedup
+    compares sort keys, so
     two raw names with equal sort keys (a non-injective encoding) must land
     in the same bucket or stage 2 would keep both where :func:`compact`
     keeps one. Raw-name mode hashes the name itself (identity encoding).
@@ -588,9 +578,7 @@ def compact_salted(
     from ``compact()`` when duplicates or covered cells exist — so
     ``max_row_size`` is excluded from the equality contract.
     """
-    cells, sort_key, max_sort_key, raw_names = _resolve_sort_keys(
-        cells, name_sort_key, name_max_sort_key
-    )
+    cells, sort_key, max_sort_key, raw_names = _resolve_sort_keys(cells, name_sort_key)
     is_cell = F.expr(_IS_CELL)
     is_rt = F.expr(_IS_RT)
 

@@ -19,8 +19,8 @@ Differences from the reference (all improvements):
 
 Every projection is SQL text, one ``selectExpr`` string per column, so the
 plan builds in a few py4j calls per stage instead of one per Column
-operation; names enter it quoted (``functions.sqltext``). Decimal is the
-one Column-built compose: its digitization is shared with render.py and
+operation; names enter it quoted (``functions.sqltext``). The decimal
+compose shares its digitization (``functions.bignum``) with render.py and
 the sort keys.
 
 Static columns (the 0xFFFF static prefix) are read once per compacted row
@@ -33,10 +33,10 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
+from .functions.bignum import split_decimal
 from .functions.casts import _hex_to_double_sql, _hex_to_float_sql, _width_decode
-from .functions.sqltext import apply_sql, quote_ident, string_lit
+from .functions.sqltext import apply_sql, let, quote_ident, string_lit
 
 # ---------------------------------------------------------------------------
 # DDL parsing (CFMetadataUtility analog — a CREATE TABLE subset, no Cassandra)
@@ -250,21 +250,18 @@ def _split_expr(name_sql: str, max_components: int) -> str:
     )
 
 
-def compose_value(b: Column, cql_type: str) -> Column:
-    """binary Column -> typed Spark value per CQLMapper.addCqlValueToRecord
-    (the Column form of :func:`_compose`)."""
-    if cql_type == "decimal":
-        return _compose_decimal(b)
-    return apply_sql(b, lambda v: _compose(v, cql_type))
+def compose_value(col: str, cql_type: str) -> Column:
+    """The binary column named ``col`` -> typed Spark value per
+    CQLMapper.addCqlValueToRecord (:func:`_compose` applied to it)."""
+    return apply_sql(col, lambda v: _compose(v, cql_type))
 
 
 def _compose(b: str, cql_type: str) -> str:
     """SQL text: binary ``b`` -> typed value per
     CQLMapper.addCqlValueToRecord. NULL in -> NULL out (absent cells stay
-    null, CQLMapper.java:161-164). A decimal stays binary here: its decode
-    is a Column (see :func:`_compose_decimal`)."""
+    null, CQLMapper.java:161-164)."""
     if cql_type == "decimal":
-        return b
+        return let(b, _decimal_value)
     return f"CASE WHEN {b} IS NOT NULL THEN {_compose_nonnull(b, cql_type)} END"
 
 
@@ -291,21 +288,18 @@ def _compose_nonnull(b: str, cql_type: str) -> str:
     raise ValueError(f"unsupported CQL type: {cql_type}")
 
 
-def _compose_decimal(b: Column) -> Column:
+def _decimal_value(b: str) -> str:
     """i32 scale + any-width varint unscaled -> '<digits>E<-scale>', built
-    JVM-side (functions/bignum digitization, exact at any width, a Column
-    shared with render.py and the sort keys) and cast like the reference's
+    JVM-side (functions/bignum digitization, exact at any width, shared
+    with render.py and the sort keys) and cast like the reference's
     BigDecimal; numerically equal strings cast to equal decimal(38,18)
     values. Degenerate payloads (<= the 4-byte scale prefix) are NULL:
     empty matches Cassandra's DecimalSerializer null-for-empty; 1-3-byte
     blobs AND the exactly-4-byte shape (scale + EMPTY magnitude, which
     BigInteger(byte[0]) throws on) map to NULL like the other composes'
-    malformed-width behavior (pinned by test_cql)."""
-    from .functions.bignum import split_decimal
-
-    scale, sign, digits = split_decimal(b)
-    s = F.concat(sign, digits, F.lit("E"), (-scale).cast("string"))
-    return F.when(F.length(b) >= 5, s.cast("decimal(38,18)"))
+    malformed-width behavior (pinned by test_cql). NULL in -> NULL out."""
+    s = split_decimal(b, lambda scale, sign, digits: f"concat({sign}, {digits}, 'E', cast(-{scale} as string))")
+    return f"CASE WHEN length({b}) >= 5 THEN cast({s} as decimal(38,18)) END"
 
 
 # ---------------------------------------------------------------------------
@@ -413,7 +407,7 @@ def _raw(cells: str, col: CqlColumn) -> str:
 
 def _value(raw: str, col: CqlColumn) -> str:
     """SQL text: a regular or static column's typed value from its
-    ``_raw`` (decimals stay binary; see :func:`_decimals`)."""
+    ``_raw``."""
     nonempty = f"CASE WHEN size({raw}) > 0 THEN {raw} END"  # absent collection -> NULL
     if col.collection == "tuple":
         comps = _tuple_comps_expr(raw, len(col.tuple_types))
@@ -432,29 +426,6 @@ def _value(raw: str, col: CqlColumn) -> str:
         return f"map_from_entries(transform({entries}, s -> {kv}))"
     # scalars, and frozen<scalar>: identical wire format to the scalar
     return _compose(raw, col.cql_type)
-
-
-def _has_decimal(col: CqlColumn) -> bool:
-    return "decimal" in (col.cql_type, col.element_type, col.value_type, *(col.tuple_types or ()))
-
-
-def _decimals(c: Column, col: CqlColumn) -> Column:
-    """``c``, a column :func:`_value` or :func:`_compose` built, with its
-    decimal parts composed."""
-    if col.collection == "tuple":
-        for i, t in enumerate(col.tuple_types):
-            if t == "decimal":
-                c = c.withField(f"f{i}", _compose_decimal(c.getField(f"f{i}")))
-        return c
-    if col.collection in ("list", "set"):
-        return F.transform(c, _compose_decimal)
-    if col.collection == "map":
-        if col.element_type == "decimal":
-            c = F.transform_keys(c, lambda k, v: _compose_decimal(k))
-        if col.value_type == "decimal":
-            c = F.transform_values(c, lambda k, v: _compose_decimal(v))
-        return c
-    return _compose_decimal(c)
 
 
 def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
@@ -542,12 +513,6 @@ def cql_rows(compacted: DataFrame, ddl: str | CqlSchema) -> DataFrame:
         for c in schema.regulars + schema.statics
     ]
     rows = rows.selectExpr(*out)
-    decimals = {
-        c.name: _decimals(F.col(quote_ident(c.name)), c)
-        for c in schema.columns if _has_decimal(c)
-    }
-    if decimals:
-        rows = rows.withColumns(decimals)
 
     # in-partition order only: a global orderBy would add a range Exchange
     # + full sort of the entire export for cosmetic total order the sinks

@@ -1,7 +1,10 @@
 """JVM-side Spark expression library for the aegisthus type edges.
 
-Everything here returns :class:`pyspark.sql.Column` built from built-in
-functions (whole-stage-codegen friendly) — no Python UDFs in any hot path.
+Every expression here is a SQL text template — a Python function from
+operand SQL text to SQL text (``functions.sqltext``) — built from Spark's
+built-in functions, so a plan reaches the JVM in one ``F.expr`` call per
+projection and no Python UDF runs in any hot path. The public helpers
+below apply a template to a named column and return a Column.
 """
 
 from .casts import (  # noqa: F401
@@ -11,4 +14,4 @@ from .casts import (  # noqa: F401
     hex_to_int,
     hex_to_long,
 )
-from .naming import legacy_column_name_format, name_sort_key  # noqa: F401
+from .naming import legacy_column_name_format  # noqa: F401

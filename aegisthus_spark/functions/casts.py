@@ -10,35 +10,31 @@ semantics (aegisthus-pig/.../AegisthusLoadCaster.java:42-138):
 
 All decodes are pure Spark SQL expressions — the IEEE reinterpretation is
 done with exact sign/exponent/mantissa arithmetic (every step representable,
-so results are bit-identical to a native reinterpret). The numeric decodes
-are SQL text templates (``_*_sql``, ``_width_decode``), shared with the CQL
-compose; the Column functions apply them through ``sqltext.apply_sql``.
+so results are bit-identical to a native reinterpret). Each decode is a SQL
+text template (``_*_sql``, ``_width_decode``), shared with the CQL compose
+and the renders; the public functions apply one to a named column through
+``sqltext.apply_sql``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from .sqltext import apply_sql
 
 
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def _decoded_str(h: Column) -> Column:
+def _hex_to_chararray_sql(h: str) -> str:
     # binary -> string cast never throws on invalid UTF-8 (unlike ANSI
     # decode()), matching Pig's forgiving ``new String(bytes)``
-    return F.unhex(h).cast("string")
-
-
-def hex_to_chararray(col: str | Column) -> Column:
-    """hex string -> UTF-8 string (null on empty input)."""
-    h = _c(col)
-    return F.when((h.isNull()) | (F.length(h) == 0), F.lit(None).cast("string")).otherwise(
-        _decoded_str(h)
+    return (
+        f"CASE WHEN {h} IS NULL OR length({h}) = 0 THEN cast(NULL as string) "
+        f"ELSE cast(unhex({h}) as string) END"
     )
+
+
+def hex_to_chararray(col: str) -> Column:
+    """hex string -> UTF-8 string (null on empty input)."""
+    return apply_sql(col, _hex_to_chararray_sql)
 
 
 def _width_decode(h: str) -> str:
@@ -76,18 +72,20 @@ def _hex_to_long_sql(h: str) -> str:
     )
 
 
-def hex_to_long(col: str | Column) -> Column:
+def hex_to_long(col: str) -> Column:
     """Pig ``bytesToLong``: decimal-string parse first, then width decode."""
     return apply_sql(col, _hex_to_long_sql)
 
 
-def hex_to_int(col: str | Column) -> Column:
+def _hex_to_int_sql(h: str) -> str:
+    """SQL text: like long, then Java ``(int)`` low-32 wrap."""
+    m = 1 << 32
+    return f"cast((({_hex_to_long_sql(h)} + {1 << 31}) % {m} + {m}) % {m} - {1 << 31} as int)"
+
+
+def hex_to_int(col: str) -> Column:
     """Pig ``bytesToInteger``: like long, then Java ``(int)`` low-32 wrap."""
-    v = hex_to_long(col)
-    wrapped = ((v + F.lit(1 << 31)) % F.lit(1 << 32) + F.lit(1 << 32)) % F.lit(1 << 32) - F.lit(
-        1 << 31
-    )
-    return wrapped.cast("int")
+    return apply_sql(col, _hex_to_int_sql)
 
 
 #: IEEE-754 special values as SQL double literals
@@ -110,7 +108,7 @@ def _hex_to_float_sql(h: str) -> str:
     return f"CASE WHEN {h} IS NULL OR length({h}) != 8 THEN cast(NULL as double) ELSE {val} END"
 
 
-def hex_to_float(col: str | Column) -> Column:
+def hex_to_float(col: str) -> Column:
     """IEEE-754 binary32 reinterpretation of 4 bytes (8 hex chars)."""
     return apply_sql(col, _hex_to_float_sql)
 
@@ -134,6 +132,6 @@ def _hex_to_double_sql(h: str) -> str:
     return f"CASE WHEN {h} IS NULL OR length({h}) != 16 THEN cast(NULL as double) ELSE {val} END"
 
 
-def hex_to_double(col: str | Column) -> Column:
+def hex_to_double(col: str) -> Column:
     """IEEE-754 binary64 reinterpretation of 8 bytes (16 hex chars)."""
     return apply_sql(col, _hex_to_double_sql)

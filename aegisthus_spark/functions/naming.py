@@ -1,78 +1,29 @@
-"""Column-name ordering and formatting expressions.
+"""Column-name formatting: the reference's legacy escaping applied before
+name comparison (AegisthusKeySortingComparator.legacyColumnNameFormat,
+aegisthus-hadoop/.../AegisthusKeySortingComparator.java:30-32):
+whitespace/control chars -> space, then backslash and quote escaped.
 
-- ``legacy_column_name_format``: the reference's legacy escaping applied
-  before name comparison (AegisthusKeySortingComparator.legacyColumnNameFormat,
-  aegisthus-hadoop/.../AegisthusKeySortingComparator.java:30-32):
-  whitespace/control chars -> space, then backslash and quote escaped.
-- ``name_sort_key``: order-preserving sort key for a cell name under a given
-  comparator type (O4): for byte-ordered comparators the raw bytes sort
-  correctly; ``sort_columns_by_name`` mode sorts by the *stringified* name
-  (AegisthusKeySortingComparator.java:36-55).
+Cell-name ORDER under a comparator is ``functions.sortkeys``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-#: Java ``[\s\p{Cntrl}]`` — whitespace or ASCII control characters
+from .sqltext import apply_sql, string_lit
+
+#: Java ``[\\s\\p{Cntrl}]`` — whitespace or ASCII control characters
 _CNTRL_OR_SPACE = "[\\s\\x00-\\x1f\\x7f]"
 
 
-def legacy_column_name_format(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, _CNTRL_OR_SPACE, " ")
-    c = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    return F.replace(c, F.lit('"'), F.lit('\\"'))
+def legacy_name_sql(s: str) -> str:
+    """SQL text: the legacy escaping of string ``s``."""
+    backslash, quote = "\\", '"'
+    spaced = f"regexp_replace({s}, {string_lit(_CNTRL_OR_SPACE)}, ' ')"
+    escaped = f"replace({spaced}, {string_lit(backslash)}, {string_lit(backslash * 2)})"
+    return f"replace({escaped}, {string_lit(quote)}, {string_lit(backslash + quote)})"
 
 
-#: comparator types whose raw big-endian bytes already sort in logical order
-BYTE_ORDERED = {"BytesType", "UTF8Type", "AsciiType", "TimeUUIDType"}
-
-
-def name_sort_key(
-    name: str | Column,
-    *,
-    column_type: str = "BytesType",
-    sort_by_name: bool = False,
-    legacy_formatting: bool = False,
-) -> Column:
-    """Sort-key column reproducing the reference's cell-name order.
-
-    Default mode: the comparator's logical order. ``sort_by_name``: the
-    stringified name's lexicographic order (with optional legacy escaping
-    pre-compare). Returns a binary or string column usable directly in
-    ``sort_array``/``orderBy``.
-    """
-    c = F.col(name) if isinstance(name, str) else name
-    if sort_by_name:
-        # stringified per the column comparator; BytesType stringifies to hex
-        if column_type in ("UTF8Type", "AsciiType"):
-            s = F.decode(c, "UTF-8")
-        else:
-            s = F.lower(F.hex(c))
-        if legacy_formatting:
-            s = legacy_column_name_format(s)
-        return s
-    if column_type in BYTE_ORDERED:
-        return c
-    if column_type in ("LongType", "Int32Type", "TimestampType", "DateType"):
-        # flip the sign bit: big-endian two's complement becomes unsigned-
-        # lexicographically ordered (order-preserving byte encoding)
-        width = 4 if column_type == "Int32Type" else 8
-        flipped = F.conv(F.hex(c), 16, 10).cast("decimal(20,0)") + F.lit(
-            str(1 << (width * 8 - 1))
-        ).cast("decimal(20,0)")
-        return F.lpad(
-            F.conv(
-                (flipped % F.lit(str(1 << (width * 8))).cast("decimal(21,0)")).cast("string"),
-                10,
-                16,
-            ),
-            width * 2,
-            "0",
-        )
-    raise ValueError(
-        f"no JVM-side sort key for comparator {column_type}; "
-        "use compact(..., name_sort_key=<udf>) with types.sort_key instead"
-    )
+def legacy_column_name_format(col: str) -> Column:
+    """The legacy escaping of the string column named ``col``."""
+    return apply_sql(col, legacy_name_sql)

@@ -1,22 +1,20 @@
-"""JVM-side display-string renders for comparator-typed bytes (F1/K1/O4).
+"""Display-string renders for comparator-typed bytes as SQL text
+templates (F1/K1/O4).
 
 The reference renders keys/names/values through ``AbstractType.getString``
 with a hex fallback on MarshalException (JsonOutputFormat.java:92-106);
-the Python twins live in ``types.Comparator.render``. Before round 9 any
-non-BytesType render routed the whole output through a row-at-a-time
-Python UDF (the off-registry fallback the round-7 verdict flagged); the
-expressions here keep typed snapshots inside the JVM.
+the Python twins live in ``types.Comparator.render``. Each template here
+maps operand SQL text to SQL text, so a typed snapshot's whole projection
+reaches the JVM as one expression string and stays inside the JVM.
 
-Byte-parity contract: for every input, ``type_render(col, T)`` must equal
+Byte-parity contract: for every input, ``type_render(b, T)`` must equal
 ``types.get(T).render(bytes)`` — including the hex fallback on malformed
 widths / invalid encodings / out-of-range timestamps (the Python twin's
-``except: return b.hex()``). Since round 10 this covers the FULL
-registered comparator set: FloatType/DoubleType render through
-``cast(... as string)`` (Java ``toString``), with the Python twin a
-faithful OpenJDK FloatingDecimal port (functions/javafloat.py) — the old
-Python ``repr`` spec was itself a divergence from the reference's
-``String.valueOf``. Only custom (off-registry) marshal classes return
-None from :func:`comparator_render`.
+``except: return b.hex()``). This covers the FULL registered comparator
+set: FloatType/DoubleType render through ``cast(... as string)`` (Java
+``toString``), with the Python twin a faithful OpenJDK FloatingDecimal
+port (functions/javafloat.py). A marshal class with no template (a
+custom, off-registry class) raises ValueError naming it.
 
 Timestamp renders assume the session timezone is UTC (the repo session
 factory and the driver entry both pin ``spark.sql.session.timeZone``);
@@ -25,12 +23,11 @@ factory and the driver entry both pin ``spark.sql.session.timeZone``);
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .bignum import is_negative_hex, mag_digits, negative_mag_hex, normalize_hex
-
-_REST = (1 << 31) - 1
+from ..types import _split_top_level
+from .bignum import COMPLEMENT, is_negative_hex, normalize_hex, signed_digits, split_decimal
+from .casts import _hex_to_double_sql, _hex_to_float_sql
+from .sqltext import REST, lam, let, string_lit
+from .sortkeys import _composite_positions, _strip_pkg, _u16_at
 
 #: python datetime range in epoch millis: 0001-01-01T00:00:00Z ..
 #: 9999-12-31T23:59:59.999Z — outside it datetime.fromtimestamp raises
@@ -39,43 +36,31 @@ _TS_MIN_MS = -62135596800000
 _TS_MAX_MS = 253402300799999
 
 
-def _hex_fallback(b: Column) -> Column:
-    return F.lower(F.hex(b))
+def _hex_fallback(b: str) -> str:
+    return f"lower(hex({b}))"
 
 
-def _signed_long(h: Column) -> Column:
+def _signed_long(h: str) -> str:
     """Hex (<= 16 digits) big-endian two's-complement -> exact signed
     long. Negatives go through the digit complement: value = -(~u + 1),
     and the complement's lead digit is < '8', so it always fits a signed
     long — NO double/decimal hop anywhere (cast(double AS decimal) is
     NOT exact: Spark round-trips through a 17-significant-digit string,
     probed at 2^64 -> ...552000, off by 384)."""
-    compl = F.translate(h, "0123456789ABCDEF", "FEDCBA9876543210")
-    return F.when(
-        is_negative_hex(h),
-        -(F.conv(compl, 16, 10).cast("long")) - F.lit(1).cast("long"),
-    ).otherwise(F.conv(h, 16, 10).cast("long"))
-
-
-def _signed_str(b: Column) -> Column:
-    """Fixed-width (<= 8 bytes) big-endian two's-complement -> exact
-    decimal string."""
-    return _signed_long(F.hex(b)).cast("string")
-
-
-def _uuid_str(b: Column) -> Column:
-    lh = F.lower(F.hex(b))
-    return F.concat_ws(
-        "-",
-        F.substring(lh, 1, 8),
-        F.substring(lh, 9, 4),
-        F.substring(lh, 13, 4),
-        F.substring(lh, 17, 4),
-        F.substring(lh, 21, 12),
+    return (
+        f"CASE WHEN {is_negative_hex(h)} "
+        f"THEN -cast(conv(translate({h}, {COMPLEMENT}), 16, 10) as bigint) - cast(1 as bigint) "
+        f"ELSE cast(conv({h}, 16, 10) as bigint) END"
     )
 
 
-def _timestamp_str(b: Column) -> Column:
+def _uuid_str(b: str) -> str:
+    lh = f"lower(hex({b}))"
+    parts = ((1, 8), (9, 4), (13, 4), (17, 4), (21, 12))
+    return "concat_ws('-', " + ", ".join(f"substring({lh}, {p}, {n})" for p, n in parts) + ")"
+
+
+def _timestamp_str(b: str) -> str:
     """TimestampType/DateType: epoch-millis long (the Python twin accepts
     ANY width via int.from_bytes — a 9-byte value with redundant sign
     padding still renders, hence the minimal-form normalize before the
@@ -83,221 +68,178 @@ def _timestamp_str(b: Column) -> Column:
     year unpadded exactly like CPython's strftime on glibc ('999-12-31',
     '1-01-01' — probed, not assumed); out-of-range years make the Python
     twin raise, so those take the hex fallback."""
-    nh = normalize_hex(F.hex(b))
-    ms = F.when(F.length(nh) == 0, F.lit(0).cast("long")).otherwise(
-        _signed_long(nh)
-    )
-    # an 8-byte value whose unsigned conv tops 2^63 is negative and the
-    # complement path keeps it exact; >16 normalized hex digits can't
-    # fit a long at all, and the Python twin raises there anyway
-    in_range = (F.length(nh) <= 16) & (ms >= _TS_MIN_MS) & (ms <= _TS_MAX_MS)
-    rendered = F.date_format(F.timestamp_millis(ms), "y-MM-dd HH:mm:ssZ")
-    return F.when(in_range, rendered).otherwise(_hex_fallback(b))
+
+    def with_nh(nh: str) -> str:
+        ms = f"CASE WHEN length({nh}) = 0 THEN cast(0 as bigint) ELSE {_signed_long(nh)} END"
+        # >16 normalized hex digits can't fit a long at all (the Python
+        # twin raises there anyway); the millis are bound only past that
+        # guard, since their conv would overflow
+        rendered = let(ms, lambda m: (
+            f"CASE WHEN {m} >= {_TS_MIN_MS} AND {m} <= {_TS_MAX_MS} "
+            f"THEN date_format(timestamp_millis({m}), 'y-MM-dd HH:mm:ssZ') "
+            f"ELSE {_hex_fallback(b)} END"
+        ))
+        return f"CASE WHEN length({nh}) <= 16 THEN {rendered} ELSE {_hex_fallback(b)} END"
+
+    return let(normalize_hex(f"hex({b})"), with_nh)
 
 
-def _decimal_digits_fmt(sign: Column, s: Column, scale: Column) -> Column:
+def _decimal_digits_fmt(sign: str, s: str, scale: str) -> str:
     """(sign prefix, magnitude digit string, i32 scale) -> Java
     BigDecimal.toString / Cowlishaw to-scientific-string (the exact
     algorithm in types._render_decimal): plain notation when scale >= 0
     and adjusted >= -6, else scientific. In the plain zero-pad branch
     adjusted >= -6 bounds scale - len(s) <= 5, so a 5-zero literal
     substring replaces an unbounded repeat()."""
-    n = F.length(s)
-    adjusted = (n - F.lit(1)).cast("long") - scale
-    plain = (scale >= 0) & (adjusted >= -6)
-    int_split = F.concat(
-        F.substring(s, F.lit(1), (n - scale).cast("int")),
-        F.lit("."),
-        F.substring(s, (n - scale + F.lit(1)).cast("int"), F.lit(_REST)),
+    n = f"length({s})"
+    adjusted = f"(cast({n} - 1 as bigint) - {scale})"
+    int_split = (
+        f"concat(substring({s}, 1, cast({n} - {scale} as int)), '.', "
+        f"substring({s}, cast({n} - {scale} + 1 as int), {REST}))"
     )
-    frac_only = F.concat(
-        F.lit("0."),
-        F.substring(F.lit("00000"), F.lit(1), (scale - n).cast("int")),
-        s,
+    frac_only = f"concat('0.', substring('00000', 1, cast({scale} - {n} as int)), {s})"
+    plain = f"CASE WHEN {scale} = 0 THEN {s} WHEN {n} > {scale} THEN {int_split} ELSE {frac_only} END"
+    mant = (
+        f"concat(substring({s}, 1, 1), "
+        f"CASE WHEN {n} > 1 THEN concat('.', substring({s}, 2, {REST})) ELSE '' END)"
     )
-    plain_str = (
-        F.when(scale == 0, s)
-        .when(n > scale, int_split)
-        .otherwise(frac_only)
+    sci = (
+        f"concat({mant}, 'E', CASE WHEN {adjusted} >= 0 THEN '+' ELSE '' END, "
+        f"cast({adjusted} as string))"
     )
-    mant = F.concat(
-        F.substring(s, 1, 1),
-        F.when(n > 1, F.concat(F.lit("."), F.substring(s, F.lit(2), F.lit(_REST))))
-        .otherwise(F.lit("")),
+    return (
+        f"concat({sign}, CASE WHEN {scale} >= 0 AND {adjusted} >= -6 "
+        f"THEN {plain} ELSE {sci} END)"
     )
-    sci_str = F.concat(
-        mant,
-        F.lit("E"),
-        F.when(adjusted >= 0, F.lit("+")).otherwise(F.lit("")),
-        adjusted.cast("string"),
-    )
-    return F.concat(sign, F.when(plain, plain_str).otherwise(sci_str))
 
 
-def _decimal_str(b: Column) -> Column:
+def _decimal_str(b: str) -> str:
     """DecimalType: i32 scale + any-width varint unscaled -> exact
     BigDecimal.toString. Inputs shorter than the 4-byte scale prefix
     follow the Python twin exactly: scale is the signed int of whatever
     prefix bytes exist (signed at its OWN width) and the unscaled is 0."""
-    from .bignum import split_decimal
-
-    full_scale, sign, digits = split_decimal(b)
-    short_scale = F.when(F.length(b) == 0, F.lit(0).cast("long")).otherwise(
-        _signed_long(F.hex(F.substring(b, 1, 4)))
+    full = split_decimal(b, lambda scale, sign, digits: _decimal_digits_fmt(sign, digits, scale))
+    short_scale = (
+        f"CASE WHEN length({b}) = 0 THEN cast(0 as bigint) "
+        f"ELSE {_signed_long(f'hex(substring({b}, 1, 4))')} END"
     )
-    return F.when(
-        F.length(b) >= 4,
-        _decimal_digits_fmt(sign, digits, full_scale),
-    ).otherwise(_decimal_digits_fmt(F.lit(""), F.lit("0"), short_scale))
+    return (
+        f"CASE WHEN length({b}) >= 4 THEN {full} "
+        f"ELSE {_decimal_digits_fmt(string_lit(''), string_lit('0'), short_scale)} END"
+    )
 
 
-def type_render(b: Column, marshal: str) -> Column | None:
-    """binary -> AbstractType.getString display string (byte parity with
-    ``types.get(marshal).render``), or None when the type has no exact
-    JVM twin. NULL input renders as '' like the Python twin."""
-    from .sortkeys import _strip_pkg
-
+def type_render(b: str, marshal: str) -> str:
+    """SQL text: binary ``b`` -> AbstractType.getString display string
+    (byte parity with ``types.get(marshal).render``). NULL input renders
+    as '' like the Python twin. Raises ValueError for a marshal class
+    with no template."""
     t = _strip_pkg(marshal.strip())
     if t.startswith("ReversedType(") and t.endswith(")"):
         # same rendering as the inner type (types.ReversedComparator)
         return type_render(b, t[len("ReversedType(") : -1])
-    body = _type_render_nonnull(b, t)
-    if body is None:
-        return None
-    return F.when(b.isNull(), F.lit("")).otherwise(body)
-
-
-def _type_render_nonnull(b: Column, t: str) -> Column | None:
     if t == "BytesType":
-        return _hex_fallback(b)
-    if t == "UTF8Type":
-        return F.when(F.is_valid_utf8(b), b.cast("string")).otherwise(
-            _hex_fallback(b)
+        return _hex_fallback(f"coalesce({b}, x'')")
+    if t not in _NONNULL:
+        raise ValueError(
+            f"no render template for comparator {marshal!r}; add one in "
+            "functions/render.py beside its aegisthus_spark.types twin"
         )
-    if t == "AsciiType":
-        return F.when(
-            F.hex(b).rlike("^(?:[0-7][0-9A-F])*$"), b.cast("string")
-        ).otherwise(_hex_fallback(b))
-    if t == "LongType":
-        return F.when(F.length(b) == 8, _signed_str(b)).otherwise(
-            _hex_fallback(b)
-        )
-    if t == "Int32Type":
-        return F.when(F.length(b) == 4, _signed_str(b)).otherwise(
-            _hex_fallback(b)
-        )
-    if t == "BooleanType":
-        first = F.hex(F.substring(b, 1, 1))
-        return F.when(
-            (F.length(b) == 0) | (first == "00"), F.lit("false")
-        ).otherwise(F.lit("true"))
-    if t in ("UUIDType", "TimeUUIDType", "LexicalUUIDType"):
-        # the Python twin renders every 16-byte value via uuid.UUID and
-        # hex-falls-back on any other width
-        return F.when(F.length(b) == 16, _uuid_str(b)).otherwise(
-            _hex_fallback(b)
-        )
-    if t in ("TimestampType", "DateType"):
-        return _timestamp_str(b)
-    if t == "IntegerType":
-        from .bignum import signed_digits
-
-        return signed_digits(F.hex(b))
-    if t == "DecimalType":
-        return _decimal_str(b)
-    if t == "FloatType":
-        # cast(float as string) IS Java Float.toString; the Python twin
-        # (functions/javafloat.py) reproduces it bit-for-bit — pinned by
-        # the seeded 6k-bit-pattern fuzz in tests/test_render.py
-        # (test_float_double_render_jvm_parity_fuzz) every run, plus a
-        # one-off 183k-value sweep at adoption (round 10)
-        from .casts import hex_to_float
-
-        return F.when(
-            F.length(b) == 4,
-            hex_to_float(F.hex(b)).cast("float").cast("string"),
-        ).otherwise(_hex_fallback(b))
-    if t == "DoubleType":
-        from .casts import hex_to_double
-
-        return F.when(
-            F.length(b) == 8, hex_to_double(F.hex(b)).cast("string")
-        ).otherwise(_hex_fallback(b))
-    return None  # custom marshal classes only
+    return let(b, lambda v: f"CASE WHEN {v} IS NULL THEN '' ELSE {_NONNULL[t](v)} END")
 
 
-def composite_render(
-    name: Column, component_types: list[str], *, unroll_extra: int = 2
-) -> Column | None:
-    """2.x composite cell name -> ':'-joined per-component display
-    strings (CompositeComparator.render). Declared components render
-    through their comparators; everything past them (CQL column name,
-    collection cell path — the Python twin allows unlimited extras) is
-    BytesType hex: ``unroll_extra`` levels are unrolled, any remaining
-    tail is consumed by a bounded aggregate loop so parity holds at ANY
-    component count. Returns None if a declared component type has no
-    JVM render."""
-    from .sortkeys import _strip_pkg, _u16_at
-
-    types_ = [_strip_pkg(t) for t in component_types] + ["BytesType"] * unroll_extra
-    total = F.length(name)
-    is_static = (total >= 2) & (
-        F.hex(F.substring(name, F.lit(1), F.lit(2))) == "FFFF"
+def _fixed_or_hex(width: int, render):
+    return lambda b: (
+        f"CASE WHEN length({b}) = {width} THEN {render(b)} ELSE {_hex_fallback(b)} END"
     )
-    pos = F.when(is_static, F.lit(3)).otherwise(F.lit(1)).cast("int")
-    # collect per-component renders into an array and array_join(':') at
-    # the end — a running string + first-separator flag would reference
-    # itself twice per level (the exponential-tree trap)
-    acc = F.array().cast("array<string>")
-    for t in types_:
-        ln = _u16_at(name, pos)
-        comp = F.substring(name, pos + F.lit(2), ln)
-        rendered = type_render(comp, t)
-        if rendered is None:
-            return None
+
+
+def _signed_str(b: str) -> str:
+    """Fixed-width (<= 8 bytes) two's complement -> exact decimal string."""
+    return f"cast({_signed_long(f'hex({b})')} as string)"
+
+
+#: marshal class -> render template of a non-null operand
+_NONNULL = {
+    "UTF8Type": lambda b: (
+        f"CASE WHEN is_valid_utf8({b}) THEN cast({b} as string) ELSE {_hex_fallback(b)} END"
+    ),
+    "AsciiType": lambda b: (
+        f"CASE WHEN hex({b}) RLIKE '^(?:[0-7][0-9A-F])*$' THEN cast({b} as string) "
+        f"ELSE {_hex_fallback(b)} END"
+    ),
+    "LongType": _fixed_or_hex(8, _signed_str),
+    "Int32Type": _fixed_or_hex(4, _signed_str),
+    "BooleanType": lambda b: (
+        f"CASE WHEN length({b}) = 0 OR hex(substring({b}, 1, 1)) = '00' THEN 'false' ELSE 'true' END"
+    ),
+    # the Python twin renders every 16-byte value via uuid.UUID and
+    # hex-falls-back on any other width
+    **dict.fromkeys(("UUIDType", "TimeUUIDType", "LexicalUUIDType"), _fixed_or_hex(16, _uuid_str)),
+    **dict.fromkeys(("TimestampType", "DateType"), _timestamp_str),
+    "IntegerType": lambda b: signed_digits(f"hex({b})"),
+    "DecimalType": _decimal_str,
+    # cast(float as string) IS Java Float.toString; the Python twin
+    # (functions/javafloat.py) reproduces it bit-for-bit — pinned by the
+    # seeded 6k-bit-pattern fuzz in tests/test_render.py
+    # (test_float_double_render_jvm_parity_fuzz) every run, plus a
+    # one-off 183k-value sweep at adoption (round 10)
+    "FloatType": _fixed_or_hex(
+        4, lambda b: f"cast(cast({_hex_to_float_sql(f'hex({b})')} as float) as string)"
+    ),
+    "DoubleType": _fixed_or_hex(8, lambda b: f"cast({_hex_to_double_sql(f'hex({b})')} as string)"),
+}
+
+
+def composite_render(name: str, component_types: list[str], *, unroll_extra: int = 2) -> str:
+    """SQL text: 2.x composite cell name -> ':'-joined per-component
+    display strings (CompositeComparator.render). Declared components
+    render through their comparators; everything past them (CQL column
+    name, collection cell path — the Python twin allows unlimited
+    extras) is BytesType hex: ``unroll_extra`` levels are unrolled, any
+    remaining tail is consumed by a bounded aggregate loop so parity
+    holds at ANY component count."""
+    types_ = [_strip_pkg(t) for t in component_types] + ["BytesType"] * unroll_extra
+    levels = len(types_)
+
+    def rendered(n: str, ps: str) -> str:
+        total = f"length({n})"
         # `pos <= total`, not `pos + 1 <= total`: the Python twin's split
         # reads a DANGLING single trailing byte as a (short) length and
         # emits one more (empty) component — byte parity requires the
-        # same here (review-caught divergence on malformed composites)
-        has = pos <= total
-        acc = F.when(has, F.array_append(acc, rendered)).otherwise(acc)
-        pos = (pos + F.lit(3) + ln).cast("int")
-    # generic hex tail: components past the unrolled levels, unlimited
-    # count (each consumes >= 3 bytes, so (total - pos)/3 + 1 bounds it)
-    n_tail = F.greatest(
-        ((total - pos) / F.lit(3) + F.lit(1)).cast("int"), F.lit(0)
-    )
-    tail = F.aggregate(
-        F.when(n_tail < 1, F.array().cast("array<int>")).otherwise(
-            F.sequence(F.lit(1), n_tail)
-        ),
-        F.struct(pos.alias("p"), acc.alias("s")),
-        lambda a, _i: F.when(
-            a["p"] <= total,  # same dangling-byte rule as the unrolled part
-            F.struct(
-                (a["p"] + F.lit(3) + _u16_at(name, a["p"])).cast("int").alias("p"),
-                F.array_append(
-                    a["s"],
-                    F.lower(
-                        F.hex(
-                            F.substring(
-                                name, a["p"] + F.lit(2), _u16_at(name, a["p"])
-                            )
-                        )
-                    ),
-                ).alias("s"),
-            ),
-        ).otherwise(a),
-        lambda a: F.array_join(a["s"], ":"),
-    )
-    return F.when(name.isNull(), F.lit("")).otherwise(tail)
+        # same here. array_join skips the NULLs of absent components
+        parts = [
+            f"CASE WHEN {ps}[{i}] <= {total} THEN "
+            f"{type_render(f'substring({n}, {ps}[{i}] + 2, {ps}[{i + 1}] - {ps}[{i}] - 3)', t)} END"
+            for i, t in enumerate(types_)
+        ]
+
+        # generic hex tail: components past the unrolled levels, unlimited
+        # count (each consumes >= 3 bytes, so (total - pos)/3 + 1 bounds it)
+        def step(a: str, _i: str) -> str:
+            ln = _u16_at(n, f"{a}.p")
+            return (
+                f"CASE WHEN {a}.p <= {total} THEN struct(cast({a}.p + 3 + {ln} as int) AS p, "
+                f"array_append({a}.s, lower(hex(substring({n}, {a}.p + 2, {ln})))) AS s) ELSE {a} END"
+            )
+
+        end = f"{ps}[{levels}]"
+        n_tail = f"greatest(cast(({total} - {end}) / 3 + 1 as int), 0)"
+        unrolled, colon = "array(" + ", ".join(parts) + ")", string_lit(":")
+        tail = (
+            f"aggregate(CASE WHEN {n_tail} < 1 THEN cast(array() as array<int>) "
+            f"ELSE sequence(1, {n_tail}) END, "
+            f"struct({end} AS p, cast(array() as array<string>) AS s), {lam(step, 2)}, "
+            f"{lam(lambda a: f'array_join(concat({unrolled}, {a}.s), {colon})')})"
+        )
+        return f"CASE WHEN {n} IS NULL THEN '' ELSE {tail} END"
+
+    return let(name, lambda n: let(_composite_positions(n, levels), lambda ps: rendered(n, ps)))
 
 
-def comparator_render(col: Column, spec: str) -> Column | None:
-    """Display-string render for a full comparator spec (simple or
-    CompositeType); None when any component lacks an exact JVM twin."""
-    from .sortkeys import _split_top_level, _strip_pkg
-
+def comparator_render(col: str, spec: str) -> str:
+    """SQL text: display-string render for a full comparator spec (simple
+    or CompositeType); ValueError when a component has no template."""
     s = spec.strip()
     short = _strip_pkg(s.split("(", 1)[0])
     if short == "CompositeType":
@@ -312,14 +254,15 @@ def comparator_render(col: Column, spec: str) -> Column | None:
 _JSON_SHORT = {0x08: "\\b", 0x09: "\\t", 0x0A: "\\n", 0x0C: "\\f", 0x0D: "\\r"}
 
 
-def json_escape(col: Column) -> Column:
-    """Exact ``json.dumps(s, ensure_ascii=False)`` body escaping (without
-    the surrounding quotes): backslash, double quote, and the 32 control
-    chars — a linear chain of literal replaces, byte parity with the
-    Python twin's Jackson-compact rendering."""
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
+def json_escape(s: str) -> str:
+    """SQL text: exact ``json.dumps(s, ensure_ascii=False)`` body escaping
+    (without the surrounding quotes): backslash, double quote, and the 32
+    control chars — a linear chain of literal replaces, byte parity with
+    the Python twin's Jackson-compact rendering."""
+    backslash, quote = "\\", '"'
+    out = f"replace({s}, {string_lit(backslash)}, {string_lit(backslash * 2)})"
+    out = f"replace({out}, {string_lit(quote)}, {string_lit(backslash + quote)})"
     for c in range(0x20):
         esc = _JSON_SHORT.get(c, f"\\u{c:04x}")
-        out = F.replace(out, F.lit(chr(c)), F.lit(esc))
+        out = f"replace({out}, chr({c}), {string_lit(esc)})"
     return out

@@ -1,12 +1,14 @@
-"""JVM-side order-preserving sort keys for typed cell names (F1/J2/A3).
+"""Order-preserving sort keys for typed cell names as SQL text templates
+(F1/J2/A3).
 
 ``compact()`` compares cell names and range-tombstone bounds as raw bytes
 by default — correct only for byte-ordered comparators. For every other
 comparator the reference used Cassandra's ``AbstractType.compare``
 (CassSSTableReducer.java:142-153 via the configured comparator); this
-module reproduces that order as a *pure Spark SQL expression* so typed
-compactions stay inside whole-stage codegen (the Python-UDF fallback in
-``types.Comparator.sort_key`` costs a BatchEvalPython exchange per stage).
+module reproduces that order as a pure Spark SQL expression, built as
+text (a Python function from the name's SQL text to the key's SQL text)
+so typed compactions stay inside the JVM and the key reaches it in one
+``F.expr`` call. ``types.Comparator.sort_key`` is the Python twin.
 
 Encoding (string, ASCII, lexicographically order-preserving):
 
@@ -55,10 +57,12 @@ lexicographic order equals the comparator's):
   mantissa digits (see ``_decimal_hex``) — exact at ANY unscaled width
   via the ``functions.bignum`` higher-order-function digitization.
 
-Every marshal class the repo's Python comparators know is now JVM-side;
-``supported`` returning False (an unknown/custom comparator) falls back
-to the Python ``types.sort_key`` UDF with a clear error from
-``comparator_sort_key``.
+Every marshal class the repo's Python comparators know has a template;
+an unknown/custom comparator (``supported`` returns False) or a composite
+past the 12-level unroll raises ValueError naming it. A caller with
+such a comparator registers its own SQL function
+(``spark.udf.register("my_sk", ...)``) and passes
+``name_sort_key=lambda c: f"my_sk({c})"`` to ``compact()``.
 
 Collection cell paths compare as raw bytes by DEFAULT; pass
 ``path_types_by_column`` (which ``modern.name_sort_key_for_header`` does
@@ -74,17 +78,9 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-#: memoized composite sort-key Columns, keyed by (input expression string,
-#: component types, n_extra, collection path map) — see composite_sort_key.
-#: Unresolved expression trees only; never data, never resolved plans.
-#: Bounded (r16): FIFO-evicted at _COMPOSITE_SK_CACHE_MAX — comparator
-#: schemas per deployment are few, but a long-lived session fed
-#: adversarial many-schema input must not grow driver memory unboundedly.
-_COMPOSITE_SK_CACHE: dict = {}
-_COMPOSITE_SK_CACHE_MAX = 128
+from ..types import _split_top_level
+from .bignum import is_negative_hex, mag_digits, negative_mag_hex, normalize_hex
+from .sqltext import REST, lam, let
 
 #: eoc byte -> order char (see module docstring)
 _EOC_MINUS = "!"
@@ -98,7 +94,10 @@ _EOC_PLUS = "Z"
 #: complement would keep mantissa-prefix pairs (5 vs 5.1) in ASC order
 #: inside a DESC clustering. The Python twin gets this for free by
 #: inverting every BYTE; the string encoding needs the explicit swap.
-_HEX_COMPLEMENT = ("0123456789ABCDEF!Z", "FEDCBA9876543210Z!")
+_HEX_COMPLEMENT = "'0123456789ABCDEF!Z', 'FEDCBA9876543210Z!'"
+
+#: the most components a composite key unrolls
+MAX_LEVELS = 12
 
 
 def _strip_pkg(name: str) -> str:
@@ -113,14 +112,30 @@ def _strip_pkg(name: str) -> str:
     return name[:i].rsplit(".", 1)[-1] + name[i:]
 
 
-def _u16_at(name: Column, pos: Column) -> Column:
-    return F.coalesce(
-        F.conv(F.hex(F.substring(name, pos, F.lit(2))), 16, 10).cast("int"),
-        F.lit(0),
-    )
+def _u16_at(name: str, pos: str) -> str:
+    return f"coalesce(cast(conv(hex(substring({name}, {pos}, 2)), 16, 10) as int), 0)"
 
 
-def _malformed_guard(comp: Column, width: int, out: Column) -> Column:
+def _composite_positions(name: str, levels: int) -> str:
+    """SQL text: the 1-based start of each of ``levels`` 2.x composite
+    components (u16 length, value, eoc byte) of ``name``, plus the end,
+    as an array<int>; past the name's end a component reads as length 0
+    (positions then advance UNCONDITIONALLY and each level's own test
+    gates its use). Start 3 skips the 0xFFFF static prefix. One array
+    read by index keeps the key linear in the level count: each
+    position computed from the previous one's text would reference it
+    twice, a 2^levels text."""
+    static = f"length({name}) >= 2 AND hex(substring({name}, 1, 2)) = 'FFFF'"
+
+    def step(acc: str, i: str) -> str:
+        pos = f"{acc}[{i} - 1]"
+        return f"array_append({acc}, cast({pos} + 3 + {_u16_at(name, pos)} as int))"
+
+    start = f"cast(CASE WHEN {static} THEN 3 ELSE 1 END as int)"
+    return f"aggregate(sequence(1, {levels}), array({start}), {lam(step, 2)})"
+
+
+def _malformed_guard(comp: str, width: int, out: str) -> str:
     """Fixed-width transforms are only injective at their expected width;
     a wrong-length value must never COLLIDE with a well-formed key (LWW
     dedups on the SORT KEY, compact._lww, so a collision would
@@ -128,16 +143,17 @@ def _malformed_guard(comp: Column, width: int, out: Column) -> Column:
     prefix (0x2E, below every hex digit) + raw hex: deterministic,
     injective, sorts before well-formed values of the same position."""
     return (
-        F.when(F.length(comp) == 0, F.lit(""))
-        .when(F.length(comp) == width, out)
-        .otherwise(F.concat(F.lit("."), F.hex(comp)))
+        f"CASE WHEN length({comp}) = 0 THEN '' WHEN length({comp}) = {width} THEN {out} "
+        f"ELSE concat('.', hex({comp})) END"
     )
 
 
-_REST = (1 << 31) - 1  # substring length literal: "to the end"
+def _flip_byte_hex(byte: str) -> str:
+    """Two hex digits of one byte with its sign bit flipped."""
+    return f"lpad(conv(cast((cast(conv(hex({byte}), 16, 10) as int) + 128) % 256 as string), 10, 16), 2, '0')"
 
 
-def _flip_first_byte_hex(comp: Column) -> Column:
+def _flip_first_byte_hex(comp: str) -> str:
     """hex(comp) with the FIRST byte's sign bit flipped — the string-wise
     form of the two's-complement sign flip (identical order for any
     fixed-width signed value, same construction as the Python
@@ -146,22 +162,14 @@ def _flip_first_byte_hex(comp: Column) -> Column:
     expression is a fraction of the size of the old width-specific
     decimal-conv arithmetic — which showed up as whole seconds of
     analysis/codegen time per query on ma inputs."""
-    first = F.conv(F.hex(F.substring(comp, 1, 1)), 16, 10).cast("int")
-    flipped = (first + F.lit(128)) % F.lit(256)
-    return F.concat(
-        F.lpad(F.conv(flipped.cast("string"), 10, 16), 2, "0"),
-        F.hex(F.substring(comp, F.lit(2), F.lit(_REST))),
-    )
+    return f"concat({_flip_byte_hex(f'substring({comp}, 1, 1)')}, hex(substring({comp}, 2, {REST})))"
 
 
-def _flip_sign_hex(comp: Column, width: int) -> Column:
-    """Signed big-endian fixed-width -> sign-flipped hex (order-preserving)."""
-    return F.when(F.length(comp) == 0, F.lit("")).otherwise(
-        _flip_first_byte_hex(comp)
-    )
+def _nonempty(comp: str, key: str) -> str:
+    return f"CASE WHEN length({comp}) = 0 THEN '' ELSE {key} END"
 
 
-def _ieee_hex(comp: Column, width: int) -> Column:
+def _ieee_hex(comp: str) -> str:
     """IEEE-754 float/double -> total-order hex, string-wise: negative
     (sign bit set: first hex digit >= '8') -> complement every digit,
     positive -> flip the sign bit. The two branches land in disjoint
@@ -170,20 +178,36 @@ def _ieee_hex(comp: Column, width: int) -> Column:
     this is IEEE total order, NOT Float.compare — sign-bit NaN payloads
     sort below -Infinity instead of joining positive NaNs above
     +Infinity (see the module docstring)."""
-    h = F.hex(comp)
-    negative = F.substring(h, 1, 1).isin(*"89ABCDEF")
-    return F.when(F.length(comp) == 0, F.lit("")).otherwise(
-        F.when(negative, F.translate(h, *_HEX_COMPLEMENT)).otherwise(
-            _flip_first_byte_hex(comp)
-        )
+    h = f"hex({comp})"
+    return _nonempty(
+        comp,
+        f"CASE WHEN {is_negative_hex(h)} THEN translate({h}, {_HEX_COMPLEMENT}) "
+        f"ELSE {_flip_first_byte_hex(comp)} END",
     )
 
 
-def _timeuuid_key(h: Column) -> Column:
+def _timeuuid_key(h: str) -> str:
     """hex(uuid) -> embedded v1 timestamp order (time_hi, time_mid,
     time_low) — same reorder as cql._timeuuid_sort_key."""
-    return F.concat(
-        F.substring(h, 13, 4), F.substring(h, 9, 4), F.substring(h, 1, 8)
+    return f"concat(substring({h}, 13, 4), substring({h}, 9, 4), substring({h}, 1, 8))"
+
+
+def _uuid_key(comp: str) -> str:
+    h = f"hex({comp})"
+    ver = f"substring({h}, 13, 1)"
+    return _malformed_guard(
+        comp, 16, f"concat({ver}, CASE WHEN {ver} = '1' THEN {_timeuuid_key(h)} ELSE '' END, {h})"
+    )
+
+
+def _lexical_uuid_key(comp: str) -> str:
+    """UUID.compareTo: MSB then LSB as SIGNED longs -> flip the sign bit
+    of byte 0 and byte 8 (the Python _sk_lexuuid twin)."""
+    return _malformed_guard(
+        comp,
+        16,
+        f"concat({_flip_first_byte_hex(f'substring({comp}, 1, 8)')}, "
+        f"{_flip_byte_hex(f'substring({comp}, 9, 1)')}, hex(substring({comp}, 10, 7)))",
     )
 
 
@@ -216,12 +240,7 @@ def supported(marshal: str) -> bool:
     t = _strip_pkg(marshal.strip())
     if t.startswith("ReversedType(") and t.endswith(")"):
         return supported(t[len("ReversedType(") : -1])
-    return (
-        t in _BYTE_ORDERED
-        or t in _SIGNED_WIDTH
-        or t in ("FloatType", "DoubleType", "UUIDType", "TimeUUIDType",
-                 "LexicalUUIDType", "IntegerType", "DecimalType")
-    )
+    return t in _BYTE_ORDERED or t in _SIGNED_WIDTH or t in _KEYS
 
 
 _U32_MAX = (1 << 32) - 1
@@ -236,12 +255,12 @@ _ADJ_SHIFT = 1 << 36
 #: char): hex digits invert pairwise and the mantissa terminator '!'
 #: (below every digit — a shorter mantissa sorts before its extensions)
 #: maps to 'Z' (above them — inverted for negatives). One translate over
-#: the shared positive-form body keeps the expression tree small: the
-#: digits/adjusted subtrees are referenced once, not once per branch.
-_BODY_COMPLEMENT = ("0123456789ABCDEF!", "FEDCBA9876543210Z")
+#: the shared positive-form body keeps the expression small: the
+#: digits/adjusted subexpressions are referenced once, not once per branch.
+_BODY_COMPLEMENT = "'0123456789ABCDEF!', 'FEDCBA9876543210Z'"
 
 
-def _varint_hex(comp: Column) -> Column:
+def _varint_hex(comp: str) -> str:
     """Cassandra IntegerType (varint: variable-length big-endian two's
     complement, compared numerically) -> order-preserving string key,
     pure string ops at ANY width (no 64-bit conv bound):
@@ -259,31 +278,22 @@ def _varint_hex(comp: Column) -> Column:
     negative) sort first. Zero ('00', length 1) lands below every
     positive of length 1 ('01'..'7F') — between the classes, as required.
     """
-    h = F.hex(comp)
-    neg = F.substring(h, 1, 1).isin(*"89ABCDEF")
+    h = f"hex({comp})"
     # minimal form: a leading 0x00 is redundant iff the next byte is
     # < 0x80; a leading 0xFF iff the next byte is >= 0x80 (BigInteger
     # minimal two's complement; IntegerType.compare skips such padding)
-    norm_pos = F.regexp_replace(h, "^(?:00(?=[0-7]))+", "")
-    norm_neg = F.regexp_replace(h, "^(?:FF(?=[89A-F]))+", "")
-    len_pos = (F.length(norm_pos) / 2).cast("long")
-    len_neg = (F.length(norm_neg) / 2).cast("long")
-    pos_key = F.concat(
-        F.lit("2"),
-        F.lpad(F.conv(len_pos.cast("string"), 10, 16), 8, "0"),
-        norm_pos,
+    norm_pos = f"regexp_replace({h}, '^(?:00(?=[0-7]))+', '')"
+    norm_neg = f"regexp_replace({h}, '^(?:FF(?=[89A-F]))+', '')"
+    len_pos = f"cast(length({norm_pos}) / 2 as bigint)"
+    len_neg = f"cast(length({norm_neg}) / 2 as bigint)"
+    pos_key = f"concat('2', lpad(conv(cast({len_pos} as string), 10, 16), 8, '0'), {norm_pos})"
+    neg_key = (
+        f"concat('0', lpad(conv(cast({_U32_MAX} - {len_neg} as string), 10, 16), 8, '0'), {norm_neg})"
     )
-    neg_key = F.concat(
-        F.lit("0"),
-        F.lpad(F.conv((F.lit(_U32_MAX) - len_neg).cast("string"), 10, 16), 8, "0"),
-        norm_neg,
-    )
-    return F.when(F.length(comp) == 0, F.lit("")).otherwise(
-        F.when(neg, neg_key).otherwise(pos_key)
-    )
+    return _nonempty(comp, f"CASE WHEN {is_negative_hex(h)} THEN {neg_key} ELSE {pos_key} END")
 
 
-def _decimal_hex(comp: Column) -> Column:
+def _decimal_hex(comp: str) -> str:
     """Cassandra DecimalType (i32 scale + varint unscaled, compared as
     BigDecimal) -> order-preserving string key, mirroring the Python
     ``types._sk_decimal`` normalization (sign class, shifted adjusted
@@ -298,59 +308,72 @@ def _decimal_hex(comp: Column) -> Column:
     ('!' < '0' puts 5e2 before 5.1e2; 'Z' > '9' inverts that for
     negatives). The unscaled value digitizes through
     ``functions.bignum.mag_digits`` — a higher-order-function short
-    division that is exact at ANY width (the pre-round-9 conv-based
-    version was 64-bit-bounded and raise_error'd on wider values) while
-    keeping the Catalyst tree SMALL: HOF lambda bodies are single nodes,
-    not unrolled per element, which matters because this key sits under
-    4+ composite levels x2 bound columns (the round-6 expression-tree
-    lesson). Values shorter than the 4-byte scale prefix + 1 take the
-    injective '.' malformed guard."""
-    from .bignum import is_negative_hex, mag_digits, negative_mag_hex, normalize_hex
-
-    scale_u = F.conv(F.hex(F.substring(comp, 1, 4)), 16, 10).cast("long")
+    division that is exact at ANY width while keeping the expression
+    SMALL: HOF lambda bodies are single nodes, not unrolled per element,
+    which matters because this key sits under 4+ composite levels x2
+    bound columns (the round-6 expression-tree lesson). Values shorter
+    than the 4-byte scale prefix + 1 take the injective '.' malformed
+    guard; the digit string is bound once (below that guard), since the
+    key references it three times."""
+    scale_u = f"cast(conv(hex(substring({comp}, 1, 4)), 16, 10) as bigint)"
     # signed i32 with ONE reference: ((u + 2^31) mod 2^32) - 2^31
-    scale = ((scale_u + F.lit(1 << 31)) % F.lit(1 << 32)) - F.lit(1 << 31)
+    scale = f"((({scale_u} + {1 << 31}) % {1 << 32}) - {1 << 31})"
+
+    def key_of(uh: str) -> str:
+        neg = is_negative_hex(uh)
+
+        def with_digits(s: str) -> str:
+            adjusted = f"(cast(length({s}) - 1 as bigint) - {scale})"
+            mant = f"regexp_replace({s}, '0+$', '')"
+            # shared body: the positive form; negatives complement it wholesale
+            body = (
+                f"concat(lpad(conv(cast({adjusted} + {_ADJ_SHIFT} as string), 10, 16), 10, '0'), "
+                f"{mant}, '!')"
+            )
+            return (
+                f"CASE WHEN {s} = '0' THEN '1' ELSE CASE WHEN {neg} "
+                f"THEN concat('0', translate({body}, {_BODY_COMPLEMENT})) "
+                f"ELSE concat('2', {body}) END END"
+            )
+
+        mag = f"CASE WHEN {neg} THEN {negative_mag_hex(uh)} ELSE {uh} END"
+        return let(mag_digits(mag), with_digits)
+
     # normalize away redundant sign-extension padding (minimal-form rule:
     # numerically equal encodings must collapse to one key — LWW dedups
     # on it)
-    uh = normalize_hex(F.hex(F.substring(comp, 5, F.lit(_REST))))
-    neg = is_negative_hex(uh)
-    digits = mag_digits(F.when(neg, negative_mag_hex(uh)).otherwise(uh))
-
-    # EXPRESSION-TREE SIZE: `digits` (the whole bignum fold tree) would
-    # be referenced three times below; bind it ONCE as a lambda variable
-    # via a 1-element transform — inside, every reference is a leaf.
-    # Without this, the duplicated fold trees under composite levels x2
-    # bound columns pushed sst_decode_varint's analysis+codegen from ~4 s
-    # to ~75 s (measured round 9).
-    def _key_of(s: Column) -> Column:
-        adjusted = (F.length(s) - F.lit(1)).cast("long") - scale
-        mant = F.regexp_replace(s, "0+$", "")
-        # shared body: the positive form; negatives complement it wholesale
-        body = F.concat(
-            F.lpad(
-                F.conv((adjusted + F.lit(_ADJ_SHIFT)).cast("string"), 10, 16),
-                10, "0",
-            ),
-            mant,
-            F.lit("!"),
-        )
-        return F.when(s == "0", F.lit("1")).otherwise(
-            F.when(
-                neg, F.concat(F.lit("0"), F.translate(body, *_BODY_COMPLEMENT))
-            ).otherwise(F.concat(F.lit("2"), body))
-        )
-
-    key = F.element_at(F.transform(F.array(digits), _key_of), 1)
+    key = let(normalize_hex(f"hex(substring({comp}, 5, {REST}))"), key_of)
     return (
-        F.when(F.length(comp) == 0, F.lit(""))
-        .when(F.length(comp) < 5, F.concat(F.lit("."), F.hex(comp)))
-        .otherwise(key)
+        f"CASE WHEN length({comp}) = 0 THEN '' "
+        f"WHEN length({comp}) < 5 THEN concat('.', hex({comp})) ELSE {key} END"
     )
 
 
-def type_sort_key_hex(comp: Column, marshal: str) -> Column:
-    """Component bytes -> hex string in the comparator's logical order."""
+def _timeuuid_full_key(comp: str) -> str:
+    # no malformed guard needed: the key appends the full hex, so
+    # equal-length inputs differ in the tail, and the output length
+    # strictly increases with input length (equal strings need equal
+    # lengths) — injective at any width
+    h = f"hex({comp})"
+    return f"concat({_timeuuid_key(h)}, {h})"
+
+
+#: marshal class -> key template (beyond byte order and the sign flip)
+_KEYS = {
+    "FloatType": _ieee_hex,
+    "DoubleType": _ieee_hex,
+    "TimeUUIDType": _timeuuid_full_key,
+    "UUIDType": _uuid_key,
+    "LexicalUUIDType": _lexical_uuid_key,
+    "IntegerType": _varint_hex,
+    "DecimalType": _decimal_hex,
+}
+
+
+def type_sort_key_hex(comp: str, marshal: str) -> str:
+    """SQL text: component bytes -> hex string in the comparator's
+    logical order. Raises ValueError for a marshal class with no
+    template."""
     t = _strip_pkg(marshal.strip())
     if t.startswith("ReversedType(") and t.endswith(")"):
         inner = type_sort_key_hex(comp, t[len("ReversedType(") : -1])
@@ -358,68 +381,28 @@ def type_sort_key_hex(comp: Column, marshal: str) -> Column:
         # prefix order AND places the EMPTY value last (its key is the
         # bare sentinel 'Z', above every hex-leading non-empty key) —
         # matching ReversedComparator's b'\xff' for empty (types.py)
-        return F.concat(F.translate(inner, *_HEX_COMPLEMENT), F.lit(_EOC_PLUS))
+        return f"concat(translate({inner}, {_HEX_COMPLEMENT}), '{_EOC_PLUS}')"
     if t in _BYTE_ORDERED:
-        return F.hex(comp)
+        return f"hex({comp})"
     if t in _SIGNED_WIDTH:
-        return _flip_sign_hex(comp, _SIGNED_WIDTH[t])
-    if t == "FloatType":
-        return _ieee_hex(comp, 4)
-    if t == "DoubleType":
-        return _ieee_hex(comp, 8)
-    if t == "TimeUUIDType":
-        # no malformed guard needed: the key appends the full hex, so
-        # equal-length inputs differ in the tail, and the output length
-        # strictly increases with input length (equal strings need equal
-        # lengths) — injective at any width
-        h = F.hex(comp)
-        return F.concat(_timeuuid_key(h), h)
-    if t == "UUIDType":
-        h = F.hex(comp)
-        ver = F.substring(h, 13, 1)
-        return _malformed_guard(
-            comp,
-            16,
-            F.concat(
-                ver,
-                F.when(ver == "1", _timeuuid_key(h)).otherwise(F.lit("")),
-                h,
-            ),
-        )
-    if t == "LexicalUUIDType":
-        # UUID.compareTo: MSB then LSB as SIGNED longs -> flip the sign
-        # bit of byte 0 and byte 8 (the Python _sk_lexuuid twin)
-        flipped8 = (
-            F.conv(F.hex(F.substring(comp, 9, 1)), 16, 10).cast("int")
-            + F.lit(128)
-        ) % F.lit(256)
-        return _malformed_guard(
-            comp,
-            16,
-            F.concat(
-                _flip_first_byte_hex(F.substring(comp, 1, 8)),
-                F.lpad(F.conv(flipped8.cast("string"), 10, 16), 2, "0"),
-                F.hex(F.substring(comp, 10, 7)),
-            ),
-        )
-    if t == "IntegerType":
-        return _varint_hex(comp)
-    if t == "DecimalType":
-        return _decimal_hex(comp)
+        return let(comp, lambda c: _nonempty(c, _flip_first_byte_hex(c)))
+    if t in _KEYS:
+        return let(comp, _KEYS[t])
     raise ValueError(
-        f"no JVM-side sort key for comparator {marshal}; use "
-        "compact(name_sort_key=<udf over types.get(spec).sort_key>) instead"
+        f"no JVM-side sort key for comparator {marshal!r}; register a SQL "
+        "function with spark.udf.register and pass "
+        "compact(name_sort_key=lambda c: f'my_sk({c})')"
     )
 
 
 def composite_sort_key(
-    name: Column,
+    name: str,
     component_types: Sequence[str],
     *,
     n_extra: int = 2,
     path_types_by_column: dict[bytes, str] | None = None,
-) -> Column:
-    """2.x composite cell name -> order-preserving string sort key.
+) -> str:
+    """SQL text: 2.x composite cell name -> order-preserving string key.
 
     ``component_types``: marshal classes of the typed leading components
     (the clustering columns for ma-mapped names). Up to ``n_extra``
@@ -436,148 +419,80 @@ def composite_sort_key(
     dispatches the transform at runtime, so each collection column's
     paths order by its real comparator while everything else stays raw.
 
-    The expression is unrolled per component — component counts above ~10
-    produce very large Catalyst trees; such schemas should use the Python
-    UDF fallback.
-
-    The built Column is MEMOIZED per (input expression, component types,
-    n_extra, path map) — r15: building this tree costs thousands of py4j
-    round-trips (~3 s of pure driver latency per compact() on a 0.4 ms
-    RTT gateway, profiled in OPTIMIZATION_r15.md), and the tree is a
-    deterministic function of the comparator schema alone — no data, no
-    session state (unresolved attribute references resolve per-DataFrame
-    at analysis). The same discipline as memoizing LSH hyperplane
-    literals: compile-time artifacts are built once per driver process.
+    The expression is unrolled per component; more than ``MAX_LEVELS``
+    components raise ValueError.
     """
     types_ = [_strip_pkg(t) for t in component_types] + ["BytesType"] * n_extra
-    if len(types_) > 12:
+    if len(types_) > MAX_LEVELS:
         raise ValueError(
-            f"composite_sort_key unrolls {len(types_)} components — "
-            "expression too large; use the types.sort_key UDF fallback"
+            f"no JVM-side sort key for a composite of {len(types_)} components "
+            f"({', '.join(types_)}): the key unrolls at most {MAX_LEVELS}"
         )
-    try:
-        cache_key = (
-            str(name._jc),
-            tuple(types_),
-            n_extra,
-            tuple(sorted((path_types_by_column or {}).items())),
-        )
-    except Exception:
-        cache_key = None
-    if cache_key is not None and cache_key in _COMPOSITE_SK_CACHE:
-        return _COMPOSITE_SK_CACHE[cache_key]
-    path_idx = len(types_) - 1 if (path_types_by_column and n_extra >= 2) else None
-    name_idx = path_idx - 1 if path_idx is not None else None
-    total = F.length(name)
-    is_static = (total >= 2) & (
-        F.hex(F.substring(name, F.lit(1), F.lit(2))) == "FFFF"
-    )
-    # segments collect into a flat variadic concat — a running
-    # `acc = when(has, concat(acc, seg)).otherwise(acc)` references acc
-    # TWICE per level, duplicating every earlier component's typed-key
-    # tree 2^(levels-below) times (the round-9 sst_decode_varint
-    # analysis blow-up); here each seg tree appears exactly once
-    segs: list[Column] = [F.when(is_static, F.lit("0")).otherwise(F.lit("1"))]
-    pos = F.when(is_static, F.lit(3)).otherwise(F.lit(1)).cast("int")
-    # injectivity guard for structurally broken composites: each level is
-    # clean iff the name ended exactly before it (pos > total) or the full
-    # component fits (u16 + ln value bytes + eoc byte). Truncated shapes —
-    # a dangling byte, a length claiming past the end, a missing eoc —
-    # would otherwise encode like a well-formed sibling and let LWW merge
-    # distinct corrupt names (the per-component _malformed_guard covers
-    # wrong WIDTHS, not truncated length prefixes).
-    clean = F.lit(True)
-    name_comp = None
-    for i, t in enumerate(types_):
-        ln = _u16_at(name, pos)
-        clean = clean & ((pos > total) | ((pos + F.lit(2) + ln) <= total))
-        comp = F.substring(name, pos + F.lit(2), ln)
-        eocb = F.coalesce(
-            F.conv(
-                F.hex(F.substring(name, pos + F.lit(2) + ln, F.lit(1))), 16, 10
-            ).cast("int"),
-            F.lit(0),
-        )
-        eocc = (
-            F.when(eocb == 0, F.lit(_EOC_ZERO))
-            .when(eocb < 128, F.lit(_EOC_PLUS))
-            .otherwise(F.lit(_EOC_MINUS))
-        )
-        if i == name_idx:
-            name_comp = comp
-        if i == path_idx and name_comp is not None:
-            key = type_sort_key_hex(comp, t)
-            for col_name, marshal in path_types_by_column.items():
-                key = F.when(
-                    name_comp == F.lit(col_name),
-                    type_sort_key_hex(comp, marshal),
-                ).otherwise(key)
-        else:
-            key = type_sort_key_hex(comp, t)
-        has = (pos + F.lit(1)) <= total  # the u16 length prefix is present
-        segs.append(
-            F.when(has, F.concat(key, F.lit(_EOC_MINUS), eocc)).otherwise(
-                F.lit("")
+    levels = len(types_)
+    path_idx = levels - 1 if (path_types_by_column and n_extra >= 2) else None
+
+    def key(n: str, ps: str) -> str:
+        total = f"length({n})"
+
+        def comp(i: int) -> str:
+            return f"substring({n}, {ps}[{i}] + 2, {ps}[{i + 1}] - {ps}[{i}] - 3)"
+
+        segs = [f"CASE WHEN {ps}[0] = 3 THEN '0' ELSE '1' END"]
+        # injectivity guard for structurally broken composites: each level
+        # is clean iff the name ended exactly before it (pos > total) or
+        # the full component fits (u16 + ln value bytes + eoc byte, the
+        # next position minus one). Truncated shapes — a dangling byte, a
+        # length claiming past the end, a missing eoc — would otherwise
+        # encode like a well-formed sibling and let LWW merge distinct
+        # corrupt names (the per-component _malformed_guard covers wrong
+        # WIDTHS, not truncated length prefixes). A name with MORE
+        # components than the unrolled levels would also collapse onto
+        # its truncation: with every level consumed cleanly, a final
+        # position <= total means unencoded bytes remain
+        clean = [f"({ps}[{i}] > {total} OR {ps}[{i + 1}] - 1 <= {total})" for i in range(levels)]
+        clean.append(f"{ps}[{levels}] > {total}")
+        for i, t in enumerate(types_):
+            k = type_sort_key_hex(comp(i), t)
+            if i == path_idx:
+                cases = " ".join(
+                    f"WHEN {comp(i - 1)} = X'{col.hex()}' THEN {type_sort_key_hex(comp(i), m)}"
+                    for col, m in path_types_by_column.items()
+                )
+                k = f"CASE {cases} ELSE {k} END"
+            eoc = f"coalesce(cast(conv(hex(substring({n}, {ps}[{i + 1}] - 1, 1)), 16, 10) as int), 0)"
+            eocc = (
+                f"CASE WHEN {eoc} = 0 THEN '{_EOC_ZERO}' WHEN {eoc} < 128 THEN '{_EOC_PLUS}' "
+                f"ELSE '{_EOC_MINUS}' END"
             )
+            # the u16 length prefix is present
+            segs.append(
+                f"CASE WHEN {ps}[{i}] + 1 <= {total} THEN concat({k}, '{_EOC_MINUS}', {eocc}) ELSE '' END"
+            )
+        # broken shapes fall back to '.' + full raw hex: trivially
+        # injective, deterministic, and (like _malformed_guard) sorted
+        # below well-formed keys' content without colliding with them
+        return (
+            f"CASE WHEN {' AND '.join(clean)} THEN concat({', '.join(segs)}) "
+            f"ELSE concat('.', hex({n})) END"
         )
-        # pos advances UNCONDITIONALLY: past the end, _u16_at coalesces to
-        # 0 and `has` keeps gating the append, so correctness is
-        # unaffected — but a guarded pos (when(has, ...).otherwise(pos))
-        # references the previous pos tree ~5x per level instead of ~2x,
-        # and the resulting ~5^n expression blow-up showed up as whole
-        # seconds of analysis/codegen time per ma query
-        pos = (pos + F.lit(3) + ln).cast("int")
-    # a name with MORE components than the unrolled levels would also
-    # collapse onto its truncation; with every level consumed cleanly,
-    # final pos <= total means unencoded bytes remain
-    clean = clean & (pos > total)
-    # broken shapes fall back to '.' + full raw hex: trivially injective,
-    # deterministic, and (like _malformed_guard) sorted below well-formed
-    # keys' content without colliding with them. The tree cost is linear
-    # in the level count (each `clean` term references the shared pos
-    # trees, not a 5-way guarded recurrence).
-    out = F.when(clean, F.concat(*segs)).otherwise(
-        F.concat(F.lit("."), F.hex(name))
-    )
-    if cache_key is not None:
-        while len(_COMPOSITE_SK_CACHE) >= _COMPOSITE_SK_CACHE_MAX:
-            _COMPOSITE_SK_CACHE.pop(next(iter(_COMPOSITE_SK_CACHE)))
-        _COMPOSITE_SK_CACHE[cache_key] = out
-    return out
+
+    return let(name, lambda n: let(_composite_positions(n, levels), lambda ps: key(n, ps)))
 
 
-def comparator_sort_key(name: Column, spec: str, *, n_extra: int = 2) -> Column:
-    """Sort-key column for a full comparator spec (simple or CompositeType).
+def comparator_sort_key(name: str, spec: str, *, n_extra: int = 2) -> str:
+    """SQL text: the sort key for a full comparator spec (simple or
+    CompositeType).
 
     Matches ``types.get(spec).sort_key`` ordering, JVM-side. ``n_extra``
     trailing components past the declared CompositeType list (CQL column
     name, collection cell path) compare as raw bytes — dropping them
     would collapse distinct cell names to one sort key and LWW away whole
-    columns; the Python ``CompositeComparator._component_at`` fallback
-    compares unlimited extras, so specs whose names can exceed
-    declared+2 components should use the UDF path.
+    columns; names with more than declared+``n_extra`` components take
+    the injective '.' fallback key.
     """
     s = spec.strip()
     short = _strip_pkg(s.split("(", 1)[0])
     if short == "CompositeType":
         inner = s[s.index("(") + 1 : s.rindex(")")]
-        comps = _split_top_level(inner)
-        return composite_sort_key(name, comps, n_extra=n_extra)
+        return composite_sort_key(name, _split_top_level(inner), n_extra=n_extra)
     return type_sort_key_hex(name, s)
-
-
-def _split_top_level(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out

@@ -10,6 +10,7 @@ feature options, Aegisthus.java:132-177,262-336).
 from __future__ import annotations
 
 import argparse
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +47,16 @@ def compact_snapshot(
     ``stage_dir`` routes decode through the parquet-staging path (decode
     once in the workers, all downstream work on a native columnar scan).
     """
+    name_sort_key = None
+    if column_type not in ("auto", "BytesType", "UTF8Type", "AsciiType"):
+        from .functions.sortkeys import comparator_sort_key
+
+        name_sort_key = partial(comparator_sort_key, spec=column_type)
+        # built once here, so a comparator with no template (a custom
+        # class, a composite past the unroll bound) raises before any
+        # input is read or any Spark job runs
+        name_sort_key("cell_name")
+
     src_kw = {"target_bytes": blocksize} if blocksize else {}
     cells = read_sstable_cells(
         spark, inputs, skip_corrupt=skip_corrupt, stage_dir=stage_dir, **src_kw
@@ -62,7 +73,6 @@ def compact_snapshot(
             F.count(F.when(F.col("kind") == "!", F.lit(1))).alias("n"),
         ).filter(F.col("kind") != "!")
         corrupt_check.append(corrupt_obs)
-    name_sort_key = None
     if column_type == "auto":
         # derive the comparator from the input files themselves: 3.x+
         # SSTables carry a self-describing serialization header (clustering
@@ -119,40 +129,9 @@ def compact_snapshot(
                         "an explicit column_type/name_sort_key"
                     )
             # every marshal class the repo knows (incl. DecimalType /
-            # varint at any width, via functions.bignum) has a JVM-side
-            # order-preserving encoding; a ValueError here means a custom
-            # AbstractType the Python registry wouldn't know either —
-            # propagate its pass-a-UDF guidance instead of swallowing it
+            # varint at any width, via functions.bignum) has a sort-key
+            # template; a ValueError here names a custom AbstractType
             name_sort_key = name_sort_key_for_header(header)
-    elif column_type not in ("BytesType", "UTF8Type", "AsciiType"):
-        from . import types as aegtypes
-        from .functions import sortkeys as _sortkeys
-
-        try:
-            # JVM-side order-preserving encoding: no BatchEvalPython
-            # exchange, the compaction stays in whole-stage codegen
-            # (probe now so unsupported specs fall back before planning)
-            _sortkeys.comparator_sort_key(F.col("cell_name"), column_type)
-
-            def sort_key(c):
-                return _sortkeys.comparator_sort_key(c, column_type)
-
-            name_sort_key = sort_key
-        except ValueError:
-            # the only reachable fallback: CompositeType specs past the
-            # 12-component unroll bound (every simple marshal class,
-            # incl. any-width DecimalType/varint, is JVM-side now) —
-            # same order as types.Comparator.sort_key
-            comp = aegtypes.get(column_type)
-
-            @F.udf("binary")
-            def sort_key_udf(b):
-                return comp.sort_key(bytes(b)) if b is not None else None
-
-            # callable form: compact() applies it to BOTH cell_name and
-            # cell_name_max, so range-tombstone bounds compare in the same
-            # encoding as the cell keys (CassSSTableReducer.java:142,148-153)
-            name_sort_key = sort_key_udf
     rows = compact(
         cells,
         max_row_size=max_row_size,

@@ -20,10 +20,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import types as aegtypes
+from .functions.naming import legacy_name_sql
+from .functions.render import comparator_render, json_escape
+from .functions.sortkeys import _strip_pkg
+from .functions.sqltext import string_lit
 
 
 def legacy_column_name_format(name: str) -> str:
-    """Python twin of functions.naming.legacy_column_name_format
+    """Python twin of functions.naming.legacy_name_sql
     (AegisthusKeySortingComparator.java:30-32)."""
     import re
 
@@ -92,130 +96,61 @@ def sort_columns_by_display_name(
     *,
     name_type: str = "BytesType",
     legacy_formatting: bool = False,
-    python_render_fallback: bool = False,
 ) -> DataFrame:
     """O4 ``sort_columns_by_name``: re-sort each row's columns by the
     *stringified* column name (optionally legacy-escaped before compare),
     reproducing AegisthusKeySortingComparator.java:36-55. Applied after
     compact() so range-tombstone coverage still uses comparator order
-    (the reference's reducer/output split does the same).
-
-    ``python_render_fallback``: opt-in for off-registry comparators (same
-    trade as in :func:`to_aeg_json` — the reference's reflection breadth
-    back, at row-at-a-time Python cost; the default stays the loud raise).
+    (the reference's reducer/output split does the same). Typed
+    comparators stringify through the render templates
+    (functions/render.py, byte parity with types.Comparator.render); one
+    with no template raises ValueError naming it.
     """
-    from .functions.naming import _CNTRL_OR_SPACE  # same escape, SQL-side
-
     if name_type in ("UTF8Type", "AsciiType"):
         key = "cast(x.name as string)"
     elif name_type == "BytesType":
         key = "lower(hex(x.name))"
     else:
-        # typed comparators stringify through the JVM render expressions
-        # (functions/render.py, byte parity with types.Comparator.render) —
-        # since round 10 that covers the FULL registry incl. Float/Double,
-        # so there is no per-row Python fallback left
-        from .functions.render import comparator_render
-
-        if comparator_render(F.lit(b""), name_type) is None:
-            if not python_render_fallback:
-                raise ValueError(
-                    f"no JVM render for comparator {name_type!r}; register "
-                    "it in aegisthus_spark.types + functions/render.py, or "
-                    "opt into the row-at-a-time slow path with "
-                    "python_render_fallback=True"
-                )
-            # opt-in slow path: Python stable sort on the spec-twin render
-            # (types.get resolves custom registered comparators); stable =
-            # the same tie discipline as the JVM (k, i, c) struct sort
-            conv = aegtypes.get(name_type)
-
-            def _resort(columns):
-                def k(c):
-                    s = conv.render(bytes(c["name"]))
-                    return legacy_column_name_format(s) if legacy_formatting else s
-
-                return sorted(columns, key=k)
-
-            resort_udf = F.udf(_resort, rows.schema["columns"].dataType)
-            return rows.withColumn("columns", resort_udf(F.col("columns")))
-        from .functions import naming as _naming
-
-        def _key(name_col):
-            k = comparator_render(name_col, name_type)
-            if legacy_formatting:
-                k = _naming.legacy_column_name_format(k)
-            return k
-
-        # (k, i, c): the input index as the second struct field keeps
-        # ties on the rendered name in INPUT order — the stable-sort
-        # contract of the Python sorted() twin (distinct encodings can
-        # render identically, e.g. a sign-padded timestamp vs its
-        # minimal form; without i the tie would fall through to the
-        # cell struct's binary fields)
-        resorted = F.transform(
-            F.sort_array(
-                F.transform(
-                    F.col("columns"),
-                    lambda x, i: F.struct(
-                        _key(x["name"]).alias("k"), i.alias("i"), x.alias("c")
-                    ),
-                )
-            ),
-            lambda y: y["c"],
-        )
-        return rows.withColumn("columns", resorted)
+        key = comparator_render("x.name", name_type)
     if legacy_formatting:
-        key = (
-            f"replace(replace(regexp_replace({key}, '{_CNTRL_OR_SPACE}', ' '), "
-            "'\\\\', '\\\\\\\\'), '\"', '\\\\\"')"
-        )
-    # (k, i, c): index keeps equal-rendering names in input order (stable
-    # sort, matching the Python sorted() twin)
+        key = legacy_name_sql(key)
+    # (k, i, c): the input index as the second struct field keeps ties on
+    # the rendered name in INPUT order — the stable-sort contract of the
+    # Python sorted() twin (distinct encodings can render identically,
+    # e.g. a sign-padded timestamp vs its minimal form; without i the tie
+    # would fall through to the cell struct's binary fields)
     resort = (
         f"transform(sort_array(transform(columns, (x, i) -> struct({key} as k, i as i, x as c))), y -> y.c)"
     )
     return rows.withColumn("columns", F.expr(resort))
 
 
-def _size_guarded(cols_json, max_col_size: int | None):
-    """P4 output-side guard (JsonOutputFormat.java:127-146): replace an
-    oversized row's columns with the error marker entry. ONE place owns
-    the size model (name+value+15 framing, +8 for 'e'/'x' atoms) and the
-    marker text — shared by the BytesType and typed expression paths;
-    render_row_json is the Python twin."""
+def _size_guarded(cols_json: str, max_col_size: int | None) -> str:
+    """SQL text: P4 output-side guard (JsonOutputFormat.java:127-146):
+    replace an oversized row's columns with the error marker entry. ONE
+    place owns the size model (name+value+15 framing, +8 for 'e'/'x'
+    atoms) and the marker text; render_row_json is the Python twin."""
     if max_col_size is None:
         return cols_json
-    total = F.expr(
+    total = (
         "aggregate(columns, cast(0 as long), (acc, c) -> acc + "
         "length(coalesce(c.name, x'')) + length(coalesce(c.value, x'')) + 15 "
         "+ if(c.kind in ('e', 'x'), 8, 0))"
     )
-    marker = F.concat(
-        F.lit('["error","row too large: '),
-        F.format_number(total, 0),
-        F.lit(f' bytes - limit {max_col_size:,d} bytes",0]'),
-    )
-    return F.when(total > max_col_size, marker).otherwise(cols_json)
+    limit = string_lit(f' bytes - limit {max_col_size:,d} bytes",0]')
+    marker = f"""concat('["error","row too large: ', format_number({total}, 0), {limit})"""
+    return f"CASE WHEN {total} > {max_col_size} THEN {marker} ELSE {cols_json} END"
 
 
-def _aeg_line(key_prefix, key_json, cols_json, trace):
-    """<key>\t[<source>\t]{"<key>":{"deletedAt":N,"columns":[...]}} —
-    the one line layout both expression paths share. ``key_prefix`` is
-    the raw rendered key (outside the JSON), ``key_json`` the
-    JSON-escaped form used as the object key."""
-    return F.concat(
-        key_prefix,
-        F.lit("\t"),
-        *trace,
-        F.lit('{"'),
-        key_json,
-        F.lit('":{"deletedAt":'),
-        F.col("deleted_at").cast("string"),
-        F.lit(',"columns":['),
-        cols_json,
-        F.lit("]}}"),
-    )
+def _json_render(b: str, spec: str, *, legacy: bool = False) -> str:
+    """SQL text: ``b`` rendered by comparator ``spec`` as the body of a
+    JSON string, legacy-escaped first when ``legacy``. Hex (BytesType) is
+    JSON-safe and holds nothing the legacy escape changes, so it skips
+    both."""
+    r = comparator_render(b, spec)
+    if _strip_pkg(spec) == "BytesType":
+        return r
+    return json_escape(legacy_name_sql(r) if legacy else r)
 
 
 def to_aeg_json(
@@ -227,166 +162,47 @@ def to_aeg_json(
     max_col_size: int | None = None,
     trace_source: bool = False,
     legacy_formatting: bool = False,
-    python_render_fallback: bool = False,
 ) -> DataFrame:
     """compacted rows -> single-column DataFrame of aeg-JSON lines.
 
-    For the default BytesType converters everything stays in JVM expressions
-    (hex + concat, no JSON escaping needed); typed converters render through
-    the JVM expressions in functions/render.py plus an exact json.dumps
-    escape — since round 10 that is the FULL registry (Float/Double render
-    as Java toString, Python twin in functions/javafloat.py); there is no
-    Python-UDF path left, and off-registry marshal classes raise.
+    One SQL projection: keys, names and values render through the
+    templates in functions/render.py (byte parity with
+    types.Comparator.render, hex fallback on malformed values) plus an
+    exact json.dumps escape, which the default hex (BytesType) renders
+    skip. Every registered comparator has a template (Float/Double
+    render as Java toString, Python twin in functions/javafloat.py); an
+    off-registry marshal class raises ValueError naming it.
 
     ``trace_source``: prepend the source path as a second tab field
     (JsonOutputFormat.java:116-120; requires rows compacted with
     ``group_by_source=True``). ``legacy_formatting`` applies the legacy
     column-name escaping to rendered names (:152-155) — a no-op for hex
     (BytesType) renders.
-
-    ``python_render_fallback``: opt-in breadth restore for OFF-REGISTRY
-    comparators (the reference instantiates any ``AbstractType`` subclass
-    by reflection, JsonOutputFormat.java:49-60). When True, a comparator
-    spec with no JVM render expression routes the WHOLE row through the
-    Python spec twin (``render_row_json`` over ``types.get`` converters —
-    register custom classes with ``types.register_comparator``) as a
-    row-at-a-time Python UDF. That is a documented ~10-100x slow path vs
-    whole-stage codegen, so the DEFAULT remains the loud ValueError: a
-    silent per-row Python plan at 100 TB is a worse failure mode than a
-    raise naming the missing render.
     """
-    trace = (
-        [F.col("source_path"), F.lit("\t")] if trace_source else []
+    key_raw = comparator_render("partition_key", key_type)
+    key_js = _json_render("partition_key", key_type)
+    name_s = _json_render("c.name", name_type, legacy=legacy_formatting)
+    # per-column JSON array: ["name","value",ts(,flags...)]; json.dumps
+    # prints a missing ttl/ldt as 'null' — an un-coalesced NULL would
+    # null the whole concat and array_join would DROP the cell
+    entry = (
+        f"""concat('["', {name_s}, '","', {_json_render("c.value", value_type)}, '",', """
+        "cast(c.ts as string), "
+        """CASE WHEN c.kind = 'd' THEN ',"d"' """
+        """WHEN c.kind = 'e' THEN concat(',"e",', coalesce(cast(c.ttl as string), 'null'), ',', """
+        "coalesce(cast(c.local_deletion_time as string), 'null')) "
+        """WHEN c.kind = 'x' THEN concat(',"c",', coalesce(cast(c.ts_of_last_delete as string), 'null')) """
+        "ELSE '' END, ']')"
     )
-    if (key_type, name_type, value_type) == ("BytesType", "BytesType", "BytesType"):
-        key_str = F.lower(F.hex(F.col("partition_key")))
-        # per-column JSON array: ["name","value",ts(,flags...)]
-        col_entry = (
-            "transform(columns, c -> concat("
-            "'[\"', lower(hex(c.name)), '\",\"', lower(hex(coalesce(c.value, x''))), '\",', cast(c.ts as string), "
-            "CASE WHEN c.kind = 'd' THEN ',\"d\"' "
-            "     WHEN c.kind = 'e' THEN concat(',\"e\",', cast(c.ttl as string), ',', cast(c.local_deletion_time as string)) "
-            "     WHEN c.kind = 'x' THEN concat(',\"c\",', cast(c.ts_of_last_delete as string)) "
-            "     ELSE '' END, ']'))"
-        )
-        cols_json = _size_guarded(F.array_join(F.expr(col_entry), ","), max_col_size)
-        # hex keys are JSON-safe, so prefix and object key share the render
-        line = _aeg_line(key_str, key_str, cols_json, trace)
-        return compacted.select(line.alias("value"))
-
-    from .functions.render import comparator_render, json_escape
-
-    if all(
-        comparator_render(F.lit(b""), t) is not None
-        for t in (key_type, name_type, value_type)
-    ):
-        # typed JVM path: renders through functions/render.py (byte parity
-        # with types.Comparator.render, hex fallback on malformed values)
-        # + the exact json.dumps escape — no BatchEvalPython for ANY
-        # registry comparator (Float/Double included since round 10)
-        from .functions import naming as _naming
-
-        key_raw = comparator_render(F.col("partition_key"), key_type)
-        key_js = json_escape(key_raw)
-
-        def _entry(c):
-            name_s = comparator_render(c["name"], name_type)
-            if legacy_formatting:
-                name_s = _naming.legacy_column_name_format(name_s)
-            return F.concat(
-                F.lit('["'),
-                json_escape(name_s),
-                F.lit('","'),
-                json_escape(comparator_render(c["value"], value_type)),
-                F.lit('",'),
-                c["ts"].cast("string"),
-                F.when(c["kind"] == "d", F.lit(',"d"'))
-                .when(
-                    c["kind"] == "e",
-                    F.concat(
-                        F.lit(',"e",'),
-                        # json.dumps prints a missing ttl/ldt as 'null';
-                        # an un-coalesced NULL would null the whole
-                        # concat and array_join would DROP the cell
-                        F.coalesce(c["ttl"].cast("string"), F.lit("null")),
-                        F.lit(","),
-                        F.coalesce(
-                            c["local_deletion_time"].cast("string"),
-                            F.lit("null"),
-                        ),
-                    ),
-                )
-                .when(
-                    c["kind"] == "x",
-                    F.concat(
-                        F.lit(',"c",'),
-                        F.coalesce(
-                            c["ts_of_last_delete"].cast("string"),
-                            F.lit("null"),
-                        ),
-                    ),
-                )
-                .otherwise(F.lit("")),
-                F.lit("]"),
-            )
-
-        cols_json = _size_guarded(
-            F.array_join(F.transform(F.col("columns"), _entry), ","), max_col_size
-        )
-        line = _aeg_line(key_raw, key_js, cols_json, trace)
-        return compacted.select(line.alias("value"))
-
-    # round 10: every registered comparator — Float/Double included — has a
-    # byte-parity JVM render (functions/render.py; the Python twin for
-    # floats is the FloatingDecimal port in functions/javafloat.py), so the
-    # old per-row Python-UDF fallback is gone. Reaching here means an
-    # off-registry custom marshal class; surface that instead of silently
-    # dropping out of the JVM.
-    missing = [
-        t for t in (key_type, name_type, value_type)
-        if comparator_render(F.lit(b""), t) is None
-    ]
-    if not python_render_fallback:
-        raise ValueError(
-            f"no JVM render for comparator(s) {missing}; register the type in "
-            "aegisthus_spark.types and add its render expression in "
-            "functions/render.py (render_row_json stays the Python spec "
-            "twin), or opt into the row-at-a-time slow path with "
-            "python_render_fallback=True"
-        )
-    # opt-in slow path: the Python spec twin renders the whole line per
-    # row (types.get resolves custom registered comparators exactly like
-    # the reference's reflection; byte parity is render_row_json's
-    # existing golden-tested contract)
-    key_conv = aegtypes.get(key_type)
-    name_conv = aegtypes.get(name_type)
-    value_conv = aegtypes.get(value_type)
-
-    def _render(key, deleted_at, columns, source_path=None):
-        line = render_row_json(
-            bytes(key),
-            deleted_at,
-            [c.asDict() for c in columns],
-            key_conv=key_conv,
-            name_conv=name_conv,
-            value_conv=value_conv,
-            max_col_size=max_col_size,
-            legacy_formatting=legacy_formatting,
-        )
-        if source_path is None:
-            return line
-        # rpartition, not partition: a rendered KEY may itself contain a
-        # tab (text comparators pass it through), while the JSON body
-        # never holds a literal tab (json escapes control chars) — the
-        # LAST tab is always the key/body boundary
-        head, _, body = line.rpartition("\t")
-        return f"{head}\t{source_path}\t{body}"
-
-    render_udf = F.udf(_render, "string")
-    args = [F.col("partition_key"), F.col("deleted_at"), F.col("columns")]
-    if trace_source:
-        args.append(F.col("source_path"))
-    return compacted.select(render_udf(*args).alias("value"))
+    cols_json = _size_guarded(f"array_join(transform(columns, c -> {entry}), ',')", max_col_size)
+    # <key>\t[<source>\t]{"<key>":{"deletedAt":N,"columns":[...]}}: the
+    # raw rendered key outside the JSON, the escaped one as its object key
+    trace = "source_path, '\\t', " if trace_source else ""
+    line = (
+        f"""concat({key_raw}, '\\t', {trace}'{{"', {key_js}, '":{{"deletedAt":', """
+        f"""cast(deleted_at as string), ',"columns":[', {cols_json}, ']}}}}')"""
+    )
+    return compacted.selectExpr(f"{line} AS value")
 
 
 def parse_aeg_json_line(line: str) -> dict:

@@ -962,13 +962,13 @@ def name_sort_key_for_header(header: SerializationHeader):
     which would let a range tombstone over e.g. UTF8 clustering miss
     cells whose values differ in length from the bounds.
 
-    Returns a ``Column -> Column`` callable (pure JVM expressions, no
-    Python UDF — the plan stays inside whole-stage codegen); ``compact``
-    applies it to both ``cell_name`` and ``cell_name_max`` so RT bounds
-    compare in the same encoding. Raises ValueError only for comparator
-    classes the JVM library doesn't know (custom types) — fall back to a
-    ``types.sort_key`` UDF for those. DecimalType/IntegerType clustering
-    is JVM-side and exact at any unscaled width (functions.bignum).
+    Returns a SQL text template ``str -> str`` (functions.sortkeys);
+    ``compact`` applies it to both ``cell_name`` and ``cell_name_max`` so
+    RT bounds compare in the same encoding. Raises ValueError naming the
+    clustering types with no template (custom classes); a caller with
+    such a table registers its own SQL function and passes
+    ``lambda c: f"my_sk({c})"`` to ``compact``. DecimalType/IntegerType
+    clustering is exact at any unscaled width (functions.bignum).
     """
     from ..functions.sortkeys import composite_sort_key, supported
 
@@ -976,7 +976,8 @@ def name_sort_key_for_header(header: SerializationHeader):
     if unsupported:
         raise ValueError(
             "no JVM-side sort key for clustering type(s) "
-            f"{unsupported}; pass a types.sort_key UDF to compact() instead"
+            f"{unsupported}; register a SQL function with spark.udf.register "
+            "and pass compact(name_sort_key=lambda c: f'my_sk({c})')"
         )
     types_ = list(header.clustering_types)
     # collection cell paths order by the collection's path comparator

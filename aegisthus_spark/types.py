@@ -480,10 +480,12 @@ def register_comparator(name: str, comparator: Comparator) -> None:
     — users with custom marshal classes pass the class name and it just
     works. This is the Python-side equivalent: a registered comparator is
     picked up by :func:`get`/:func:`parse_comparator` everywhere the
-    Python twins run (render_row_json, CQL compose, sort twins), and by
-    the ``python_render_fallback=True`` slow path in ``output.to_aeg_json``
-    / ``output.sort_columns_by_display_name``. It does NOT add a JVM
-    render expression — for hot-path (whole-stage-codegen) rendering,
-    also add one in ``functions/render.py``.
+    Python twins run (render_row_json, CQL compose, sort twins). It does
+    NOT add a JVM template: ``output.to_aeg_json``,
+    ``output.sort_columns_by_display_name`` and ``job.compact_snapshot``
+    raise ValueError naming a class with none, so render and sort-key
+    templates for it go in ``functions/render.py`` and
+    ``functions/sortkeys.py`` (or, for the sort key, a SQL function
+    registered with ``spark.udf.register`` and passed to ``compact``).
     """
     _SIMPLE[_strip_pkg(name.strip())] = comparator

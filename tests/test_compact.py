@@ -226,9 +226,13 @@ def test_range_tombstone_typed_comparator_bounds(spark, cells_schema):
 
     comp = aegtypes.get("LongType")
 
-    @F.udf("binary")
-    def sk(b):
-        return comp.sort_key(bytes(b)) if b is not None else None
+    # a custom comparator enters compact() as a registered SQL function
+    spark.udf.register(
+        "long_sk", lambda b: comp.sort_key(bytes(b)) if b is not None else None, "binary"
+    )
+
+    def sk(c):
+        return f"long_sk({c})"
 
     def enc(n):
         return struct.pack(">q", n)
@@ -246,37 +250,6 @@ def test_range_tombstone_typed_comparator_bounds(spark, cells_schema):
     names = [struct.unpack(">q", c[0])[0] for c in out[b"k"][1]]
     # numeric comparator order, with only the RT-covered older cells dropped
     assert names == [-20, 0, 10]
-
-
-def test_range_tombstone_typed_explicit_max_key(spark, cells_schema):
-    """Column form of the API: pre-built name_sort_key plus name_max_sort_key."""
-    import struct
-
-    from pyspark.sql import functions as F
-
-    from aegisthus_spark import types as aegtypes
-
-    comp = aegtypes.get("LongType")
-
-    @F.udf("binary")
-    def sk(b):
-        return comp.sort_key(bytes(b)) if b is not None else None
-
-    def enc(n):
-        return struct.pack(">q", n)
-
-    df = make(spark, cells_schema, [
-        ("", 1, b"k", MIN, "t", enc(-3), enc(3), None, 150, None, 99, None),
-        ("", 1, b"k", MIN, "c", enc(-1), None, b"covered", 100, None, None, None),
-        ("", 1, b"k", MIN, "c", enc(5), None, b"outside", 100, None, None, None),
-    ])
-    out = rows_of(compact(
-        df,
-        name_sort_key=sk(F.col("cell_name")),
-        name_max_sort_key=sk(F.col("cell_name_max")),
-    ))
-    names = [struct.unpack(">q", c[0])[0] for c in out[b"k"][1]]
-    assert names == [5]
 
 
 def test_compact_salted_equals_compact_on_fixtures(spark, cells_schema):
@@ -363,16 +336,18 @@ def test_compact_salted_typed_comparator(spark, cells_schema):
     the same comparator — including RT coverage of negative longs."""
     import struct
 
-    from pyspark.sql import functions as F
-
     from aegisthus_spark import types as aegtypes
     from aegisthus_spark.compact import compact_salted
 
     comp = aegtypes.get("LongType")
 
-    @F.udf("binary")
-    def sk(b):
-        return comp.sort_key(bytes(b)) if b is not None else None
+    # a custom comparator enters compact() as a registered SQL function
+    spark.udf.register(
+        "long_sk", lambda b: comp.sort_key(bytes(b)) if b is not None else None, "binary"
+    )
+
+    def sk(c):
+        return f"long_sk({c})"
 
     def enc(n):
         return struct.pack(">q", n)

@@ -148,8 +148,6 @@ def test_salted_noninjective_comparator_matches_compact(spark, cells_schema):
     """A comparator that maps distinct raw names to EQUAL sort keys (here:
     lowercasing) must dedup identically in compact() and compact_salted():
     salting buckets the computed sort key, so such duplicates co-locate."""
-    from pyspark.sql import functions as F
-
     from aegisthus_spark.compact import compact, compact_salted
 
     rows = [
@@ -160,7 +158,7 @@ def test_salted_noninjective_comparator_matches_compact(spark, cells_schema):
         ("g2", 2, b"k2", None, "c", b"NAME", None, b"b", 2, None, None, None),
     ]
     cells = spark.createDataFrame(rows, cells_schema)
-    lower = lambda c: F.lower(c.cast("string")).cast("binary")  # noqa: E731
+    lower = lambda c: f"cast(lower(cast({c} as string)) as binary)"  # noqa: E731
 
     def rendered(df):
         return sorted(

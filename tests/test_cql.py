@@ -73,10 +73,10 @@ def test_compose_values(spark):
         "ts binary, i binary, u binary, d binary",
     )
     row = df.select(
-        compose_value(F.col("ts"), "timestamp").alias("ts"),
-        compose_value(F.col("i"), "int").alias("i"),
-        compose_value(F.col("u"), "uuid").alias("u"),
-        compose_value(F.col("d"), "double").alias("d"),
+        compose_value("ts", "timestamp").alias("ts"),
+        compose_value("i", "int").alias("i"),
+        compose_value("u", "uuid").alias("u"),
+        compose_value("d", "double").alias("d"),
     ).collect()[0]
     assert row.i == -7
     assert row.u == "c87e15e2-d9e5-11ee-8c90-a58e8cb5c9fd"
@@ -91,7 +91,7 @@ def test_compose_decimal(spark):
 
     b = struct.pack(">i", 2) + (12345).to_bytes(2, "big")  # scale 2, 12345
     df = spark.createDataFrame([(b,)], "d binary")
-    got = df.select(compose_value(F.col("d"), "decimal").alias("v")).collect()[0].v
+    got = df.select(compose_value("d", "decimal").alias("v")).collect()[0].v
     assert got == Decimal("123.45")
 
 
@@ -110,7 +110,7 @@ def test_compose_decimal_degenerate_payloads_are_null(spark):
         "e binary, one binary, three binary, four binary, ok binary",
     )
     row = df.select(
-        *[compose_value(F.col(c), "decimal").alias(c)
+        *[compose_value(c, "decimal").alias(c)
           for c in ("e", "one", "three", "four", "ok")]
     ).collect()[0]
     assert row.e is None and row.one is None and row.three is None

@@ -83,20 +83,6 @@ def test_legacy_column_name_format(spark):
     assert got == 'a b\\\\c\\"d e'
 
 
-def test_name_sort_key_long_order_preserving(spark):
-    from aegisthus_spark.functions import name_sort_key
-
-    vals = [-(1 << 40), -1000, -1, 0, 1, 7, 1 << 40]
-    df = spark.createDataFrame(
-        [(struct.pack(">q", v),) for v in vals], "name binary"
-    )
-    rows = df.select(
-        "name", name_sort_key("name", column_type="LongType").alias("sk")
-    ).orderBy("sk").collect()
-    got = [struct.unpack(">q", bytes(r.name))[0] for r in rows]
-    assert got == sorted(vals)
-
-
 def test_read_aeg_json_loader_shape(spark):
     from aegisthus_spark.sources.aeg_json import parse_aeg_json
 

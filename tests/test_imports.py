@@ -102,3 +102,53 @@ def test_package_names_no_checkout_path():
                  or into_tree.match(node.value))
         ]
     assert not hits, hits
+
+
+def _package_tree(rel: str) -> ast.Module:
+    with open(os.path.join(ROOT, rel)) as f:
+        return ast.parse(f.read(), rel)
+
+
+def _functions_modules() -> list[str]:
+    d = os.path.join(PACKAGE, "functions")
+    return sorted(os.path.join(d, f) for f in os.listdir(os.path.join(ROOT, d)) if f.endswith(".py"))
+
+
+def test_expression_library_is_sql_text():
+    """``aegisthus_spark/functions`` builds SQL text templates: the only
+    ``pyspark.sql.functions`` member it may use is ``expr``, which hands a
+    template to the JVM in one call."""
+    hits = []
+    for rel in _functions_modules():
+        tree = _package_tree(rel)
+        aliases = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql":
+                aliases |= {a.asname or a.name for a in node.names if a.name == "functions"}
+            elif isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql.functions":
+                hits += [f"{rel}:{node.lineno} {a.name}" for a in node.names if a.name != "expr"]
+            elif isinstance(node, ast.Import):
+                aliases |= {a.asname for a in node.names if a.name == "pyspark.sql.functions" and a.asname}
+        hits += [
+            f"{rel}:{node.lineno} {node.value.id}.{node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+            and node.value.id in aliases and node.attr != "expr"
+        ]
+    assert not hits, hits
+
+
+def test_merge_and_render_run_no_python_udf():
+    """The job, compact, the aeg-JSON output and the expression library
+    never wrap Python in a UDF: a comparator with no template fails
+    loudly instead of falling back to a row-at-a-time Python path."""
+    rels = [os.path.join(PACKAGE, f) for f in ("job.py", "compact.py", "output.py")]
+    hits = []
+    for rel in rels + _functions_modules():
+        hits += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(_package_tree(rel))
+            if (isinstance(node, ast.Attribute) and node.attr in ("udf", "pandas_udf"))
+            or (isinstance(node, ast.Name) and node.id in ("udf", "pandas_udf"))
+        ]
+    assert not hits, hits

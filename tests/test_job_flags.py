@@ -6,7 +6,6 @@ import os
 import struct
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import LEGACY, REFERENCE, needs_reference
 
@@ -32,17 +31,13 @@ def _typed_cells(spark):
 
 
 def test_sort_columns_by_name_typed(spark):
-    from aegisthus_spark import types as aegtypes
     from aegisthus_spark.compact import compact
+    from aegisthus_spark.functions.sortkeys import comparator_sort_key
     from aegisthus_spark.output import sort_columns_by_display_name
 
-    comp = aegtypes.get("LongType")
-
-    @F.udf("binary")
-    def sk(b):
-        return comp.sort_key(bytes(b)) if b is not None else None
-
-    rows = compact(_typed_cells(spark), name_sort_key=sk(F.col("cell_name")))
+    rows = compact(
+        _typed_cells(spark), name_sort_key=lambda c: comparator_sort_key(c, "LongType")
+    )
     default_order = [
         struct.unpack(">q", bytes(c["name"]))[0]
         for c in rows.collect()[0]["columns"]
@@ -308,72 +303,63 @@ def test_sstable2json_cli(capsys):
 
 
 def test_python_render_fallback_custom_comparator(spark):
-    """Reference-breadth restore: an OFF-REGISTRY marshal class (the
-    reference instantiates any AbstractType subclass by reflection,
-    JsonOutputFormat.java:49-60) registered only Python-side via
-    types.register_comparator. Default stays the loud raise; the
-    python_render_fallback=True opt-in routes through the spec twin."""
-    import json
-
+    """An OFF-REGISTRY marshal class (the reference instantiates any
+    AbstractType subclass by reflection, JsonOutputFormat.java:49-60)
+    registered only Python-side via types.register_comparator has no
+    render template: both renders fail loudly, naming the class."""
     import pytest
 
     from aegisthus_spark import types as aegtypes
     from aegisthus_spark.compact import compact
-    from aegisthus_spark.output import (
-        render_row_json,
-        sort_columns_by_display_name,
-        to_aeg_json,
-    )
+    from aegisthus_spark.output import sort_columns_by_display_name, to_aeg_json
 
-    # toy custom marshal class: renders the column name bytes REVERSED as
-    # uppercase hex -- numeric-ish names sort very differently under it
     demo = aegtypes.Comparator(
         "DemoRevType", None, _render=lambda b: b[::-1].hex().upper()
     )
     aegtypes.register_comparator("org.example.DemoRevType", demo)
     try:
         rows = compact(_typed_cells(spark))
-
-        # default: loud failure naming the opt-in
-        with pytest.raises(ValueError, match="python_render_fallback"):
+        with pytest.raises(ValueError, match="DemoRevType"):
             sort_columns_by_display_name(rows, name_type="DemoRevType")
-        with pytest.raises(ValueError, match="python_render_fallback"):
-            to_aeg_json(compact(_typed_cells(spark)), name_type="DemoRevType")
-
-        # opt-in sort: ordered by the custom render of the name bytes
-        by_name = sort_columns_by_display_name(
-            rows, name_type="DemoRevType", python_render_fallback=True
-        )
-        cols = by_name.collect()[0]["columns"]
-        rendered = [demo.render(bytes(c["name"])) for c in cols]
-        assert rendered == sorted(rendered)
-        assert len(rendered) == 3
-
-        # opt-in JSON: byte parity with the Python spec twin, custom
-        # render visible in the parsed line
-        line = to_aeg_json(
-            compact(_typed_cells(spark)),
-            name_type="DemoRevType",
-            python_render_fallback=True,
-        ).collect()[0].value
-        row = compact(_typed_cells(spark)).collect()[0]
-        want = render_row_json(
-            bytes(row["partition_key"]),
-            row["deleted_at"],
-            [c.asDict() for c in row["columns"]],
-            name_conv=demo,
-        )
-        assert line == want
-        key_str, _, body = line.partition("\t")
-        parsed = json.loads(body)[key_str]
-        names = [e[0] for e in parsed["columns"]]
-        # struct.pack('>q', 2)[::-1].hex().upper() etc.
-        assert names == [
-            bytes(c["name"])[::-1].hex().upper()
-            for c in compact(_typed_cells(spark)).collect()[0]["columns"]
-        ]
+        with pytest.raises(ValueError, match="DemoRevType"):
+            to_aeg_json(rows, name_type="DemoRevType")
     finally:
         del aegtypes._SIMPLE["DemoRevType"]
+
+
+#: comparators with no sort-key template: a custom class, and a composite
+#: past the 12-level unroll (11 declared + 2 trailing components)
+_NO_TEMPLATE = [
+    "org.example.DemoRevType",
+    "CompositeType(" + ",".join(["UTF8Type"] * 11) + ")",
+]
+
+
+@pytest.mark.parametrize("column_type", _NO_TEMPLATE, ids=["custom", "wide_composite"])
+def test_comparator_without_template_fails_before_any_job(
+    spark, tmp_path, monkeypatch, capsys, column_type
+):
+    """compact_snapshot(column_type=...) and job.main --column-type raise,
+    naming the comparator, before any Spark job runs: there is no Python
+    sort-key fallback."""
+    from aegisthus_spark.job import compact_snapshot
+
+    sc = spark.sparkContext
+    group = f"no-template-{column_type}"
+    sc.setJobGroup(group, group)
+    named = "DemoRevType" if "Demo" in column_type else "UTF8Type, UTF8Type"
+    try:
+        with pytest.raises(ValueError, match=named):
+            compact_snapshot(spark, [f"{LEGACY}/jb"], column_type=column_type)
+        with pytest.raises(ValueError, match=named):
+            _run_job(spark, monkeypatch, capsys, [
+                "--input-dir", f"{LEGACY}/jb", "--output", str(tmp_path / "out"),
+                "--column-type", column_type,
+            ])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not (tmp_path / "out").exists()
 
 
 def test_cli_missing_input_dir_fails_loudly(spark, tmp_path, monkeypatch):

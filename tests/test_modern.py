@@ -1778,7 +1778,7 @@ def test_lexical_uuid_signed_long_order(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "i int, b binary"
     )
-    rows = df.select("i", type_sort_key_hex(F.col("b"), "LexicalUUIDType")
+    rows = df.select("i", F.expr(type_sort_key_hex("b", "LexicalUUIDType"))
                      .alias("k")).collect()
     jvm = [r.k for r in sorted(rows, key=lambda r: r.i)]
     assert jvm == sorted(jvm), "jvm signed order"

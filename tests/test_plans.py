@@ -611,27 +611,16 @@ _MA_DDL = ("CREATE TABLE t (key text, ck0 text, owner text static, name text, "
            "score bigint, tags list<text>, PRIMARY KEY (key, ck0))")
 
 
-def test_cql_export_plan_builds_in_few_py4j_calls(spark, monkeypatch):
-    """Building the CQL export's plan is driver time before any task runs:
-    each py4j command is a socket round trip, so the count is pinned."""
+def _py4j_commands(spark, monkeypatch, build) -> int:
+    """py4j commands this thread sends while ``build()`` runs, on its
+    second run (the first also loads classes on both sides)."""
     import gc
-    import os
     import threading
 
-    from aegisthus_spark import job
-
-    class Captured(Exception):
-        pass
-
-    def capture(wide, output):
-        raise Captured
-
-    monkeypatch.setattr(job, "write_avro", capture)
-    ma = os.path.join(os.path.dirname(__file__), "fixtures", "ma")
     client = spark.sparkContext._gateway._gateway_client
     me = threading.get_ident()
     counts = []
-    for _ in range(2):  # the first build also loads classes on both sides
+    for _ in range(2):
         sent = [0]
         send = client.send_command
 
@@ -646,13 +635,55 @@ def test_cql_export_plan_builds_in_few_py4j_calls(spark, monkeypatch):
         gc.disable()
         monkeypatch.setattr(client, "send_command", counting)
         try:
-            with pytest.raises(Captured):
-                job.export_cql(spark, [ma], _MA_DDL, "unused")
+            build()
         finally:
             monkeypatch.setattr(client, "send_command", send)
             gc.enable()
         counts.append(sent[0])
-    assert counts[-1] <= EXPORT_CQL_PY4J_BOUND, counts
+    return counts[-1]
+
+
+def test_cql_export_plan_builds_in_few_py4j_calls(spark, monkeypatch):
+    """Building the CQL export's plan is driver time before any task runs:
+    each py4j command is a socket round trip, so the count is pinned."""
+    import os
+
+    from aegisthus_spark import job
+
+    class Captured(Exception):
+        pass
+
+    def capture(wide, output):
+        raise Captured
+
+    def build():
+        with pytest.raises(Captured):
+            job.export_cql(spark, [ma], _MA_DDL, "unused")
+
+    monkeypatch.setattr(job, "write_avro", capture)
+    ma = os.path.join(os.path.dirname(__file__), "fixtures", "ma")
+    sent = _py4j_commands(spark, monkeypatch, build)
+    assert sent <= EXPORT_CQL_PY4J_BOUND, sent
+
+
+@pytest.mark.parametrize("column_type", [
+    "UTF8Type", "LongType", "CompositeType(UTF8Type,UTF8Type,UTF8Type)",
+])
+def test_typed_snapshot_plan_builds_like_bytes(spark, monkeypatch, column_type):
+    """A typed comparator's sort keys and renders are SQL text templates,
+    so building (and analysing) compact_snapshot + to_aeg_json under it
+    costs at most 1.5x the py4j commands of the BytesType build."""
+    from aegisthus_spark.job import compact_snapshot
+    from aegisthus_spark.output import to_aeg_json
+    from tests.conftest import LEGACY
+
+    def build(t):
+        rows = compact_snapshot(spark, [f"{LEGACY}/jb"], column_type=t)
+        to_aeg_json(rows, name_type=t).schema
+
+    plain = _py4j_commands(spark, monkeypatch, lambda: build("BytesType"))
+    typed = _py4j_commands(spark, monkeypatch, lambda: build(column_type))
+    assert typed <= 1.5 * plain, (typed, plain)
 
 
 @pytest.mark.parametrize("cql", [False, True], ids=["aeg_json", "cql_avro"])

@@ -72,7 +72,7 @@ def test_type_render_byte_parity(spark, marshal):
     got = {
         r.i: r.s
         for r in df.select(
-            "i", type_render(F.col("b"), marshal).alias("s")
+            "i", F.expr(type_render("b", marshal)).alias("s")
         ).collect()
     }
     comp = aegtypes.get(marshal)
@@ -96,7 +96,7 @@ def test_type_render_hypothesis_parity(spark, data, marshal):
     got = {
         r.i: r.s
         for r in df.select(
-            "i", type_render(F.col("b"), marshal).alias("s")
+            "i", F.expr(type_render("b", marshal)).alias("s")
         ).collect()
     }
     comp = aegtypes.get(marshal)
@@ -106,7 +106,7 @@ def test_type_render_hypothesis_parity(spark, data, marshal):
 
 def test_type_render_null_is_empty(spark):
     df = spark.createDataFrame([(1, None)], "i int, b binary")
-    got = df.select(type_render(F.col("b"), "LongType").alias("s")).collect()
+    got = df.select(F.expr(type_render("b", "LongType")).alias("s")).collect()
     assert got[0].s == ""
 
 
@@ -130,10 +130,10 @@ def test_float_double_render_jvm_parity(spark):
             + [(b"\x00" * 3, "FloatType"), (b"\x00" * 7, "DoubleType")])
     for b, t in rows:
         df = spark.createDataFrame([(b,)], "b binary")
-        got = df.select(type_render(F.col("b"), t).alias("s")).collect()[0].s
+        got = df.select(F.expr(type_render("b", t)).alias("s")).collect()[0].s
         assert got == aegtypes.get(t).render(b), (t, b.hex(), got)
     assert comparator_render(
-        F.lit(b""), "CompositeType(LongType,DoubleType)"
+        "b", "CompositeType(LongType,DoubleType)"
     ) is not None
 
 
@@ -225,7 +225,7 @@ def test_composite_render_byte_parity(spark):
     got = {
         r.i: r.s
         for r in df.select(
-            "i", comparator_render(F.col("b"), spec).alias("s")
+            "i", F.expr(comparator_render("b", spec)).alias("s")
         ).collect()
     }
     for i, v in enumerate(vals):
@@ -236,7 +236,7 @@ def test_json_escape_matches_json_dumps(spark):
     strs = ['a"b\\c', "ctl\x01\x1f\x0b\x0e\x0f\x1a", "ok", "",
             "unié\n\t\r\x08\x0c", "\\u0001 literal text"]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(strs)], "i int, s string")
-    got = {r.i: r.e for r in df.select("i", json_escape(F.col("s")).alias("e")).collect()}
+    got = {r.i: r.e for r in df.select("i", F.expr(json_escape("s")).alias("e")).collect()}
     for i, s in enumerate(strs):
         want = json.dumps(s, ensure_ascii=False, separators=(",", ":"))[1:-1]
         assert got[i] == want, s
@@ -424,15 +424,15 @@ def test_typed_display_sort_is_stable_on_rendered_ties(spark):
         return ("f", 1, b"k", -(1 << 63), "c", name, None, value, ts,
                 None, None, None)
 
-    @F.udf("binary")
-    def sk(b):
-        return comp.sort_key(bytes(b)) if b is not None else None
+    spark.udf.register(
+        "ts_sk", lambda b: comp.sort_key(bytes(b)) if b is not None else None, "binary"
+    )
 
     for first, second in ((padded, minimal), (minimal, padded)):
         cells = spark.createDataFrame(
             [cell(first, b"\xff", 1), cell(second, b"\x00", 2)], CELLS_SCHEMA
         )
-        compacted = compact(cells, name_sort_key=sk(F.col("cell_name")))
+        compacted = compact(cells, name_sort_key=lambda c: f"ts_sk({c})")
         base = [bytes(c["name"]) for c in compacted.collect()[0]["columns"]]
         out = sort_columns_by_display_name(
             compacted, name_type="TimestampType"
@@ -458,7 +458,7 @@ def test_cql_decimal_compose_jvm_and_wide(spark):
     ]
     df = spark.createDataFrame([(i, b) for i, (b, _) in enumerate(cases)],
                                "i int, d binary")
-    sel = df.select("i", compose_value(F.col("d"), "decimal").alias("v"))
+    sel = df.select("i", compose_value("d", "decimal").alias("v"))
     got = {r.i: r.v for r in sel.collect()}
     for i, (_, want) in enumerate(cases):
         assert got[i] == want, (i, got[i], want)

@@ -33,7 +33,7 @@ def _jvm_keys(spark, values: list[bytes], col_fn) -> list[str]:
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(values)], "i int, b binary"
     )
-    rows = df.select("i", col_fn(F.col("b")).alias("k")).collect()
+    rows = df.select("i", F.expr(col_fn("b")).alias("k")).collect()
     return [r.k for r in sorted(rows, key=lambda r: r.i)]
 
 
@@ -620,20 +620,3 @@ def test_header_sort_key_types_list_paths(tmp_path, spark):
     vals = [bytes(c.value) for c in rows[0].columns
             if c.value not in (None, b"")]
     assert vals == [b"first", b"second"], vals
-
-
-def test_composite_sk_cache_bounded(spark, monkeypatch):
-    """r16 (VERDICT #7): the composite sort-key memo evicts FIFO at its
-    cap, and an evicted schema is transparently rebuilt to an expression
-    equal to the cached one."""
-    from aegisthus_spark.functions import sortkeys as sk
-
-    monkeypatch.setattr(sk, "_COMPOSITE_SK_CACHE", {})
-    monkeypatch.setattr(sk, "_COMPOSITE_SK_CACHE_MAX", 2)
-    name = F.col("cell_name")
-    first = str(composite_sort_key(name, ["Int32Type"])._jc)
-    composite_sort_key(name, ["LongType"])
-    composite_sort_key(name, ["UTF8Type"])  # evicts the Int32Type entry
-    assert len(sk._COMPOSITE_SK_CACHE) == 2
-    rebuilt = str(composite_sort_key(name, ["Int32Type"])._jc)
-    assert rebuilt == first
